@@ -211,20 +211,15 @@ object Main {
       triCols.foreach { c =>
         any = true
         val d = vfsidx.query.QueryParser.triDir(dir, c)
-        val gens = vfsidx.build.TrigramIndex.generations(spark, d)
-        if (gens.isEmpty) println(s"tri/$c: no committed generations")
-        else {
-          import org.apache.spark.sql.functions.{max => sqlMax}
-          val st = spark.read.parquet(gens.map { case (l, h) =>
-              vfsidx.build.TrigramIndex.statsGenDir(d, l, h) }: _*)
-            .agg(sqlSum("n_rows"), sqlMax("max_doc_id")).head()
-          println(s"tri/$c: ${st.getLong(0)} rows, max_doc_id=${st.getLong(1)}, " +
-            s"${gens.size} generation(s)")
-          spark.read.parquet(gens.map { case (l, h) =>
-              vfsidx.build.TrigramIndex.dictGenDir(d, l, h) }: _*)
-            .groupBy("key").agg(sqlSum("df").as("df"))
-            .orderBy(desc("df"), asc("key")).limit(topN).collect()
-            .foreach(r => println(f"  key=0x${r.getLong(0)}%012x count=${r.getLong(1)}"))
+        vfsidx.build.TrigramIndex.statsMerged(spark, d) match {
+          case None => println(s"tri/$c: no committed generations")
+          case Some(st) =>
+            println(s"tri/$c: ${st.n_rows} rows, max_doc_id=${st.max_doc_id}, " +
+              s"${vfsidx.build.TrigramIndex.generations(spark, d).size} generation(s)")
+            vfsidx.build.TrigramIndex.readDictRaw(spark, d)
+              .groupBy("key").agg(sqlSum("df").as("df"))
+              .orderBy(desc("df"), asc("key")).limit(topN).collect()
+              .foreach(r => println(f"  key=0x${r.getLong(0)}%012x count=${r.getLong(1)}"))
         }
       }
       numCols.foreach { c =>
@@ -243,18 +238,7 @@ object Main {
       // stale index dirs, /root/reference/column.go:638-641): vacuum every
       // index under <dir> — deletes RETIRED generations (folded into a
       // wider committed one), the expire-snapshots analogue
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (triCols, numCols) = vfsidx.corpus.Ingest.registeredCols(spark, dir)
-      var cnt = 0
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/segments")))
-        cnt += IndexBuild.vacuum(spark, dir)
-      triCols.foreach { c =>
-        cnt += vfsidx.build.TrigramIndex.vacuum(spark,
-          vfsidx.query.QueryParser.triDir(dir, c))
-      }
-      numCols.foreach(c =>
-        cnt += vfsidx.build.NumericIndex.vacuum(spark, dir, c))
+      val cnt = vfsidx.corpus.Ingest.vacuumAll(spark, dir)
       println(s"cleaned $dir: reclaimed $cnt retired generation(s)")
     case "query" :: table :: exprParts if exprParts.nonEmpty =>
       val expr = exprParts.mkString(" ")

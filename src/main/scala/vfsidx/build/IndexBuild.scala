@@ -139,154 +139,39 @@ object IndexBuild {
   def docStatsBatchDir(dir: String, tag: String) = s"$dir/doc_stats/batch=$tag"
   def lineageDir(dir: String) = s"$dir/lineage"
 
-  /** Highest runs batch id present on disk (committed or in-flight), -1 for
-    * none — the slot allocator shared by the batch refresh and streaming
-    * ingest paths so their batch ids never collide. */
-  def maxRunsBatch(spark: SparkSession, dir: String): Int = {
-    val runsPath = new org.apache.hadoop.fs.Path(s"$dir/runs")
-    val fs = runsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(runsPath)) -1
-    else fs.listStatus(runsPath).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt }
-      .foldLeft(-1)(math.max)
-  }
   def statsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/stats/gen=${lo}_$hi"
   def dictGenDir(dir: String, lo: Int, hi: Int) = s"$dir/dictionary/gen=${lo}_$hi"
   def segmentsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/segments/gen=${lo}_$hi"
 
-  private[build] val genRe = """gen=(\d+)_(\d+)""".r
+  /** The word index's generation lifecycle ([[Generations]]): generations
+    * list under `segments`, the runs batch dirs are the slots, and the
+    * stats columns n_docs / tf_sum are additive. Listing runs the format
+    * gate ([[assertSegmentFormat]]). */
+  private def lifecycle(spark: SparkSession, dir: String) = new Generations(spark,
+    s"$dir/segments",
+    (l, h) => Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
+    runsDir(dir, _), statsGenDir(dir, _, _),
+    Seq("n_docs" -> Generations.Sum, "tf_sum" -> Generations.Sum),
+    assertSegmentFormat(spark, dir, _))
 
-  /** One-job per-generation stat collection: read EVERY generation's stats
-    * table at once and map each row back to its `gen=lo_hi` dir via
-    * `input_file_name` — one driver round-trip instead of one tiny job per
-    * generation (the compaction policies call this on every trigger; at a
-    * production generation count the N-job version is pure scheduling
-    * overhead). Returns the requested `columns` (cast to long) of every row
-    * per generation; callers fold (sum / max / forall) as their stat's
-    * semantics demand. Fetching every column a policy AND its fold need in
-    * the one job lets the fold skip its own stats job entirely. */
-  private[build] def statPerGen(spark: SparkSession, dirs: Seq[(Int, Int) => String],
-                                gens: Seq[(Int, Int)],
-                                columns: Seq[String]): Map[(Int, Int), Seq[Array[Long]]] = {
+  /** Fold seal: rebuild the derived tables from exactly the window's runs
+    * (the runs are the decoded postings — reading them back is the
+    * columnar analogue of the reference's segment splice, without
+    * re-tokenizing the corpus). n_docs and tf_sum are additive, so the
+    * combined stats are the window's totals. */
+  private def seal(spark: SparkSession, dir: String, cfg: BuildConfig): Generations.Seal =
+    (win, totals) => {
+      val lineage = scala.collection.mutable.ArrayBuffer[LineageRow]()
+      buildGeneration(spark, dir, win.flatMap { case (l, h) => l to h }, totals(0), cfg,
+        lineage, Some(totals(1)))
+      appendLineage(spark, dir, lineage)
+    }
+
+  private def appendLineage(spark: SparkSession, dir: String,
+                            rows: Iterable[LineageRow]): Unit = {
     import spark.implicits._
-    spark.read.parquet(gens.flatMap(g => dirs.map(_(g._1, g._2))): _*)
-      .select(input_file_name().as("f"),
-        array(columns.map(c => col(c).cast("long")): _*).as("vals"))
-      .as[(String, Seq[Long])]
-      .collect()
-      .groupBy { case (f, _) =>
-        genRe.findFirstMatchIn(f) match {
-          case Some(m) => (m.group(1).toInt, m.group(2).toInt)
-          case None => throw new IllegalStateException(s"no gen= in stats path $f")
-        }
-      }
-      .map { case (g, rows) => g -> rows.toSeq.map(_._2.toArray) }
+    if (rows.nonEmpty) TableIO.append(spark.createDataset(rows.toSeq).toDF(), lineageDir(dir))
   }
-
-  /** Generation-listing machinery shared by the word and trigram indexes
-    * (one place owns the gen= naming, the `_SUCCESS` gating and the
-    * containment rule). `tables(l, h)` yields every table dir a generation
-    * must have committed. */
-  private[build] object GenListing {
-    /** Every fully-committed generation under `parent`, including RETIRED
-      * ones (folded into a wider committed generation, not yet vacuumed). */
-    def committed(spark: SparkSession, parent: String,
-                  tables: (Int, Int) => Seq[String]): Seq[(Int, Int)] = {
-      val p = new org.apache.hadoop.fs.Path(parent)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return Seq.empty
-      fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case genRe(lo, hi) =>
-            val (l, h) = (lo.toInt, hi.toInt)
-            if (tables(l, h).forall(TableIO.done(spark, _))) Some((l, h)) else None
-          case _ => None
-        }
-      }
-    }
-    def isRetired(all: Seq[(Int, Int)], g: (Int, Int)): Boolean =
-      all.exists(o => o != g && o._1 <= g._1 && g._2 <= o._2)
-    /** Containment-filtered view: the generations queries should read. A
-      * RETIRED generation (contained in a wider committed one) is hidden —
-      * that is the whole window between a compaction commit and its
-      * vacuum, so reads stay exact throughout. */
-    def survivors(all: Seq[(Int, Int)]): Seq[(Int, Int)] =
-      all.filterNot(isRetired(all, _)).sortBy(_._1)
-    /** Delete retired generations' dirs; returns how many were reclaimed. */
-    def reclaim(spark: SparkSession, all: Seq[(Int, Int)],
-                tables: (Int, Int) => Seq[String]): Int = {
-      val retired = all.filter(isRetired(all, _))
-      retired.foreach { case (l, h) => tables(l, h).foreach(TableIO.rmrf(spark, _)) }
-      retired.size
-    }
-
-    /** Split the sorted survivor generations into maximal CONTIGUOUSLY-
-      * COVERED groups (adjacent gens with `l2 == h1 + 1`). A coverage gap
-      * between generations is a batch slot that was reserved but never
-      * sealed its generation — a crashed streaming epoch awaiting replay
-      * (Ingest.slotFor reserves the slot durably BEFORE ingesting). Folding
-      * across such a gap would commit a combined range CONTAINING the
-      * reserved slot; when the replayed epoch later seals `gen=slot_slot`,
-      * the containment rule would hide it and vacuum would delete it —
-      * silent data loss. So no fold window ever spans a coverage gap; the
-      * gap closes when the epoch replays, and later compactions fold
-      * across it normally. */
-    def contiguousGroups(gens: Seq[(Int, Int)]): Seq[Seq[(Int, Int)]] =
-      gens.foldLeft(Vector.empty[Vector[(Int, Int)]]) { (acc, g) =>
-        acc.lastOption match {
-          case Some(grp) if grp.last._2 + 1 == g._1 => acc.init :+ (grp :+ g)
-          case _ => acc :+ Vector(g)
-        }
-      }
-
-    /** Choose the cheapest fold window for SIZE-TIERED compaction: the run
-      * of 2..`fanout` adjacent (contiguously-covered) generations minimizing
-      * total size, grown greedily around the globally smallest adjacent pair
-      * while the next neighbor stays similar-sized (≤ 2× the window mean).
-      * Folding always merges similar-magnitude neighbors first, so a refresh
-      * stream pays O(current tier) per compaction — never O(total ingested)
-      * — and the base generation is only re-shuffled once smaller tiers have
-      * accumulated to its own magnitude (LSM size-tiering; the reference's
-      * single merge-everything pass, /root/reference/column.go:418-604,
-      * replaced by bounded amortized work). None when no group has 2 gens.
-      *
-      * `maxDocs` bounds the WINDOW: growth stops before exceeding it, and if
-      * even the cheapest adjacent pair is larger, no window is returned —
-      * the work-bounded analogue of the reference's wall-clock
-      * `MergeDuration` deadline (/root/reference/config.go:5-9,
-      * /root/reference/column.go:157-163). Query-time merge-on-search passes
-      * a finite cap so a search is never blocked behind folding a giant
-      * tier; the refresh/stream policies keep it unbounded (skipping folds
-      * there would let the generation count grow without limit). */
-    def pickTieredWindow(groups: Seq[Seq[(Int, Int)]], size: ((Int, Int)) => Long,
-                         fanout: Int,
-                         maxDocs: Long = Long.MaxValue): Option[Seq[(Int, Int)]] = {
-      val pairs = for (g <- groups if g.size >= 2; i <- 0 until g.size - 1)
-        yield (g, i)
-      if (pairs.isEmpty) return None
-      val (grp, i0) = pairs.minBy { case (g, i) => size(g(i)) + size(g(i + 1)) }
-      var lo = i0
-      var hi = i0 + 1
-      var total = size(grp(lo)) + size(grp(hi))
-      if (total > maxDocs) return None
-      var grown = true
-      while (grown && hi - lo + 1 < math.max(2, fanout)) {
-        grown = false
-        val mean = total.toDouble / (hi - lo + 1)
-        val cap = math.max(2.0 * mean, 1.0)
-        val lSz = if (lo > 0) size(grp(lo - 1)) else Long.MaxValue
-        val rSz = if (hi < grp.size - 1) size(grp(hi + 1)) else Long.MaxValue
-        if ((lSz <= cap || rSz <= cap) && total + math.min(lSz, rSz) <= maxDocs) {
-          if (lSz <= rSz) { lo -= 1; total += lSz } else { hi += 1; total += rSz }
-          grown = true
-        }
-      }
-      Some(grp.slice(lo, hi + 1))
-    }
-  }
-
-  private def genTables(dir: String)(l: Int, h: Int): Seq[String] =
-    Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h))
 
   /** Token-validated per-directory cache for merged index stats — ONE
     * implementation shared by the trigram and numeric indexes (they used to
@@ -357,22 +242,19 @@ object IndexBuild {
     formatChecked.put(dir, done ++ unverified.map { case (l, h) => s"${l}_$h" })
   }
 
-  def generations(spark: SparkSession, dir: String): Seq[(Int, Int)] = {
-    val gens = GenListing.survivors(
-      GenListing.committed(spark, s"$dir/segments", genTables(dir)))
-    assertSegmentFormat(spark, dir, gens)
-    gens
-  }
+  /** Committed, non-retired generations, sorted ([[Generations]]). */
+  def generations(spark: SparkSession, dir: String): Seq[(Int, Int)] =
+    lifecycle(spark, dir).generations
 
-  /** Delete RETIRED generation directories (those contained in a wider
-    * committed generation) — the Iceberg/Delta expire-snapshots pattern:
-    * compaction only COMMITS the combined generation; reclaiming happens
-    * later, after a grace period longer than any running query, so
-    * in-flight readers that planned their scans before the compaction
-    * commit keep their files. Returns the number reclaimed. */
-  def vacuum(spark: SparkSession, dir: String): Int =
-    GenListing.reclaim(spark,
-      GenListing.committed(spark, s"$dir/segments", genTables(dir)), genTables(dir))
+  /** Reclaim retired generations ([[Generations.vacuum]]); returns the count. */
+  def vacuum(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).vacuum
+
+  /** Highest runs batch slot present on disk, -1 for none. */
+  def maxRunsBatch(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).maxBatch
+
+  /** Reserve runs slot `batch` before durably recording it. */
+  def reserveSlot(spark: SparkSession, dir: String, batch: Int): Unit =
+    lifecycle(spark, dir).reserveSlot(batch)
 
   /** Doc-fidelity rows from COMMITTED doc_stats partitions only. A crash
     * mid-commit can leave task files visible before `_SUCCESS` lands —
@@ -400,26 +282,17 @@ object IndexBuild {
 
   /** All segment rows across generations (explicit leaf dirs — no partition
     * column is inferred, so the frame stays encodable as [[SegmentRow]]). */
-  def readSegments(spark: SparkSession, dir: String): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed segment generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => segmentsGenDir(dir, l, h) }: _*)
-  }
+  def readSegments(spark: SparkSession, dir: String): DataFrame =
+    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _))
 
   /** Raw per-generation dictionary rows (term, df, tf_sum) — callers sum. */
-  def readDictRaw(spark: SparkSession, dir: String): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed dictionary generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => dictGenDir(dir, l, h) }: _*)
-  }
+  def readDictRaw(spark: SparkSession, dir: String): DataFrame =
+    lifecycle(spark, dir).read(dictGenDir(dir, _, _))
 
   /** Per-generation corpus stats rows (additive n_docs / tf_sum). */
   def readStatsRaw(spark: SparkSession, dir: String): Dataset[CorpusStats] = {
     import spark.implicits._
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed stats generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => statsGenDir(dir, l, h) }: _*)
-      .as[CorpusStats]
+    lifecycle(spark, dir).read(statsGenDir(dir, _, _)).as[CorpusStats]
   }
 
   /** Row count WITHOUT a Spark job when the dataset is a bare file-source
@@ -474,7 +347,9 @@ object IndexBuild {
   }
 
   private val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
-  @inline private def timed[A](name: String)(f: => A): A = {
+  /** Wall time of one build stage, printed when GRAFT_BUILD_VERBOSE is set
+    * (shared by the word and trigram builds). */
+  @inline private[build] def timed[A](name: String)(f: => A): A = {
     if (!verbose) f
     else {
       val t0 = System.nanoTime()
@@ -563,8 +438,7 @@ object IndexBuild {
         val failures = outcomes.collect { case scala.util.Failure(e) => e } ++
           dsFuture.flatMap(f => scala.util.Try(f.get()).failed.toOption)
         if (failures.nonEmpty) {
-          if (lineage.nonEmpty)
-            TableIO.append(spark.createDataset(lineage.toSeq).toDF(), lineageDir(dir))
+          appendLineage(spark, dir, lineage)
           val head = failures.head
           failures.tail.foreach(head.addSuppressed)
           throw head
@@ -578,9 +452,7 @@ object IndexBuild {
       else None   // resumed batches: the stats stage re-aggregates the chunks
     buildGeneration(spark, dir, 0 until cfg.numBatches, nDocs, cfg, lineage, knownTfSum)
 
-    if (lineage.nonEmpty) timed("lineage") {
-      TableIO.append(spark.createDataset(lineage.toSeq).toDF(), lineageDir(dir))
-    }
+    if (lineage.nonEmpty) timed("lineage")(appendLineage(spark, dir, lineage))
   }
 
   /** Derived tables (dictionary + stats + segments) for the given runs
@@ -838,13 +710,12 @@ object IndexBuild {
     // migration gate up front: refusing a pre-chunk-format index only AFTER
     // this batch sealed its generation would leave the operator rebuilding
     // an index that already ingested new data ([[assertSegmentFormat]])
-    generations(spark, dir)
+    val gl = lifecycle(spark, dir)
+    gl.generations
     val rDir = runsDir(dir, batchId)
     val dsDir = docStatsBatchDir(dir, batchId.toString)
-    val genDone = TableIO.done(spark, segmentsGenDir(dir, batchId, batchId)) &&
-      TableIO.done(spark, dictGenDir(dir, batchId, batchId)) &&
-      TableIO.done(spark, statsGenDir(dir, batchId, batchId))
-    if (TableIO.done(spark, rDir) && TableIO.done(spark, dsDir) && genDone) return
+    if (TableIO.done(spark, rDir) && TableIO.done(spark, dsDir) &&
+        gl.isCommitted(batchId, batchId)) return
     val nNew = fastCount(newDocs)
     val lineage = scala.collection.mutable.ArrayBuffer[LineageRow]()
     var knownTfSum: Option[Long] = None
@@ -877,8 +748,7 @@ object IndexBuild {
     buildGeneration(spark, dir, Seq(batchId), nNew,
       cfg.copy(numBuckets = ingestBuckets(nNew, cfg.numBuckets, cfg.shardSize)),
       lineage, knownTfSum)
-    if (lineage.nonEmpty)
-      TableIO.append(spark.createDataset(lineage.toSeq).toDF(), lineageDir(dir))
+    appendLineage(spark, dir, lineage)
   }
 
   /** Bucket count for a freshly-ingested generation: ~one shuffle bucket
@@ -887,120 +757,20 @@ object IndexBuild {
   private[build] def ingestBuckets(nDocs: Long, numBuckets: Int, shardSize: Long): Int =
     math.max(1, math.min(numBuckets.toLong, (nDocs + shardSize - 1) / shardSize)).toInt
 
-  /** Fold the CONTIGUOUS generations `gens` into one covering their union:
-    * rebuild the derived tables from exactly those batches' runs (the runs
-    * are the decoded postings — reading them back is the columnar analogue
-    * of the reference's segment splice, without re-tokenizing the corpus),
-    * commit `gen=lo_hi`, then delete the inputs. Readers are safe at every
-    * point: before commit they see the old generations; after commit
-    * [[generations]] hides the contained inputs. */
-  private def fold(spark: SparkSession, dir: String, gens: Seq[(Int, Int)],
-                   cfg: BuildConfig,
-                   knownTotals: Option[(Long, Long)] = None): Unit = {
-    import spark.implicits._
-    require(gens.size >= 2, "fold needs at least two generations")
-    // The fold window must be CONTIGUOUSLY covered: a gap in [min, max] is a
-    // reserved-but-unsealed runs slot (a crashed streaming epoch awaiting
-    // replay, Ingest.slotFor). Committing a combined range spanning it would
-    // (a) bury the epoch's later-sealed gen=slot_slot via the containment
-    // rule (vacuum would then delete it — silent data loss) and (b) make a
-    // SECOND fold of the combined generation read the foreign slot's runs.
-    // Compaction policies split at gaps (GenListing.contiguousGroups), so
-    // this require only guards direct callers.
-    gens.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) =>
-        require(l2 == h1 + 1,
-          s"fold window spans a coverage gap between batch $h1 and $l2 " +
-            "(a reserved streaming slot); fold contiguous groups only")
-      case _ => ()
-    }
-    val batches = gens.flatMap { case (l, h) => l to h }
-    // n_docs AND tf_sum are additive across the folded generations, so the
-    // combined stats come off the inputs' stats rows — pre-computed by the
-    // tiered policy's one statPerGen job when it chose this window, or one
-    // tiny job here for direct callers (compactTail / remerge)
-    val (nDocs, tfSum) = knownTotals.getOrElse(spark.read
-      .parquet(gens.map { case (l, h) => statsGenDir(dir, l, h) }: _*)
-      .agg(sum($"n_docs"), sum($"tf_sum")).as[(Long, Long)].head())
-    val lineage = scala.collection.mutable.ArrayBuffer[LineageRow]()
-    buildGeneration(spark, dir, batches, nDocs, cfg, lineage, Some(tfSum))
-    // the folded inputs are NOT deleted here: once the combined generation
-    // commits, [[generations]] hides them (containment rule) so new readers
-    // never see them, while readers already mid-scan keep their files.
-    // [[vacuum]] reclaims them later, after a grace period.
-    if (lineage.nonEmpty)
-      TableIO.append(spark.createDataset(lineage.toSeq).toDF(), lineageDir(dir))
-  }
-
-  /** Per-generation (n_docs, tf_sum) — the size measure for tiered
-    * compaction PLUS the additive totals its fold needs, in ONE job across
-    * all generations ([[statPerGen]]). */
-  private def genStats(spark: SparkSession, dir: String,
-                       gens: Seq[(Int, Int)]): Map[(Int, Int), (Long, Long)] =
-    statPerGen(spark, Seq(statsGenDir(dir, _, _)), gens, Seq("n_docs", "tf_sum"))
-      .map { case (g, rows) => g -> (rows.map(_(0)).sum, rows.map(_(1)).sum) }
-
-  /** SIZE-TIERED bounded compaction — the refresh/stream auto-fold policy
-    * (the reference's accumulated-write-file merge with a work bound
-    * standing in for its `mergeDuration` deadline,
-    * /root/reference/config.go:62-66). Triggers only above
-    * `cfg.maxGenerations` survivors, then folds ONE window of 2..tierFanout
-    * adjacent similar-sized generations — the cheapest one
-    * ([[GenListing.pickTieredWindow]]), never across a coverage gap. Work
-    * per compaction is bounded by the folded tier's size, not the total
-    * corpus: N same-sized refreshes cost O(N log N) total re-shuffled
-    * postings instead of the O(N·corpus) a fold-everything policy pays.
-    * Returns true when a fold happened. */
+  /** [[Generations.compactTiered]] with this config's policy bounds. */
   def compactTiered(spark: SparkSession, dir: String, cfg: BuildConfig = BuildConfig(),
-                    reclaim: Boolean = true): Boolean = {
-    val gens = generations(spark, dir)
-    if (gens.size <= cfg.maxGenerations) false
-    else {
-      val st = genStats(spark, dir, gens)
-      GenListing.pickTieredWindow(GenListing.contiguousGroups(gens), st(_)._1,
-        cfg.tierFanout, cfg.maxFoldDocs) match {
-        case Some(win) =>
-          fold(spark, dir, win, cfg,
-            Some((win.map(st(_)._1).sum, win.map(st(_)._2).sum)))
-          // reclaim=false is for callers serving CONCURRENT readers (the
-          // refresh/stream policies), which vacuum on their own later schedule
-          if (reclaim) vacuum(spark, dir)
-          true
-        case None => false
-      }
-    }
-  }
+                    reclaim: Boolean = true): Boolean =
+    lifecycle(spark, dir).compactTiered(cfg.maxGenerations, cfg.tierFanout,
+      cfg.maxFoldDocs, reclaim)(seal(spark, dir, cfg))
 
-  /** Explicit tail compaction (CLI `compact`): fold every generation except
-    * the (large) base — one pass per contiguous group. Heavier than
-    * [[compactTiered]] (O(sum of tail sizes)), lighter than [[remerge]];
-    * the base is only re-shuffled by an explicit remerge. */
+  /** [[Generations.compactTail]]: fold every generation but the base. */
   def compactTail(spark: SparkSession, dir: String, cfg: BuildConfig = BuildConfig(),
-                  reclaim: Boolean = true): Boolean = {
-    val gens = generations(spark, dir)
-    if (gens.size < 3) false
-    else {
-      val folded = GenListing.contiguousGroups(gens.drop(1))
-        .filter(_.size >= 2)
-      folded.foreach(g => fold(spark, dir, g, cfg))
-      if (reclaim) vacuum(spark, dir)
-      folded.nonEmpty
-    }
-  }
+                  reclaim: Boolean = true): Boolean =
+    lifecycle(spark, dir).compactTail(reclaim)(seal(spark, dir, cfg))
 
-  /** Full compaction: fold ALL generations into one per contiguous group
-    * (reference M4/M8 — merge everything accumulated). Usually that is ONE
-    * generation; a reserved-but-unsealed streaming slot splits coverage
-    * until its epoch replays, leaving one generation per side of the gap. */
+  /** [[Generations.remerge]]: fold everything, one pass per contiguous group. */
   def remerge(spark: SparkSession, dir: String, cfg: BuildConfig = BuildConfig(),
-              reclaim: Boolean = true): Unit = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no generations under $dir")
-    if (gens.size >= 2) {
-      GenListing.contiguousGroups(gens).filter(_.size >= 2)
-        .foreach(g => fold(spark, dir, g, cfg))
-      if (reclaim) vacuum(spark, dir)
-    }
-  }
+              reclaim: Boolean = true): Unit =
+    lifecycle(spark, dir).remerge(reclaim)(seal(spark, dir, cfg))
 
 }

@@ -37,7 +37,7 @@ final case class NumStats(n_rows: Long, integral: Boolean,
   * per ingested batch ([[ingestBatch]]) — O(new data); lookups read the
   * union of the survivor generations (each still pruned); the tiered
   * policy ([[compactTiered]]) folds accumulated small generations. Same
-  * generation machinery ([[IndexBuild.GenListing]]) as the word and trigram
+  * generation lifecycle ([[Generations]]) as the word and trigram
   * indexes: `_SUCCESS`-gated commits, containment-rule retirement, deferred
   * vacuum.
   *
@@ -48,7 +48,7 @@ final case class NumStats(n_rows: Long, integral: Boolean,
   */
 object NumericIndex {
 
-  import IndexBuild.{GenListing, TableIO}
+  import IndexBuild.TableIO
 
   def colDir(root: String, col: String) = s"$root/num/$col"
   def dataGenDir(root: String, col: String, lo: Int, hi: Int) =
@@ -56,39 +56,44 @@ object NumericIndex {
   def statsGenDir(root: String, col: String, lo: Int, hi: Int) =
     s"${colDir(root, col)}/stats/gen=${lo}_$hi"
 
-  private def genTables(root: String, col: String)(l: Int, h: Int): Seq[String] =
-    Seq(dataGenDir(root, col, l, h), statsGenDir(root, col, l, h))
+  /** The numeric index's generation lifecycle ([[Generations]]): it has
+    * no runs stage, so its data gen dirs list the generations AND serve as
+    * the slots; the stats fold as Σ n_rows / all integral. */
+  private def lifecycle(spark: SparkSession, root: String, column: String) =
+    new Generations(spark, s"${colDir(root, column)}/data",
+      (l, h) => Seq(dataGenDir(root, column, l, h), statsGenDir(root, column, l, h)),
+      b => dataGenDir(root, column, b, b), statsGenDir(root, column, _, _),
+      Seq("n_rows" -> Generations.Sum, "integral" -> Generations.All),
+      _ => ())
 
+  /** Fold seal: re-range-partition the union of the window's projections
+    * into one generation (integral only if every input was). */
+  private def seal(spark: SparkSession, root: String, column: String,
+                   numBuckets: Int): Generations.Seal =
+    (win, totals) =>
+      buildGeneration(spark,
+        spark.read.parquet(win.map { case (l, h) => dataGenDir(root, column, l, h) }: _*),
+        totals(1) != 0L, root, column, win.head._1, win.last._2, numBuckets, force = false)
+
+  /** Committed, non-retired generations, sorted ([[Generations]]). */
   def generations(spark: SparkSession, root: String, column: String): Seq[(Int, Int)] =
-    GenListing.survivors(GenListing.committed(
-      spark, s"${colDir(root, column)}/data", genTables(root, column)))
+    lifecycle(spark, root, column).generations
 
+  /** Reclaim retired generations ([[Generations.vacuum]]); returns the count. */
   def vacuum(spark: SparkSession, root: String, column: String): Int =
-    GenListing.reclaim(spark, GenListing.committed(
-      spark, s"${colDir(root, column)}/data", genTables(root, column)),
-      genTables(root, column))
+    lifecycle(spark, root, column).vacuum
 
   def exists(spark: SparkSession, root: String, column: String): Boolean =
     generations(spark, root, column).nonEmpty
 
-  /** Highest generation batch id PRESENT on disk (committed or reserved),
-    * -1 for none — the monotone slot allocator. The numeric index has no
-    * runs stage, so the data gen dirs themselves are the reservation
-    * markers ([[reserveSlot]] mkdirs one before it is durably recorded). */
-  def maxBatch(spark: SparkSession, root: String, column: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"${colDir(root, column)}/data")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("gen=") =>
-        n.stripPrefix("gen=").split('_')(1).toInt }
-      .foldLeft(-1)(math.max)
-  }
+  /** Highest generation slot present on disk (committed or reserved), -1
+    * for none; [[reserveSlot]] mkdirs a data gen dir before it is durably
+    * recorded. */
+  def maxBatch(spark: SparkSession, root: String, column: String): Int =
+    lifecycle(spark, root, column).maxBatch
 
-  def reserveSlot(spark: SparkSession, root: String, column: String, batch: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dataGenDir(root, column, batch, batch))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-  }
+  def reserveSlot(spark: SparkSession, root: String, column: String, batch: Int): Unit =
+    lifecycle(spark, root, column).reserveSlot(batch)
 
   private def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -122,8 +127,7 @@ object NumericIndex {
   def ingestBatch(spark: SparkSession, newRows: DataFrame, idCol: String,
                   numCol: String, root: String, batchId: Int,
                   numBuckets: Int = 32, overwrite: Boolean = false): Unit = {
-    val done = genTables(root, numCol)(batchId, batchId).forall(TableIO.done(spark, _))
-    if (!overwrite && done) return
+    if (!overwrite && lifecycle(spark, root, numCol).isCommitted(batchId, batchId)) return
     val proj = newRows.select(
       col(numCol).cast("long").as("value"), col(idCol).cast("long").as("doc_id"))
     val buckets = IndexBuild.ingestBuckets(proj.count(), numBuckets, IngestRowsPerBucket)
@@ -160,58 +164,13 @@ object NumericIndex {
     }
   }
 
-  /** Fold contiguous generations: re-range-partition the union of their
-    * projections into one combined generation (inputs retired via the
-    * containment rule, reclaimed by [[vacuum]] later). */
-  private def fold(spark: SparkSession, root: String, column: String,
-                   gens: Seq[(Int, Int)], numBuckets: Int,
-                   knownIntegral: Option[Boolean] = None): Unit = {
-    import spark.implicits._
-    require(gens.size >= 2, "fold needs at least two generations")
-    gens.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) =>
-        require(l2 == h1 + 1,
-          s"numeric fold window spans a coverage gap between $h1 and $l2")
-      case _ => ()
-    }
-    // pre-computed by the tiered policy's one statPerGen job, or one tiny
-    // job here for direct callers
-    val integral = knownIntegral.getOrElse(spark.read
-      .parquet(gens.map { case (l, h) => statsGenDir(root, column, l, h) }: _*)
-      .as[NumStats].collect().forall(_.integral))
-    val data = spark.read
-      .parquet(gens.map { case (l, h) => dataGenDir(root, column, l, h) }: _*)
-    buildGeneration(spark, data, integral, root, column,
-      gens.map(_._1).min, gens.map(_._2).max, numBuckets, force = false)
-  }
-
-  /** Size-tiered bounded compaction (same policy as
-    * [[IndexBuild.compactTiered]]). */
+  /** [[Generations.compactTiered]] with these policy bounds. */
   def compactTiered(spark: SparkSession, root: String, column: String,
                     maxGenerations: Int = 4, tierFanout: Int = 4,
                     numBuckets: Int = 32, reclaim: Boolean = true,
-                    maxFoldDocs: Long = Long.MaxValue): Boolean = {
-    import spark.implicits._
-    val gens = generations(spark, root, column)
-    if (gens.size <= maxGenerations) false
-    else {
-      // one job across all generations' stats (IndexBuild.statPerGen):
-      // sizes for the window choice AND the fold's integral flag together
-      val st = IndexBuild.statPerGen(
-        spark, Seq(statsGenDir(root, column, _, _)), gens,
-        Seq("n_rows", "integral"))
-        .map { case (g, rows) => g -> (rows.map(_(0)).sum, rows.forall(_(1) != 0L)) }
-      GenListing.pickTieredWindow(GenListing.contiguousGroups(gens), st(_)._1,
-        tierFanout, maxFoldDocs) match {
-        case Some(win) =>
-          fold(spark, root, column, win, numBuckets,
-            Some(win.forall(st(_)._2)))
-          if (reclaim) vacuum(spark, root, column)
-          true
-        case None => false
-      }
-    }
-  }
+                    maxFoldDocs: Long = Long.MaxValue): Boolean =
+    lifecycle(spark, root, column).compactTiered(maxGenerations, tierFanout,
+      maxFoldDocs, reclaim)(seal(spark, root, column, numBuckets))
 
   /** Per-column merged-stats cache (shared token-validated machinery:
     * [[IndexBuild.StatsCache]]): a rebuilt or refreshed index at the same
@@ -269,11 +228,8 @@ object NumericIndex {
     math.min(1.0, inside.toDouble / st.quantiles.length + 2.0 / st.quantiles.length)
   }
 
-  private def read(spark: SparkSession, root: String, column: String): DataFrame = {
-    val gens = generations(spark, root, column)
-    require(gens.nonEmpty, s"no numeric-index generations for $column under $root")
-    spark.read.parquet(gens.map { case (l, h) => dataGenDir(root, column, l, h) }: _*)
-  }
+  private def read(spark: SparkSession, root: String, column: String): DataFrame =
+    lifecycle(spark, root, column).read(dataGenDir(root, column, _, _))
 
   /** doc_ids with value == v (reference P2 as an index lookup). Exact even
     * for fractional sources: only x == v.0 truncates to v AND satisfies the

@@ -202,20 +202,35 @@ private[build] object Spimi {
     * generation's dictionary agg and 1-row stats write) execute on a
     * concurrent pool, joining them afterwards — or run everything inline
     * when there is no `main` work (a resume where only side tables are
-    * missing). A `main` failure still reaps the pool (the generation stays
-    * uncommitted either way — resume redoes the rest); side-job failures
-    * surface on join. Shared by the word and trigram buildGenerations so
-    * the concurrency/error contract cannot diverge between them. */
+    * missing). Side-job failures surface on join. A `main` failure stops
+    * the side jobs (`shutdownNow` interrupts the running ones and drops any
+    * not yet started), joins them, and rethrows with their failures
+    * attached via `addSuppressed` — none keeps running past the call, and
+    * no side error is lost (the generation stays uncommitted either way;
+    * resume redoes the rest). Shared by the word and trigram
+    * buildGenerations so the concurrency/error contract cannot diverge
+    * between them. */
   def withSideJobs(needMain: Boolean, sideJobs: Seq[() => Unit])(main: => Unit): Unit = {
-    val pool =
-      if (needMain && sideJobs.nonEmpty)
-        Some(java.util.concurrent.Executors.newFixedThreadPool(sideJobs.size))
-      else None
-    val futures = pool.toSeq.flatMap(p => sideJobs.map(f =>
-      p.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = f() })))
-    try if (needMain) main
-    finally pool.foreach(_.shutdown())
-    if (pool.isDefined) futures.foreach(_.get())
-    else sideJobs.foreach(f => f())
+    if (!needMain || sideJobs.isEmpty) {
+      if (needMain) main
+      sideJobs.foreach(_())
+      return
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(sideJobs.size)
+    val futures = sideJobs.map(f =>
+      pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
+    try main
+    catch {
+      case e: Throwable =>
+        // never-started jobs are dropped (their futures stay not-done)
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+        futures.filter(_.isDone).foreach { f =>
+          try f.get()
+          catch { case x: java.util.concurrent.ExecutionException => e.addSuppressed(x.getCause) }
+        }
+        throw e
+    } finally pool.shutdown()
+    futures.foreach(_.get())
   }
 }

@@ -73,9 +73,8 @@ final case class TriStats(n_rows: Long, max_doc_id: Long)
   */
 object TrigramIndex {
 
-  import IndexBuild.TableIO
+  import IndexBuild.{TableIO, timed}
 
-  def runsDir(dir: String) = s"$dir/tri_runs"
   def runsBatchDir(dir: String, batch: Int) = s"$dir/tri_runs/batch=$batch"
   def lineageDir(dir: String) = s"$dir/tri_lineage"
   def dictGenDir(dir: String, lo: Int, hi: Int) = s"$dir/tri_dict/gen=${lo}_$hi"
@@ -90,28 +89,29 @@ object TrigramIndex {
       tierFanout: Int = 4,
       maxFoldDocs: Long = Long.MaxValue) // see IndexBuild.BuildConfig.maxFoldDocs
 
-  private def genTables(dir: String)(l: Int, h: Int): Seq[String] =
-    Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h))
+  /** The trigram index's generation lifecycle ([[Generations]]):
+    * generations list under `tri_segments`, the tri_runs batch dirs are
+    * the slots, and the stats fold as Σ n_rows / max max_doc_id. */
+  private def lifecycle(spark: SparkSession, dir: String) = new Generations(spark,
+    s"$dir/tri_segments",
+    (l, h) => Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
+    runsBatchDir(dir, _), statsGenDir(dir, _, _),
+    Seq("n_rows" -> Generations.Sum, "max_doc_id" -> Generations.Max),
+    _ => ())
 
-  /** Highest runs batch id PRESENT on disk (committed or reserved), -1 for
-    * none — the monotone slot allocator (same contract as
-    * [[IndexBuild.maxRunsBatch]]). */
-  def maxBatch(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(runsDir(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt }
-      .foldLeft(-1)(math.max)
-  }
+  /** Fold seal: re-shuffle exactly the window's runs into one generation
+    * carrying the window's (Σ n_rows, max max_doc_id). */
+  private def seal(spark: SparkSession, dir: String, cfg: TriConfig): Generations.Seal =
+    (win, totals) =>
+      buildGeneration(spark, dir, win.flatMap { case (l, h) => l to h }, cfg,
+        totals(0), totals(1))
 
-  /** Reserve a runs slot (mkdir the batch dir) BEFORE durably recording it,
-    * so other allocators skip past even if the recording actor crashes —
-    * the same protocol as the word index's streaming slots. */
-  def reserveSlot(spark: SparkSession, dir: String, batch: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(runsBatchDir(dir, batch))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-  }
+  /** Highest tri_runs batch slot present on disk, -1 for none. */
+  def maxBatch(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).maxBatch
+
+  /** Reserve tri_runs slot `batch` before durably recording it. */
+  def reserveSlot(spark: SparkSession, dir: String, batch: Int): Unit =
+    lifecycle(spark, dir).reserveSlot(batch)
 
   /** Per-index merged-stats cache (shared token-validated machinery:
     * [[IndexBuild.StatsCache]] — refreshes/compactions/rebuilds invalidate
@@ -136,31 +136,19 @@ object TrigramIndex {
   def coveredMaxDocId(spark: SparkSession, dir: String): Option[Long] =
     statsMerged(spark, dir).map(_.max_doc_id)
 
-  /** Same contract as [[IndexBuild.generations]] (shared listing /
-    * containment machinery: [[IndexBuild.GenListing]]). */
+  /** Committed, non-retired generations, sorted ([[Generations]]). */
   def generations(spark: SparkSession, dir: String): Seq[(Int, Int)] =
-    IndexBuild.GenListing.survivors(
-      IndexBuild.GenListing.committed(spark, s"$dir/tri_segments", genTables(dir)))
+    lifecycle(spark, dir).generations
 
-  /** Reclaim retired (folded-over) generation dirs - see
-    * [[IndexBuild.vacuum]] for the read-safety rationale. */
-  def vacuum(spark: SparkSession, dir: String): Int =
-    IndexBuild.GenListing.reclaim(spark,
-      IndexBuild.GenListing.committed(spark, s"$dir/tri_segments", genTables(dir)),
-      genTables(dir))
+  /** Reclaim retired generations ([[Generations.vacuum]]); returns the count. */
+  def vacuum(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).vacuum
 
-  def readSegments(spark: SparkSession, dir: String): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed trigram generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => segmentsGenDir(dir, l, h) }: _*)
-  }
+  def readSegments(spark: SparkSession, dir: String): DataFrame =
+    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _))
 
   /** Raw per-generation dictionary rows (key, df) — df is additive. */
-  def readDictRaw(spark: SparkSession, dir: String): DataFrame = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no completed trigram generations under $dir")
-    spark.read.parquet(gens.map { case (l, h) => dictGenDir(dir, l, h) }: _*)
-  }
+  def readDictRaw(spark: SparkSession, dir: String): DataFrame =
+    lifecycle(spark, dir).read(dictGenDir(dir, _, _))
 
   def exists(spark: SparkSession, dir: String): Boolean =
     generations(spark, dir).nonEmpty
@@ -190,17 +178,6 @@ object TrigramIndex {
     * word-index build; [[ingestBatch]] + [[compactTail]]/[[remerge]] extend
     * it incrementally (log-structured generations, same scheme as
     * [[IndexBuild]]). */
-  private val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
-  @inline private def timed[A](name: String)(f: => A): A = {
-    if (!verbose) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"TRI-STAGE $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   def build(spark: SparkSession, df: DataFrame, idCol: String, strCol: String,
             dir: String, cfg: TriConfig = TriConfig()): Unit = {
     if (!TableIO.done(spark, runsBatchDir(dir, 0))) timed("tri_runs") {
@@ -228,8 +205,8 @@ object TrigramIndex {
                   strCol: String, dir: String, batchId: Int,
                   cfg: TriConfig = TriConfig(), overwrite: Boolean = false): Unit = {
     val bDir = runsBatchDir(dir, batchId)
-    val genDone = genTables(dir)(batchId, batchId).forall(TableIO.done(spark, _))
-    if (!overwrite && TableIO.done(spark, bDir) && genDone) return
+    if (!overwrite && TableIO.done(spark, bDir) &&
+        lifecycle(spark, dir).isCommitted(batchId, batchId)) return
     if (overwrite || !TableIO.done(spark, bDir))
       TableIO.write(chunkRuns(newDocs, idCol, strCol, cfg.shardSize * 1024), bDir)
     // bucket count sized to the batch: a small refresh generation must not
@@ -240,95 +217,21 @@ object TrigramIndex {
       nNew, maxId, force = overwrite)
   }
 
-  /** Fold contiguous generations into one covering their union by
-    * re-shuffling exactly those batches' runs; delete the inputs only after
-    * the combined generation commits ([[generations]] hides contained ranges
-    * in the interim, so readers stay exact). */
-  private def fold(spark: SparkSession, dir: String, gens: Seq[(Int, Int)],
-                   cfg: TriConfig,
-                   knownTotals: Option[(Long, Long)] = None): Unit = {
-    import spark.implicits._
-    require(gens.size >= 2, "fold needs at least two generations")
-    // contiguous coverage required — a gap is a reserved-but-unsealed slot
-    // whose later generation a spanning fold would bury (see IndexBuild.fold)
-    gens.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) =>
-        require(l2 == h1 + 1,
-          s"trigram fold window spans a coverage gap between $h1 and $l2")
-      case _ => ()
-    }
-    // (Σ n_rows, max max_doc_id) — pre-computed by the tiered policy's one
-    // statPerGen job, or one tiny job here for direct callers
-    val (nRows, maxId) = knownTotals.getOrElse {
-      val st = spark.read
-        .parquet(gens.map { case (l, h) => statsGenDir(dir, l, h) }: _*)
-        .as[TriStats].collect()
-      (st.map(_.n_rows).sum, if (st.isEmpty) -1L else st.map(_.max_doc_id).max)
-    }
-    buildGeneration(spark, dir, gens.flatMap { case (l, h) => l to h }, cfg,
-      nRows, maxId)
-    // inputs retired, not deleted — [[vacuum]] reclaims them after a grace
-    // period so in-flight readers keep their files (see IndexBuild.fold)
-  }
-
-  /** Per-generation (n_rows, max_doc_id) for the tiered policy AND its
-    * fold — one job across all generations ([[IndexBuild.statPerGen]]). */
-  private def genStats(spark: SparkSession, dir: String,
-                       gens: Seq[(Int, Int)]): Map[(Int, Int), (Long, Long)] =
-    IndexBuild.statPerGen(spark, Seq(statsGenDir(dir, _, _)), gens,
-      Seq("n_rows", "max_doc_id"))
-      .map { case (g, rows) => g -> (rows.map(_(0)).sum, rows.map(_(1)).max) }
-
-  /** Size-tiered bounded compaction — same policy as
-    * [[IndexBuild.compactTiered]]: above `maxGenerations` survivors, fold
-    * the cheapest window of 2..tierFanout adjacent similar-sized
-    * generations, never across a coverage gap. */
+  /** [[Generations.compactTiered]] with this config's policy bounds. */
   def compactTiered(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig(),
-                    reclaim: Boolean = true): Boolean = {
-    val gens = generations(spark, dir)
-    if (gens.size <= cfg.maxGenerations) false
-    else {
-      val st = genStats(spark, dir, gens)
-      IndexBuild.GenListing.pickTieredWindow(
-        IndexBuild.GenListing.contiguousGroups(gens), st(_)._1, cfg.tierFanout,
-        cfg.maxFoldDocs) match {
-        case Some(win) =>
-          fold(spark, dir, win, cfg,
-            Some((win.map(st(_)._1).sum, win.map(st(_)._2).max)))
-          if (reclaim) vacuum(spark, dir)
-          true
-        case None => false
-      }
-    }
-  }
+                    reclaim: Boolean = true): Boolean =
+    lifecycle(spark, dir).compactTiered(cfg.maxGenerations, cfg.tierFanout,
+      cfg.maxFoldDocs, reclaim)(seal(spark, dir, cfg))
 
-  /** Explicit tail compaction: fold every generation except the base, one
-    * pass per contiguous group (see [[IndexBuild.compactTail]]; pass
-    * reclaim=false when concurrent readers may be mid-scan). */
+  /** [[Generations.compactTail]]: fold every generation but the base. */
   def compactTail(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig(),
-                  reclaim: Boolean = true): Boolean = {
-    val gens = generations(spark, dir)
-    if (gens.size < 3) false
-    else {
-      val folded = IndexBuild.GenListing.contiguousGroups(gens.drop(1)).filter(_.size >= 2)
-      folded.foreach(g => fold(spark, dir, g, cfg))
-      if (reclaim) vacuum(spark, dir)
-      folded.nonEmpty
-    }
-  }
+                  reclaim: Boolean = true): Boolean =
+    lifecycle(spark, dir).compactTail(reclaim)(seal(spark, dir, cfg))
 
-  /** Full compaction: fold ALL generations into one per contiguous group
-    * (reference M4/M8). */
+  /** [[Generations.remerge]]: fold everything, one pass per contiguous group. */
   def remerge(spark: SparkSession, dir: String, cfg: TriConfig = TriConfig(),
-              reclaim: Boolean = true): Unit = {
-    val gens = generations(spark, dir)
-    require(gens.nonEmpty, s"no trigram generations under $dir")
-    if (gens.size >= 2) {
-      IndexBuild.GenListing.contiguousGroups(gens).filter(_.size >= 2)
-        .foreach(g => fold(spark, dir, g, cfg))
-      if (reclaim) vacuum(spark, dir)
-    }
-  }
+              reclaim: Boolean = true): Unit =
+    lifecycle(spark, dir).remerge(reclaim)(seal(spark, dir, cfg))
 
   /** Dict + stats + segments for the given runs `batches` under
     * `gen=<min>_<max>`; `_SUCCESS`-gated per table for resume (bypassed

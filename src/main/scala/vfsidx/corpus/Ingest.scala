@@ -312,10 +312,8 @@ object Ingest {
     }
     // reclaim generations retired by earlier auto-compactions: by the next
     // stream start, any reader that planned against them is long gone
-    IndexBuild.vacuum(spark, indexDir)
+    vacuumAll(spark, indexDir)
     val (triCols, numCols) = registeredCols(spark, indexDir)
-    triCols.foreach(c => vfsidx.build.TrigramIndex.vacuum(spark, s"$indexDir/tri/$c"))
-    numCols.foreach(c => vfsidx.build.NumericIndex.vacuum(spark, indexDir, c))
     val needed = (contentCol +: (triCols ++ numCols)).distinct
     val missingCols = needed.filterNot(f => schema.fieldNames.contains(f))
     require(missingCols.isEmpty,
@@ -368,9 +366,7 @@ object Ingest {
         // data — otherwise a refresh could claim a slot and the replayed
         // epoch would be _SUCCESS-skipped over the refresh's data, silently
         // dropping this epoch's files.
-        val resFs = new org.apache.hadoop.fs.Path(IndexBuild.runsDir(indexDir, slot))
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        resFs.mkdirs(new org.apache.hadoop.fs.Path(IndexBuild.runsDir(indexDir, slot)))
+        IndexBuild.reserveSlot(spark, indexDir, slot)
         val colSlots = allocateColSlots(spark, indexDir, triCols, numCols)
         val slotLine =
           if (colSlots.isEmpty) "-"
@@ -396,9 +392,7 @@ object Ingest {
         // reclaim generations retired by PREVIOUS epochs' compactions —
         // one epoch is the in-stream grace period, so an unbounded stream
         // never accumulates retired dirs
-        IndexBuild.vacuum(spark, indexDir)
-        triCols.foreach(c => vfsidx.build.TrigramIndex.vacuum(spark, s"$indexDir/tri/$c"))
-        numCols.foreach(c => vfsidx.build.NumericIndex.vacuum(spark, indexDir, c))
+        vacuumAll(spark, indexDir)
         // ids continue after the persisted corpus (docCount reads only
         // COMMITTED doc_stats partitions); on replay the RECORDED base
         // wins — see slotFor's Scaladoc
@@ -444,6 +438,17 @@ object Ingest {
       else fs.listStatus(path).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
     }
     (subdirs(s"$indexDir/tri"), subdirs(s"$indexDir/num"))
+  }
+
+  /** Reclaim the retired generations of the word index and of every
+    * registered per-column index under `indexDir` (each index's
+    * [[vfsidx.build.Generations.vacuum]]); returns how many were reclaimed. */
+  def vacuumAll(spark: SparkSession, indexDir: String): Int = {
+    import vfsidx.build.{IndexBuild, NumericIndex, TrigramIndex}
+    val (triCols, numCols) = registeredCols(spark, indexDir)
+    IndexBuild.vacuum(spark, indexDir) +
+      triCols.map(c => TrigramIndex.vacuum(spark, s"$indexDir/tri/$c")).sum +
+      numCols.map(c => NumericIndex.vacuum(spark, indexDir, c)).sum
   }
 
   private def triCfgOf(cfg: vfsidx.build.IndexBuild.BuildConfig) =
@@ -539,11 +544,7 @@ object Ingest {
     val (triCols, numCols) = registeredCols(spark, indexDir)
     // reclaim generations retired by the PREVIOUS refresh's compaction -
     // one full refresh cycle is the grace period for in-flight readers
-    if (catFs.exists(catPath)) {
-      IndexBuild.vacuum(spark, indexDir)
-      triCols.foreach(c => vfsidx.build.TrigramIndex.vacuum(spark, s"$indexDir/tri/$c"))
-      numCols.foreach(c => vfsidx.build.NumericIndex.vacuum(spark, indexDir, c))
-    }
+    if (catFs.exists(catPath)) vacuumAll(spark, indexDir)
 
     // ---- refresh intent WAL ------------------------------------------
     // (slot, doc base, per-column slots, file list) is persisted BEFORE
@@ -698,9 +699,7 @@ object Ingest {
     // (A crash in the reserve->writeIntent window orphans empty reserved
     // dirs: a permanent coverage gap that blocks folds across it — a
     // bounded performance wart, never a correctness one.)
-    new org.apache.hadoop.fs.Path(IndexBuild.runsDir(indexDir, batchId))
-      .getFileSystem(hconf)
-      .mkdirs(new org.apache.hadoop.fs.Path(IndexBuild.runsDir(indexDir, batchId)))
+    IndexBuild.reserveSlot(spark, indexDir, batchId)
     val colSlots = allocateColSlots(spark, indexDir, triCols, numCols)
     writeIntent(batchId, docBase, colSlots, newFiles)
     val nNew = ingestFiles(batchId, docBase, colSlots, newFiles, initial = catEmpty)

@@ -298,58 +298,57 @@ object QueryParser {
       val r = df.agg(count(when(idL <= covered, 1)), count(when(idL > covered, 1))).head()
       (r.getLong(0), r.getLong(1))
     }
-    strCols.foreach { c =>
-      val dir = triDir(root, c)
-      // reclaim what the PREVIOUS regist's compaction retired (grace period
-      // = one regist cycle, same pattern as the refresh driver)
-      TrigramIndex.vacuum(spark, dir)
-      TrigramIndex.statsMerged(spark, dir) match {
-        case None => TrigramIndex.build(spark, df, idCol, c, dir, triCfg)
-        case Some(st) =>
-          val (below, above) = belowAbove(st.max_doc_id)
-          if (below != st.n_rows) {
-            System.err.println(s"vfsidx: tri/$c covers ${st.n_rows} rows up to id " +
-              s"${st.max_doc_id} but the table holds $below rows at or below it " +
+    // One column's re-regist, given its (n_rows, max_doc_id) watermark:
+    // build it when absent, rebuild it on a gap-fill, else seal the rows
+    // above the watermark at the next free slot and fold tiered. The slot
+    // is past everything PRESENT (committed, partial, or merely reserved by
+    // a crashed stream epoch/refresh — maxBatch sees reserved dirs, so this
+    // can never collide with a slot a replay will later complete); a
+    // crashed regist attempt's own partial slot is simply orphaned (a
+    // permanent coverage gap — folds split around it, correctness
+    // unaffected). Reclaim is deferred: a concurrent reader that planned
+    // against the folded generations keeps its files until the next regist.
+    def refreshColumn(name: String, colDir: String, covered: Option[(Long, Long)],
+                      build: () => Unit, nextSlot: () => Int,
+                      ingest: (DataFrame, Int) => Unit, compact: () => Unit): Unit =
+      covered match {
+        case None => build()
+        case Some((nRows, maxId)) =>
+          val (below, above) = belowAbove(maxId)
+          if (below != nRows) {
+            System.err.println(s"vfsidx: $name covers $nRows rows up to id " +
+              s"$maxId but the table holds $below rows at or below it " +
               "(an append filled an id gap below the watermark) - rebuilding the column")
-            vfsidx.build.IndexBuild.TableIO.rmrf(spark, dir)
-            TrigramIndex.build(spark, df, idCol, c, dir, triCfg)
+            vfsidx.build.IndexBuild.TableIO.rmrf(spark, colDir)
+            build()
           } else if (above > 0) {
-            val newRows = df.filter(col(idCol).cast("long") > st.max_doc_id)
-            // slot past everything PRESENT (committed, partial, or merely
-            // reserved by a crashed stream epoch/refresh — maxBatch sees
-            // reserved dirs, so this can never collide with a slot a
-            // replay will later complete); a crashed regist attempt's own
-            // partial slot is simply orphaned (a permanent coverage gap —
-            // folds split around it, correctness unaffected)
-            val slot = TrigramIndex.maxBatch(spark, dir) + 1
-            TrigramIndex.ingestBatch(spark, newRows, idCol, c, dir, slot,
-              triCfg, overwrite = true)
-            // reclaim deferred: a concurrent reader that planned against
-            // the folded generations keeps its files until the next regist
-            TrigramIndex.compactTiered(spark, dir, triCfg, reclaim = false)
+            ingest(df.filter(col(idCol).cast("long") > maxId), nextSlot())
+            compact()
           }
       }
+    // each column first reclaims what the PREVIOUS regist's compaction
+    // retired (grace period = one regist cycle, same pattern as the
+    // refresh driver)
+    strCols.foreach { c =>
+      val dir = triDir(root, c)
+      TrigramIndex.vacuum(spark, dir)
+      refreshColumn(s"tri/$c", dir,
+        TrigramIndex.statsMerged(spark, dir).map(st => (st.n_rows, st.max_doc_id)),
+        () => TrigramIndex.build(spark, df, idCol, c, dir, triCfg),
+        () => TrigramIndex.maxBatch(spark, dir) + 1,
+        (rows, slot) => TrigramIndex.ingestBatch(spark, rows, idCol, c, dir, slot,
+          triCfg, overwrite = true),
+        () => TrigramIndex.compactTiered(spark, dir, triCfg, reclaim = false))
     }
     numCols.foreach { c =>
       NumericIndex.vacuum(spark, root, c)
-      NumericIndex.stats(spark, root, c) match {
-        case None => NumericIndex.build(spark, df, idCol, c, root)
-        case Some(st) =>
-          val (below, above) = belowAbove(st.max_doc_id)
-          if (below != st.n_rows) {
-            System.err.println(s"vfsidx: num/$c covers ${st.n_rows} rows up to id " +
-              s"${st.max_doc_id} but the table holds $below rows at or below it " +
-              "(an append filled an id gap below the watermark) - rebuilding the column")
-            vfsidx.build.IndexBuild.TableIO.rmrf(spark, NumericIndex.colDir(root, c))
-            NumericIndex.build(spark, df, idCol, c, root)
-          } else if (above > 0) {
-            val newRows = df.filter(col(idCol).cast("long") > st.max_doc_id)
-            val slot = NumericIndex.maxBatch(spark, root, c) + 1
-            NumericIndex.ingestBatch(spark, newRows, idCol, c, root, slot,
-              overwrite = true)
-            NumericIndex.compactTiered(spark, root, c, reclaim = false)
-          }
-      }
+      refreshColumn(s"num/$c", NumericIndex.colDir(root, c),
+        NumericIndex.stats(spark, root, c).map(st => (st.n_rows, st.max_doc_id)),
+        () => NumericIndex.build(spark, df, idCol, c, root),
+        () => NumericIndex.maxBatch(spark, root, c) + 1,
+        (rows, slot) => NumericIndex.ingestBatch(spark, rows, idCol, c, root, slot,
+          overwrite = true),
+        () => NumericIndex.compactTiered(spark, root, c, reclaim = false))
     }
   }
 

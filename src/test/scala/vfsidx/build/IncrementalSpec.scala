@@ -286,40 +286,95 @@ class IncrementalSpec extends SparkTestBase {
     assert(e.getMessage.contains("textlines"))
   }
 
-  test("REPLAYED stream epoch is never buried: folds refuse to span a reserved slot") {
-    // A streaming epoch reserves its runs slot (mkdir) BEFORE recording it
-    // in the checkpoint; if it crashes there, later compactions must not
-    // commit a generation range spanning that slot — else the replayed
-    // epoch's gen=slot_slot would be hidden by containment and vacuumed
-    // (silent data loss). Simulate: gens 0,1, reserved slot 2, gens 3,4,5.
-    val idx = tmpDir("buried_idx")
+  /** One generational index kind, as the REPLAYED-epoch scenario drives
+    * it: `slotDir` is the dir whose mkdir reserves a slot, `ingest` seals
+    * docs [lo, hi) at a slot, `compact` is the kind's tiered policy with
+    * maxGenerations = 2, `foldAll` its full compaction, and `finds` asks
+    * the index for a doc of the replayed epoch. */
+  private case class IndexKind(
+      slotDir: (String, Int) => String,
+      ingest: (String, Int, Long, Long) => Unit,
+      generations: String => Seq[(Int, Int)],
+      compact: String => Boolean,
+      foldAll: String => Unit,
+      finds: String => Boolean)
+
+  private def slice(lo: Long, hi: Long) =
+    Synth.corpus(spark, hi, partitions = 2).filter($"doc_id" >= lo)
+
+  private val wordKind = {
     val tight = cfg.copy(numBatches = 1, maxGenerations = 2)
-    def batch(i: Int, lo: Long, hi: Long): Unit = {
-      val docs = Synth.corpus(spark, hi, partitions = 2)
-        .filter($"doc_id" >= lo).as[vfsidx.corpus.SourceFile]
-      IndexBuild.ingestBatch(spark, docs, idx, batchId = i, tight)
-    }
-    batch(0, 0, 40); batch(1, 40, 80)
+    IndexKind(IndexBuild.runsDir,
+      (idx, i, lo, hi) => IndexBuild.ingestBatch(spark,
+        slice(lo, hi).as[vfsidx.corpus.SourceFile], idx, batchId = i, tight),
+      IndexBuild.generations(spark, _),
+      IndexBuild.compactTiered(spark, _, tight),
+      IndexBuild.remerge(spark, _, tight),
+      // the replayed docs are queryable
+      idx => new Bm25Index(spark, idx).topKOr("needle_220", 5).count() == 1)
+  }
+
+  private val trigramKind = {
+    val tri = TrigramIndex.TriConfig(numBuckets = 4, saltThreshold = 150, shardSize = 128,
+      maxGenerations = 2)
+    IndexKind(TrigramIndex.runsBatchDir,
+      (d, i, lo, hi) => TrigramIndex.ingestBatch(spark, slice(lo, hi).toDF(),
+        "doc_id", "content", d, batchId = i, tri),
+      TrigramIndex.generations(spark, _),
+      TrigramIndex.compactTiered(spark, _, tri),
+      TrigramIndex.remerge(spark, _, tri),
+      d => TrigramIndex.searchCandidates(spark, d, "needle_220")
+        .as[Long].collect().contains(220L))
+  }
+
+  private val numericKind =
+    IndexKind((root, b) => NumericIndex.dataGenDir(root, "n", b, b),
+      (root, i, lo, hi) => NumericIndex.ingestBatch(spark,
+        slice(lo, hi).withColumn("n", $"doc_id" * 3), "doc_id", "n", root, batchId = i),
+      NumericIndex.generations(spark, _, "n"),
+      NumericIndex.compactTiered(spark, _, "n", maxGenerations = 2),
+      // no public remerge: the tiered policy with a bound of 1 folds every
+      // contiguous group down to one generation
+      root => while (NumericIndex.compactTiered(spark, root, "n", maxGenerations = 1)) (),
+      root => NumericIndex.point(spark, root, "n", 660L).as[Long].collect().toSeq == Seq(220L))
+
+  /** A streaming epoch reserves its slot (mkdir) BEFORE recording it in the
+    * checkpoint; if it crashes there, later compactions must not commit a
+    * generation range spanning that slot — else the replayed epoch's
+    * gen=slot_slot would be hidden by containment and vacuumed (silent
+    * data loss). Simulate: gens 0,1, reserved slot 2, gens 3,4,5. */
+  private def replayedEpochNeverBuried(k: IndexKind, dir: String): Unit = {
+    k.ingest(dir, 0, 0, 40); k.ingest(dir, 1, 40, 80)
     // epoch reserves slot 2 and crashes before ingesting anything
-    new java.io.File(IndexBuild.runsDir(idx, 2)).mkdirs()
-    batch(3, 80, 120); batch(4, 120, 160); batch(5, 160, 200)
-    assert(IndexBuild.generations(spark, idx) ==
-      Seq((0, 0), (1, 1), (3, 3), (4, 4), (5, 5)))
+    new java.io.File(k.slotDir(dir, 2)).mkdirs()
+    k.ingest(dir, 3, 80, 120); k.ingest(dir, 4, 120, 160); k.ingest(dir, 5, 160, 200)
+    assert(k.generations(dir) == Seq((0, 0), (1, 1), (3, 3), (4, 4), (5, 5)))
     // compaction (any number of rounds) must never produce a gen spanning 2
     var folded = true
-    while (folded) folded = IndexBuild.compactTiered(spark, idx, tight)
-    IndexBuild.remerge(spark, idx, tight)
-    val gens = IndexBuild.generations(spark, idx)
+    while (folded) folded = k.compact(dir)
+    k.foldAll(dir)
+    val gens = k.generations(dir)
     assert(gens.forall { case (l, h) => h < 2 || l > 2 }, s"a gen spans slot 2: $gens")
     // the epoch replays: its generation seals at slot 2 and SURVIVES
-    batch(2, 200, 240)
-    assert(IndexBuild.generations(spark, idx).contains((2, 2)))
-    val bm = new Bm25Index(spark, idx)
-    assert(bm.topKOr("needle_220", 5).count() == 1)   // the replayed docs are queryable
+    k.ingest(dir, 2, 200, 240)
+    assert(k.generations(dir).contains((2, 2)))
+    assert(k.finds(dir))
     // with the gap closed, full compaction folds to ONE generation
-    IndexBuild.remerge(spark, idx, tight)
-    assert(IndexBuild.generations(spark, idx) == Seq((0, 5)))
-    assert(new Bm25Index(spark, idx).topKOr("needle_220", 5).count() == 1)
+    k.foldAll(dir)
+    assert(k.generations(dir) == Seq((0, 5)))
+    assert(k.finds(dir))
+  }
+
+  test("REPLAYED stream epoch is never buried: folds refuse to span a reserved slot") {
+    replayedEpochNeverBuried(wordKind, tmpDir("buried_idx"))
+  }
+
+  test("REPLAYED stream epoch is never buried (trigram index)") {
+    replayedEpochNeverBuried(trigramKind, tmpDir("buried_tri"))
+  }
+
+  test("REPLAYED stream epoch is never buried (numeric index)") {
+    replayedEpochNeverBuried(numericKind, tmpDir("buried_num"))
   }
 
   test("SIZE-TIERED compaction: per-fold shuffled postings stay bounded by the tier, not the total") {
@@ -367,15 +422,14 @@ class IncrementalSpec extends SparkTestBase {
   test("maxFoldDocs caps the fold window: oversized cheapest window is skipped, query answers") {
     // pickTieredWindow unit behavior: cap below the cheapest pair -> None;
     // cap mid-growth -> growth stops at the bound instead of reaching fanout
-    import IndexBuild.GenListing
     val gens = Seq((0, 0), (1, 1), (2, 2), (3, 3))
     val sizes = Map((0, 0) -> 1000L, (1, 1) -> 10L, (2, 2) -> 10L, (3, 3) -> 10L)
-    val groups = GenListing.contiguousGroups(gens)
-    assert(GenListing.pickTieredWindow(groups, sizes, 4) ==
+    val groups = Generations.contiguousGroups(gens)
+    assert(Generations.pickTieredWindow(groups, sizes, 4) ==
       Some(Seq((1, 1), (2, 2), (3, 3))))
-    assert(GenListing.pickTieredWindow(groups, sizes, 4, maxDocs = 25L) ==
+    assert(Generations.pickTieredWindow(groups, sizes, 4, maxDocs = 25L) ==
       Some(Seq((1, 1), (2, 2))))
-    assert(GenListing.pickTieredWindow(groups, sizes, 4, maxDocs = 15L) == None)
+    assert(Generations.pickTieredWindow(groups, sizes, 4, maxDocs = 15L) == None)
 
     // integration: a merge-on-search fold with a too-small cap leaves the
     // generation count unchanged and the query still answers exactly

@@ -102,4 +102,32 @@ class NumericIndexSpec extends SparkTestBase {
     val whole = NumericIndex.estimateFraction(st, Some(-100L), Some(100L))
     assert(whole >= 0.99)
   }
+
+  test("tiered folds keep stats (n_rows, integral, max_doc_id) and point/range answers") {
+    val d = tmpDir("numidx_fold")
+    val t = df.withColumn("y", $"doc_id" % 50)   // an integral column beside x
+    for (c <- Seq("x", "y")) {
+      // 7 slices of 30 rows, each sealed as its own generation
+      for (i <- 0 until 7)
+        NumericIndex.ingestBatch(spark, t.filter($"doc_id" >= i * 30 && $"doc_id" < (i + 1) * 30),
+          "doc_id", c, d, batchId = i)
+      assert(NumericIndex.generations(spark, d, c).size == 7)
+      def statsKey = NumericIndex.stats(spark, d, c).map(s => (s.n_rows, s.integral, s.max_doc_id))
+      def answers: Seq[Seq[Long]] = Seq(
+        NumericIndex.point(spark, d, c, 44L),
+        NumericIndex.range(spark, d, c, Some(43L), Some(45L), loInclusive = false),
+        NumericIndex.range(spark, d, c, None, Some(0L), hiInclusive = true),
+        NumericIndex.range(spark, d, c, Some(10L), None)
+      ).map(_.as[Long].collect().sorted.toSeq)
+      val (stats0, answers0) = (statsKey, answers)
+      assert(stats0 == Some((210L, c == "y", 209L)))
+      assert(answers0.head == t.filter(col(c).cast("long") === 44L)
+        .select($"doc_id").as[Long].collect().sorted.toSeq)
+      var folds = 0
+      while (NumericIndex.compactTiered(spark, d, c, maxGenerations = 2)) folds += 1
+      assert(folds >= 2 && NumericIndex.generations(spark, d, c).size <= 2)
+      assert(statsKey == stats0)
+      assert(answers == answers0)
+    }
+  }
 }

@@ -162,4 +162,36 @@ class SpimiSpec extends AnyFunSuite {
     assert(acc.value.keySet == Set(3, 4))
     assert(acc.value(3).nPostings == 100L)
   }
+
+  test("withSideJobs: a failing main stops the side jobs and keeps their errors") {
+    // side job 1 fails on its own; side job 2 would run for a minute. main
+    // fails once job 1 has thrown: the call must rethrow main's error with
+    // job 1's failure suppressed on it, after interrupting job 2.
+    val failed = new java.util.concurrent.CountDownLatch(1)
+    val sideError = new IllegalStateException("side write failed")
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      Spimi.withSideJobs(needMain = true, Seq(
+        () => try throw sideError finally failed.countDown(),
+        () => Thread.sleep(60000))) {
+        failed.await()
+        throw new RuntimeException("segments write failed")
+      }
+    }
+    assert(e.getMessage == "segments write failed")
+    assert(e.getSuppressed.contains(sideError))
+    assert(e.getSuppressed.exists(_.isInstanceOf[InterruptedException]))
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the sleeping side job was not interrupted")
+  }
+
+  test("withSideJobs: side-job failures surface when main succeeds; no main runs them inline") {
+    val e = intercept[java.util.concurrent.ExecutionException](
+      Spimi.withSideJobs(needMain = true,
+        Seq(() => throw new IllegalStateException("dict")))(()))
+    assert(e.getCause.getMessage == "dict")
+    var ran = 0
+    Spimi.withSideJobs(needMain = false, Seq(() => ran += 1, () => ran += 1))(
+      fail("main must not run"))
+    assert(ran == 2)
+  }
 }
