@@ -66,10 +66,13 @@ final case class LineageRow(
   * Spark restatement — each arrow is a Catalyst-planned stage, the single
   * `repartition` shuffle is the only data movement:
   *
-  *   corpus --flatMap--> postings runs (per ingest batch, resumable)
+  *   corpus --tokenize+accumulate--> chunk runs (per ingest batch, resumable)
   *   runs[lo..hi] --groupBy(term)--> dictionary/gen=lo_hi (df, tf_sum)
-  *   runs[lo..hi] --repartition(term, shard) + sortWithinPartitions
-  *        --mapPartitions encode--> segments/gen=lo_hi (varbyte + block-max)
+  *   runs[lo..hi] --repartition(xxhash64(term), pre_shard) + sortWithinPartitions
+  *        --Spimi.merge--> segments/gen=lo_hi (varbyte + block-max)
+  *
+  * The seal after the runs is shared with the trigram index
+  * ([[Spimi.seal]]); only the payload codec differs ([[WordCodec]]).
   *
   * GENERATIONS (the reference's merge consuming only unmerged write files,
   * /root/reference/column.go:418-604, k-way splice
@@ -160,17 +163,14 @@ object IndexBuild {
     * re-tokenizing the corpus). n_docs and tf_sum are additive, so the
     * combined stats are the window's totals. */
   private def seal(spark: SparkSession, dir: String, cfg: BuildConfig): Generations.Seal =
-    (win, totals) => {
-      val lineage = scala.collection.mutable.ArrayBuffer[LineageRow]()
-      buildGeneration(spark, dir, win.flatMap { case (l, h) => l to h }, totals(0), cfg,
-        lineage, Some(totals(1)))
-      appendLineage(spark, dir, lineage)
-    }
+    (win, totals) => appendLineage(spark, lineageDir(dir), buildGeneration(spark, dir,
+      win.flatMap { case (l, h) => l to h }, totals(0), cfg, Some(totals(1))))
 
-  private def appendLineage(spark: SparkSession, dir: String,
-                            rows: Iterable[LineageRow]): Unit = {
+  /** Append `rows` to the lineage table at `table` (no job when empty). */
+  private[build] def appendLineage(spark: SparkSession, table: String,
+                                   rows: Iterable[LineageRow]): Unit = {
     import spark.implicits._
-    if (rows.nonEmpty) TableIO.append(spark.createDataset(rows.toSeq).toDF(), lineageDir(dir))
+    if (rows.nonEmpty) TableIO.append(spark.createDataset(rows.toSeq).toDF(), table)
   }
 
   /** Token-validated per-directory cache for merged index stats — ONE
@@ -225,7 +225,7 @@ object IndexBuild {
     * generations-level check: `TriSegmentRow`'s on-disk layout is unchanged,
     * so committed trigram generations stay readable regardless of age; only
     * `tri_runs` changed shape, and those are gated per-batch-dir at
-    * fold/resume time in its buildGeneration.) */
+    * fold/resume time by [[Spimi.seal]], like the word runs.) */
   private def assertSegmentFormat(spark: SparkSession, dir: String,
                                   gens: Seq[(Int, Int)]): Unit = {
     if (gens.isEmpty) return
@@ -337,6 +337,12 @@ object IndexBuild {
     } catch { case scala.util.control.NonFatal(_) => ds.count() }
   }
 
+  /** (row count, max id; -1 for none) of `df` in one job. */
+  private[build] def countAndMax(df: DataFrame, idCol: String): (Long, Long) = {
+    val r = df.agg(count(lit(1)), max(col(idCol).cast("long"))).head()
+    (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+  }
+
   def tokenize(docs: Dataset[SourceFile]): Dataset[Posting] = {
     import docs.sparkSession.implicits._
     docs.flatMap { d =>
@@ -383,11 +389,10 @@ object IndexBuild {
     // between stages) ----
     val pending = (0 until cfg.numBatches).filter(b => !TableIO.done(spark, runsDir(dir, b)))
     val needDocStats = !TableIO.done(spark, docStatsBatchDir(dir, "init"))
-    // per-batch Σtf_sum, collected by the SAME metadata agg that already
-    // counts postings: when every batch was built by THIS call the
-    // generation's corpus tf_sum is just their sum, and the stats stage
-    // skips its own (serial, pre-segments) chunks agg job entirely
-    val batchTfSums = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    // per-batch Σtf_sum, observed on the runs writes: when every batch was
+    // built by THIS call the generation's corpus tf_sum is just their sum,
+    // and the stats stage skips its own chunks agg job entirely
+    var tfSums = Seq.empty[Long]
     if (pending.nonEmpty || needDocStats) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.max(1, math.min(cfg.ingestParallelism, pending.size + 1)))
@@ -404,29 +409,14 @@ object IndexBuild {
             }
           }))
         val futures = pending.map { b =>
-          pool.submit(new java.util.concurrent.Callable[LineageRow] {
-            def call(): LineageRow = timed(s"batch$b") {
-              val rDir = runsDir(dir, b)
-              val t0 = System.currentTimeMillis()
+          pool.submit(new java.util.concurrent.Callable[(LineageRow, Long)] {
+            def call(): (LineageRow, Long) = timed(s"batch$b") {
               val lo = b * perBatch
               val hi = math.min(nDocs, lo + perBatch)
               // column predicate (not a closure) so a parquet-backed corpus
               // gets min/max row-group pruning on doc_id
-              val batchDocs = docs.filter($"doc_id" >= lo && $"doc_id" < hi).as[SourceFile]
-              // postings count + tf sum OBSERVED on the write itself
-              // (accumulator-backed, exactly-once per completed action) —
-              // no post-write metadata job at all
-              val obs = new org.apache.spark.sql.Observation(s"runs_b$b")
-              TableIO.write(
-                chunkRuns(batchDocs, cfg.shardSize * 1024).observe(obs,
-                  coalesce(sum($"count"), lit(0L)).as("np"),
-                  coalesce(sum($"tf_sum"), lit(0L)).as("tf")),
-                rDir)
-              val m = obs.get
-              val (nPost, tfSum) = (m("np").asInstanceOf[Long], m("tf").asInstanceOf[Long])
-              batchTfSums.put(b, tfSum)
-              LineageRow("runs", "", b, "", "", hi - lo, nPost, 0L,
-                System.currentTimeMillis() - t0)
+              writeRuns(docs.filter($"doc_id" >= lo && $"doc_id" < hi).as[SourceFile],
+                dir, b, hi - lo, cfg)
             }
           })
         }
@@ -434,11 +424,13 @@ object IndexBuild {
         // lineage is recorded (their _SUCCESS dirs exist) and all failures
         // are reported together instead of losing the late ones
         val outcomes = futures.map(f => scala.util.Try(f.get()))
-        outcomes.collect { case scala.util.Success(r) => r }.foreach(lineage += _)
+        val written = outcomes.collect { case scala.util.Success(r) => r }
+        lineage ++= written.map(_._1)
+        tfSums = written.map(_._2)
         val failures = outcomes.collect { case scala.util.Failure(e) => e } ++
           dsFuture.flatMap(f => scala.util.Try(f.get()).failed.toOption)
         if (failures.nonEmpty) {
-          appendLineage(spark, dir, lineage)
+          appendLineage(spark, lineageDir(dir), lineage)
           val head = failures.head
           failures.tail.foreach(head.addSuppressed)
           throw head
@@ -446,147 +438,67 @@ object IndexBuild {
       } finally pool.shutdown()
     }
 
-    val knownTfSum =
-      if ((0 until cfg.numBatches).forall(batchTfSums.containsKey))
-        Some((0 until cfg.numBatches).map(batchTfSums.get(_)).sum)
-      else None   // resumed batches: the stats stage re-aggregates the chunks
-    buildGeneration(spark, dir, 0 until cfg.numBatches, nDocs, cfg, lineage, knownTfSum)
+    // resumed batches: the stats stage re-aggregates the chunks
+    val knownTfSum = if (pending.size == cfg.numBatches) Some(tfSums.sum) else None
+    lineage ++= buildGeneration(spark, dir, 0 until cfg.numBatches, nDocs, cfg, knownTfSum)
 
-    if (lineage.nonEmpty) timed("lineage")(appendLineage(spark, dir, lineage))
+    if (lineage.nonEmpty) timed("lineage")(appendLineage(spark, lineageDir(dir), lineage))
   }
+
+  /** The word index's side of the shared seal ([[Spimi.Kind]]): chunks
+    * shuffle on xxhash64(term) with the term as tiebreak, the dictionary
+    * holds (df, tf_sum) per term, and lineage orders terms in UTF-8 byte
+    * order. */
+  private[build] def kind(dir: String) = Spimi.Kind[String, SegmentRow]("",
+    runsDir(dir, _), segmentsGenDir(dir, _, _), dictGenDir(dir, _, _), statsGenDir(dir, _, _),
+    "term", Some(xxhash64(col("term"))),
+    Seq(sum(col("count")).cast("long").as("df"), sum(col("tf_sum")).as("tf_sum")),
+    (it, acc) => Spimi.observeBuckets(it, acc)(
+      _.term, identity[String], _.count.toLong, _.postings.length.toLong)(Spimi.Utf8Order))
 
   /** Derived tables (dictionary + stats + segments) for the given runs
-    * `batches`, written under `gen=lo_hi` (lo/hi = min/max batch — the range
-    * may contain gaps when streaming epochs skipped slots; only the listed
-    * batches are read). Each table is `_SUCCESS`-gated for resume.
-    * Shared by [[build]] (one generation over everything), [[ingestBatch]]
-    * (one generation per new batch) and [[compactTail]]/[[remerge]]. */
+    * `batches` ([[Spimi.seal]]). Shared by [[build]] (one generation over
+    * everything), [[ingestBatch]] (one generation per new batch) and the
+    * compactions. Stats come first: avgdl feeds the merge's block-max
+    * bounds. avgdl == Σtf / N because Σdl over docs == Σtf over postings,
+    * and Σtf arrives from the caller when it already observed it (runs
+    * write, folded generations' stats) — only resumes with unknown
+    * provenance pay a chunks agg job for it. Returns the segments' lineage
+    * rows. */
   private def buildGeneration(spark: SparkSession, dir: String, batches: Seq[Int],
                               nDocs: Long, cfg: BuildConfig,
-                              lineage: scala.collection.mutable.ArrayBuffer[LineageRow],
-                              knownTfSum: Option[Long] = None): Unit = {
+                              knownTfSum: Option[Long]): Seq[LineageRow] = {
     import spark.implicits._
-    val (lo, hi) = (batches.min, batches.max)
-    val gen = s"${lo}_$hi"
-    lazy val chunks = {
-      // migration gate: resuming/folding over runs written by a pre-chunk-
-      // format build must fail with an instruction, not an analysis error.
-      // Checked PER batch dir — a merged-read schema samples one footer and
-      // would let a mixed old/new set slip through to a wrong avgdl or a
-      // mid-shuffle NPE.
-      batches.foreach { b =>
-        require(spark.read.parquet(runsDir(dir, b)).schema.fieldNames.contains("pre_shard"),
-          s"runs batch=$b under $dir was written by a pre-chunk-format " +
-            "build (raw posting rows): delete the index directory and rebuild")
-      }
-      spark.read.parquet(batches.map(runsDir(dir, _)): _*)
-    }
-
-    // Stats FIRST: avgdl feeds the merge's block-max bounds. avgdl ==
-    // sum(tf)/N because sum(dl over docs) == sum(tf over postings), and
-    // sum(tf) comes off the tiny per-chunk metadata — never a postings scan.
-    // The VALUE is computed here (it gates the segment merge); the 1-row
-    // parquet WRITE is deferred to the concurrent side pool below, and the
-    // former write-then-read-back job is gone (the in-memory value IS what
-    // gets written; a resume with the stats already committed reads it back).
-    val sDir = statsGenDir(dir, lo, hi)
-    val needStats = !TableIO.done(spark, sDir)
-    val stats: CorpusStats =
-      if (needStats) {
-        // Σtf arrives pre-computed from the caller when it already aggregated
-        // the same chunk metadata (stage-1 lineage agg / folded gens' stats);
-        // only resumes with unknown provenance pay the chunks agg job here
-        val tfSum = knownTfSum.getOrElse(
-          chunks.agg(coalesce(sum($"tf_sum"), lit(0L))).as[Long].head())
-        CorpusStats(nDocs, tfSum, if (nDocs == 0) 0.0 else tfSum.toDouble / nDocs)
-      } else spark.read.parquet(sDir).as[CorpusStats].head()
-    def writeStats(): Unit = timed(s"stats:$gen") {
-      TableIO.write(Seq(stats).toDF(), sDir)
-    }
-
-    // ---- the one data shuffle: SPIMI merge of this generation's chunks ----
-    val segDir = segmentsGenDir(dir, lo, hi)
-    // Dictionary DERIVED from the chunk metadata (round 6): df = Σ count and
-    // tf_sum = Σ chunk tf_sum per term — each posting lives in exactly one
-    // chunk, so the values are identical to the former segment-metadata
-    // derivation. Reading the CHUNKS instead of the written segments makes
-    // the dict job independent of the segments job, so the two run
-    // CONCURRENTLY (guide §2.6: overlap independent jobs — the dict's small
-    // agg back-fills executors the segment shuffle's stage gaps leave idle)
-    // instead of the dict serializing behind the segment commit. The stats
-    // write (tiny, independent) rides the same pool.
-    val dDir = dictGenDir(dir, lo, hi)
-    val needDict = !TableIO.done(spark, dDir)
-    def writeDict(): Unit = timed(s"dict:$gen") {
-      TableIO.write(
-        chunks.groupBy($"term")
-          .agg(sum($"count").cast("long").as("df"), sum($"tf_sum").as("tf_sum")),
-        dDir)
-    }
-    val needSegs = !TableIO.done(spark, segDir)
-    val sideJobs: Seq[() => Unit] =
-      (if (needDict) Seq(() => writeDict()) else Nil) ++
-        (if (needStats) Seq(() => writeStats()) else Nil)
-
-    Spimi.withSideJobs(needSegs, sideJobs) { timed(s"segments:$gen") {
-      val t0 = System.currentTimeMillis()
-      // HASH partition on (term, pre_shard) — not range: range partitioning
-      // needs an extra sampling pass, and lexicographically adjacent term
-      // families (e.g. 10^6 df=1 `needle_*` terms) all land in one reducer.
-      // Hash spreads them uniformly; the per-file term min/max stats that
-      // replace the reference's filename key ranges still come from the
-      // within-partition ordering below. Only CHUNK rows move — an order of
-      // magnitude fewer rows and ~5x fewer bytes than raw postings — and
-      // `pre_shard` bounds every reducer group without needing df before
-      // the shuffle (see TrigramIndex for the same design).
-      //
-      // The shuffle/sort KEY is xxhash64(term), a packed long, with the
-      // term string demoted to a tiebreak: the trigram build's identical
-      // machinery (long keys throughout) scales 0.91-0.94 where the
-      // string-keyed word sort sat at ~0.78 — Tungsten's 8-byte sort
-      // prefix resolves long keys outright, while common-prefix term
-      // families (needle_*) degenerate every string-prefix comparison
-      // into a full-record compare. Hash collisions are harmless: rows
-      // sort (hash, pre_shard, term, ...), so a colliding foreign term is
-      // adjacent but never pooled (the group predicate compares the term).
-      val salt = cfg.saltThreshold
-      val shardSize = cfg.shardSize
-      val avgdl = stats.avgdl
-      // per-bucket lineage observed ON the write action via a last-write-wins
-      // per-partition accumulator ([[Spimi.BucketStatsAcc]]) — the former
-      // post-write groupBy(bucket) re-read the entire freshly-written
-      // segments table (postings column included) for ~numBuckets audit rows
-      val acc = new Spimi.BucketStatsAcc
-      spark.sparkContext.register(acc, s"segstats:$gen")
-      val segs = chunks
-        .withColumn("term_hash", xxhash64($"term"))
-        .repartition(cfg.numBuckets, $"term_hash", $"pre_shard")
-        .sortWithinPartitions($"term_hash", $"pre_shard", $"term", $"first_doc")
-        .select($"term", $"pre_shard", $"first_doc", $"last_doc", $"count", $"tf_sum", $"bytes")
-        .as[(String, Long, Long, Long, Int, Long, Array[Byte])]
-        .mapPartitions(it => Spimi.observeBuckets(
-          mergeChunks(it, salt, shardSize, avgdl), acc)(
-          _.term, identity[String], _.count.toLong, _.postings.length.toLong))
-      TableIO.write(segs.toDF(), segDir)
-
-      lineage ++= acc.value.toSeq.sortBy(_._1).map { case (pid, s) =>
-        LineageRow("segments", gen, pid, s.first, s.last, 0L, s.nPostings,
-          s.bytes, System.currentTimeMillis() - t0)
-      }
-    }}
+    Spimi.seal(spark, kind(dir), batches, cfg.numBuckets, cfg.saltThreshold, cfg.shardSize,
+        force = false) { runs =>
+      val tfSum = knownTfSum.getOrElse(
+        runs.agg(coalesce(sum($"tf_sum"), lit(0L))).as[Long].head())
+      CorpusStats(nDocs, tfSum, if (nDocs == 0) 0.0 else tfSum.toDouble / nDocs)
+    }(stats => new WordCodec(stats.avgdl))
   }
 
-  /** Stage-1 unit: SPIMI chunk runs for one docs slice — tokenize straight
-    * into per-partition partial posting lists (raw (term, doc) rows never
-    * materialize) and persist the CHUNKS, which are also exactly what the
-    * merge shuffle wants as input. The reference's per-key write files
-    * (/root/reference/record.go:46-82) re-expressed columnar. */
-  private[build] def chunkRuns(docs: Dataset[SourceFile],
-                               preShardDocs: Long): DataFrame = {
+  /** Stage-1 unit: SPIMI chunk runs for one docs slice, written as runs
+    * batch `batch` — tokenize straight into per-partition partial posting
+    * lists (raw (term, doc) rows never materialize) and persist the CHUNKS,
+    * which are also exactly what the merge shuffle wants as input. The
+    * reference's per-key write files (reference record.go:46-82)
+    * re-expressed columnar. The posting count and Σtf are observed on the
+    * write itself (accumulator-backed, exactly-once per completed action —
+    * no post-write job). Returns the batch's lineage row and its Σtf. */
+  private def writeRuns(docs: Dataset[SourceFile], dir: String, batch: Int, nDocs: Long,
+                        cfg: BuildConfig): (LineageRow, Long) = {
     import docs.sparkSession.implicits._
-    docs.mapPartitions(it =>
-      Spimi.chunks(it, new WordChunkAccumulator(preShardDocs)))
-      .toDF("term", "pre_shard", "first_doc", "last_doc", "count", "tf_sum", "bytes")
+    val t0 = System.currentTimeMillis()
+    val obs = new org.apache.spark.sql.Observation(s"runs:${runsDir(dir, batch)}")
+    TableIO.write(
+      docs.mapPartitions(it => Spimi.chunks(it, new WordChunkAccumulator(cfg.shardSize * 1024)))
+        .toDF("term", "pre_shard", "first_doc", "last_doc", "count", "tf_sum", "bytes")
+        .observe(obs, coalesce(sum($"count"), lit(0L)).as("np"),
+          coalesce(sum($"tf_sum"), lit(0L)).as("tf")),
+      runsDir(dir, batch))
+    val m = obs.get
+    (LineageRow("runs", "", batch, "", "", nDocs, m("np").asInstanceOf[Long], 0L,
+      System.currentTimeMillis() - t0), m("tf").asInstanceOf[Long])
   }
 
   /** [[Spimi.Accumulator]] for scored word postings: tokenizes each doc
@@ -632,51 +544,27 @@ object IndexBuild {
     def keyCount: Int = map.size()
   }
 
-  /** Reduce side of the SPIMI merge: unpack one (term, pre_shard) group's
-    * chunks, sort the pooled postings by doc id (primitive parallel-array
-    * sort — far cheaper than the wide-row sort a raw-postings shuffle
-    * pays), split groups above `saltThreshold` into doc-range shards, and
-    * encode canonical block-max varbyte segments with THIS generation's
-    * avgdl. */
-  private def mergeChunks(it: Iterator[(String, Long, Long, Long, Int, Long, Array[Byte])],
-                          saltThreshold: Long, shardSize: Long,
-                          avgdl: Double): Iterator[SegmentRow] = {
-    val bucket = org.apache.spark.TaskContext.getPartitionId()
-    Spimi.mergeGroups[(String, Long, Long, Long, Int, Long, Array[Byte]), SegmentRow](
-      it, (a, b) => a._1 == b._1 && a._2 == b._2,
-      group => {
-        val term = group(0)._1
-        var totalCnt = 0
-        group.foreach(totalCnt += _._5)
-        val ids = new Array[Long](totalCnt)
-        val tfs = new Array[Int](totalCnt)
-        val dls = new Array[Int](totalCnt)
-        var off = 0
-        group.foreach { row =>
-          VarByte.unpackPostings(row._7, row._5, ids, tfs, dls, off)
-          off += row._5
-        }
-        VarByte.sortPostings(ids, tfs, dls)
-        val rows = List.newBuilder[SegmentRow]
-        def emit(from: Int, until: Int, shard: Int): Unit = {
-          val n = until - from
-          val whole = from == 0 && until == totalCnt
-          val sIds = if (whole) ids else java.util.Arrays.copyOfRange(ids, from, until)
-          val sTfs = if (whole) tfs else java.util.Arrays.copyOfRange(tfs, from, until)
-          val sDls = if (whole) dls else java.util.Arrays.copyOfRange(dls, from, until)
-          val enc = VarByte.encode(sIds, sTfs, sDls, avgdl, K1, B)
-          var ts = 0L
-          var k = 0
-          while (k < n) { ts += sTfs(k); k += 1 }
-          rows += SegmentRow(bucket, term, shard, n, ts, enc.bytes,
-            enc.blocks.map(_.firstDoc), enc.blocks.map(_.lastDoc),
-            enc.blocks.map(_.offset), enc.blocks.map(_.maxNorm))
-        }
-        if (totalCnt > saltThreshold)
-          Spimi.splitByRange(ids, totalCnt, shardSize)((i, j, s) => emit(i, j, s.toInt))
-        else emit(0, totalCnt, 0)
-        rows.result()
-      })
+  /** [[Spimi.Codec]] for scored postings: (id, tf, dl) triples, sorted
+    * with [[VarByte.sortPostings]] and encoded as canonical block-max
+    * varbyte segments with THIS generation's avgdl. */
+  private[build] final class WordCodec(avgdl: Double) extends Spimi.Codec[String, SegmentRow] {
+    type Pool = (Array[Long], Array[Int], Array[Int])
+    def pool(n: Int): Pool = (new Array[Long](n), new Array[Int](n), new Array[Int](n))
+    def unpack(bytes: Array[Byte], n: Int, p: Pool, off: Int): Unit =
+      VarByte.unpackPostings(bytes, n, p._1, p._2, p._3, off)
+    def sort(p: Pool): Array[Long] = { VarByte.sortPostings(p._1, p._2, p._3); p._1 }
+    def encode(bucket: Int, term: String, shard: Int, p: Pool,
+               from: Int, until: Int): SegmentRow = {
+      def part[A](a: Array[A]) = if (from == 0 && until == a.length) a else a.slice(from, until)
+      val (sIds, sTfs, sDls) = (part(p._1), part(p._2), part(p._3))
+      val enc = VarByte.encode(sIds, sTfs, sDls, avgdl, K1, B)
+      var ts = 0L
+      var k = 0
+      while (k < sTfs.length) { ts += sTfs(k); k += 1 }
+      SegmentRow(bucket, term, shard, sIds.length, ts, enc.bytes,
+        enc.blocks.map(_.firstDoc), enc.blocks.map(_.lastDoc),
+        enc.blocks.map(_.offset), enc.blocks.map(_.maxNorm))
+    }
   }
 
   /** Growable parallel posting arrays for one term (SPIMI map side). */
@@ -717,25 +605,10 @@ object IndexBuild {
     if (TableIO.done(spark, rDir) && TableIO.done(spark, dsDir) &&
         gl.isCommitted(batchId, batchId)) return
     val nNew = fastCount(newDocs)
-    val lineage = scala.collection.mutable.ArrayBuffer[LineageRow]()
-    var knownTfSum: Option[Long] = None
-    if (!TableIO.done(spark, rDir)) {
-      val t0 = System.currentTimeMillis()
-      // lineage posting count + the generation's tf_sum observed on the
-      // write action itself — zero post-write jobs (the stats stage then
-      // also skips its own agg)
-      val obs = new org.apache.spark.sql.Observation(s"runs_ingest_$batchId")
-      TableIO.write(
-        chunkRuns(newDocs, cfg.shardSize * 1024).observe(obs,
-          coalesce(sum($"count"), lit(0L)).as("np"),
-          coalesce(sum($"tf_sum"), lit(0L)).as("tf")),
-        rDir)
-      val m = obs.get
-      val (nPost, tfSum) = (m("np").asInstanceOf[Long], m("tf").asInstanceOf[Long])
-      knownTfSum = Some(tfSum)
-      lineage += LineageRow("runs", "", batchId, "", "", nNew, nPost, 0L,
-        System.currentTimeMillis() - t0)
-    }
+    // the generation's tf_sum comes off the runs write (the stats stage
+    // then skips its own agg)
+    val runs =
+      if (TableIO.done(spark, rDir)) None else Some(writeRuns(newDocs, dir, batchId, nNew, cfg))
     // independently gated (and Overwrite into the batch's own partition):
     // a crash between the runs commit and this write is repaired by the
     // resumed call instead of silently losing the batch's fidelity rows
@@ -745,10 +618,9 @@ object IndexBuild {
     // must not fan into numBuckets near-empty files — every later query
     // scan would pay per-file listing/footer overhead per generation.
     // Compaction re-spreads the folded data across the full bucket count.
-    buildGeneration(spark, dir, Seq(batchId), nNew,
-      cfg.copy(numBuckets = ingestBuckets(nNew, cfg.numBuckets, cfg.shardSize)),
-      lineage, knownTfSum)
-    appendLineage(spark, dir, lineage)
+    val segs = buildGeneration(spark, dir, Seq(batchId), nNew,
+      cfg.copy(numBuckets = ingestBuckets(nNew, cfg.numBuckets, cfg.shardSize)), runs.map(_._2))
+    appendLineage(spark, lineageDir(dir), runs.map(_._1).toSeq ++ segs)
   }
 
   /** Bucket count for a freshly-ingested generation: ~one shuffle bucket

@@ -137,8 +137,9 @@ object NumericIndex {
   }
 
   /** Write one generation from a (value, doc_id) projection: the single
-    * range-partitioning shuffle, then stats off the written parquet
-    * (footer-metadata count + one sketch pass over the tiny projection). */
+    * range-partitioning shuffle, then stats off the written parquet: one
+    * job for the row count and max id, one sketch pass over the tiny
+    * projection. */
   private def buildGeneration(spark: SparkSession, proj: DataFrame, integral: Boolean,
                               root: String, col0: String, lo: Int, hi: Int,
                               numBuckets: Int, force: Boolean): Unit = {
@@ -152,14 +153,11 @@ object NumericIndex {
     val stDir = statsGenDir(root, col0, lo, hi)
     if (force || !TableIO.done(spark, stDir)) {
       val written = spark.read.parquet(out)
-      val nRows = written.count()   // parquet-footer metadata, no data scan
+      val (nRows, maxId) = IndexBuild.countAndMax(written, "doc_id")
       val probs = (0 to QuantilePoints).map(_.toDouble / QuantilePoints).toArray
       val qs =
         if (nRows == 0) Array.empty[Double]
         else written.stat.approxQuantile("value", probs, 0.001)
-      val maxId =
-        if (nRows == 0) -1L
-        else written.agg(max($"doc_id")).as[Long].head()
       TableIO.write(Seq(NumStats(nRows, integral, qs, maxId)).toDF(), stDir)
     }
   }

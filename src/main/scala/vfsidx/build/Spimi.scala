@@ -1,16 +1,33 @@
 package vfsidx.build
 
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.functions.col
 import scala.collection.mutable.ArrayBuffer
 
-/** Shared SPIMI machinery for the word ([[IndexBuild]]) and trigram
-  * ([[TrigramIndex]]) index builds. The two pipelines move data identically —
-  * map-side accumulate-and-flush into compressed chunks, one (key, pre_shard)
-  * shuffle, reduce-side group pooling, doc-range shard splitting — and only
-  * the payload codec differs (scored (id, tf, dl) triples vs ids-only). The
-  * data movement lives here ONCE so a fix to the flush policy, the group
-  * iterator, or the shard split can never silently diverge between the two
-  * indexes; the payload-specific pack/unpack/sort/encode stays at the call
-  * sites.
+/** The SPIMI seal shared by the word ([[IndexBuild]]) and trigram
+  * ([[TrigramIndex]]) index builds — the reference's one segment-merge path
+  * for every column kind, which writes key-sorted `KeyRecord` segments
+  * (reference column.go:538-584). Both builds move data identically:
+  *
+  *  - map side: [[chunks]] accumulates per-partition partial posting lists
+  *    in bounded memory and emits compressed chunks, split at `pre_shard`
+  *    doc ranges; they are persisted as the batch's runs;
+  *  - [[seal]]: the per-batch runs-format gate, the `_SUCCESS` need-gates
+  *    (bypassed by `force`), the dictionary and stats tables as side jobs
+  *    ([[withSideJobs]]), the one `(key, pre_shard)` hash shuffle sorted
+  *    within partitions, the reduce side, the per-bucket observation
+  *    ([[observeBuckets]]) and the segments write, whose bucket stats come
+  *    back as lineage rows;
+  *  - reduce side: [[merge]] pools each (key, pre_shard) group, sorts it by
+  *    doc id, splits it above `saltThreshold` into doc-range shards and
+  *    encodes each shard.
+  *
+  * A kind supplies only what differs: its tables, shuffle key and
+  * dictionary aggregates ([[Kind]]), its stats row, and the payload
+  * [[Codec]] — scored (id, tf, dl) triples with block-max bounds for words,
+  * ids only for trigrams. The map-side accumulators stay per kind: word
+  * keys come from the tokenizer's `String` term map and trigram keys live
+  * in a primitive long map, which one generic map would box.
   *
   * Memory bound: [[chunks]] drains emitted chunks to its consumer BEFORE
   * pulling more input, so a task holds at most the accumulator
@@ -107,6 +124,51 @@ private[build] object Spimi {
     }
   }
 
+  /** The payload half of an index kind, run by [[merge]] on the executors:
+    * pool a group's chunk payloads into parallel arrays, sort them by doc
+    * id, and encode one shard's segment row. */
+  trait Codec[K, R] extends Serializable {
+    /** Parallel arrays holding one pooled group. */
+    type Pool
+    def pool(n: Int): Pool
+    /** Unpack one chunk's `n` postings into `p` at offset `off`. */
+    def unpack(bytes: Array[Byte], n: Int, p: Pool, off: Int): Unit
+    /** Sort the pooled postings by doc id; returns the sorted ids. */
+    def sort(p: Pool): Array[Long]
+    /** The segment row of postings [from, until) of `p` as (key, shard). */
+    def encode(bucket: Int, key: K, shard: Int, p: Pool, from: Int, until: Int): R
+  }
+
+  /** Reduce side of the SPIMI merge over (key, pre_shard, count, payload)
+    * chunk rows: pool each group's chunks at their offsets and sort them
+    * by doc id (chunk ranges may overlap — a scan partition can pack files
+    * out of doc order — and a per-group primitive sort is far cheaper than
+    * a wide-row posting sort). A group above `saltThreshold` postings
+    * splits into doc-range shards (shard = doc / shardSize) so no parquet
+    * row or query task owns an unbounded list; smaller groups emit one
+    * shard-0 row. */
+  def merge[K, R](rows: Iterator[(K, Long, Int, Array[Byte])], codec: Codec[K, R],
+                  saltThreshold: Long, shardSize: Long): Iterator[R] = {
+    val bucket = org.apache.spark.TaskContext.getPartitionId()
+    mergeGroups[(K, Long, Int, Array[Byte]), R](rows, (a, b) => a._1 == b._1 && a._2 == b._2,
+      group => {
+        var total = 0
+        group.foreach(total += _._3)
+        val p = codec.pool(total)
+        var off = 0
+        group.foreach { c => codec.unpack(c._4, c._3, p, off); off += c._3 }
+        val ids = codec.sort(p)
+        val key = group(0)._1
+        if (total <= saltThreshold) List(codec.encode(bucket, key, 0, p, 0, total))
+        else {
+          val out = List.newBuilder[R]
+          splitByRange(ids, total, shardSize)((i, j, s) =>
+            out += codec.encode(bucket, key, s.toInt, p, i, j))
+          out.result()
+        }
+      })
+  }
+
   /** Walk `ids[0, n)` (sorted ascending) splitting at `div`-sized doc-range
     * boundaries: `emit(from, until, range)` once per maximal run with
     * `ids(i) / div == range`. Used for the map-side `pre_shard` chunk split
@@ -162,9 +224,7 @@ private[build] object Spimi {
     * formatted-hex comparison would get wrong above 2^48 (supplementary-
     * plane trigrams parse to 13-16 hex digits, so f"%012x" is variable-
     * width) — and only formats the winners; the word build compares terms
-    * as Strings (UTF-16 order, vs the former UTF8String byte order — they
-    * differ only on supplementary-plane characters, an audit-trail nuance,
-    * not query data). */
+    * in [[Utf8Order]], the byte order of the former min($"term")/max($"term"). */
   def observeBuckets[R, K](it: Iterator[R], acc: BucketStatsAcc)(
       key: R => K, fmt: K => String, np: R => Long, bytes: R => Long)(
       implicit ord: Ordering[K]): Iterator[R] =
@@ -198,6 +258,129 @@ private[build] object Spimi {
       }
     }
 
+  /** Strings in UTF-8 byte order — code-point order, the order Spark SQL
+    * compares strings in — without encoding them. The first differing
+    * UTF-16 units decide, except that a surrogate (half of a code point
+    * above U+FFFF) ranks above every unit from U+E000 up. */
+  object Utf8Order extends Ordering[String] {
+    private def rank(c: Char): Int = if (c >= 0xe000) c - 0x800 else c + 0x2000
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val x = a.charAt(i)
+        val y = b.charAt(i)
+        if (x != y) return if (x >= 0xd800 && y >= 0xd800) rank(x) - rank(y) else x - y
+        i += 1
+      }
+      a.length - b.length
+    }
+  }
+
+  /** What an index kind supplies to [[seal]] besides its stats and codec:
+    *  - `prefix` names its build stages, lineage stage and accumulator
+    *    ("" for the word index, "tri_" for the trigram index);
+    *  - `runs(b)` and `segments` / `dict` / `stats(lo, hi)`: its table dirs;
+    *  - `key`: the key column of its chunks and dictionary;
+    *  - `keyHash`: a packed-long hash to shuffle and sort on in place of a
+    *    variable-width key, which then sorts as the tiebreak (None shuffles
+    *    on the key itself);
+    *  - `dictAggs`: the dictionary's per-key aggregates over the chunks;
+    *  - `observe`: [[observeBuckets]] with its segment rows' key ordering. */
+  final case class Kind[K, R](prefix: String, runs: Int => String,
+      segments: (Int, Int) => String, dict: (Int, Int) => String,
+      stats: (Int, Int) => String, key: String, keyHash: Option[Column],
+      dictAggs: Seq[Column], observe: (Iterator[R], BucketStatsAcc) => Iterator[R])
+
+  /** Seal one generation `gen=<min>_<max>` of `kind` from its runs
+    * `batches` (the range may have gaps when streaming epochs skipped
+    * slots; only the listed batches are read). Each table is
+    * `_SUCCESS`-gated for resume, or rewritten when `force`.
+    *
+    * `stats(runs)` computes the generation's stats row, called only when
+    * the stats table is missing (a resume reads the committed row back, and
+    * only if `codec` uses it). The stats and dictionary writes run
+    * concurrently with the segments write; the dictionary derives from
+    * chunk metadata, so it does not wait for the segments commit.
+    *
+    * The one data shuffle HASH-partitions chunks on (shuffle key,
+    * pre_shard) — range partitioning needs a sampling pass, and
+    * lexicographically adjacent key families (e.g. 10^6 df=1 `needle_*`
+    * terms) would all land in one reducer — and sorts within partitions,
+    * so every group arrives contiguous and a long-keyed segment file is
+    * key-ordered (parquet row-group pruning on the key). Only chunk rows
+    * move, an order of magnitude fewer rows than raw postings, carrying
+    * only the columns the sort and reducer read; `pre_shard` bounds every
+    * reducer group without knowing df before the shuffle. A variable-width
+    * key shuffles on its hash: Tungsten's 8-byte sort prefix resolves long
+    * keys outright, while common-prefix term families degenerate every
+    * string-prefix comparison into a full-record compare. Hash collisions
+    * are harmless — the key is the next sort column, so a colliding key is
+    * adjacent but never pooled.
+    *
+    * Returns the lineage rows of the segments write, one per non-empty
+    * bucket (none when the segments were already committed), for the
+    * caller to append to its lineage table. */
+  def seal[K, R, S](spark: SparkSession, kind: Kind[K, R], batches: Seq[Int],
+                    numBuckets: Int, saltThreshold: Long, shardSize: Long,
+                    force: Boolean)(stats: DataFrame => S)(codec: (=> S) => Codec[K, R])(
+      implicit chunkEnc: Encoder[(K, Long, Int, Array[Byte])], rowEnc: Encoder[R],
+      statsEnc: Encoder[S]): Seq[LineageRow] = {
+    import IndexBuild.{TableIO, timed}
+    val (lo, hi) = (batches.min, batches.max)
+    val gen = s"${lo}_$hi"
+    val p = kind.prefix
+    val (segDir, dictDir, statsDir) = (kind.segments(lo, hi), kind.dict(lo, hi), kind.stats(lo, hi))
+    def need(d: String) = force || !TableIO.done(spark, d)
+    val (needSegs, needDict, needStats) = (need(segDir), need(dictDir), need(statsDir))
+    if (!needSegs && !needDict && !needStats) return Nil
+
+    // migration gate, before the generation's first write: runs written by
+    // a pre-chunk-format build must fail with an instruction, not mid-merge.
+    // Checked PER batch dir — a merged-read schema samples one footer and
+    // would let a mixed old/new set through.
+    batches.foreach { b =>
+      require(spark.read.parquet(kind.runs(b)).schema.fieldNames.contains("pre_shard"),
+        s"${kind.runs(b)} was written by a pre-chunk-format build (raw posting " +
+          "rows): delete the index directory and rebuild")
+    }
+    val runs = spark.read.parquet(batches.map(kind.runs): _*)
+    lazy val st: S =
+      if (needStats) stats(runs) else spark.read.parquet(statsDir).as[S].head()
+
+    def side(needed: Boolean, name: String, dir: String)(df: => DataFrame): Seq[() => Unit] =
+      if (needed) Seq(() => timed(s"$p$name:$gen")(TableIO.write(df, dir))) else Nil
+    val sideJobs =
+      side(needDict, "dict", dictDir)(
+        runs.groupBy(kind.key).agg(kind.dictAggs.head, kind.dictAggs.tail: _*)) ++
+        side(needStats, "stats", statsDir)(spark.createDataset(Seq(st)).toDF())
+
+    var lineage = Seq.empty[LineageRow]
+    withSideJobs(needSegs, sideJobs) { timed(s"${p}segments:$gen") {
+      val t0 = System.currentTimeMillis()
+      val acc = new BucketStatsAcc
+      spark.sparkContext.register(acc, s"${p}segstats:$gen")
+      val (c, observe) = (codec(st), kind.observe)
+      val (keyed, order) = kind.keyHash match {
+        case Some(h) =>
+          (runs.withColumn("key_hash", h), Seq(col("key_hash"), col("pre_shard"), col(kind.key)))
+        case None => (runs, Seq(col(kind.key), col("pre_shard")))
+      }
+      val segs = keyed
+        .repartition(numBuckets, order.take(2): _*)
+        .sortWithinPartitions(order :+ col("first_doc"): _*)
+        .select(kind.key, "pre_shard", "count", "bytes")
+        .as[(K, Long, Int, Array[Byte])]
+        .mapPartitions(it => observe(merge(it, c, saltThreshold, shardSize), acc))
+      TableIO.write(segs.toDF(), segDir)
+      lineage = acc.value.toSeq.sortBy(_._1).map { case (pid, s) =>
+        LineageRow(s"${p}segments", gen, pid, s.first, s.last, 0L, s.nPostings,
+          s.bytes, System.currentTimeMillis() - t0)
+      }
+    }}
+    lineage
+  }
+
   /** Run `main` while `sideJobs` (small independent Spark jobs: the
     * generation's dictionary agg and 1-row stats write) execute on a
     * concurrent pool, joining them afterwards — or run everything inline
@@ -207,9 +390,7 @@ private[build] object Spimi {
     * not yet started), joins them, and rethrows with their failures
     * attached via `addSuppressed` — none keeps running past the call, and
     * no side error is lost (the generation stays uncommitted either way;
-    * resume redoes the rest). Shared by the word and trigram
-    * buildGenerations so the concurrency/error contract cannot diverge
-    * between them. */
+    * resume redoes the rest). */
   def withSideJobs(needMain: Boolean, sideJobs: Seq[() => Unit])(main: => Unit): Unit = {
     if (!needMain || sideJobs.isEmpty) {
       if (needMain) main

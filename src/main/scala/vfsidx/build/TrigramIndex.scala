@@ -48,9 +48,12 @@ final case class TriStats(n_rows: Long, max_doc_id: Long)
   *
   *   docs --tokenize+accumulate--> tri_runs CHUNKS
   *        (key, pre_shard, first_doc, last_doc, count, delta-varint bytes)
-  *   chunks --repartition(key, pre_shard) --mergeChunks-->
+  *   chunks --repartition(key, pre_shard) --Spimi.merge-->
   *        tri_segments (canonical blocked varbyte)            [resumable]
-  *   tri_dict (key, df) derived from segment metadata (Σ count per key)
+  *   tri_dict (key, df) derived from chunk metadata (Σ count per key)
+  *
+  * The seal after the runs is the word index's ([[Spimi.seal]]); only the
+  * payload codec differs ([[TriCodec]]: ids only).
   *
   * The merge shuffle therefore moves ~an order of magnitude fewer rows and
   * ~5x fewer bytes than a raw-postings shuffle, and no wide-row sort ever
@@ -104,7 +107,7 @@ object TrigramIndex {
   private def seal(spark: SparkSession, dir: String, cfg: TriConfig): Generations.Seal =
     (win, totals) =>
       buildGeneration(spark, dir, win.flatMap { case (l, h) => l to h }, cfg,
-        totals(0), totals(1))
+        TriStats(totals(0), totals(1)), force = false)
 
   /** Highest tri_runs batch slot present on disk, -1 for none. */
   def maxBatch(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).maxBatch
@@ -155,22 +158,30 @@ object TrigramIndex {
 
   /** SPIMI chunk runs for one docs slice — stage-1 unit. Tokenizes straight
     * into per-partition partial posting lists (the raw (key, doc_id) pairs
-    * never materialize as rows) and persists the CHUNKS: ~an order of
-    * magnitude fewer rows and ~5x fewer bytes than a raw postings table,
-    * which is also exactly what the merge shuffle wants as input. This is
-    * the reference's per-value write files (/root/reference/record.go:46-82)
-    * re-expressed columnar. */
-  private def chunkRuns(df: DataFrame, idCol: String, strCol: String,
-                        preShardDocs: Long): DataFrame = {
+    * never materialize as rows) and persists the CHUNKS to `rDir`: ~an
+    * order of magnitude fewer rows and ~5x fewer bytes than a raw postings
+    * table, which is also exactly what the merge shuffle wants as input.
+    * This is the reference's per-value write files
+    * (reference record.go:46-82) re-expressed columnar. The slice's
+    * stats (every source row, whatever its string, and the max id) are
+    * observed on the source rows of the same write — no separate job. */
+  private def writeRuns(df: DataFrame, idCol: String, strCol: String, rDir: String,
+                        cfg: TriConfig): TriStats = {
     import df.sparkSession.implicits._
-    df.select(col(idCol).cast("long"), col(strCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        chunkPartition(rows.flatMap { case (id, s) =>
-          Tokenizer.distinctTriKeys(if (s == null) "" else s).map(k => (k, id))
-        }, preShardDocs, Spimi.FlushPostings)
-      }
-      .toDF("key", "pre_shard", "first_doc", "last_doc", "count", "bytes")
+    val obs = new org.apache.spark.sql.Observation(s"tri_runs:$rDir")
+    TableIO.write(
+      df.select(col(idCol).cast("long").as("id"), col(strCol).cast("string"))
+        .observe(obs, count(lit(1)).as("n"), max($"id").as("max"))
+        .as[(Long, String)]
+        .mapPartitions { rows =>
+          chunkPartition(rows.flatMap { case (id, s) =>
+            Tokenizer.distinctTriKeys(if (s == null) "" else s).map(k => (k, id))
+          }, cfg.shardSize * 1024, Spimi.FlushPostings)
+        }
+        .toDF("key", "pre_shard", "first_doc", "last_doc", "count", "bytes"),
+      rDir)
+    val m = obs.get
+    TriStats(m("n").asInstanceOf[Long], Option(m("max")).fold(-1L)(_.asInstanceOf[Long]))
   }
 
   /** Build (or resume) the trigram index for `df(strCol)` keyed by
@@ -180,17 +191,12 @@ object TrigramIndex {
     * [[IndexBuild]]). */
   def build(spark: SparkSession, df: DataFrame, idCol: String, strCol: String,
             dir: String, cfg: TriConfig = TriConfig()): Unit = {
-    if (!TableIO.done(spark, runsBatchDir(dir, 0))) timed("tri_runs") {
-      TableIO.write(chunkRuns(df, idCol, strCol, cfg.shardSize * 1024), runsBatchDir(dir, 0))
-    }
-    val (nRows, maxId) = countAndMax(df, idCol)
-    buildGeneration(spark, dir, Seq(0), cfg, nRows, maxId)
-  }
-
-  /** (row count, max id) of the source slice — the generation's stats. */
-  private def countAndMax(df: DataFrame, idCol: String): (Long, Long) = {
-    val r = df.agg(count(lit(1)), max(col(idCol).cast("long"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+    val written =
+      if (TableIO.done(spark, runsBatchDir(dir, 0))) None
+      else Some(timed("tri_runs")(writeRuns(df, idCol, strCol, runsBatchDir(dir, 0), cfg)))
+    // a resume whose runs an earlier call committed counts the source
+    buildGeneration(spark, dir, Seq(0), cfg,
+      written.getOrElse(TriStats.tupled(IndexBuild.countAndMax(df, idCol))), force = false)
   }
 
   /** Incremental ingest (the reference's re-`Regist` over new data files,
@@ -207,14 +213,14 @@ object TrigramIndex {
     val bDir = runsBatchDir(dir, batchId)
     if (!overwrite && TableIO.done(spark, bDir) &&
         lifecycle(spark, dir).isCommitted(batchId, batchId)) return
-    if (overwrite || !TableIO.done(spark, bDir))
-      TableIO.write(chunkRuns(newDocs, idCol, strCol, cfg.shardSize * 1024), bDir)
+    val stats =
+      if (overwrite || !TableIO.done(spark, bDir)) writeRuns(newDocs, idCol, strCol, bDir, cfg)
+      else TriStats.tupled(IndexBuild.countAndMax(newDocs, idCol))
     // bucket count sized to the batch: a small refresh generation must not
     // fan into numBuckets near-empty files that every query then opens
-    val (nNew, maxId) = countAndMax(newDocs, idCol)
     buildGeneration(spark, dir, Seq(batchId), cfg.copy(
-      numBuckets = IndexBuild.ingestBuckets(nNew, cfg.numBuckets, cfg.shardSize)),
-      nNew, maxId, force = overwrite)
+      numBuckets = IndexBuild.ingestBuckets(stats.n_rows, cfg.numBuckets, cfg.shardSize)),
+      stats, force = overwrite)
   }
 
   /** [[Generations.compactTiered]] with this config's policy bounds. */
@@ -233,96 +239,28 @@ object TrigramIndex {
               reclaim: Boolean = true): Unit =
     lifecycle(spark, dir).remerge(reclaim)(seal(spark, dir, cfg))
 
+  /** The trigram index's side of the shared seal ([[Spimi.Kind]]): chunks
+    * shuffle on the long key itself, the dictionary holds df per key, and
+    * lineage compares keys as raw longs (a formatted-hex comparison would
+    * be wrong above 2^48, where supplementary-plane keys format wider than
+    * 12 digits), hex-formatting only the winners — the reference's
+    * filename key-range form. */
+  private def kind(dir: String) = Spimi.Kind[Long, TriSegmentRow]("tri_",
+    runsBatchDir(dir, _), segmentsGenDir(dir, _, _), dictGenDir(dir, _, _),
+    statsGenDir(dir, _, _), "key", None, Seq(sum(col("count")).cast("long").as("df")),
+    (it, acc) => Spimi.observeBuckets(it, acc)(
+      _.key, (k: Long) => f"$k%012x", _.count.toLong, _.postings.length.toLong))
+
   /** Dict + stats + segments for the given runs `batches` under
-    * `gen=<min>_<max>`; `_SUCCESS`-gated per table for resume (bypassed
-    * and rewritten when `force`). */
+    * `gen=<min>_<max>` ([[Spimi.seal]]); `_SUCCESS`-gated per table for
+    * resume (bypassed and rewritten when `force`). `stats` is evaluated
+    * only if the stats table is written. Appends the segments' lineage. */
   private def buildGeneration(spark: SparkSession, dir: String, batches: Seq[Int],
-                              cfg: TriConfig, nRows: Long, maxDocId: Long,
-                              force: Boolean = false): Unit = {
+                              cfg: TriConfig, stats: => TriStats, force: Boolean): Unit = {
     import spark.implicits._
-    val (lo, hi) = (batches.min, batches.max)
-    val gen = s"${lo}_$hi"
-    lazy val runs = {
-      // migration gate: tri_runs written by a pre-chunk-format build (raw
-      // (key, doc_id) rows) must fail with an instruction, not mid-merge.
-      // Checked PER batch dir (a merged-read schema samples one footer and
-      // would let a mixed old/new batch set through).
-      batches.foreach { b =>
-        require(spark.read.parquet(runsBatchDir(dir, b)).schema.fieldNames.contains("pre_shard"),
-          s"tri_runs batch=$b under $dir was written by a pre-chunk-format " +
-            "build: delete the index directory and rebuild")
-      }
-      spark.read.parquet(batches.map(runsBatchDir(dir, _)): _*)
-    }
-
-    val stDir = statsGenDir(dir, lo, hi)
-    val needStats = force || !TableIO.done(spark, stDir)
-    def writeStats(): Unit = timed(s"tri_stats:$gen") {
-      TableIO.write(Seq(TriStats(nRows, maxDocId)).toDF(), stDir)
-    }
-
-    val segDir = segmentsGenDir(dir, lo, hi)
-    // Dictionary DERIVED from the chunk metadata (round 6): Σ count per key
-    // == df exactly (each (key, doc) posting lives in exactly one chunk) —
-    // identical values to the former segment-metadata derivation, but
-    // INDEPENDENT of the segments job, so the two run concurrently (guide
-    // §2.6) instead of the dict serializing behind the segment commit. The
-    // tiny stats write rides the same pool.
-    val dDir = dictGenDir(dir, lo, hi)
-    val needDict = force || !TableIO.done(spark, dDir)
-    def writeDict(): Unit = timed(s"tri_dict:$gen") {
-      TableIO.write(
-        runs.groupBy($"key").agg(sum($"count").cast("long").as("df")), dDir)
-    }
-    val needSegs = force || !TableIO.done(spark, segDir)
-    // force the runs-format gate BEFORE the generation's first write
-    if (needStats || needDict || needSegs) runs
-    val sideJobs: Seq[() => Unit] =
-      (if (needDict) Seq(() => writeDict()) else Nil) ++
-        (if (needStats) Seq(() => writeStats()) else Nil)
-
-    Spimi.withSideJobs(needSegs, sideJobs) { timed(s"tri_segments:$gen") {
-      val t0 = System.currentTimeMillis()
-      // SPIMI chunked merge (north_star: "per-partition posting lists ...
-      // sort-merge them into a global segmented inverted index"): the map
-      // side accumulates per-partition key -> ascending-id lists in bounded
-      // memory (flushing at Spimi.FlushPostings) and emits delta-varint CHUNKS;
-      // only chunks cross the shuffle — an order of magnitude fewer rows
-      // and ~5x fewer bytes than shuffling raw (key, doc_id) postings. The
-      // wide-row posting sort disappears: the reduce side sorts only each
-      // group's pooled primitive ids (bounded by the pre_shard doc range).
-      // `pre_shard` = doc / preShardDocs bounds any reducer group — the
-      // Zipf-head safety the raw pipeline got from df-based salting, now
-      // without needing df before the shuffle (so the dictionary can
-      // derive from the OUTPUT below instead of a second full runs scan).
-      val salt = cfg.saltThreshold
-      val shardSz = cfg.shardSize
-      // per-partition lineage (north_rule) observed ON the write action via
-      // a last-write-wins per-partition accumulator — the former post-write
-      // groupBy(bucket) re-read the whole freshly-written segments table
-      // (postings included) for ~numBuckets audit rows. Keys compare as raw
-      // LONGS (the former numeric min/max — a formatted-hex comparison
-      // would be wrong above 2^48, where supplementary-plane trigram keys
-      // format wider than 12 digits) and only the winners are hex-formatted
-      // (the reference's filename key-range form).
-      val acc = new Spimi.BucketStatsAcc
-      spark.sparkContext.register(acc, s"tri_segstats:$gen")
-      val segs = runs
-        .repartition(cfg.numBuckets, $"key", $"pre_shard")
-        .sortWithinPartitions($"key", $"pre_shard", $"first_doc")
-        .as[(Long, Long, Long, Long, Int, Array[Byte])]
-        .mapPartitions(it => Spimi.observeBuckets(
-          mergeChunks(it, salt, shardSz), acc)(
-          _.key, (k: Long) => f"$k%012x", _.count.toLong, _.postings.length.toLong))
-      TableIO.write(segs.toDF(), segDir)
-
-      val lin = acc.value.toSeq.sortBy(_._1).map { case (pid, s) =>
-        LineageRow("tri_segments", gen, pid, s.first, s.last,
-          0L, s.nPostings, s.bytes, System.currentTimeMillis() - t0)
-      }
-      if (lin.nonEmpty)
-        TableIO.append(spark.createDataset(lin.toIndexedSeq).toDF(), lineageDir(dir))
-    }}
+    val lineage = Spimi.seal(spark, kind(dir), batches, cfg.numBuckets, cfg.saltThreshold,
+      cfg.shardSize, force)(_ => stats)(_ => TriCodec)
+    IndexBuild.appendLineage(spark, lineageDir(dir), lineage)
   }
 
   /** One map partition -> SPIMI chunks: accumulate per-key ascending id
@@ -362,43 +300,21 @@ object TrigramIndex {
     def keyCount: Int = map.size
   }
 
-  /** Reduce side of the SPIMI merge: unpack one (key, pre_shard) group's
-    * chunks, primitive-sort the pooled ids (each chunk is ascending but a
-    * scan partition can pack files out of doc order, so chunk RANGES may
-    * overlap — a per-group Arrays.sort on bounded primitive ids is far
-    * cheaper than the wide-row sort the raw pipeline paid), and re-encode
-    * canonical blocked segments. Groups whose df exceeds `saltThreshold`
-    * split into doc-range shards (shard = doc_id / shardSize) exactly like
-    * the df-salted pipeline; smaller groups emit one shard-0 row. */
-  private def mergeChunks(it: Iterator[(Long, Long, Long, Long, Int, Array[Byte])],
-      saltThreshold: Long, shardSize: Long): Iterator[TriSegmentRow] = {
-    val bucket = org.apache.spark.TaskContext.getPartitionId()
-    Spimi.mergeGroups[(Long, Long, Long, Long, Int, Array[Byte]), TriSegmentRow](
-      it, (a, b) => a._1 == b._1 && a._2 == b._2,
-      group => {
-        val key = group(0)._1
-        var totalCnt = 0
-        group.foreach(totalCnt += _._5)
-        val ids = new Array[Long](totalCnt)
-        var off = 0
-        group.foreach { row =>
-          VarByte.unpackIds(row._6, row._5, ids, off)
-          off += row._5
-        }
-        java.util.Arrays.sort(ids)
-        val rows = List.newBuilder[TriSegmentRow]
-        def emit(from: Int, until: Int, shard: Int): Unit = {
-          val enc = VarByte.encodeIds(
-            if (from == 0 && until == totalCnt) ids
-            else java.util.Arrays.copyOfRange(ids, from, until))
-          rows += TriSegmentRow(bucket, key, shard, enc.count, enc.bytes,
-            enc.blockFirst, enc.blockLast, enc.blockOff)
-        }
-        if (totalCnt > saltThreshold)
-          Spimi.splitByRange(ids, totalCnt, shardSize)((i, j, s) => emit(i, j, s.toInt))
-        else emit(0, totalCnt, 0)
-        rows.result()
-      })
+  /** [[Spimi.Codec]] for ids-only postings: flat delta-varint id runs,
+    * primitive-sorted and encoded as canonical blocked id segments. */
+  private[build] object TriCodec extends Spimi.Codec[Long, TriSegmentRow] {
+    type Pool = Array[Long]
+    def pool(n: Int): Pool = new Array[Long](n)
+    def unpack(bytes: Array[Byte], n: Int, p: Pool, off: Int): Unit =
+      VarByte.unpackIds(bytes, n, p, off)
+    def sort(p: Pool): Array[Long] = { java.util.Arrays.sort(p); p }
+    def encode(bucket: Int, key: Long, shard: Int, p: Pool,
+               from: Int, until: Int): TriSegmentRow = {
+      val enc = VarByte.encodeIds(
+        if (from == 0 && until == p.length) p else java.util.Arrays.copyOfRange(p, from, until))
+      TriSegmentRow(bucket, key, shard, enc.count, enc.bytes,
+        enc.blockFirst, enc.blockLast, enc.blockOff)
+    }
   }
 
   /** Primitive open-addressing long -> growable-long-array map for the

@@ -194,4 +194,101 @@ class SpimiSpec extends AnyFunSuite {
       fail("main must not run"))
     assert(ran == 2)
   }
+
+  // ---- the one reducer (Spimi.merge) under both payload codecs ----
+
+  private val salt = 10L
+  private val shardSize = 4L
+  private def tfOf(id: Long) = (id % 3 + 1).toInt
+  private def dlOf(id: Long) = (id + 10).toInt
+
+  /** One word chunk row: postings of `ids` (ascending) with tf/dl derived from the id. */
+  private def wordChunk(ids: Seq[Long]): (String, Long, Int, Array[Byte]) =
+    ("t", 0L, ids.size, VarByte.packPostings(ids.toArray, ids.map(tfOf).toArray,
+      ids.map(dlOf).toArray, 0, ids.size))
+  private def triChunk(ids: Seq[Long]): (Long, Long, Int, Array[Byte]) =
+    (7L, 0L, ids.size, VarByte.packIds(ids.toArray, 0, ids.size))
+
+  private def mergeWord(chunks: Seq[Seq[Long]]): List[SegmentRow] =
+    Spimi.merge(chunks.map(wordChunk).iterator, new IndexBuild.WordCodec(20.0), salt, shardSize)
+      .toList
+  private def mergeTri(chunks: Seq[Seq[Long]]): List[TriSegmentRow] =
+    Spimi.merge(chunks.map(triChunk).iterator, TrigramIndex.TriCodec, salt, shardSize).toList
+
+  private def wordIds(r: SegmentRow): Seq[Long] = VarByte.decode(r.postings, r.count)._1.toSeq
+  private def triIds(r: TriSegmentRow): Seq[Long] =
+    r.block_off.indices.flatMap(b =>
+      VarByte.decodeIdsBlock(r.postings, r.block_off(b), VarByte.blockCount(r.count, b)))
+
+  test("merge: a group of exactly saltThreshold postings emits one shard-0 row (both codecs)") {
+    val ids = (0L until salt).map(_ * 3)   // spans several shardSize doc ranges
+    val w = mergeWord(Seq(ids))
+    assert(w.map(r => (r.term, r.shard, r.count)) == List(("t", 0, salt.toInt)))
+    assert(wordIds(w.head) == ids)
+    val t = mergeTri(Seq(ids))
+    assert(t.map(r => (r.key, r.shard, r.count)) == List((7L, 0, salt.toInt)))
+    assert(triIds(t.head) == ids)
+  }
+
+  test("merge: saltThreshold + 1 postings split into doc / shardSize shards (both codecs)") {
+    val ids = (0L to salt).map(_ * 3)      // 0, 3, ..., 30: 11 postings
+    val expected = ids.groupBy(_ / shardSize).toSeq.sortBy(_._1)
+      .map { case (s, g) => (s.toInt, g.sorted) }
+    val w = mergeWord(Seq(ids))
+    assert(w.map(r => (r.shard, wordIds(r))) == expected)
+    val t = mergeTri(Seq(ids))
+    assert(t.map(r => (r.shard, triIds(r))) == expected)
+  }
+
+  test("merge: chunks with overlapping doc ranges encode to the bytes of one sorted chunk") {
+    // two runs of one key cut by an out-of-order file boundary: each is
+    // ascending, but their doc ranges interleave
+    val a = Seq(0L, 2L, 4L, 6L, 30L)
+    val b = Seq(1L, 3L, 5L, 7L)
+    val sorted = (a ++ b).sorted
+    def word(rs: List[SegmentRow]) = rs.map(r => (r.shard, r.count, r.tf_sum, r.postings.toSeq,
+      r.block_first.toSeq, r.block_last.toSeq, r.block_off.toSeq, r.block_max_norm.toSeq))
+    def tri(rs: List[TriSegmentRow]) = rs.map(r => (r.shard, r.count, r.postings.toSeq,
+      r.block_first.toSeq, r.block_last.toSeq, r.block_off.toSeq))
+    assert(word(mergeWord(Seq(a, b))) == word(mergeWord(Seq(sorted))))
+    assert(word(mergeWord(Seq(b, a))) == word(mergeWord(Seq(sorted))))
+    assert(tri(mergeTri(Seq(a, b))) == tri(mergeTri(Seq(sorted))))
+    assert(tri(mergeTri(Seq(b, a))) == tri(mergeTri(Seq(sorted))))
+  }
+
+  test("merge: each word shard's tf_sum equals the sum of its postings' tf") {
+    for (ids <- Seq((0L until salt).map(_ * 3), (0L to salt).map(_ * 3))) {
+      val rows = mergeWord(Seq(ids.filter(_ % 2 == 0), ids.filter(_ % 2 == 1)))
+      assert(rows.map(_.count).sum == ids.size)
+      rows.foreach { r =>
+        val (rIds, tfs, _) = VarByte.decode(r.postings, r.count)
+        assert(r.tf_sum == tfs.map(_.toLong).sum)
+        assert(r.tf_sum == rIds.map(tfOf(_).toLong).sum)
+      }
+    }
+  }
+
+  test("word lineage orders terms by UTF-8 bytes: U+FF5A first, U+20BB7 last") {
+    def row(term: String) = SegmentRow(0, term, 0, 1, 1L, Array[Byte](1), Array(1L), Array(1L),
+      Array(0), Array(1.0f))
+    val z = "\uff5a"                                   // ｚ, 3 UTF-8 bytes
+    val kanji = new String(Character.toChars(0x20bb7))  // 𠮷, 4 UTF-8 bytes
+    for (terms <- Seq(Seq(z, kanji), Seq(kanji, z))) {
+      val acc = new Spimi.BucketStatsAcc
+      IndexBuild.kind("unused").observe(terms.map(row).iterator, acc).foreach(_ => ())
+      val st = acc.value(org.apache.spark.TaskContext.getPartitionId())
+      assert(st.first == z && st.last == kanji)
+    }
+    // the ordering agrees with an unsigned byte compare of the UTF-8 encodings
+    val rng = new scala.util.Random(7)
+    val alphabet = Seq(0x41, 0x7a, 0xe9, 0x3042, 0xd7ff, 0xe000, 0xff5a, 0xffff,
+      0x10000, 0x1f600, 0x20bb7).map(cp => new String(Character.toChars(cp)))
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    for (_ <- 0 until 2000) {
+      val (x, y) = (Seq.fill(rng.nextInt(4))(alphabet(rng.nextInt(alphabet.size))).mkString,
+        Seq.fill(rng.nextInt(4))(alphabet(rng.nextInt(alphabet.size))).mkString)
+      assert(Integer.signum(Spimi.Utf8Order.compare(x, y)) ==
+        Integer.signum(java.util.Arrays.compareUnsigned(utf8(x), utf8(y))), s"'$x' vs '$y'")
+    }
+  }
 }

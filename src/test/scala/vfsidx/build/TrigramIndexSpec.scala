@@ -335,4 +335,25 @@ class TrigramIndexSpec extends SparkTestBase {
       .agg(count(lit(1)), sum(length($"postings"))).collect().toSeq
     assert(before == after)
   }
+
+  test("stats count every source row; max_doc_id is the highest id even without trigrams") {
+    val d = tmpDir("tristats")
+    val cfg = TrigramIndex.TriConfig(numBuckets = 2)
+    def genStats(l: Int, h: Int) =
+      spark.read.parquet(TrigramIndex.statsGenDir(d, l, h)).as[TriStats].collect().toSeq
+    // highest id holds an under-3-rune string: no trigram, still a source row
+    TrigramIndex.build(spark,
+      Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "ab")).toDF("doc_id", "text"),
+      "doc_id", "text", d, cfg)
+    assert(genStats(0, 0) == Seq(TriStats(3L, 3L)))
+    // highest id holds a null string
+    TrigramIndex.ingestBatch(spark,
+      Seq((4L, "delta epsilon"), (5L, "xy"), (6L, null)).toDF("doc_id", "text"),
+      "doc_id", "text", d, batchId = 1, cfg)
+    assert(genStats(1, 1) == Seq(TriStats(3L, 6L)))
+    assert(TrigramIndex.statsMerged(spark, d).contains(TriStats(6L, 6L)))
+    assert(TrigramIndex.searchExact(spark, d,
+      Seq((4L, "delta epsilon"), (1L, "alpha beta")).toDF("doc_id", "text"),
+      "doc_id", "text", "epsilon").select($"doc_id").as[Long].collect().toSeq == Seq(4L))
+  }
 }
