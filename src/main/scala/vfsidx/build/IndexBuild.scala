@@ -26,7 +26,7 @@ final case class SegmentRow(
     block_first: Array[Long],
     block_last: Array[Long],
     block_off: Array[Int],
-    block_max_norm: Array[Float])
+    block_max_norm: Array[Float]) extends vfsidx.query.Postings.Blocks
 
 /** Per-generation dictionary row. `idf` is NOT stored: it depends on the
   * corpus-wide doc count, which grows with every ingested generation — the

@@ -216,10 +216,12 @@ private[build] object Spimi {
   }
 
   /** Pass-through iterator that folds each emitted segment row into this
-    * partition's [[BucketStat]] and registers it in `acc` once the stream is
-    * exhausted (empty partitions register nothing — same as the former
-    * groupBy(bucket), which had no row for an empty bucket). The key
-    * ordering is the CALLER's (`ord`): the trigram build compares raw Long
+    * partition's [[BucketStat]] and registers it in `acc` when the task
+    * succeeds — whether or not the consumer made a final `hasNext` call —
+    * or, outside a task, once the stream is exhausted (empty partitions
+    * register nothing — same as the former groupBy(bucket), which had no row
+    * for an empty bucket). The key ordering is the CALLER's (`ord`): the
+    * trigram build compares raw Long
     * keys — exactly the former numeric min($"key")/max($"key"), which a
     * formatted-hex comparison would get wrong above 2^48 (supplementary-
     * plane trigrams parse to 13-16 hex digits, so f"%012x" is variable-
@@ -236,12 +238,15 @@ private[build] object Spimi {
       private var n = 0L
       private var b = 0L
       private var flushed = false
+      private def flush(): Unit = if (!flushed) {
+        if (hasAny) acc.add((pid, BucketStat(fmt(first), fmt(last), n, b)))
+        flushed = true
+      }
+      private val task = Option(org.apache.spark.TaskContext.get())
+      task.foreach(_.addTaskCompletionListener[Unit](ctx => if (!ctx.isFailed()) flush()))
       def hasNext: Boolean = {
         val h = it.hasNext
-        if (!h && !flushed) {
-          if (hasAny) acc.add((pid, BucketStat(fmt(first), fmt(last), n, b)))
-          flushed = true
-        }
+        if (!h && task.isEmpty) flush()
         h
       }
       def next(): R = {

@@ -3,7 +3,7 @@ package vfsidx.build
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import vfsidx.codec.VarByte
-import vfsidx.query.Bm25Index
+import vfsidx.query.Postings
 import vfsidx.tokenize.Tokenizer
 
 /** Ids-only posting segment for one (trigram key, shard). Same layout idea
@@ -17,7 +17,7 @@ final case class TriSegmentRow(
     postings: Array[Byte],
     block_first: Array[Long],
     block_last: Array[Long],
-    block_off: Array[Int])
+    block_off: Array[Int]) extends Postings.Blocks
 
 final case class TriDictRow(key: Long, df: Long)
 
@@ -395,35 +395,27 @@ object TrigramIndex {
     def size: Int = n
   }
 
-  /** Small-index cost-gate floor for [[searchCandidates]]: when the upper
-    * bound on the query keys' total postings (|keys| × n_rows, off the
-    * token-validated stats cache — zero jobs) is at or under this, skip the
-    * dictionary probe and the rarest-key ranges collect (two driver
-    * round-trips) and decode every pruned-scan block outright. The HAVING
-    * intersection below is the correctness on both paths — an absent key
-    * simply yields an empty intersection, which is what the dictionary
-    * early-out returned. Same gate pattern as [[nears]]' prunedFloor; at
-    * production scale n_rows dwarfs the floor and the pruned path engages
-    * unchanged. */
-  val SearchDirectFloor: Long = 4L << 20
+  /** Small-index cost-gate floor of [[searchCandidates]]:
+    * [[Postings.DirectFloor]]. */
+  val SearchDirectFloor: Long = Postings.DirectFloor
 
   /** Candidate doc_ids containing ALL trigram keys of `needle` — the
     * reference's AND-intersection semantics (J1). Returns a one-column
     * `doc_id` DataFrame; empty for needles under 3 runes or containing a
-    * key absent from the corpus. The rarest key's block [first,last] ranges
-    * drive block skipping on the other keys' lists. */
+    * key absent from the corpus. Over the `directFloor` gate (on |keys| ×
+    * n_rows), a dictionary probe returns early on an absent key and the
+    * rarest key's block [first,last] ranges drive block skipping on the
+    * other keys' lists; under it every pruned-scan block decodes and an
+    * absent key simply empties the HAVING intersection. */
   def searchCandidates(spark: SparkSession, dir: String, needle: String,
                        directFloor: Long = SearchDirectFloor): DataFrame = {
     import spark.implicits._
     val keys = Tokenizer.triKeys(needle).distinct
     if (keys.isEmpty)
       return spark.emptyDataset[Long].toDF("doc_id")
-
-    val nRows = statsMerged(spark, dir).map(_.n_rows).getOrElse(Long.MaxValue)
-    if (nRows != Long.MaxValue && keys.size.toLong * nRows <= directFloor)
-      return intersectDecoded(
-        readSegments(spark, dir).as[TriSegmentRow].filter($"key".isin(keys: _*)),
-        keys, rarest = -1L, ranges = None)
+    val segs = readSegments(spark, dir).as[TriSegmentRow].filter($"key".isin(keys: _*))
+    if (Postings.direct(Postings.trigramBound(spark, dir, keys.size), directFloor))
+      return intersectDecoded(segs, keys, rarest = -1L, ranges = None)
 
     // per-generation df rows are additive (a doc lives in one generation)
     val dict = readDictRaw(spark, dir)
@@ -432,69 +424,33 @@ object TrigramIndex {
       .as[TriDictRow].collect().map(r => r.key -> r.df).toMap
     if (dict.size < keys.size)   // some trigram nowhere in the corpus -> AND empty
       return spark.emptyDataset[Long].toDF("doc_id")
-
-    val segs = readSegments(spark, dir).as[TriSegmentRow]
-      .filter($"key".isin(keys: _*))
-
-    // Rarest key's block [first,last] ranges drive skipping on the other
-    // keys' lists. Bounded driver collect (like Bm25Index.topKOr): past the
-    // cap we fall back to decoding every pruned-scan block — correctness is
-    // the HAVING intersection below either way.
     val rarest = keys.minBy(dict)
-    val rawRanges = segs.filter($"key" === rarest)
-      .flatMap(s => s.block_first.zip(s.block_last))
-      .limit(200001).collect()
-    val ranges: Option[Array[(Long, Long)]] =
-      if (rawRanges.length > 200000) None else Some(Bm25Index.coalesce(rawRanges))
-
-    intersectDecoded(segs, keys, rarest, ranges)
+    intersectDecoded(segs, keys, rarest,
+      Postings.blockRanges(segs.filter($"key" === rarest), Postings.RangeCap))
   }
 
-  /** Decode the pruned segment rows of `keys` — skipping blocks outside
-    * `ranges` for every key but `rarest` — and intersect: docs holding ALL
-    * keys (HAVING countDistinct == |keys|). The shared tail of the pruned
-    * and direct [[searchCandidates]] paths. */
+  /** Decode the segment rows of `keys` — skipping blocks outside `ranges`
+    * for every key but `rarest` — and intersect: docs holding ALL keys
+    * (HAVING countDistinct == |keys|). */
   private def intersectDecoded(segs: Dataset[TriSegmentRow], keys: Seq[Long],
                                rarest: Long,
                                ranges: Option[Array[(Long, Long)]]): DataFrame = {
     import segs.sparkSession.implicits._
-    val nKeys = keys.size
-    val decoded = segs.flatMap { s =>
+    segs.flatMap { s =>
       val out = Array.newBuilder[(Long, Long)]
-      var bi = 0
-      while (bi < s.block_off.length) {
-        if (s.key == rarest || ranges.isEmpty ||
-            Bm25Index.overlaps(ranges.get, s.block_first(bi), s.block_last(bi))) {
-          val ids = VarByte.decodeIdsBlock(
-            s.postings, s.block_off(bi), VarByte.blockCount(s.count, bi))
-          var i = 0
-          while (i < ids.length) { out += ((s.key, ids(i))); i += 1 }
-        }
-        bi += 1
-      }
+      Postings.decodeIds(s, Postings.keep(s, ranges, s.key == rarest))(id => out += ((s.key, id)))
       out.result()
     }.toDF("key", "doc_id")
-
-    decoded.groupBy($"doc_id")
+      .groupBy($"doc_id")
       .agg(countDistinct($"key").as("nk"))
-      .filter($"nk" === nKeys)
+      .filter($"nk" === keys.size)
       .select($"doc_id")
   }
 
-  /** Bounded-collect threshold for the point-lookup fast path below. */
-  val IsinCap = 5000
+  /** Bounded-collect threshold of the candidate prefilter:
+    * [[Postings.IsinCap]]. */
+  val IsinCap: Int = Postings.IsinCap
 
-  /** True substring search: index candidates + exact containment recheck
-    * against only the candidate rows of `docs`. Identical results to a
-    * full-scan `contains` filter (differential-tested in TrigramIndexSpec).
-    *
-    * Row materialization strategy (the reference's by-address record fetch,
-    * /root/reference/search_finder.go:200-240, restated for a columnar
-    * table): when the candidate set is small (≤ [[IsinCap]], the common
-    * case for selective needles) the ids are inlined as an `In` literal
-    * filter — pushed to the parquet scan, so a doc_id-ordered corpus table
-    * reads only the row groups holding candidates. Larger candidate sets
-    * fall back to a distributed semi-join (never collected). */
   /** Is every UTF-16 char of `s` part of a well-formed code point? A needle
     * that slices a surrogate pair (e.g. a random substring of a
     * supplementary-plane rune) tokenizes to lone-surrogate trigram keys that
@@ -514,35 +470,26 @@ object TrigramIndex {
     true
   }
 
+  /** True substring search: index candidates ([[Postings.prefilter]]) +
+    * exact containment recheck against only the candidate rows of `docs`.
+    * Identical results to a full-scan `contains` filter (differential-tested
+    * in TrigramIndexSpec). */
   def searchExact(spark: SparkSession, dir: String, docs: DataFrame,
                   idCol: String, strCol: String, needle: String): DataFrame = {
-    import spark.implicits._
     // malformed-UTF-16 needles bypass the index (full containment scan): the
     // trigram prefilter is only a correct superset for well-formed needles.
     // The <3-rune silent-drop rule (reference parity) still wins: short
     // needles match nothing on either path.
     if (!wellFormedUtf16(needle) && needle.codePointCount(0, needle.length) >= 3)
       return docs.filter(col(strCol).contains(needle))
-    val cand = searchCandidates(spark, dir, needle)
-    val capped = cand.limit(IsinCap + 1).as[Long].collect()
-    val prefiltered =
-      if (capped.length <= IsinCap) docs.filter(col(idCol).isin(capped.toIndexedSeq: _*))
-      else docs.join(cand.withColumnRenamed("doc_id", idCol), idCol)
-    prefiltered.filter(col(strCol).contains(needle))
+    Postings.prefilter(docs, idCol, searchCandidates(spark, dir, needle))
+      .filter(col(strCol).contains(needle))
   }
 
   /** Candidate-set cap for the pruned `nears` path: above this many
     * candidates the broadcast set stops paying for itself — fall back to
     * the full decode (same exact result, the round-3 implementation). */
   private val NearsCandidateCap = 200000
-
-  /** Below this many total postings across the needle's keys, the
-    * single-job full decode beats the pruned plan's extra driver
-    * round-trips (df probe + partials job + candidate collect + hits
-    * join) — a pure cost gate, identical results either way. Gated twice:
-    * first on the cached `kTotal * n_rows` upper bound (O(metadata), no
-    * job), then on the actual Σdf once the probe has run. */
-  private val NearsPrunedFloor = 4L << 20
 
   /** Hard bound on the rare-prefix convergence loop's driver iterations
     * (each is a full partials job over the rare prefix). `m` jumps by
@@ -559,14 +506,7 @@ object TrigramIndex {
     import segs.sparkSession.implicits._
     segs.filter($"key".isin(keySet: _*)).flatMap { s =>
       val out = Array.newBuilder[Long]
-      var bi = 0
-      while (bi < s.block_off.length) {
-        val ids = VarByte.decodeIdsBlock(
-          s.postings, s.block_off(bi), VarByte.blockCount(s.count, bi))
-        var i = 0
-        while (i < ids.length) { out += ids(i); i += 1 }
-        bi += 1
-      }
+      Postings.decodeIds(s, Postings.All)(out += _)
       out.result()
     }.toDF("doc_id")
       .groupBy($"doc_id")                      // (key, doc) pairs are unique
@@ -594,9 +534,11 @@ object TrigramIndex {
     *
     * Every skip is justified by an exact bound, so the result is
     * row-identical to the full decode; an over-[[NearsCandidateCap]]
-    * candidate set falls back to it outright. */
+    * candidate set falls back to it outright. The `prunedFloor` gate is
+    * checked twice: on the zero-job |keys| × n_rows bound, then on the
+    * actual Σdf once the df probe has run. */
   def nears(spark: SparkSession, dir: String, needle: String, k: Int,
-            prunedFloor: Long = NearsPrunedFloor,
+            prunedFloor: Long = Postings.DirectFloor,
             candidateCap: Int = NearsCandidateCap,
             maxIters: Int = NearsMaxIters): DataFrame = {
     import spark.implicits._
@@ -607,10 +549,7 @@ object TrigramIndex {
       .filter($"key".isin(keys: _*))
     def topK(df: DataFrame): DataFrame =
       df.orderBy($"overlap".desc, $"doc_id".asc).limit(k)
-    // zero-job gate: Σdf ≤ |keys| * n_docs, and n_docs comes from the
-    // token-validated stats cache — a small index decodes in one job
-    val nDocs = statsMerged(spark, dir).map(_.n_rows).getOrElse(Long.MaxValue)
-    if (nDocs != Long.MaxValue && keys.size.toLong * nDocs <= prunedFloor)
+    if (Postings.direct(Postings.trigramBound(spark, dir, keys.size), prunedFloor))
       return topK(nearsPartials(segs, keys))
     // df per present key off segment METADATA (key + count columns pruned
     // at the parquet scan; postings bytes never read here)
@@ -620,7 +559,7 @@ object TrigramIndex {
     val kTotal = ranked.size
     if (kTotal == 0)
       return spark.emptyDataset[(Long, Long)].toDF("doc_id", "overlap")
-    if (kTotal == 1 || dfs.valuesIterator.sum <= prunedFloor)
+    if (kTotal == 1 || Postings.direct(dfs.valuesIterator.sum, prunedFloor))
       return topK(nearsPartials(segs, ranked))
 
     // grow the rare prefix until the common suffix fits under θ-1 — at most
@@ -655,22 +594,12 @@ object TrigramIndex {
     val hits = segs.filter($"key".isin(common: _*)).flatMap { s =>
       val cand = bc.value
       val out = Array.newBuilder[Long]
-      var bi = 0
-      while (bi < s.block_off.length) {
-        // first candidate ≥ block_first; decode only if it is ≤ block_last
+      // first candidate ≥ block_first; decode only if it is ≤ block_last
+      Postings.decodeIds(s, { bi =>
         var p = java.util.Arrays.binarySearch(cand, s.block_first(bi))
         if (p < 0) p = -p - 1
-        if (p < cand.length && cand(p) <= s.block_last(bi)) {
-          val ids = VarByte.decodeIdsBlock(
-            s.postings, s.block_off(bi), VarByte.blockCount(s.count, bi))
-          var i = 0
-          while (i < ids.length) {
-            if (java.util.Arrays.binarySearch(cand, ids(i)) >= 0) out += ids(i)
-            i += 1
-          }
-        }
-        bi += 1
-      }
+        p < cand.length && cand(p) <= s.block_last(bi)
+      })(id => if (java.util.Arrays.binarySearch(cand, id) >= 0) out += id)
       out.result()
     }.toDF("doc_id").groupBy($"doc_id").agg(count(lit(1)).as("hits"))
     val totals = cRows.toSeq.toDF("doc_id", "overlap")

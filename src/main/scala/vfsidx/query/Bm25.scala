@@ -97,35 +97,29 @@ class Bm25Index(spark: SparkSession, dir: String,
         log((lit(n) - $"df" + 0.5) / ($"df" + 0.5) + 1.0).as("idf"))
   }
 
-  /** (df, idf) per query term in ONE dictionary lookup job — the query
-    * planner needs both (df for rarest-term selection, idf for scoring). */
-  private def termStats(terms: Seq[String]): Map[String, (Long, Double)] =
-    dictionary.filter($"term".isin(terms: _*))
+  /** (df, idf) maps of the query terms present in the corpus, in ONE
+    * dictionary lookup job — the query planner needs both (df for the
+    * gates and rarest-term selection, idf for scoring). */
+  private def termStats(terms: Seq[String]): (Map[String, Long], Map[String, Double]) = {
+    val rows = dictionary.filter($"term".isin(terms: _*))
       .select($"term", $"df", $"idf").as[(String, Long, Double)].collect()
-      .map { case (t, df, idf) => t -> ((df, idf)) }.toMap
-
-  private def idfMap(terms: Seq[String]): Map[String, Double] =
-    termStats(terms).map { case (t, (_, idf)) => t -> idf }
+    (rows.map(r => r._1 -> r._2).toMap, rows.map(r => r._1 -> r._3).toMap)
+  }
 
   /** Decoded per-(term,doc) score contributions for the query terms. */
   private def contributions(terms: Seq[String], idfs: Map[String, Double],
-                            skipRanges: Option[Array[(Long, Long)]] = None,
-                            protectTerm: String = ""): Dataset[(String, Long, Double)] = {
-    val segs = segments.filter($"term".isin(terms: _*))
-    // copy everything the task needs into locals — the closure must not
-    // capture `this` (which holds the SparkSession)
+                            ranges: Option[Array[(Long, Long)]] = None,
+                            protect: String = ""): Dataset[(String, Long, Double)] = {
+    // a local copy: the closure must not capture `this` (which holds the
+    // SparkSession)
     val avgdl = stats.avgdl
-    val localIdfs = idfs
-    val ranges = skipRanges
-    val protect = protectTerm
-    segs.flatMap { s =>
-      val idf = localIdfs.getOrElse(s.term, 0.0)
+    segments.filter($"term".isin(terms: _*)).flatMap { s =>
+      val idf = idfs.getOrElse(s.term, 0.0)
+      val keep = Postings.keep(s, ranges, s.term == protect)
       val out = Array.newBuilder[(String, Long, Double)]
       var bi = 0
       while (bi < s.block_off.length) {
-        val keep = ranges.isEmpty || s.term == protect ||
-          Bm25Index.overlaps(ranges.get, s.block_first(bi), s.block_last(bi))
-        if (keep) {
+        if (keep(bi)) {
           val cnt = VarByte.blockCount(s.count, bi)
           val (ids, tfs, dls) = VarByte.decodeBlock(s.postings, s.block_off(bi), cnt)
           var i = 0
@@ -158,8 +152,7 @@ class Bm25Index(spark: SparkSession, dir: String,
   def topKOrNaive(query: String, k: Int): DataFrame = {
     val terms = Tokenizer.codeTokens(query).distinct
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val idfs = idfMap(terms)
-    rank(contributions(terms, idfs), k, None)
+    rank(contributions(terms, termStats(terms)._2), k, None)
   }
 
   /** Disjunctive BM25 top-k with block-max MaxScore pruning — exact (rank-
@@ -188,23 +181,16 @@ class Bm25Index(spark: SparkSession, dir: String,
     import spark.implicits._
     val terms = Tokenizer.codeTokens(query).distinct
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val stats = termStats(terms)
-    val idfs = stats.map { case (t, (_, idf)) => t -> idf }
+    val (dfs, idfs) = termStats(terms)
     if (terms.size == 1) return rank(contributions(terms, idfs), k, None)
 
     val present = terms.filter(idfs.contains)
     if (present.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val dfs = stats.map { case (t, (df, _)) => t -> df }
 
-    // SMALL-INDEX COST GATE (zero extra jobs — Σdf comes off the termStats
-    // collect the query already paid): block-max MaxScore spends three
-    // driver round-trips (phase-1 θ job, maxUb metadata job, ranges
-    // collect) to AVOID decoding postings; under the floor the full decode
-    // is cheaper than the trips it saves, so score everything in one job.
-    // Identical ranks either way (both paths are exact; same gate pattern
-    // as TrigramIndex.nears' prunedFloor). At production scale Σdf dwarfs
-    // the floor and pruning engages unchanged.
-    if (present.map(dfs).sum <= directFloor)
+    // small-index gate (zero extra jobs — Σdf comes off the termStats
+    // collect the query already paid): under the floor, skip the three
+    // pruning round-trips (phase-1 θ, maxUb, ranges) and score everything
+    if (Postings.direct(present.map(dfs).sum, directFloor))
       return rank(contributions(present, idfs), k, None)
 
     // phase 1: θ from the rarest term's own top-k. rank() HALF_UP-rounds to
@@ -235,44 +221,38 @@ class Bm25Index(spark: SparkSession, dir: String,
 
     if (nonEssential.isEmpty) return rank(contributions(present, idfs), k, None)
 
-    // candidate doc ranges = essential terms' block intervals (bounded
-    // collect: block metadata is 1/128th of postings; cap keeps the driver
-    // safe — over the cap we fall back to exact full scoring)
-    val ranges = segments.filter($"term".isin(essential: _*))
-      .flatMap(s => s.block_first.zip(s.block_last))
-      .limit(200001).collect()
-    if (ranges.length > 200000) return rank(contributions(present, idfs), k, None)
-    val sortedRanges = Bm25Index.coalesce(ranges)
+    // candidate doc ranges = essential terms' block intervals; over the
+    // range cap, fall back to exact full scoring
+    Postings.blockRanges(segments.filter($"term".isin(essential: _*)), Postings.RangeCap) match {
+      case None => rank(contributions(present, idfs), k, None)
+      case ranges => rank(contributions(essential, idfs)
+        .union(contributions(nonEssential.toSeq, idfs, ranges)), k, None)
+    }
+  }
 
-    val essContribs = contributions(essential, idfs)
-    val nonEssContribs = contributions(nonEssential.toSeq, idfs,
-      Some(sortedRanges), protectTerm = "")
-    rank(essContribs.union(nonEssContribs), k, None)
+  /** The conjunctive step of [[topKAnd]] and [[countFirstLastAnd]] (the
+    * reference's J1 posting intersection): every query term's decoded
+    * contributions; callers keep the docs holding all terms. Above the
+    * direct gate the rarest term's block [first,last] ranges are collected
+    * (df/128 of them, bounded by [[Postings.RangeCap]]) and the other terms
+    * skip blocks that cannot intersect them. None when there are no terms
+    * or one is absent from the corpus (the AND is empty). */
+  private def andContributions(terms: Seq[String]): Option[Dataset[(String, Long, Double)]] = {
+    if (terms.isEmpty) return None
+    val (dfs, idfs) = termStats(terms)
+    if (dfs.size < terms.size) return None
+    if (Postings.direct(dfs.values.sum, directFloor)) return Some(contributions(terms, idfs))
+    val rarest = terms.minBy(dfs)
+    Some(contributions(terms, idfs,
+      Postings.blockRanges(segments.filter($"term" === rarest), Postings.RangeCap), rarest))
   }
 
   /** Conjunctive (reference J1 intersection semantics) top-k with
     * block-range skipping driven by the rarest term. */
   def topKAnd(query: String, k: Int): DataFrame = {
     val terms = Tokenizer.codeTokens(query).distinct
-    if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val stats = termStats(terms)
-    val idfs = stats.map { case (t, (_, idf)) => t -> idf }
-    if (idfs.size < terms.size)  // a term is absent from the corpus -> AND is empty
-      return spark.emptyDataset[Hit].toDF()
-    val dfs = stats.map { case (t, (df, _)) => t -> df }
-    // small-index gate: under the floor, decoding every pruned-scan block
-    // beats the rarest-term ranges collect round-trip (the HAVING-all
-    // intersection is the correctness either way)
-    if (dfs.values.sum <= directFloor)
-      return rank(contributions(terms, idfs), k, Some(terms.size))
-    val rarest = terms.minBy(t => dfs.getOrElse(t, 0L))
-    // Block metadata of the rarest term: df/128 (first,last) ranges — bounded
-    // and broadcastable (rare by definition). Other terms skip blocks whose
-    // doc range cannot intersect any candidate.
-    val ranges = Bm25Index.coalesce(segments.filter($"term" === rarest)
-      .flatMap(s => s.block_first.zip(s.block_last))
-      .collect())
-    rank(contributions(terms, idfs, Some(ranges), rarest), k, Some(terms.size))
+    andContributions(terms).fold(spark.emptyDataset[Hit].toDF())(
+      rank(_, k, Some(terms.size)))
   }
 
   /** Index-backed terminal verbs over a COMPOSED (conjunctive) condition —
@@ -286,74 +266,17 @@ class Bm25Index(spark: SparkSession, dir: String,
     * path's semantics, computed the same way). */
   def countFirstLastAnd(query: String): DataFrame = {
     val terms = Tokenizer.codeTokens(query).distinct
-    def empty = Seq((0L, Option.empty[Long], Option.empty[Long]))
-      .toDF("n", "first_id", "last_id")
-    if (terms.isEmpty) return empty
-    val stats = termStats(terms)
-    if (stats.size < terms.size) return empty  // a term absent -> AND empty
-    val dfs = stats.map { case (t, (df, _)) => t -> df }
-    val noScores = terms.map(_ -> 0.0).toMap   // scores unused by the verbs
-    val n = terms.size
-    // same small-index gate as topKAnd: skip the ranges collect round-trip
-    // when decoding everything is cheaper than the skipping it buys
-    val (ranges, rarest) =
-      if (dfs.values.sum <= directFloor) (None, "")
-      else {
-        val r = terms.minBy(dfs)
-        (Some(Bm25Index.coalesce(segments.filter($"term" === r)
-          .flatMap(s => s.block_first.zip(s.block_last)).collect())), r)
-      }
-    contributions(terms, noScores, ranges, rarest)
-      .toDF("term", "doc_id", "c")
-      .groupBy($"doc_id").agg(countDistinct($"term").as("nt"))
-      .filter($"nt" === n)
-      .agg(count(lit(1)).as("n"), min($"doc_id").as("first_id"),
-        max($"doc_id").as("last_id"))
+    andContributions(terms).fold(
+      Seq((0L, Option.empty[Long], Option.empty[Long])).toDF("n", "first_id", "last_id"))(
+      _.toDF("term", "doc_id", "c")
+        .groupBy($"doc_id").agg(countDistinct($"term").as("nt"))
+        .filter($"nt" === terms.size)
+        .agg(count(lit(1)).as("n"), min($"doc_id").as("first_id"),
+          max($"doc_id").as("last_id")))
   }
 }
 
 object Bm25Index {
-  /** Small-index cost-gate floor: queries whose terms' total df is at or
-    * under this skip the pruning machinery's driver round-trips (phase-1 θ,
-    * maxUb, rarest-term ranges) and decode outright — decoding ≤4M postings
-    * across the cluster is cheaper than the 2-3 jobs pruning costs, and
-    * both paths are exact. Mirrors [[TrigramIndex.nears]]' prunedFloor. */
-  val DirectFloor: Long = 4L << 20
-
-  /** Sort by start and merge overlapping/nested intervals so the binary
-    * search in [[overlaps]] sees disjoint ranges. Ranges pooled from several
-    * terms' blocks interleave and nest; searching them un-merged can falsely
-    * report "no overlap" (a probe landing inside a wide interval whose
-    * neighbors sort after it). Single-term block ranges are already disjoint
-    * and sorted, so coalescing is a cheap no-op there. */
-  def coalesce(ranges: Array[(Long, Long)]): Array[(Long, Long)] = {
-    if (ranges.length <= 1) return ranges
-    val sorted = ranges.sortBy(_._1)
-    val out = Array.newBuilder[(Long, Long)]
-    var (cf, cl) = sorted(0)
-    var i = 1
-    while (i < sorted.length) {
-      val (f, l) = sorted(i)
-      if (f <= cl) { if (l > cl) cl = l }
-      else { out += ((cf, cl)); cf = f; cl = l }
-      i += 1
-    }
-    out += ((cf, cl))
-    out.result()
-  }
-
-  /** Does [first,last] overlap any of the sorted DISJOINT candidate ranges?
-    * (Callers must [[coalesce]] first.) */
-  def overlaps(ranges: Array[(Long, Long)], first: Long, last: Long): Boolean = {
-    var lo = 0
-    var hi = ranges.length - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val (f, l) = ranges(mid)
-      if (l < first) lo = mid + 1
-      else if (f > last) hi = mid - 1
-      else return true
-    }
-    false
-  }
+  /** Small-index cost-gate floor of the BM25 queries: [[Postings.DirectFloor]]. */
+  val DirectFloor: Long = Postings.DirectFloor
 }

@@ -381,15 +381,13 @@ object RegexTrigram {
 
     val allKeys = members.flatMap(_._2).distinct
     // dictionary probe: a member with ANY key absent from the corpus can
-    // never match (same early-out as searchCandidates). Under the small-
-    // index floor the probe round-trip costs more than it prunes — skip it
-    // and keep every member: an absent key simply contributes no pairs, so
-    // the member never reaches nk >= req and the clause/doc aggregation
-    // below yields the identical result (same gate as searchCandidates).
-    val nRows = TrigramIndex.statsMerged(spark, dir).map(_.n_rows).getOrElse(Long.MaxValue)
+    // never match. Under the small-index floor the probe round-trip costs
+    // more than it prunes — skip it and keep every member: an absent key
+    // simply contributes no pairs, so the member never reaches nk >= req and
+    // the clause/doc aggregation below yields the identical result.
     val viable =
-      if (nRows != Long.MaxValue &&
-          allKeys.size.toLong * nRows <= TrigramIndex.SearchDirectFloor) members
+      if (Postings.direct(Postings.trigramBound(spark, dir, allKeys.size),
+          Postings.DirectFloor)) members
       else {
         val present: Set[Long] = TrigramIndex.readDictRaw(spark, dir)
           .filter($"key".isin(allKeys: _*))
@@ -412,17 +410,9 @@ object RegexTrigram {
       .flatMap { s =>
         val ms = keyToMembers(s.key)
         val out = Array.newBuilder[(Long, Int)]
-        var bi = 0
-        while (bi < s.block_off.length) {
-          val ids = vfsidx.codec.VarByte.decodeIdsBlock(
-            s.postings, s.block_off(bi), vfsidx.codec.VarByte.blockCount(s.count, bi))
-          var i = 0
-          while (i < ids.length) {
-            var j = 0
-            while (j < ms.length) { out += ((ids(i), ms(j))); j += 1 }
-            i += 1
-          }
-          bi += 1
+        Postings.decodeIds(s, Postings.All) { id =>
+          var j = 0
+          while (j < ms.length) { out += ((id, ms(j))); j += 1 }
         }
         out.result()
       }.toDF("doc_id", "member")
@@ -455,15 +445,7 @@ object RegexTrigram {
     plan(pattern) match {
       case None => docs.filter(verify)
       case Some(clauses) =>
-        import spark.implicits._
-        val cand = clauseCandidates(spark, dir, clauses)
-        // same bounded-In / semi-join materialization as searchExact
-        val capped = cand.limit(TrigramIndex.IsinCap + 1).as[Long].collect()
-        val prefiltered =
-          if (capped.length <= TrigramIndex.IsinCap)
-            docs.filter(col(idCol).isin(capped.toIndexedSeq: _*))
-          else docs.join(cand.withColumnRenamed("doc_id", idCol), idCol)
-        prefiltered.filter(verify)
+        Postings.prefilter(docs, idCol, clauseCandidates(spark, dir, clauses)).filter(verify)
     }
   }
 }

@@ -147,6 +147,19 @@ class SpimiSpec extends AnyFunSuite {
     assert(acc2.value.isEmpty)
   }
 
+  test("observeBuckets: a task that reads every row with next() alone still records its bucket") {
+    val sc = vfsidx.SparkTestBase.spark.sparkContext
+    val acc = new Spimi.BucketStatsAcc
+    sc.register(acc)
+    val rows = Seq((5L, 1L, 10L), (3L, 2L, 20L), (9L, 4L, 30L))
+    val keys = sc.parallelize(rows, 1).mapPartitions { it =>
+      val o = Spimi.observeBuckets(it, acc)(_._1, (k: Long) => k.toString, _._2, _._3)
+      Iterator.fill(3)(o.next()._1).toList.iterator // no trailing hasNext on `o`
+    }.collect()
+    assert(keys.toSeq == Seq(5L, 3L, 9L))
+    assert(acc.value == Map(0 -> Spimi.BucketStat("3", "9", 7L, 60L)))
+  }
+
   test("BucketStatsAcc: keyed replacement, never additive (retry/speculation-safe)") {
     val acc = new Spimi.BucketStatsAcc
     acc.add((3, Spimi.BucketStat("a", "z", 100L, 1000L)))

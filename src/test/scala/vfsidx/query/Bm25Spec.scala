@@ -120,16 +120,16 @@ class Bm25Spec extends SparkTestBase {
     // regression: ranges pooled from several terms interleave; un-merged
     // binary search missed a probe inside a wide early interval.
     val pooled = Array((3L, 40000L), (7L, 39000L), (39500L, 81000L), (40012L, 80000L))
-    val merged = Bm25Index.coalesce(pooled)
+    val merged = Postings.coalesce(pooled)
     assert(merged.toSeq == Seq((3L, 81000L)))
-    assert(Bm25Index.overlaps(merged, 39200L, 39400L))
-    assert(!Bm25Index.overlaps(merged, 81001L, 90000L))
-    assert(!Bm25Index.overlaps(merged, 0L, 2L))
+    assert(Postings.overlaps(merged, 39200L, 39400L))
+    assert(!Postings.overlaps(merged, 81001L, 90000L))
+    assert(!Postings.overlaps(merged, 0L, 2L))
     // disjoint input is a no-op
     val disjoint = Array((1L, 5L), (10L, 20L), (30L, 31L))
-    assert(Bm25Index.coalesce(disjoint).toSeq == disjoint.toSeq)
-    assert(Bm25Index.overlaps(disjoint, 6L, 10L))
-    assert(!Bm25Index.overlaps(disjoint, 6L, 9L))
+    assert(Postings.coalesce(disjoint).toSeq == disjoint.toSeq)
+    assert(Postings.overlaps(disjoint, 6L, 10L))
+    assert(!Postings.overlaps(disjoint, 6L, 9L))
   }
 
   test("index-backed Count/First/Last over a composed AND condition (no corpus access)") {
