@@ -292,9 +292,7 @@ object Ingest {
     val schemaPath = new org.apache.hadoop.fs.Path(checkpointDir, "graft_schema.json")
     val schema: org.apache.spark.sql.types.StructType = schemaHint.getOrElse {
       if (ckFs.exists(schemaPath)) {
-        val in = ckFs.open(schemaPath)
-        val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        org.apache.spark.sql.types.DataType.fromJson(json)
+        org.apache.spark.sql.types.DataType.fromJson(readText(ckFs, schemaPath))
           .asInstanceOf[org.apache.spark.sql.types.StructType]
       } else {
         val inferred = decoder.inferSchema(spark, dataDir)
@@ -302,11 +300,7 @@ object Ingest {
           s"cannot infer a $format schema from $dataDir (empty or no valid " +
             "data yet); pass schemaHint or start the stream after the first " +
             "file lands")
-        ckFs.mkdirs(new org.apache.hadoop.fs.Path(checkpointDir))
-        val tmp = new org.apache.hadoop.fs.Path(checkpointDir, ".graft_schema.json.tmp")
-        val out = ckFs.create(tmp, true)
-        try out.write(inferred.json.getBytes("UTF-8")) finally out.close()
-        require(ckFs.rename(tmp, schemaPath), s"rename $tmp -> $schemaPath failed")
+        writeAtomic(ckFs, schemaPath, inferred.json)
         inferred
       }
     }
@@ -328,8 +322,6 @@ object Ingest {
     // monotone even if a batch `indexjson` refresh ran between stream runs.
     // (Do NOT run a batch refresh CONCURRENTLY with an active stream on the
     // same index — slot allocation is first-committed-wins, not locked.)
-    val hfs = new org.apache.hadoop.fs.Path(checkpointDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     /** (word slot, per-column slots, doc_id base) for this epoch — read
       * back from the durable per-epoch file on replay. The BASE must be
       * recorded too: a replayed epoch whose word ingest already committed
@@ -338,18 +330,10 @@ object Ingest {
       * shifted ids. The recorded base makes the recomputed id assignment
       * byte-identical to the original attempt. */
     def slotFor(epochId: Long, freshBase: => Long): (Int, Map[String, Int], Option[Long]) = {
-      val slotsDir = new org.apache.hadoop.fs.Path(checkpointDir, "graft_slots")
-      val f = new org.apache.hadoop.fs.Path(slotsDir, s"epoch-$epochId")
-      if (hfs.exists(f)) {
-        val in = hfs.open(f)
-        val lines =
-          try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-          finally in.close()
-        val colSlots =
-          if (lines.size < 2 || lines(1).trim == "-") Map.empty[String, Int]
-          else lines(1).trim.split(',').map { kv =>
-            val Array(k, v) = kv.split('='); k -> v.toInt
-          }.toMap
+      val f = new org.apache.hadoop.fs.Path(checkpointDir, s"graft_slots/epoch-$epochId")
+      if (ckFs.exists(f)) {
+        val lines = readText(ckFs, f).split("\n").toSeq
+        val colSlots = lines.lift(1).fold(Map.empty[String, Int])(decodeSlots)
         // a pre-upgrade (v1) epoch file has no recorded base: the word
         // ingest is still replay-safe (_SUCCESS gates skip before ids
         // matter), but per-column ingest MUST NOT run — a freshly-derived
@@ -368,15 +352,8 @@ object Ingest {
         // dropping this epoch's files.
         IndexBuild.reserveSlot(spark, indexDir, slot)
         val colSlots = allocateColSlots(spark, indexDir, triCols, numCols)
-        val slotLine =
-          if (colSlots.isEmpty) "-"
-          else colSlots.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
         val base = freshBase
-        hfs.mkdirs(slotsDir)
-        val tmp = new org.apache.hadoop.fs.Path(slotsDir, s".epoch-$epochId.tmp")
-        val out = hfs.create(tmp, true)
-        try out.write(s"$slot\n$slotLine\n$base".getBytes("UTF-8")) finally out.close()
-        require(hfs.rename(tmp, f), s"rename $tmp -> $f failed")
+        writeAtomic(ckFs, f, s"$slot\n${encodeSlots(colSlots)}\n$base")
         (slot, colSlots, Some(base))
       }
     }
@@ -456,6 +433,32 @@ object Ingest {
       numBuckets = cfg.numBuckets, saltThreshold = cfg.saltThreshold,
       shardSize = cfg.shardSize, maxGenerations = cfg.maxGenerations,
       tierFanout = cfg.tierFanout)
+
+  /** Write `text` to `path` through a `.<name>.tmp` sibling and a rename,
+    * so a reader sees the previous file or the whole new one, never a torn
+    * write. */
+  private def writeAtomic(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path,
+                          text: String): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(path.getParent, s".${path.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(path)) fs.delete(path, false)
+    require(fs.rename(tmp, path), s"rename $tmp -> $path failed")
+  }
+
+  private def readText(fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(path)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** The per-column slot line of an epoch file or refresh intent: `k=v`
+    * pairs sorted by key and joined by `,`, or `-` when there are none. */
+  private def encodeSlots(slots: Map[String, Int]): String =
+    if (slots.isEmpty) "-" else slots.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
+
+  private def decodeSlots(line: String): Map[String, Int] =
+    if (line.trim == "-") Map.empty
+    else line.trim.split(',').map { kv => val Array(k, v) = kv.split('='); k -> v.toInt }.toMap
 
   /** Internal name for the dense id column attached to raw ingested rows —
     * reserved so it can never collide with a source column. */
@@ -561,18 +564,10 @@ object Ingest {
     def readIntent(): Option[(Int, Long, Map[String, Int], Seq[String])] =
       if (!catFs.exists(intentP)) None
       else {
-        val in = catFs.open(intentP)
-        val lines =
-          try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-          finally in.close()
+        val lines = readText(catFs, intentP).split("\n").toSeq
         scala.util.Try {
           if (lines.head.trim == "v2") {
-            val slots =
-              if (lines(3).trim == "-") Map.empty[String, Int]
-              else lines(3).trim.split(',').map { kv =>
-                val Array(k, v) = kv.split('='); k -> v.toInt
-              }.toMap
-            (lines(1).trim.toInt, lines(2).trim.toLong, slots,
+            (lines(1).trim.toInt, lines(2).trim.toLong, decodeSlots(lines(3)),
               lines.drop(4).filter(_.nonEmpty))
           } else {
             // v1 layout (slot, base, files): recover with no recorded
@@ -585,17 +580,9 @@ object Ingest {
         }.toOption.orElse(Some((0, 0L, Map.empty[String, Int], Seq.empty[String])))
       }
     def writeIntent(slot: Int, base: Long, colSlots: Map[String, Int],
-                    fls: Seq[String]): Unit = {
-      val slotLine =
-        if (colSlots.isEmpty) "-"
-        else colSlots.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
-      val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/.refresh_intent.tmp")
-      val out = catFs.create(tmp, true)
-      try out.write((s"v2\n$slot\n$base\n$slotLine\n" + fls.mkString("\n")).getBytes("UTF-8"))
-      finally out.close()
-      if (catFs.exists(intentP)) catFs.delete(intentP, false)
-      require(catFs.rename(tmp, intentP), s"rename $tmp -> $intentP failed")
-    }
+                    fls: Seq[String]): Unit =
+      writeAtomic(catFs, intentP,
+        s"v2\n$slot\n$base\n${encodeSlots(colSlots)}\n" + fls.mkString("\n"))
     def clearIntent(): Unit =
       if (catFs.exists(intentP)) catFs.delete(intentP, false)
 

@@ -49,19 +49,23 @@ object Postings {
   private[vfsidx] def trigramBound(spark: SparkSession, dir: String, nKeys: Int): Long =
     TrigramIndex.statsMerged(spark, dir).fold(Long.MaxValue)(nKeys.toLong * _.n_rows)
 
-  /** The coalesced block [first, last] ranges of `rows` — the candidate doc
-    * ranges that drive block skipping on the other keys' lists — or None
-    * when there are more than `cap` blocks (the caller then decodes every
-    * block: exact either way, and the driver stays bounded). One job over
-    * every partition (a `limit(cap + 1)` take adds a job for each scale-up
-    * round on a multi-file scan); each task ships at most `cap + 1` ranges,
-    * and the driver keeps none past the cap. */
-  private[vfsidx] def blockRanges[R <: Blocks](rows: Dataset[R],
-                                               cap: Int): Option[Array[(Long, Long)]] = {
+  /** The coalesced block [first, last] ranges of the filtered segment rows
+    * `rows` — the candidate doc ranges that drive block skipping on the
+    * other keys' lists — or None when there are more than `cap` blocks (the
+    * caller then decodes every block: exact either way, and the driver stays
+    * bounded). Only `block_first`/`block_last` are selected, so the scan
+    * never reads the `postings` blob. One job over every partition (a
+    * `limit(cap + 1)` take adds a job for each scale-up round on a
+    * multi-file scan); each task ships at most `cap + 1` ranges, and the
+    * driver keeps none past the cap. */
+  private[vfsidx] def blockRanges(rows: Dataset[_], cap: Int): Option[Array[(Long, Long)]] = {
+    import rows.sparkSession.implicits._
+    val bounds = rows.select(col("block_first"), col("block_last")).as[(Array[Long], Array[Long])]
     val kept = Array.newBuilder[(Long, Long)]
     var n = 0L
-    rows.sparkSession.sparkContext.runJob(rows.rdd,
-      (it: Iterator[R]) => it.flatMap(s => s.block_first.zip(s.block_last)).take(cap + 1).toArray,
+    rows.sparkSession.sparkContext.runJob(bounds.rdd,
+      (it: Iterator[(Array[Long], Array[Long])]) =>
+        it.flatMap { case (f, l) => f.zip(l) }.take(cap + 1).toArray,
       (_: Int, part: Array[(Long, Long)]) => { n += part.length; if (n <= cap) kept ++= part })
     if (n > cap) None else Some(coalesce(kept.result()))
   }

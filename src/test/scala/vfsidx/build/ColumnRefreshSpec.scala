@@ -179,6 +179,15 @@ class ColumnRefreshSpec extends SparkTestBase {
       assert(TrigramIndex.searchCandidates(spark, triD, s"doc$i").count() == 1L)
       assert(NumericIndex.point(spark, idx, "n", 10L + i).count() == 1L)
     }
+
+    // a file lacking a registered column fails after the intent is durable:
+    // its bytes (v2: version, slot, doc base, sorted per-column slots, files)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$data/g.json"),
+      """{"content": "delta body", "title": "no n"}""".getBytes("UTF-8"))
+    intercept[IllegalArgumentException](Ingest.refreshJson(spark, idx, data, "content", cfg))
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$idx/refresh_intent")), "UTF-8") ==
+      s"v2\n8\n9\nnum:n=8,tri:title=8\nfile:$data/g.json")
   }
 
   test("REPLAYED epoch (crash after ingest, before commit log) re-stamps identical ids") {
@@ -267,6 +276,11 @@ class ColumnRefreshSpec extends SparkTestBase {
     assert(NumericIndex.point(spark, idx, "n", 4L).as[Long].collect().toSeq == Seq(1L))
     // the word index advanced in lockstep
     assert(new vfsidx.query.Bm25Index(spark, idx).topKOr("beta", 5).count() == 1)
+    // each epoch's durable slot file: word slot, sorted per-column slots, doc base
+    def epochFile(e: Int) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$ckpt/graft_slots/epoch-$e")), "UTF-8")
+    assert(epochFile(0) == "0\nnum:n=1,tri:title=1\n0")
+    assert(epochFile(1) == "1\nnum:n=2,tri:title=2\n1")
   }
 
   test("merge-on-search folds per-column generations at query time (reference MergeOnSearch)") {

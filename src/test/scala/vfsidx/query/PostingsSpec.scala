@@ -26,6 +26,17 @@ class PostingsSpec extends SparkTestBase {
       Some(Seq((1L, 20L), (30L, 45L), (100L, 100L))))
   }
 
+  test("blockRanges reads only block_first/block_last, never the postings blob") {
+    val unread = org.apache.spark.sql.functions.udf { (_: Long) =>
+      (throw new IllegalStateException("range collect read postings")): Array[Byte]
+    }
+    val dir = tmpDir("ranges_cols")
+    Seq(TriSegmentRow(0, 1L, 0, 0, Array.emptyByteArray,
+      Array(1L, 30L), Array(10L, 40L), Array(0, 0))).toDS().write.mode("overwrite").parquet(dir)
+    val rows = spark.read.parquet(dir).withColumn("postings", unread($"key")).as[TriSegmentRow]
+    assert(Postings.blockRanges(rows, cap = 5).map(_.toSeq) == Some(Seq((1L, 10L), (30L, 40L))))
+  }
+
   // ---- Spark jobs per query call ----
 
   /** Counts the jobs submitted while [[Tag]] is set; [[drain]] waits on the
