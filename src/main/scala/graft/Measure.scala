@@ -146,8 +146,14 @@ object Measure {
   // ---- plans and audit ----
 
   def explain(spark: SparkSession, sfDir: String, name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
+    stable(SparkEntry.queries(name)(spark, sfDir).queryExecution
+      .explainString(ExplainMode.fromString("formatted")))
+
+  /** `plan` without its per-run parts: expression ids (`#1202`) read `#N`
+    * and the temp index root of [[ops.FullText.indexRoot]] reads `<index>`,
+    * so a regenerated PLANS.md differs only where a plan does. */
+  private[graft] def stable(plan: String): String =
+    plan.replaceAll("#\\d+", "#N").replaceAll("(?:file:)?[^\\s\\[,]*graft_ftidx_\\d+", "<index>")
 
   /** A physical-plan property of query `name`: it holds when the formatted
     * plan contains every `all` marker, at least one `anyOf` marker (the

@@ -42,10 +42,10 @@ object FullText {
   /** Build (or reuse) the full per-sf-dir index set: BM25 word index at the
     * root, trigram index under tri/text, numeric secondary index under
     * num/n_chars — the reference's per-column `Regist` surface. Returns the
-    * index root. */
+    * index root, a temp dir deleted when the JVM exits. */
   def indexRoot(s: SparkSession, dir: String): String =
     cache.computeIfAbsent(dir, { d =>
-      val out = java.nio.file.Files.createTempDirectory("graft_ftidx_").toString
+      val out = deletedOnExit(java.nio.file.Files.createTempDirectory("graft_ftidx_")).toString
       // word and trigram/numeric builds write disjoint dirs — submit both
       // job chains concurrently so the cluster stays saturated across their
       // stage gaps (same pattern as the stage-1 ingest pool)
@@ -64,12 +64,25 @@ object FullText {
       out
     })
 
+  /** `dir`, deleted recursively by a JVM shutdown hook. */
+  private def deletedOnExit(dir: java.nio.file.Path): java.nio.file.Path = {
+    sys.addShutdownHook {
+      if (java.nio.file.Files.exists(dir)) {
+        val paths = java.nio.file.Files.walk(dir)
+        try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally paths.close()
+      }
+    }
+    dir
+  }
+
   /** Build (or reuse) the inverted index for this sf dir. */
   def index(s: SparkSession, dir: String): Bm25Index =
     new Bm25Index(s, indexRoot(s, dir))
 
-  /** BM25 top-10 through the index (dictionary lookup -> pruned segment
-    * scan -> decode -> score -> bounded-heap top-k). Oracle: brute-force
+  /** BM25 top-10 through the index (segment-metadata probe -> pruned
+    * segment scan -> decode -> score -> bounded-heap top-k). Oracle: brute-force
     * BM25 in DuckDB SQL. Both sides rank by round(score,9) with
     * (score desc, doc_id asc) tie-break and emit round(score,4). */
   def bm25TopK(s: SparkSession, dir: String): DataFrame = {
@@ -92,8 +105,8 @@ object FullText {
 
   /** Substring search answered from the PERSISTED trigram index (reference
     * P3/P5, /root/reference/index_file.go:1424-1615 +
-    * /root/reference/search_finder.go:120-193): dictionary lookup -> pruned
-    * segment scan -> rarest-key block skipping -> AND intersection ->
+    * /root/reference/search_finder.go:120-193): pruned segment scan ->
+    * rarest-key block skipping -> AND intersection ->
     * containment recheck against only the candidate docs. No corpus
     * re-tokenization at query time. */
   def trigramSearch(s: SparkSession, dir: String): DataFrame = {

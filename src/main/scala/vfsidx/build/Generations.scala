@@ -3,6 +3,7 @@ package vfsidx.build
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The generation lifecycle of one index — ONE implementation shared by the
   * word, trigram and numeric indexes (the reference's single merge
@@ -20,10 +21,10 @@ import org.apache.spark.sql.functions._
   *  - `parent`: the dir whose `gen=lo_hi` children are listed;
   *  - `tables(l, h)`: every table dir a generation must have committed;
   *  - `slotDir(b)`: batch `b`'s slot dir, whose existence reserves the slot;
-  *  - `statsDir(l, h)` and `statCols`: the generation's stats table and the
-  *    columns compaction reads from it, each with its reduction across rows
-  *    and generations. The FIRST column is the size measure tiered
-  *    compaction balances;
+  *  - `statsDir(l, h)`, `statsSchema` and `statCols`: the generation's
+  *    stats table, its schema, and the columns compaction reads from it,
+  *    each with its reduction across rows and generations. The FIRST column
+  *    is the size measure tiered compaction balances;
   *  - `onList`: a check run on every survivor listing (the word index's
   *    format gate).
   * The kind's seal step (its buildGeneration over a fold window, given the
@@ -35,6 +36,7 @@ private[build] final class Generations(
     tables: (Int, Int) => Seq[String],
     slotDir: Int => String,
     statsDir: (Int, Int) => String,
+    statsSchema: StructType,
     statCols: Seq[(String, Generations.Reduce)],
     onList: Seq[(Int, Int)] => Unit) {
 
@@ -66,11 +68,14 @@ private[build] final class Generations(
   }
 
   /** One table read across the survivor generations (explicit leaf dirs,
-    * so no partition column is inferred); loud when none is committed. */
-  def read(table: (Int, Int) => String): DataFrame = {
+    * so no partition column is inferred); loud when none is committed. The
+    * writer's `schema` is pinned, so no read pays a footer-merging
+    * schema-inference job; it must match the writer in names, types and
+    * order (PinnedSchemaSpec checks every table against a fresh build). */
+  def read(table: (Int, Int) => String, schema: StructType): DataFrame = {
     val gens = generations
     require(gens.nonEmpty, s"no completed generations under $parent")
-    spark.read.parquet(gens.map { case (l, h) => table(l, h) }: _*)
+    spark.read.schema(schema).parquet(gens.map { case (l, h) => table(l, h) }: _*)
   }
 
   /** Delete RETIRED generation directories — the Iceberg/Delta
@@ -112,7 +117,7 @@ private[build] final class Generations(
     * (one driver round-trip instead of one tiny job per generation). */
   private def statPerGen(gens: Seq[(Int, Int)]): Map[(Int, Int), Array[Long]] = {
     import spark.implicits._
-    spark.read.parquet(gens.map { case (l, h) => statsDir(l, h) }: _*)
+    spark.read.schema(statsSchema).parquet(gens.map { case (l, h) => statsDir(l, h) }: _*)
       .select(input_file_name().as("f"),
         array(statCols.map { case (c, _) => col(c).cast("long") }: _*).as("vals"))
       .as[(String, Seq[Long])]

@@ -1,7 +1,8 @@
 package vfsidx.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import vfsidx.codec.VarByte
 import vfsidx.corpus.SourceFile
 import vfsidx.tokenize.Tokenizer
@@ -146,6 +147,16 @@ object IndexBuild {
   def dictGenDir(dir: String, lo: Int, hi: Int) = s"$dir/dictionary/gen=${lo}_$hi"
   def segmentsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/segments/gen=${lo}_$hi"
 
+  /** The word index's table schemas as their writers produce them, pinned
+    * on every read (no schema-inference job). */
+  private[vfsidx] val SegmentSchema: StructType = Encoders.product[SegmentRow].schema
+  private[vfsidx] val DictSchema: StructType = Encoders.product[DictRow].schema
+  private[vfsidx] val StatsSchema: StructType = Encoders.product[CorpusStats].schema
+  /** SPIMI chunk runs ([[writeRuns]]). */
+  private[vfsidx] val RunsSchema: StructType = StructType.fromDDL(
+    "term STRING, pre_shard BIGINT, first_doc BIGINT, last_doc BIGINT, count INT, " +
+      "tf_sum BIGINT, bytes BINARY")
+
   /** The word index's generation lifecycle ([[Generations]]): generations
     * list under `segments`, the runs batch dirs are the slots, and the
     * stats columns n_docs / tf_sum are additive. Listing runs the format
@@ -153,7 +164,7 @@ object IndexBuild {
   private def lifecycle(spark: SparkSession, dir: String) = new Generations(spark,
     s"$dir/segments",
     (l, h) => Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
-    runsDir(dir, _), statsGenDir(dir, _, _),
+    runsDir(dir, _), statsGenDir(dir, _, _), StatsSchema,
     Seq("n_docs" -> Generations.Sum, "tf_sum" -> Generations.Sum),
     assertSegmentFormat(spark, dir, _))
 
@@ -283,16 +294,16 @@ object IndexBuild {
   /** All segment rows across generations (explicit leaf dirs — no partition
     * column is inferred, so the frame stays encodable as [[SegmentRow]]). */
   def readSegments(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _))
+    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _), SegmentSchema)
 
   /** Raw per-generation dictionary rows (term, df, tf_sum) — callers sum. */
   def readDictRaw(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(dictGenDir(dir, _, _))
+    lifecycle(spark, dir).read(dictGenDir(dir, _, _), DictSchema)
 
   /** Per-generation corpus stats rows (additive n_docs / tf_sum). */
   def readStatsRaw(spark: SparkSession, dir: String): Dataset[CorpusStats] = {
     import spark.implicits._
-    lifecycle(spark, dir).read(statsGenDir(dir, _, _)).as[CorpusStats]
+    lifecycle(spark, dir).read(statsGenDir(dir, _, _), StatsSchema).as[CorpusStats]
   }
 
   /** Row count WITHOUT a Spark job when the dataset is a bare file-source
@@ -450,7 +461,8 @@ object IndexBuild {
     * holds (df, tf_sum) per term, and lineage orders terms in UTF-8 byte
     * order. */
   private[build] def kind(dir: String) = Spimi.Kind[String, SegmentRow]("",
-    runsDir(dir, _), segmentsGenDir(dir, _, _), dictGenDir(dir, _, _), statsGenDir(dir, _, _),
+    runsDir(dir, _), RunsSchema, segmentsGenDir(dir, _, _), dictGenDir(dir, _, _),
+    statsGenDir(dir, _, _),
     "term", Some(xxhash64(col("term"))),
     Seq(sum(col("count")).cast("long").as("df"), sum(col("tf_sum")).as("tf_sum")),
     (it, acc) => Spimi.observeBuckets(it, acc)(
@@ -492,7 +504,7 @@ object IndexBuild {
     val obs = new org.apache.spark.sql.Observation(s"runs:${runsDir(dir, batch)}")
     TableIO.write(
       docs.mapPartitions(it => Spimi.chunks(it, new WordChunkAccumulator(cfg.shardSize * 1024)))
-        .toDF("term", "pre_shard", "first_doc", "last_doc", "count", "tf_sum", "bytes")
+        .toDF(RunsSchema.fieldNames.toIndexedSeq: _*)
         .observe(obs, coalesce(sum($"count"), lit(0L)).as("np"),
           coalesce(sum($"tf_sum"), lit(0L)).as("tf")),
       runsDir(dir, batch))

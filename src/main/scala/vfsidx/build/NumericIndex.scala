@@ -1,6 +1,6 @@
 package vfsidx.build
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,13 +56,19 @@ object NumericIndex {
   def statsGenDir(root: String, col: String, lo: Int, hi: Int) =
     s"${colDir(root, col)}/stats/gen=${lo}_$hi"
 
+  /** The numeric index's table schemas as their writers produce them,
+    * pinned on every read (no schema-inference job): the (value, doc_id)
+    * projection and its stats row. */
+  private[vfsidx] val DataSchema: StructType = StructType.fromDDL("value BIGINT, doc_id BIGINT")
+  private[vfsidx] val StatsSchema: StructType = Encoders.product[NumStats].schema
+
   /** The numeric index's generation lifecycle ([[Generations]]): it has
     * no runs stage, so its data gen dirs list the generations AND serve as
     * the slots; the stats fold as Σ n_rows / all integral. */
   private def lifecycle(spark: SparkSession, root: String, column: String) =
     new Generations(spark, s"${colDir(root, column)}/data",
       (l, h) => Seq(dataGenDir(root, column, l, h), statsGenDir(root, column, l, h)),
-      b => dataGenDir(root, column, b, b), statsGenDir(root, column, _, _),
+      b => dataGenDir(root, column, b, b), statsGenDir(root, column, _, _), StatsSchema,
       Seq("n_rows" -> Generations.Sum, "integral" -> Generations.All),
       _ => ())
 
@@ -72,7 +78,8 @@ object NumericIndex {
                    numBuckets: Int): Generations.Seal =
     (win, totals) =>
       buildGeneration(spark,
-        spark.read.parquet(win.map { case (l, h) => dataGenDir(root, column, l, h) }: _*),
+        spark.read.schema(DataSchema)
+          .parquet(win.map { case (l, h) => dataGenDir(root, column, l, h) }: _*),
         totals(1) != 0L, root, column, win.head._1, win.last._2, numBuckets, force = false)
 
   /** Committed, non-retired generations, sorted ([[Generations]]). */
@@ -152,7 +159,7 @@ object NumericIndex {
     }
     val stDir = statsGenDir(root, col0, lo, hi)
     if (force || !TableIO.done(spark, stDir)) {
-      val written = spark.read.parquet(out)
+      val written = spark.read.schema(DataSchema).parquet(out)
       val (nRows, maxId) = IndexBuild.countAndMax(written, "doc_id")
       val probs = (0 to QuantilePoints).map(_.toDouble / QuantilePoints).toArray
       val qs =
@@ -189,7 +196,7 @@ object NumericIndex {
     val dirs = gens.map { case (l, h) => statsGenDir(root, column, l, h) }
     val key = colDir(root, column)
     Some(statsCache.getOrCompute(key, statsCache.token(spark, dirs)) {
-      val rows = spark.read.parquet(dirs: _*).as[NumStats].collect()
+      val rows = spark.read.schema(StatsSchema).parquet(dirs: _*).as[NumStats].collect()
       NumStats(
         rows.map(_.n_rows).sum,
         rows.forall(_.integral),
@@ -227,7 +234,7 @@ object NumericIndex {
   }
 
   private def read(spark: SparkSession, root: String, column: String): DataFrame =
-    lifecycle(spark, root, column).read(dataGenDir(root, column, _, _))
+    lifecycle(spark, root, column).read(dataGenDir(root, column, _, _), DataSchema)
 
   /** doc_ids with value == v (reference P2 as an index lookup). Exact even
     * for fractional sources: only x == v.0 truncates to v AND satisfies the

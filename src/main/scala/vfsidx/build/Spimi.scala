@@ -2,6 +2,7 @@ package vfsidx.build
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
 
 /** The SPIMI seal shared by the word ([[IndexBuild]]) and trigram
@@ -285,14 +286,15 @@ private[build] object Spimi {
   /** What an index kind supplies to [[seal]] besides its stats and codec:
     *  - `prefix` names its build stages, lineage stage and accumulator
     *    ("" for the word index, "tri_" for the trigram index);
-    *  - `runs(b)` and `segments` / `dict` / `stats(lo, hi)`: its table dirs;
+    *  - `runs(b)` and `segments` / `dict` / `stats(lo, hi)`: its table dirs,
+    *    and `runsSchema` the pinned schema of its runs;
     *  - `key`: the key column of its chunks and dictionary;
     *  - `keyHash`: a packed-long hash to shuffle and sort on in place of a
     *    variable-width key, which then sorts as the tiebreak (None shuffles
     *    on the key itself);
     *  - `dictAggs`: the dictionary's per-key aggregates over the chunks;
     *  - `observe`: [[observeBuckets]] with its segment rows' key ordering. */
-  final case class Kind[K, R](prefix: String, runs: Int => String,
+  final case class Kind[K, R](prefix: String, runs: Int => String, runsSchema: StructType,
       segments: (Int, Int) => String, dict: (Int, Int) => String,
       stats: (Int, Int) => String, key: String, keyHash: Option[Column],
       dictAggs: Seq[Column], observe: (Iterator[R], BucketStatsAcc) => Iterator[R])
@@ -349,9 +351,10 @@ private[build] object Spimi {
         s"${kind.runs(b)} was written by a pre-chunk-format build (raw posting " +
           "rows): delete the index directory and rebuild")
     }
-    val runs = spark.read.parquet(batches.map(kind.runs): _*)
+    val runs = spark.read.schema(kind.runsSchema).parquet(batches.map(kind.runs): _*)
     lazy val st: S =
-      if (needStats) stats(runs) else spark.read.parquet(statsDir).as[S].head()
+      if (needStats) stats(runs)
+      else spark.read.schema(statsEnc.schema).parquet(statsDir).as[S].head()
 
     def side(needed: Boolean, name: String, dir: String)(df: => DataFrame): Seq[() => Unit] =
       if (needed) Seq(() => timed(s"$p$name:$gen")(TableIO.write(df, dir))) else Nil

@@ -1,7 +1,8 @@
 package vfsidx.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import vfsidx.codec.VarByte
 import vfsidx.query.Postings
 import vfsidx.tokenize.Tokenizer
@@ -67,7 +68,7 @@ final case class TriStats(n_rows: Long, max_doc_id: Long)
   * equivalent of the reference's filename key ranges
   * (/root/reference/index_file.go:1572-1594).
   *
-  * Query = dictionary lookup -> pruned segment scan -> block-range skipping
+  * Query = segment-metadata probe -> pruned segment scan -> block-range skipping
   * driven by the rarest key -> HAVING count(distinct key)=n intersection ->
   * exact containment recheck against ONLY the candidate docs (trigram-AND is
   * necessary, not sufficient). Strings shorter than 3 runes produce zero
@@ -84,6 +85,15 @@ object TrigramIndex {
   def segmentsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/tri_segments/gen=${lo}_$hi"
   def statsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/tri_stats/gen=${lo}_$hi"
 
+  /** The trigram index's table schemas as their writers produce them,
+    * pinned on every read (no schema-inference job). */
+  private[vfsidx] val SegmentSchema: StructType = Encoders.product[TriSegmentRow].schema
+  private[vfsidx] val DictSchema: StructType = Encoders.product[TriDictRow].schema
+  private[vfsidx] val StatsSchema: StructType = Encoders.product[TriStats].schema
+  /** SPIMI chunk runs ([[writeRuns]]). */
+  private[vfsidx] val RunsSchema: StructType = StructType.fromDDL(
+    "key BIGINT, pre_shard BIGINT, first_doc BIGINT, last_doc BIGINT, count INT, bytes BINARY")
+
   final case class TriConfig(
       numBuckets: Int = 32,
       saltThreshold: Long = 5000,
@@ -98,7 +108,7 @@ object TrigramIndex {
   private def lifecycle(spark: SparkSession, dir: String) = new Generations(spark,
     s"$dir/tri_segments",
     (l, h) => Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
-    runsBatchDir(dir, _), statsGenDir(dir, _, _),
+    runsBatchDir(dir, _), statsGenDir(dir, _, _), StatsSchema,
     Seq("n_rows" -> Generations.Sum, "max_doc_id" -> Generations.Max),
     _ => ())
 
@@ -128,7 +138,7 @@ object TrigramIndex {
     if (gens.isEmpty) return None
     val dirs = gens.map { case (l, h) => statsGenDir(dir, l, h) }
     Some(statsCache.getOrCompute(dir, statsCache.token(spark, dirs)) {
-      val rows = spark.read.parquet(dirs: _*).as[TriStats].collect()
+      val rows = spark.read.schema(StatsSchema).parquet(dirs: _*).as[TriStats].collect()
       TriStats(rows.map(_.n_rows).sum,
         if (rows.isEmpty) -1L else rows.map(_.max_doc_id).max)
     })
@@ -147,11 +157,11 @@ object TrigramIndex {
   def vacuum(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).vacuum
 
   def readSegments(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _))
+    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _), SegmentSchema)
 
   /** Raw per-generation dictionary rows (key, df) — df is additive. */
   def readDictRaw(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(dictGenDir(dir, _, _))
+    lifecycle(spark, dir).read(dictGenDir(dir, _, _), DictSchema)
 
   def exists(spark: SparkSession, dir: String): Boolean =
     generations(spark, dir).nonEmpty
@@ -178,7 +188,7 @@ object TrigramIndex {
             Tokenizer.distinctTriKeys(if (s == null) "" else s).map(k => (k, id))
           }, cfg.shardSize * 1024, Spimi.FlushPostings)
         }
-        .toDF("key", "pre_shard", "first_doc", "last_doc", "count", "bytes"),
+        .toDF(RunsSchema.fieldNames.toIndexedSeq: _*),
       rDir)
     val m = obs.get
     TriStats(m("n").asInstanceOf[Long], Option(m("max")).fold(-1L)(_.asInstanceOf[Long]))
@@ -246,7 +256,7 @@ object TrigramIndex {
     * 12 digits), hex-formatting only the winners — the reference's
     * filename key-range form. */
   private def kind(dir: String) = Spimi.Kind[Long, TriSegmentRow]("tri_",
-    runsBatchDir(dir, _), segmentsGenDir(dir, _, _), dictGenDir(dir, _, _),
+    runsBatchDir(dir, _), RunsSchema, segmentsGenDir(dir, _, _), dictGenDir(dir, _, _),
     statsGenDir(dir, _, _), "key", None, Seq(sum(col("count")).cast("long").as("df")),
     (it, acc) => Spimi.observeBuckets(it, acc)(
       _.key, (k: Long) => f"$k%012x", _.count.toLong, _.postings.length.toLong))
@@ -403,10 +413,11 @@ object TrigramIndex {
     * reference's AND-intersection semantics (J1). Returns a one-column
     * `doc_id` DataFrame; empty for needles under 3 runes or containing a
     * key absent from the corpus. Over the `directFloor` gate (on |keys| ×
-    * n_rows), a dictionary probe returns early on an absent key and the
-    * rarest key's block [first,last] ranges drive block skipping on the
-    * other keys' lists; under it every pruned-scan block decodes and an
-    * absent key simply empties the HAVING intersection. */
+    * n_rows), one segment-metadata job ([[Postings.termMeta]]) returns
+    * early on an absent key and yields the rarest key's block [first,last]
+    * ranges, which drive block skipping on the other keys' lists; under it
+    * every pruned-scan block decodes and an absent key simply empties the
+    * HAVING intersection. */
   def searchCandidates(spark: SparkSession, dir: String, needle: String,
                        directFloor: Long = SearchDirectFloor): DataFrame = {
     import spark.implicits._
@@ -417,16 +428,12 @@ object TrigramIndex {
     if (Postings.direct(Postings.trigramBound(spark, dir, keys.size), directFloor))
       return intersectDecoded(segs, keys, rarest = -1L, ranges = None)
 
-    // per-generation df rows are additive (a doc lives in one generation)
-    val dict = readDictRaw(spark, dir)
-      .filter($"key".isin(keys: _*))
-      .groupBy($"key").agg(sum($"df").as("df"))
-      .as[TriDictRow].collect().map(r => r.key -> r.df).toMap
-    if (dict.size < keys.size)   // some trigram nowhere in the corpus -> AND empty
+    // df and block ranges per key off segment metadata, in one job
+    val meta = Postings.termMeta(segs.toDF(), "key", keys)
+    if (meta.keys.size < keys.size)   // some trigram nowhere in the corpus -> AND empty
       return spark.emptyDataset[Long].toDF("doc_id")
-    val rarest = keys.minBy(dict)
-    intersectDecoded(segs, keys, rarest,
-      Postings.blockRanges(segs.filter($"key" === rarest), Postings.RangeCap))
+    val rarest = keys.minBy(meta.df)
+    intersectDecoded(segs, keys, rarest, meta.ranges(Seq(rarest)))
   }
 
   /** Decode the segment rows of `keys` — skipping blocks outside `ranges`
@@ -551,10 +558,9 @@ object TrigramIndex {
       df.orderBy($"overlap".desc, $"doc_id".asc).limit(k)
     if (Postings.direct(Postings.trigramBound(spark, dir, keys.size), prunedFloor))
       return topK(nearsPartials(segs, keys))
-    // df per present key off segment METADATA (key + count columns pruned
-    // at the parquet scan; postings bytes never read here)
-    val dfs = segs.groupBy($"key").agg(sum($"count").as("df"))
-      .as[(Long, Long)].collect().toMap
+    // df per present key off segment METADATA (postings bytes never read
+    // here)
+    val dfs = Postings.termMeta(segs.toDF(), "key", keys, withRanges = false).df
     val ranked = keys.filter(dfs.contains).sortBy(dfs)
     val kTotal = ranked.size
     if (kTotal == 0)

@@ -18,8 +18,13 @@ final case class Hit(doc_id: Long, score: Double)
   * Execution shape (all Catalyst-planned; `.explain` shows a single scan of
   * the pruned segment rows, no shuffle until the per-doc score aggregation):
   *
-  *   1. dictionary lookup for the query terms (tiny collect -> closure map) —
-  *      the reference's count-cache (cache/cache.go:88-120) as a table;
+  *   1. one segment-metadata job for the query terms ([[Postings.termMeta]]:
+  *      df, block-norm maxima and block ranges off the pruned metadata
+  *      columns, reduced on the driver; idf derived there) — the planner's
+  *      only round-trip before scoring, in place of the dictionary shuffle,
+  *      the upper-bound shuffle and the range collect. The merged
+  *      [[dictionary]] table (the reference's count-cache,
+  *      cache/cache.go:88-120) stays for Count and the CLI;
   *   2. `segments.filter(term isin ...)` — parquet row-group pruning does the
   *      work of the reference's filename key ranges
   *      (/root/reference/index_file.go:1572-1594), because segments are
@@ -97,13 +102,14 @@ class Bm25Index(spark: SparkSession, dir: String,
         log((lit(n) - $"df" + 0.5) / ($"df" + 0.5) + 1.0).as("idf"))
   }
 
-  /** (df, idf) maps of the query terms present in the corpus, in ONE
-    * dictionary lookup job — the query planner needs both (df for the
-    * gates and rarest-term selection, idf for scoring). */
-  private def termStats(terms: Seq[String]): (Map[String, Long], Map[String, Double]) = {
-    val rows = dictionary.filter($"term".isin(terms: _*))
-      .select($"term", $"df", $"idf").as[(String, Long, Double)].collect()
-    (rows.map(r => r._1 -> r._2).toMap, rows.map(r => r._1 -> r._3).toMap)
+  /** The query terms' segment metadata ([[Postings.termMeta]]) and the idf
+    * of each term present in the corpus, in ONE job — the planner needs df
+    * (the gates, the rarest term), idf (scoring), the block-norm maxima
+    * (upper bounds) and the block ranges (skipping). */
+  private def termMeta(terms: Seq[String]): (Postings.TermMeta[String], Map[String, Double]) = {
+    val meta = Postings.termMeta(segments.toDF(), "term", terms)
+    val n = stats.n_docs
+    (meta, meta.df.map { case (t, df) => t -> Bm25Index.idf(n, df) })
   }
 
   /** Decoded per-(term,doc) score contributions for the query terms. */
@@ -152,7 +158,7 @@ class Bm25Index(spark: SparkSession, dir: String,
   def topKOrNaive(query: String, k: Int): DataFrame = {
     val terms = Tokenizer.codeTokens(query).distinct
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    rank(contributions(terms, termStats(terms)._2), k, None)
+    rank(contributions(terms, termMeta(terms)._2), k, None)
   }
 
   /** Disjunctive BM25 top-k with block-max MaxScore pruning — exact (rank-
@@ -181,15 +187,16 @@ class Bm25Index(spark: SparkSession, dir: String,
     import spark.implicits._
     val terms = Tokenizer.codeTokens(query).distinct
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val (dfs, idfs) = termStats(terms)
+    val (meta, idfs) = termMeta(terms)
     if (terms.size == 1) return rank(contributions(terms, idfs), k, None)
 
     val present = terms.filter(idfs.contains)
     if (present.isEmpty) return spark.emptyDataset[Hit].toDF()
+    val dfs = meta.df
 
-    // small-index gate (zero extra jobs — Σdf comes off the termStats
-    // collect the query already paid): under the floor, skip the three
-    // pruning round-trips (phase-1 θ, maxUb, ranges) and score everything
+    // small-index gate (zero extra jobs — Σdf comes off the metadata job
+    // the query already paid): under the floor, skip the phase-1 θ job and
+    // score everything
     if (Postings.direct(present.map(dfs).sum, directFloor))
       return rank(contributions(present, idfs), k, None)
 
@@ -203,15 +210,11 @@ class Bm25Index(spark: SparkSession, dir: String,
       if (top.length < k) 0.0 else math.max(0.0, top.last - 1e-9)
     }
 
-    // global per-term upper bounds from block metadata (pruned scan).
-    // block_max_norm was stored via Double→Float (may round DOWN ~1 ulp);
-    // nextUp restores a safe UPPER bound.
-    val maxUb: Map[String, Double] = segments.filter($"term".isin(present: _*))
-      .select($"term", array_max($"block_max_norm").as("mn"))
-      .groupBy($"term").agg(max($"mn").as("mn"))
-      .as[(String, Float)].collect()
-      .map { case (t, mn) =>
-        t -> idfs(t) * Math.nextUp(mn).toDouble * ubCorrection }.toMap
+    // global per-term upper bounds from the block metadata already
+    // collected. block_max_norm was stored via Double→Float (may round DOWN
+    // ~1 ulp); nextUp restores a safe UPPER bound.
+    val maxUb: Map[String, Double] = present.map { t =>
+      t -> idfs(t) * Math.nextUp(meta.keys(t).maxNorm).toDouble * ubCorrection }.toMap
 
     // maximal prefix (ascending ub) with strict Σ ub < θ is non-essential
     val byUb = present.sortBy(maxUb)
@@ -223,7 +226,7 @@ class Bm25Index(spark: SparkSession, dir: String,
 
     // candidate doc ranges = essential terms' block intervals; over the
     // range cap, fall back to exact full scoring
-    Postings.blockRanges(segments.filter($"term".isin(essential: _*)), Postings.RangeCap) match {
+    meta.ranges(essential) match {
       case None => rank(contributions(present, idfs), k, None)
       case ranges => rank(contributions(essential, idfs)
         .union(contributions(nonEssential.toSeq, idfs, ranges)), k, None)
@@ -233,18 +236,19 @@ class Bm25Index(spark: SparkSession, dir: String,
   /** The conjunctive step of [[topKAnd]] and [[countFirstLastAnd]] (the
     * reference's J1 posting intersection): every query term's decoded
     * contributions; callers keep the docs holding all terms. Above the
-    * direct gate the rarest term's block [first,last] ranges are collected
-    * (df/128 of them, bounded by [[Postings.RangeCap]]) and the other terms
-    * skip blocks that cannot intersect them. None when there are no terms
-    * or one is absent from the corpus (the AND is empty). */
+    * direct gate the rarest term's block [first,last] ranges (df/128 of
+    * them, bounded by [[Postings.RangeCap]], off the metadata job) drive
+    * the other terms to skip blocks that cannot intersect them. None when
+    * there are no terms or one is absent from the corpus (the AND is
+    * empty). */
   private def andContributions(terms: Seq[String]): Option[Dataset[(String, Long, Double)]] = {
     if (terms.isEmpty) return None
-    val (dfs, idfs) = termStats(terms)
+    val (meta, idfs) = termMeta(terms)
+    val dfs = meta.df
     if (dfs.size < terms.size) return None
     if (Postings.direct(dfs.values.sum, directFloor)) return Some(contributions(terms, idfs))
     val rarest = terms.minBy(dfs)
-    Some(contributions(terms, idfs,
-      Postings.blockRanges(segments.filter($"term" === rarest), Postings.RangeCap), rarest))
+    Some(contributions(terms, idfs, meta.ranges(Seq(rarest)), rarest))
   }
 
   /** Conjunctive (reference J1 intersection semantics) top-k with
@@ -279,4 +283,10 @@ class Bm25Index(spark: SparkSession, dir: String,
 object Bm25Index {
   /** Small-index cost-gate floor of the BM25 queries: [[Postings.DirectFloor]]. */
   val DirectFloor: Long = Postings.DirectFloor
+
+  /** idf = ln((N - df + 0.5)/(df + 0.5) + 1) on the driver, in the
+    * operation order of [[Bm25Index.dictionary]]'s Spark expression; Spark's
+    * `log` is `StrictMath.log`, so both give the same bits. */
+  private[query] def idf(n: Long, df: Long): Double =
+    StrictMath.log((n.toDouble - df.toDouble + 0.5) / (df.toDouble + 0.5) + 1.0)
 }

@@ -1,15 +1,18 @@
 package vfsidx.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{array_max, col, lit}
 import vfsidx.build.TrigramIndex
 import vfsidx.codec.VarByte
 
 /** The query mechanics the BM25 and trigram families share: the small-index
-  * cost gate, the bounded rarest-key block-range collect, the block-skip
-  * predicate, the ids-only block decode, and the bounded candidate
-  * prefilter. Each exact query path picks between a direct decode and a
-  * pruned plan with these; both sides of every gate return the same rows. */
+  * cost gate, the one-job segment-metadata probe (term statistics, upper
+  * bounds, bounded block ranges), the block-skip predicate, the ids-only
+  * block decode, and the bounded candidate prefilter. Each exact query path
+  * picks between a direct decode and a pruned plan with these; both sides
+  * of every gate return the same rows. */
 object Postings {
   /** Block layout common to word ([[vfsidx.build.SegmentRow]]) and trigram
     * ([[vfsidx.build.TriSegmentRow]]) segment rows: `count` postings split
@@ -25,15 +28,18 @@ object Postings {
 
   /** Small-index cost-gate floor: a query whose postings bound is at or
     * under this decodes outright instead of paying the pruned plan's driver
-    * round-trips (BM25 θ, maxUb and ranges jobs; the trigram dictionary
-    * probe and ranges collect; the nears df probe, partials and candidate
-    * jobs). Decoding ≤4M postings across the cluster is cheaper than those
-    * 2-3 jobs. At production scale the bound dwarfs the floor and the
-    * pruned paths engage. */
+    * round-trips (the BM25 θ job; the trigram segment-metadata probe; the
+    * nears metadata probe, partials and candidate jobs; the regex presence
+    * probe). Term statistics, upper bounds and block ranges all come off
+    * one [[termMeta]] job, so the pruned plans cost 1-2 jobs more than the
+    * direct ones; decoding ≤4M postings across the cluster is cheaper than
+    * that. At production scale the bound dwarfs the floor and the pruned
+    * paths engage. */
   val DirectFloor: Long = 4L << 20
 
-  /** Driver-side cap on a rarest-key block-range collect (block metadata is
-    * 1/128th of the postings); over it the caller decodes every block. */
+  /** Driver-side cap on the block ranges [[termMeta]] keeps for a key set
+    * (block metadata is 1/128th of the postings); over it the caller
+    * decodes every block. */
   private[vfsidx] val RangeCap = 200000
 
   /** Bounded-collect threshold of [[prefilter]]'s `In`-literal path. */
@@ -49,25 +55,78 @@ object Postings {
   private[vfsidx] def trigramBound(spark: SparkSession, dir: String, nKeys: Int): Long =
     TrigramIndex.statsMerged(spark, dir).fold(Long.MaxValue)(nKeys.toLong * _.n_rows)
 
-  /** The coalesced block [first, last] ranges of the filtered segment rows
-    * `rows` — the candidate doc ranges that drive block skipping on the
-    * other keys' lists — or None when there are more than `cap` blocks (the
-    * caller then decodes every block: exact either way, and the driver stays
-    * bounded). Only `block_first`/`block_last` are selected, so the scan
-    * never reads the `postings` blob. One job over every partition (a
-    * `limit(cap + 1)` take adds a job for each scale-up round on a
-    * multi-file scan); each task ships at most `cap + 1` ranges, and the
-    * driver keeps none past the cap. */
-  private[vfsidx] def blockRanges(rows: Dataset[_], cap: Int): Option[Array[(Long, Long)]] = {
-    import rows.sparkSession.implicits._
-    val bounds = rows.select(col("block_first"), col("block_last")).as[(Array[Long], Array[Long])]
-    val kept = Array.newBuilder[(Long, Long)]
-    var n = 0L
-    rows.sparkSession.sparkContext.runJob(bounds.rdd,
-      (it: Iterator[(Array[Long], Array[Long])]) =>
-        it.flatMap { case (f, l) => f.zip(l) }.take(cap + 1).toArray,
-      (_: Int, part: Array[(Long, Long)]) => { n += part.length; if (n <= cap) kept ++= part })
-    if (n > cap) None else Some(coalesce(kept.result()))
+  /** One key's segment metadata, reduced over its (generation, shard) rows
+    * by [[termMeta]] (in each task, then across tasks on the driver):
+    * `df` = Σ `count` (a doc lives in one generation and one shard), the
+    * max `block_max_norm` (word rows; -∞ for trigram rows), its block
+    * count, and its block [first, last] ranges (uncoalesced; empty once
+    * `blocks` is over the range cap). */
+  private[vfsidx] final class KeyMeta extends Serializable {
+    var df = 0L
+    var maxNorm = Float.NegativeInfinity
+    var blocks = 0L
+    val ranges = mutable.ArrayBuffer.empty[(Long, Long)]
+
+    /** Fold in `n` postings over `nBlocks` blocks with block ranges `rs`
+      * (a segment row, or another task's reduction). */
+    private[Postings] def add(n: Long, norm: Float, nBlocks: Long,
+                              rs: => IterableOnce[(Long, Long)], cap: Int): Unit = {
+      df += n
+      maxNorm = math.max(maxNorm, norm)
+      blocks += nBlocks
+      if (blocks <= cap) ranges ++= rs else ranges.clear()
+    }
+  }
+
+  /** The metadata of the present keys of one query, off [[termMeta]]'s one
+    * job; keys absent from the index have no entry. */
+  private[vfsidx] final class TermMeta[K](val keys: Map[K, KeyMeta], cap: Int) {
+    def df: Map[K, Long] = keys.map { case (k, m) => k -> m.df }
+
+    /** The coalesced block ranges of the present keys `ks` — the candidate
+      * doc ranges that drive block skipping on the other keys' lists — or
+      * None when they hold more than `cap` blocks together (the caller then
+      * decodes every block: exact either way, and the driver stays
+      * bounded). */
+    def ranges(ks: Seq[K]): Option[Array[(Long, Long)]] =
+      if (ks.map(keys(_).blocks).sum > cap) None
+      else Some(coalesce(ks.flatMap(keys(_).ranges).toArray))
+  }
+
+  /** Per-key segment metadata of `keys` in ONE job: df, max block norm,
+    * block count and block ranges — everything a query plans with, in place
+    * of dictionary, upper-bound and range-collect round-trips. The scan
+    * selects `keyCol`, `count`, `block_first`, `block_last` and, when `segs`
+    * has it, `array_max(block_max_norm)`; it never reads the `postings`
+    * blob. Each task reduces its rows per key and ships at most `cap`
+    * ranges per key (none for a key over `cap` in that task); the driver
+    * sums the rest and keeps a key's ranges only while its total block
+    * count is within `cap`. Without `withRanges` no range is shipped and
+    * [[TermMeta.ranges]] is always None. */
+  private[vfsidx] def termMeta[K](segs: DataFrame, keyCol: String, keys: Seq[K],
+                                  withRanges: Boolean = true,
+                                  cap: Int = RangeCap): TermMeta[K] = {
+    val c = if (withRanges) cap else -1
+    val norm =
+      if (segs.columns.contains("block_max_norm")) array_max(col("block_max_norm"))
+      else lit(Float.NegativeInfinity)
+    val rows = segs.filter(col(keyCol).isin(keys: _*))
+      .select(col(keyCol), col("count"), col("block_first"), col("block_last"), norm)
+      .rdd
+    val reduce = (it: Iterator[Row]) => {
+      val acc = mutable.HashMap.empty[Any, KeyMeta]
+      it.foreach { r =>
+        val (first, last) = (r.getSeq[Long](2), r.getSeq[Long](3))
+        acc.getOrElseUpdate(r.get(0), new KeyMeta).add(r.getInt(1), r.getFloat(4), first.size,
+          first.iterator.zip(last.iterator), c)
+      }
+      acc.toArray
+    }
+    val merged = mutable.HashMap.empty[Any, KeyMeta]
+    segs.sparkSession.sparkContext.runJob(rows, reduce, (_: Int, part: Array[(Any, KeyMeta)]) =>
+      part.foreach { case (k, m) =>
+        merged.getOrElseUpdate(k, new KeyMeta).add(m.df, m.maxNorm, m.blocks, m.ranges, c) })
+    new TermMeta(merged.map { case (k, m) => k.asInstanceOf[K] -> m }.toMap, c)
   }
 
   /** Which blocks of `s` to decode: every block when `protect` or without

@@ -28,7 +28,7 @@ import vfsidx.build.TrigramIndex
   * lookaround, flags, unbounded classes everywhere) degrades to the
   * full-scan filter — identical rows, loudly logged.
   *
-  * Scale shape: the prefilter is dictionary + pruned-segment reads, i.e.
+  * Scale shape: the prefilter is segment-metadata + pruned-segment reads, i.e.
   * O(selectivity), not O(corpus); the recheck runs only on candidate rows
   * (bounded `In` pushdown or a semi-join, exactly like
   * [[TrigramIndex.searchExact]]). At 100 TB a `.*`-style pattern still
@@ -365,12 +365,14 @@ object RegexTrigram {
     * every member's keys — then one (doc, member) aggregation resolves
     * member-AND, clause-OR, and CNF-AND together. At scale this reads the
     * index once instead of once per literal; the shuffle carries only
-    * (doc_id, member) pairs from pruned postings, never the corpus. */
-  def clauseCandidates(spark: SparkSession, dir: String,
-                       clauses: List[Set[String]]): DataFrame = {
+    * (doc_id, member) pairs from pruned postings, never the corpus.
+    * `directFloor` is the small-index cost gate on |keys| × n_rows
+    * ([[Postings.direct]]), as in [[TrigramIndex.searchCandidates]]. */
+  def clauseCandidates(spark: SparkSession, dir: String, clauses: List[Set[String]],
+                       directFloor: Long = Postings.DirectFloor): DataFrame = {
     import spark.implicits._
     if (clauses.size == 1 && clauses.head.size == 1)
-      return TrigramIndex.searchCandidates(spark, dir, clauses.head.head)
+      return TrigramIndex.searchCandidates(spark, dir, clauses.head.head, directFloor)
 
     // member id = (clause index << 16) | member index; bounded well under
     // 16 bits by plan()'s ClauseCap/ExactCap
@@ -380,19 +382,18 @@ object RegexTrigram {
     } yield ((ci << 16) | mi, vfsidx.tokenize.Tokenizer.triKeys(m).distinct.toArray)
 
     val allKeys = members.flatMap(_._2).distinct
-    // dictionary probe: a member with ANY key absent from the corpus can
-    // never match. Under the small-index floor the probe round-trip costs
-    // more than it prunes — skip it and keep every member: an absent key
-    // simply contributes no pairs, so the member never reaches nk >= req and
-    // the clause/doc aggregation below yields the identical result.
+    val segs = TrigramIndex.readSegments(spark, dir)
+    // presence probe off segment metadata: a member with ANY key absent from
+    // the corpus can never match. Under the small-index floor the probe
+    // round-trip costs more than it prunes — skip it and keep every member:
+    // an absent key simply contributes no pairs, so the member never reaches
+    // nk >= req and the clause/doc aggregation below yields the identical
+    // result.
     val viable =
-      if (Postings.direct(Postings.trigramBound(spark, dir, allKeys.size),
-          Postings.DirectFloor)) members
+      if (Postings.direct(Postings.trigramBound(spark, dir, allKeys.size), directFloor)) members
       else {
-        val present: Set[Long] = TrigramIndex.readDictRaw(spark, dir)
-          .filter($"key".isin(allKeys: _*))
-          .select($"key").distinct().as[Long].collect().toSet
-        members.filter(_._2.forall(present))
+        val present = Postings.termMeta(segs, "key", allKeys, withRanges = false).keys
+        members.filter(_._2.forall(present.contains))
       }
     val liveClauses = viable.map(_._1 >> 16).distinct
     if (liveClauses.size < clauses.size) // some clause wholly absent -> AND empty
@@ -404,8 +405,7 @@ object RegexTrigram {
     val reqKeys: Map[Int, Int] = viable.map { case (id, ks) => id -> ks.length }.toMap
     val nClauses = clauses.size
 
-    val pairs = TrigramIndex.readSegments(spark, dir)
-      .as[vfsidx.build.TriSegmentRow]
+    val pairs = segs.as[vfsidx.build.TriSegmentRow]
       .filter($"key".isin(keyToMembers.keys.toSeq: _*))
       .flatMap { s =>
         val ms = keyToMembers(s.key)

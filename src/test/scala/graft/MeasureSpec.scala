@@ -21,4 +21,11 @@ class MeasureSpec extends SparkTestBase {
     assert(!a.holds("B"))
     assert(!a.holds("Scan parquet A ReadSchema: struct<postings:binary>"))
   }
+
+  test("plan text drops expression ids and the temp index root") {
+    val plan = "Output [2]: [term#1202, df#77L]\n" +
+      "Location: InMemoryFileIndex [file:/tmp/graft_ftidx_4075605830445444525/dictionary/gen=0_1]"
+    assert(Measure.stable(plan) == "Output [2]: [term#N, df#NL]\n" +
+      "Location: InMemoryFileIndex [<index>/dictionary/gen=0_1]")
+  }
 }

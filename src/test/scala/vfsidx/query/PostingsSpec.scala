@@ -15,26 +15,40 @@ import vfsidx.tokenize.Tokenizer
 class PostingsSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("blockRanges: over the cap -> None; at the cap -> the coalesced ranges") {
-    def row(key: Long, ranges: (Long, Long)*) = TriSegmentRow(0, key, 0, 0, Array.emptyByteArray,
-      ranges.map(_._1).toArray, ranges.map(_._2).toArray, Array.fill(ranges.size)(0))
-    // 5 blocks over 3 rows; (1,10)/(5,20) overlap and (30,40)/(40,45) touch
-    val rows = spark.createDataset(Seq(
-      row(1L, (1L, 10L), (30L, 40L)), row(2L, (5L, 20L), (40L, 45L)), row(3L, (100L, 100L))))
-    assert(Postings.blockRanges(rows, cap = 4).isEmpty)
-    assert(Postings.blockRanges(rows, cap = 5).map(_.toSeq) ==
+  test("termMeta: over the cap -> None; at the cap -> the coalesced ranges") {
+    def row(key: Long, count: Int, ranges: (Long, Long)*) = TriSegmentRow(0, key, 0, count,
+      Array.emptyByteArray, ranges.map(_._1).toArray, ranges.map(_._2).toArray,
+      Array.fill(ranges.size)(0))
+    // 5 blocks over 4 rows; (1,10)/(5,20) overlap and (30,40)/(40,45) touch;
+    // key 2 spans two rows (two generations or shards)
+    val rows = spark.createDataset(Seq(row(1L, 7, (1L, 10L), (30L, 40L)),
+      row(2L, 3, (5L, 20L)), row(2L, 4, (40L, 45L)), row(3L, 1, (100L, 100L)))).toDF()
+    val all = Seq(1L, 2L, 3L)
+    val at4 = Postings.termMeta(rows, "key", all :+ 9L, cap = 4)
+    assert(at4.df == Map(1L -> 7L, 2L -> 7L, 3L -> 1L))
+    assert(at4.keys.map { case (k, m) => k -> m.blocks } == Map(1L -> 2L, 2L -> 2L, 3L -> 1L))
+    assert(at4.ranges(all).isEmpty)
+    assert(at4.ranges(Seq(1L, 2L)).map(_.toSeq) == Some(Seq((1L, 20L), (30L, 45L))))
+    assert(Postings.termMeta(rows, "key", all, cap = 5).ranges(all).map(_.toSeq) ==
       Some(Seq((1L, 20L), (30L, 45L), (100L, 100L))))
+    // a key over the cap on its own keeps its df, never its ranges
+    val at1 = Postings.termMeta(rows, "key", all, cap = 1)
+    assert(at1.df == at4.df && at1.keys(1L).ranges.isEmpty && at1.ranges(Seq(1L)).isEmpty)
+    assert(at1.ranges(Seq(3L)).map(_.toSeq) == Some(Seq((100L, 100L))))
+    assert(Postings.termMeta(rows, "key", all, withRanges = false).ranges(Seq(3L)).isEmpty)
   }
 
-  test("blockRanges reads only block_first/block_last, never the postings blob") {
+  test("termMeta reads only segment metadata, never the postings blob") {
     val unread = org.apache.spark.sql.functions.udf { (_: Long) =>
-      (throw new IllegalStateException("range collect read postings")): Array[Byte]
+      (throw new IllegalStateException("metadata probe read postings")): Array[Byte]
     }
     val dir = tmpDir("ranges_cols")
-    Seq(TriSegmentRow(0, 1L, 0, 0, Array.emptyByteArray,
+    Seq(TriSegmentRow(0, 1L, 0, 2, Array.emptyByteArray,
       Array(1L, 30L), Array(10L, 40L), Array(0, 0))).toDS().write.mode("overwrite").parquet(dir)
-    val rows = spark.read.parquet(dir).withColumn("postings", unread($"key")).as[TriSegmentRow]
-    assert(Postings.blockRanges(rows, cap = 5).map(_.toSeq) == Some(Seq((1L, 10L), (30L, 40L))))
+    val rows = spark.read.parquet(dir).withColumn("postings", unread($"key"))
+    val meta = Postings.termMeta(rows, "key", Seq(1L))
+    assert(meta.df == Map(1L -> 2L))
+    assert(meta.ranges(Seq(1L)).map(_.toSeq) == Some(Seq((1L, 10L), (30L, 40L))))
   }
 
   // ---- Spark jobs per query call ----
@@ -112,28 +126,62 @@ class PostingsSpec extends SparkTestBase {
       "nears pruned" -> (() =>
         TrigramIndex.nears(spark, triDir, "index merge search", 5, prunedFloor = 0L).collect()),
       "nears direct" -> (() => TrigramIndex.nears(spark, triDir, "index merge search", 5).collect()),
-      "clauseCandidates" -> (() => RegexTrigram.clauseCandidates(spark, triDir,
+      "clauseCandidates pruned" -> (() => RegexTrigram.clauseCandidates(spark, triDir,
+        List(Set("merge", "search"), Set("index")), directFloor = 0L).collect()),
+      "clauseCandidates direct" -> (() => RegexTrigram.clauseCandidates(spark, triDir,
         List(Set("merge", "search"), Set("index"))).collect()))
     calls.foreach(_._2())  // warm the per-index stats caches
     spark.sparkContext.addSparkListener(Jobs)
     val got = try calls.map { case (name, f) => name -> Jobs.of(f()) }
     finally spark.sparkContext.removeSparkListener(Jobs)
     info(got.map { case (n, j) => s"$n: $j" }.mkString(", "))
-    // pruned paths: the rarest-key / essential-term ranges collect is one
-    // job over every partition (a limit take would add a scale-up round)
+    // every path plans off ONE segment-metadata job (df, idf, upper bounds
+    // and block ranges together) and reads index tables with pinned
+    // schemas (no inference job); the presence probe is the pruned
+    // clauseCandidates' one extra job
     val expected = Seq(
-      "topKOr pruned" -> 9,
-      "topKOr direct" -> 4,
-      "topKAnd pruned" -> 6,
-      "topKAnd direct" -> 5,
-      "countFirstLastAnd pruned" -> 7,
-      "countFirstLastAnd direct" -> 6,
-      "searchCandidates pruned" -> 8,
-      "searchCandidates direct" -> 4,
-      "nears pruned" -> 12,
-      "nears direct" -> 3,
-      "clauseCandidates" -> 6)
+      "topKOr pruned" -> 5,
+      "topKOr direct" -> 3,
+      "topKAnd pruned" -> 4,
+      "topKAnd direct" -> 4,
+      "countFirstLastAnd pruned" -> 5,
+      "countFirstLastAnd direct" -> 5,
+      "searchCandidates pruned" -> 4,
+      "searchCandidates direct" -> 3,
+      "nears pruned" -> 10,
+      "nears direct" -> 2,
+      "clauseCandidates pruned" -> 6,
+      "clauseCandidates direct" -> 5)
     assert(got == expected)
+  }
+
+  test("2-generation salted index: dictionary df == Σ segment count, idf bit-equal") {
+    import org.apache.spark.sql.functions.sum
+    val (word, triDir) = twoGen
+    val idx = new Bm25Index(spark, word)
+    val segs = IndexBuild.readSegments(spark, word)
+    assert(segs.filter($"shard" > 0).count() > 0, "no salted shard")
+    val segDf = segs.groupBy($"term").agg(sum($"count").cast("long"))
+      .as[(String, Long)].collect().toMap
+    val dict = idx.dictionary.select($"term", $"df", $"idf").as[(String, Long, Double)]
+      .collect()
+    assert(dict.length == segDf.size)
+    val meta = Postings.termMeta(segs, "term", dict.map(_._1).toSeq)
+    dict.foreach { case (t, df, idf) =>
+      assert(segDf(t) == df, s"term '$t'")
+      assert(meta.df(t) == df, s"term '$t'")
+      // exact Double equality: the driver-side idf must give the same bits
+      assert(Bm25Index.idf(idx.stats.n_docs, meta.df(t)) == idf, s"term '$t'")
+    }
+
+    val triSegs = TrigramIndex.readSegments(spark, triDir)
+    assert(triSegs.filter($"shard" > 0).count() > 0, "no salted trigram shard")
+    val triSegDf = triSegs.groupBy($"key").agg(sum($"count").cast("long"))
+      .as[(Long, Long)].collect().toMap
+    val triDict = TrigramIndex.readDictRaw(spark, triDir).groupBy($"key").agg(sum($"df"))
+      .as[(Long, Long)].collect().toMap
+    assert(triDict == triSegDf)
+    assert(Postings.termMeta(triSegs, "key", triDict.keys.toSeq).df == triDict)
   }
 
   // ---- pruned paths over uncompacted generations ----
@@ -207,6 +255,12 @@ class PostingsSpec extends SparkTestBase {
       assert(pruned == ids(TrigramIndex.searchCandidates(spark, triDir, needle)),
         s"needle '$needle'")
       assert(pruned.nonEmpty == (needle != "zzz_nowhere"), s"needle '$needle'")
+    }
+    for (cnf <- Seq(List(Set("merge", "rare"), Set("index")), List(Set("alpha", "zzz_nowhere")),
+        List(Set("gamma"), Set("zzz_nowhere")), List(Set("scan drift")))) {
+      val pruned = ids(RegexTrigram.clauseCandidates(spark, triDir, cnf, directFloor = 0L))
+      assert(pruned == ids(RegexTrigram.clauseCandidates(spark, triDir, cnf)), s"cnf $cnf")
+      assert(pruned.nonEmpty == !cnf.exists(_ == Set("zzz_nowhere")), s"cnf $cnf")
     }
     for ((needle, k) <- Seq(("merge index", 5), ("rare alpha", 10), ("drift bound scan", 3))) {
       val nd = Tokenizer.triKeys(needle).distinct.toSet
