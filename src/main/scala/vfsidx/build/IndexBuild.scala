@@ -244,13 +244,33 @@ object IndexBuild {
     val unverified = gens.filter { case (l, h) => !done(s"${l}_$h") }
     if (unverified.isEmpty) return
     unverified.foreach { case (l, h) =>
-      require(
-        spark.read.parquet(segmentsGenDir(dir, l, h)).schema.fieldNames.contains("tf_sum"),
+      require(footerHas(spark, segmentsGenDir(dir, l, h), "tf_sum"),
         s"word index at $dir holds a generation gen=${l}_$h written by a " +
           "pre-chunk-format build (segments lack tf_sum; its runs are raw " +
           "postings): delete the index directory and rebuild")
     }
     formatChecked.put(dir, done ++ unverified.map { case (l, h) => s"${l}_$h" })
+  }
+
+  /** Opens one parquet footer on the driver. */
+  private def withFooter[A](conf: org.apache.hadoop.conf.Configuration, path: org.apache.hadoop.fs.Path)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    try f(r) finally r.close()
+  }
+
+  /** The format gates' probe: does the table at `dir` carry column `field`?
+    * Reads ONE `part-*.parquet` footer on the driver — Spark writes every
+    * part file of a table with the same schema — where
+    * `spark.read.parquet(dir).schema` would run a footer-merging job. A dir
+    * without a data file passes: it holds no rows of any format. */
+  private[build] def footerHas(spark: SparkSession, dir: String, field: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    p.getFileSystem(conf).listStatus(p).map(_.getPath)
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .forall(withFooter(conf, _)(_.getFooter.getFileMetaData.getSchema.containsField(field)))
   }
 
   /** Committed, non-retired generations, sorted ([[Generations]]). */
@@ -306,34 +326,30 @@ object IndexBuild {
     lifecycle(spark, dir).read(statsGenDir(dir, _, _), StatsSchema).as[CorpusStats]
   }
 
-  /** Row count WITHOUT a Spark job when the dataset is a bare file-source
-    * leaf scan over parquet (no filter/project above the relation): the sum
-    * of the parquet footers' row-group counts — exact, the very numbers a
-    * count() job would aggregate, read driver-side in O(files) footer
-    * fetches. Any other plan shape (a filtered slice, a non-parquet or
-    * in-memory source) falls back to a regular count() job. The build paths
-    * call this for their batch-boundary / stats counts, where the input is
-    * typically a freshly-materialized corpus table. */
+  /** Row count WITHOUT a Spark job when the dataset is a file-source scan
+    * over parquet under nothing but projections (`drop`, `select`,
+    * `.as[T]`: a projection never changes the row count): the sum of the
+    * parquet footers' row-group counts — exact, the very numbers a count()
+    * job would aggregate, read driver-side in O(files) footer fetches. Any
+    * other plan shape (a filtered slice, a non-parquet or in-memory source)
+    * falls back to a regular count() job. The build paths call this for
+    * their batch-boundary / stats counts, where the input is typically a
+    * freshly-materialized corpus table. */
   private[build] def fastCount(ds: Dataset[_]): Long = {
-    val plan = ds.queryExecution.analyzed
-    // bare leaf = the analyzed plan IS its only leaf (nothing above it)
-    val bare = plan.collectLeaves() match {
-      case Seq(l) => plan eq l
-      case _ => false
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    @annotation.tailrec def projectedLeaf(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => projectedLeaf(child)
+      case leaf => leaf.children.isEmpty
     }
-    if (!bare) return ds.count()
+    if (!projectedLeaf(ds.queryExecution.analyzed)) return ds.count()
     val files = ds.inputFiles
     if (files.isEmpty || !files.forall(_.endsWith(".parquet"))) return ds.count()
     try {
       val conf = ds.sparkSession.sparkContext.hadoopConfiguration
       import scala.jdk.CollectionConverters._
-      def footerRows(f: String): Long = {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRowGroups.asScala.map(_.getRowCount.toLong).sum
-        finally r.close()
-      }
+      def footerRows(f: String): Long =
+        withFooter(conf, new org.apache.hadoop.fs.Path(f))(
+          _.getRowGroups.asScala.map(_.getRowCount.toLong).sum)
       // footer fetches are independent metadata reads — a small pool hides
       // their per-file open latency (files can number in the hundreds)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -619,13 +635,17 @@ object IndexBuild {
     val nNew = fastCount(newDocs)
     // the generation's tf_sum comes off the runs write (the stats stage
     // then skips its own agg)
-    val runs =
-      if (TableIO.done(spark, rDir)) None else Some(writeRuns(newDocs, dir, batchId, nNew, cfg))
-    // independently gated (and Overwrite into the batch's own partition):
-    // a crash between the runs commit and this write is repaired by the
-    // resumed call instead of silently losing the batch's fidelity rows
-    if (!TableIO.done(spark, dsDir))
-      TableIO.write(newDocs.select($"doc_id", $"sha256").toDF(), dsDir)
+    var runs = Option.empty[(LineageRow, Long)]
+    // doc_stats is independently gated (and Overwrite into the batch's own
+    // partition): a crash between the runs commit and this write is
+    // repaired by the resumed call instead of silently losing the batch's
+    // fidelity rows. It runs beside the runs write, as in [[build]].
+    val docStats =
+      if (TableIO.done(spark, dsDir)) Nil
+      else Seq(() => TableIO.write(newDocs.select($"doc_id", $"sha256").toDF(), dsDir))
+    Spimi.withSideJobs(!TableIO.done(spark, rDir), docStats) {
+      runs = Some(writeRuns(newDocs, dir, batchId, nNew, cfg))
+    }
     // Size the generation's bucket count to ITS data volume: a 1% refresh
     // must not fan into numBuckets near-empty files — every later query
     // scan would pay per-file listing/footer overhead per generation.

@@ -137,30 +137,41 @@ object NumericIndex {
     if (!overwrite && lifecycle(spark, root, numCol).isCommitted(batchId, batchId)) return
     val proj = newRows.select(
       col(numCol).cast("long").as("value"), col(idCol).cast("long").as("doc_id"))
-    val buckets = IndexBuild.ingestBuckets(proj.count(), numBuckets, IngestRowsPerBucket)
+    val buckets = IndexBuild.ingestBuckets(IndexBuild.fastCount(newRows), numBuckets,
+      IngestRowsPerBucket)
     buildGeneration(spark, proj,
       isIntegral(newRows.schema(numCol).dataType), root, numCol,
       batchId, batchId, buckets, force = overwrite)
   }
 
   /** Write one generation from a (value, doc_id) projection: the single
-    * range-partitioning shuffle, then stats off the written parquet: one
-    * job for the row count and max id, one sketch pass over the tiny
-    * projection. */
+    * range-partitioning shuffle (none for one bucket: the projection is
+    * coalesced into one partition and sorted there), with the row count
+    * and max id observed on the write itself, then one sketch pass over
+    * the written projection for the quantiles. Only a resume whose data an
+    * earlier call committed re-reads it for the count and max id. */
   private def buildGeneration(spark: SparkSession, proj: DataFrame, integral: Boolean,
                               root: String, col0: String, lo: Int, hi: Int,
                               numBuckets: Int, force: Boolean): Unit = {
     import spark.implicits._
     val out = dataGenDir(root, col0, lo, hi)
-    if (force || !TableIO.done(spark, out)) {
-      TableIO.write(
-        proj.repartitionByRange(numBuckets, col("value"))
-          .sortWithinPartitions(col("value"), col("doc_id")), out)
-    }
+    val observed =
+      if (!force && TableIO.done(spark, out)) None
+      else {
+        val obs = new org.apache.spark.sql.Observation(s"num:$out")
+        val parts =
+          if (numBuckets == 1) proj.coalesce(1) else proj.repartitionByRange(numBuckets, col("value"))
+        // observed above the exchange: the range-sampling job re-runs the
+        // exchange's input, and must not add to the metrics
+        TableIO.write(parts.sortWithinPartitions(col("value"), col("doc_id"))
+          .observe(obs, count(lit(1)).as("n"), max(col("doc_id")).as("max")), out)
+        val m = obs.get
+        Some((m("n").asInstanceOf[Long], Option(m("max")).fold(-1L)(_.asInstanceOf[Long])))
+      }
     val stDir = statsGenDir(root, col0, lo, hi)
     if (force || !TableIO.done(spark, stDir)) {
       val written = spark.read.schema(DataSchema).parquet(out)
-      val (nRows, maxId) = IndexBuild.countAndMax(written, "doc_id")
+      val (nRows, maxId) = observed.getOrElse(IndexBuild.countAndMax(written, "doc_id"))
       val probs = (0 to QuantilePoints).map(_.toDouble / QuantilePoints).toArray
       val qs =
         if (nRows == 0) Array.empty[Double]

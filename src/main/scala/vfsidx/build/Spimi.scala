@@ -13,7 +13,8 @@ import scala.collection.mutable.ArrayBuffer
   *  - map side: [[chunks]] accumulates per-partition partial posting lists
   *    in bounded memory and emits compressed chunks, split at `pre_shard`
   *    doc ranges; they are persisted as the batch's runs;
-  *  - [[seal]]: the per-batch runs-format gate, the `_SUCCESS` need-gates
+  *  - [[seal]]: the per-batch runs-format gate (one footer read on the
+  *    driver, [[IndexBuild.footerHas]]), the `_SUCCESS` need-gates
   *    (bypassed by `force`), the dictionary and stats tables as side jobs
   *    ([[withSideJobs]]), the one `(key, pre_shard)` hash shuffle sorted
   *    within partitions, the reduce side, the per-bucket observation
@@ -325,6 +326,13 @@ private[build] object Spimi {
     * are harmless — the key is the next sort column, so a colliding key is
     * adjacent but never pooled.
     *
+    * A ONE-bucket generation (every refresh under `shardSize` docs) skips
+    * that shuffle: its runs are coalesced into one partition and sorted
+    * there, which yields the rows, the order and the `bucket = 0` the
+    * one-partition exchange would, and the dictionary aggregate over the
+    * same partition plans no exchange either. Multi-bucket builds and
+    * folds keep the hash exchange.
+    *
     * Returns the lineage rows of the segments write, one per non-empty
     * bucket (none when the segments were already committed), for the
     * caller to append to its lineage table. */
@@ -347,7 +355,7 @@ private[build] object Spimi {
     // Checked PER batch dir — a merged-read schema samples one footer and
     // would let a mixed old/new set through.
     batches.foreach { b =>
-      require(spark.read.parquet(kind.runs(b)).schema.fieldNames.contains("pre_shard"),
+      require(IndexBuild.footerHas(spark, kind.runs(b), "pre_shard"),
         s"${kind.runs(b)} was written by a pre-chunk-format build (raw posting " +
           "rows): delete the index directory and rebuild")
     }
@@ -356,11 +364,14 @@ private[build] object Spimi {
       if (needStats) stats(runs)
       else spark.read.schema(statsEnc.schema).parquet(statsDir).as[S].head()
 
+    // one bucket: a single partition already satisfies the merge's and the
+    // dictionary aggregate's clustering, so neither plans an exchange
+    val input = if (numBuckets == 1) runs.coalesce(1) else runs
     def side(needed: Boolean, name: String, dir: String)(df: => DataFrame): Seq[() => Unit] =
       if (needed) Seq(() => timed(s"$p$name:$gen")(TableIO.write(df, dir))) else Nil
     val sideJobs =
       side(needDict, "dict", dictDir)(
-        runs.groupBy(kind.key).agg(kind.dictAggs.head, kind.dictAggs.tail: _*)) ++
+        input.groupBy(kind.key).agg(kind.dictAggs.head, kind.dictAggs.tail: _*)) ++
         side(needStats, "stats", statsDir)(spark.createDataset(Seq(st)).toDF())
 
     var lineage = Seq.empty[LineageRow]
@@ -371,11 +382,10 @@ private[build] object Spimi {
       val (c, observe) = (codec(st), kind.observe)
       val (keyed, order) = kind.keyHash match {
         case Some(h) =>
-          (runs.withColumn("key_hash", h), Seq(col("key_hash"), col("pre_shard"), col(kind.key)))
-        case None => (runs, Seq(col(kind.key), col("pre_shard")))
+          (input.withColumn("key_hash", h), Seq(col("key_hash"), col("pre_shard"), col(kind.key)))
+        case None => (input, Seq(col(kind.key), col("pre_shard")))
       }
-      val segs = keyed
-        .repartition(numBuckets, order.take(2): _*)
+      val segs = (if (numBuckets == 1) keyed else keyed.repartition(numBuckets, order.take(2): _*))
         .sortWithinPartitions(order :+ col("first_doc"): _*)
         .select(kind.key, "pre_shard", "count", "bytes")
         .as[(K, Long, Int, Array[Byte])]

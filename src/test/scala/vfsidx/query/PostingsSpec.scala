@@ -1,10 +1,6 @@
 package vfsidx.query
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import vfsidx.SparkTestBase
+import vfsidx.{JobCounter, SparkTestBase}
 import vfsidx.build.{IndexBuild, TrigramIndex, TriSegmentRow}
 import vfsidx.corpus.{SourceFile, Synth}
 import vfsidx.tokenize.Tokenizer
@@ -53,45 +49,6 @@ class PostingsSpec extends SparkTestBase {
 
   // ---- Spark jobs per query call ----
 
-  /** Counts the jobs submitted while [[Tag]] is set; [[drain]] waits on the
-    * asynchronous listener bus with a marker job (the bus is FIFO). */
-  private object Jobs extends SparkListener {
-    val Key = "vfsidx.test.jobs"
-    val Tag = "counted"
-    val counted = new AtomicInteger
-    private val markerJob = new ConcurrentHashMap[Int, CountDownLatch]()
-    @volatile private var latch: CountDownLatch = _
-
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      Option(js.properties).flatMap(p => Option(p.getProperty(Key))) match {
-        case Some(Tag) => counted.incrementAndGet()
-        case Some("marker") => markerJob.put(js.jobId, latch)
-        case _ =>
-      }
-
-    override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      Option(markerJob.remove(je.jobId)).foreach(_.countDown())
-
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      latch = new CountDownLatch(1)
-      sc.setLocalProperty(Key, "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Key, null)
-      assert(latch.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-    }
-
-    /** Jobs `f` submits, from any thread that inherits its local properties. */
-    def of(f: => Any): Int = {
-      drain()
-      counted.set(0)
-      spark.sparkContext.setLocalProperty(Key, Tag)
-      try f finally spark.sparkContext.setLocalProperty(Key, null)
-      drain()
-      counted.get
-    }
-  }
-
   private lazy val twoGen: (String, String) = {
     val cfg = IndexBuild.BuildConfig(numBatches = 1, numBuckets = 4,
       saltThreshold = 150, shardSize = 128)
@@ -131,9 +88,7 @@ class PostingsSpec extends SparkTestBase {
       "clauseCandidates direct" -> (() => RegexTrigram.clauseCandidates(spark, triDir,
         List(Set("merge", "search"), Set("index"))).collect()))
     calls.foreach(_._2())  // warm the per-index stats caches
-    spark.sparkContext.addSparkListener(Jobs)
-    val got = try calls.map { case (name, f) => name -> Jobs.of(f()) }
-    finally spark.sparkContext.removeSparkListener(Jobs)
+    val got = JobCounter.around(spark)(jobs => calls.map { case (name, f) => name -> jobs.of(f()) })
     info(got.map { case (n, j) => s"$n: $j" }.mkString(", "))
     // every path plans off ONE segment-metadata job (df, idf, upper bounds
     // and block ranges together) and reads index tables with pinned
