@@ -2,11 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 import vfsidx.build.{IndexBuild, TrigramIndex}
 import vfsidx.corpus.SourceFile
-import vfsidx.query.Bm25Index
+import vfsidx.query.{Bm25Index, QueryParser}
+import vfsidx.tokenize.Tokenizer
 
 /** Measurement mains beside the frozen driver contract (`Bench`, `Verify`):
   * evidence for optimization and scaling notes, never the driver metric.
@@ -15,6 +18,7 @@ import vfsidx.query.Bm25Index
   *   time <sfDir> <noop|collect> <reps> [query ...]
   *       time declared queries (the headliners when none are named) under
   *       the bench session; one JSON line, a tmpfs probe around each entry
+  *       and the classes Spark compiled for it (`compiles`, `compile_ms`)
   *   plans <sfDir> <outDir> <tag> [query ...]
   *       `explain("formatted")` of declared queries (all when none are
   *       named) into `<outDir>/<query>_<tag>.txt`
@@ -115,7 +119,9 @@ object Measure {
   /** `reps` timed runs of each named query through the `noop` sink (every
     * column of every row computed, nothing shipped to the driver) or
     * `collect`, with a tmpfs probe before and after each entry. Returns one
-    * JSON line: per query {min, reps[], pre_mbps, post_mbps}. */
+    * JSON line: per query {min, reps[], compiles, compile_ms, pre_mbps,
+    * post_mbps}, where `compiles` and `compile_ms` count the classes Spark
+    * generated and compiled over the entry's reps (driver and executors). */
   def time(spark: SparkSession, sfDir: String, sink: String, reps: Int,
            names: Seq[String]): String = {
     // loud on failure (the frozen Bench warm-up is silent): a failed index
@@ -130,15 +136,20 @@ object Measure {
       val query = SparkEntry.queries(name)
       val pre = bwProbe()
       spark.sparkContext.setJobDescription(s"measure: $name")
+      val (compiles0, compileNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        CodeGenerator.compileTime)
       val times = (1 to reps).map { _ =>
         seconds {
           val df = query(spark, sfDir)
           if (sink == "noop") df.write.format("noop").mode("overwrite").save() else df.collect()
         }
       }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       spark.sparkContext.setJobDescription(null)
       val post = bwProbe()
-      f""""$name":{"min":${times.min}%.3f,"reps":[${times.map(r => f"$r%.3f").mkString(",")}],"pre_mbps":$pre%.0f,"post_mbps":$post%.0f}"""
+      f""""$name":{"min":${times.min}%.3f,"reps":[${times.map(r => f"$r%.3f").mkString(",")}],""" +
+        f""""compiles":$compiles,"compile_ms":$compileMs%.1f,"pre_mbps":$pre%.0f,"post_mbps":$post%.0f}"""
     }
     s"""{"time":{${entries.mkString(",")}},"sf":"$sfDir","sink":"$sink","warm_error":${warmErr.map("\"" + _ + "\"").getOrElse("null")}}"""
   }
@@ -146,8 +157,10 @@ object Measure {
   // ---- plans and audit ----
 
   def explain(spark: SparkSession, sfDir: String, name: String): String =
-    stable(SparkEntry.queries(name)(spark, sfDir).queryExecution
-      .explainString(ExplainMode.fromString("formatted")))
+    formatted(SparkEntry.queries(name)(spark, sfDir))
+
+  private def formatted(df: DataFrame): String =
+    stable(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
 
   /** `plan` without its per-run parts: expression ids (`#1202`) read `#N`
     * and the temp index root of [[ops.FullText.indexRoot]] reads `<index>`,
@@ -157,9 +170,13 @@ object Measure {
 
   /** A physical-plan property of query `name`: it holds when the formatted
     * plan contains every `all` marker, at least one `anyOf` marker (the
-    * alternatives, when there are any) and no `none` marker. */
+    * alternatives, when there are any) and no `none` marker. With `scan`,
+    * the plan checked is the query's result plan followed by the plan of
+    * the segment scan its [[vfsidx.query.Postings.perDoc]] operator decodes
+    * (the accessor the operator itself calls). */
   final case class Audit(name: String, what: String, all: Seq[String],
-                         anyOf: Seq[String] = Nil, none: Seq[String] = Nil) {
+                         anyOf: Seq[String] = Nil, none: Seq[String] = Nil,
+                         scan: Option[(SparkSession, String) => DataFrame] = None) {
     def holds(plan: String): Boolean =
       all.forall(plan.contains) && (anyOf.isEmpty || anyOf.exists(plan.contains)) &&
         !none.exists(plan.contains)
@@ -176,14 +193,14 @@ object Measure {
       Seq("TakeOrderedAndProject")),
     Audit("q1_agg", "partial (map-side) aggregation before the shuffle",
       Seq("HashAggregate", "Exchange")),
-    Audit("ft_bm25_topk", "pruned segment scan + TakeOrdered top-k (the indexed BM25 path)",
-      Seq("PushedFilters", "TakeOrderedAndProject")),
+    Audit("ft_bm25_topk", "the indexed BM25 path: a pruned segment scan (In(term) pushed to parquet) decoded, summed and top-k'd by Postings.perDoc; the result is a local relation",
+      Seq("LocalTableScan", "PushedFilters", "In(term"), scan = Some(bm25Scan _)),
     Audit("ft_trigram_search", "indexed substring search: the trigram candidates inline as In(doc_id, ...) pushed to the documents scan, containment re-checked on those rows only (no corpus re-tokenization)",
       Seq("PushedFilters", "In(doc_id", "StringContains(text")),
     Audit("num_index_range", "range predicate pushed to the value-sorted secondary projection (row-group [min,max] pruning)",
       Seq("PushedFilters", "GreaterThanOrEqual(value", "LessThan(value")),
-    Audit("ft_nears", "overlap scoring = pruned key scan + TakeOrdered top-k",
-      Seq("PushedFilters", "TakeOrderedAndProject")),
+    Audit("ft_nears", "overlap scoring: a pruned key scan (In(key) pushed to parquet) aggregated and top-k'd by Postings.perDoc; the result is a local relation",
+      Seq("LocalTableScan", "PushedFilters", "In(key"), scan = Some(nearsScan _)),
     Audit("ft_query_lang", "query language via indexes: semi-join of candidate ids, predicates re-applied",
       Seq("PushedFilters", "Join")),
     Audit("ft_count_term", "Count answered from the index dictionary (one pruned row; documents NEVER scanned)",
@@ -193,8 +210,9 @@ object Measure {
       none = Seq("postings:binary", "documents.parquet")),
     Audit("ft_query_or", "|| groups: union of candidate sets, one semi-join, OR re-applied",
       Seq("Union", "LeftSemi")),
-    Audit("ft_count_and", "Count/First/Last over a composed AND: intersection + aggregate on pruned segment rows — the documents table is ABSENT from the plan",
-      Seq("PushedFilters", "HashAggregate"), none = Seq("documents.parquet")),
+    Audit("ft_count_and", "Count/First/Last over a composed AND: Postings.perDoc intersects and aggregates the pruned segment rows (In(term) pushed to parquet) into a local relation — the documents table is ABSENT from both plans",
+      Seq("LocalTableScan", "PushedFilters", "In(term"), none = Seq("documents.parquet"),
+      scan = Some(countAndScan _)),
     Audit("ft_query_paren", "parenthesized groups normalize to DNF; conjuncts common to EVERY group hoist above the union (here the repeated search alone bounds the rows, so the union term drops: ONE candidate subtree, not one per branch), one semi-join, predicate re-applied",
       Seq("LeftSemi", "BroadcastHashJoin")),
     Audit("ft_regex_search", "regex compiled to trigram CNF clauses: the clause candidates inline as In(doc_id, ...) pushed to the documents scan, RLIKE only on those rows (no full-corpus regex scan)",
@@ -205,10 +223,25 @@ object Measure {
       Seq("WindowGroupLimit", "row_number()"),
       anyOf = Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")))
 
-  /** Each audit with its query's formatted plan and whether it holds. */
+  /** The segment scans the audited BM25, count/first/last and nears
+    * queries decode, through the accessors their operators call. */
+  private def bm25Scan(s: SparkSession, sfDir: String): DataFrame =
+    ops.FullText.index(s, sfDir).segmentScan(Tokenizer.codeTokens(ops.FullText.Bm25Query).distinct)
+  private def countAndScan(s: SparkSession, sfDir: String): DataFrame =
+    ops.FullText.index(s, sfDir)
+      .segmentScan(Tokenizer.codeTokens(ops.FullText.CountAndQuery).distinct)
+  private def nearsScan(s: SparkSession, sfDir: String): DataFrame =
+    TrigramIndex.segmentScan(s, QueryParser.triDir(ops.FullText.indexRoot(s, sfDir), "text"),
+      Tokenizer.triKeys(ops.FullText.NearsNeedle).distinct)
+
+  private val ScanHeader = "== Segment scan decoded by Postings.perDoc =="
+
+  /** Each audit with its query's formatted plan (and its segment scan's,
+    * for an audit with one) and whether it holds. */
   def audit(spark: SparkSession, sfDir: String): Seq[(Audit, String, Boolean)] =
     audits.map { a =>
-      val plan = explain(spark, sfDir, a.name)
+      val plan = explain(spark, sfDir, a.name) + a.scan.fold("")(scan =>
+        s"\n$ScanHeader\n" + formatted(scan(spark, sfDir)))
       (a, plan, a.holds(plan))
     }
 
@@ -219,11 +252,15 @@ object Measure {
     sb.append("property audited and the relevant `explain(formatted)` lines proving it.\n")
     sb.append("A property holds when every required marker appears, at least one\n")
     sb.append("alternative does (if any are listed), and no forbidden marker does.\n")
+    sb.append("An entry with a segment scan checks the result plan followed by the plan\n")
+    sb.append("of the segment scan its `Postings.perDoc` operator decodes.\n")
     for ((a, plan, ok) <- results) {
       val lines = plan.linesIterator.toSeq
       sb.append(s"\n## ${a.name} — ${a.what}\n\n```\n")
-      // the operator tree (before the detail sections), then marker lines
-      sb.append(lines.takeWhile(_.nonEmpty).mkString("\n"))
+      // the operator tree of each plan (before its detail sections), then
+      // marker lines
+      sb.append(plan.split(ScanHeader).map(_.linesIterator.dropWhile(_.isEmpty)
+        .takeWhile(_.nonEmpty).mkString("\n")).mkString(s"\n$ScanHeader\n"))
       sb.append("\n...\n")
       sb.append(lines.filter(l => a.markers.exists(l.contains)).map(_.trim).distinct.take(12).mkString("\n"))
       sb.append("\n```\n\n")

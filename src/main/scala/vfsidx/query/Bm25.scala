@@ -1,9 +1,8 @@
 package vfsidx.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import vfsidx.build.{CorpusStats, IndexBuild, SegmentRow}
-import vfsidx.codec.VarByte
 import vfsidx.tokenize.Tokenizer
 
 final case class Hit(doc_id: Long, score: Double)
@@ -15,8 +14,9 @@ final case class Hit(doc_id: Long, score: Double)
   * real BM25 (k1=1.2, b=0.75, idf = ln((N-df+0.5)/(df+0.5)+1)), rank-identical
   * to the brute-force oracle [[Oracle]], tie-break (score desc, doc_id asc).
   *
-  * Execution shape (all Catalyst-planned; `.explain` shows a single scan of
-  * the pruned segment rows, no shuffle until the per-doc score aggregation):
+  * Execution shape (the segment scan is the only Catalyst plan; everything
+  * after it runs in [[Postings.perDoc]], which generates no code, so a
+  * query shape compiled once is never compiled again):
   *
   *   1. one segment-metadata job for the query terms ([[Postings.termMeta]]:
   *      df, block-norm maxima and block ranges off the pruned metadata
@@ -25,27 +25,27 @@ final case class Hit(doc_id: Long, score: Double)
   *      the upper-bound shuffle and the range collect. The merged
   *      [[dictionary]] table (the reference's count-cache,
   *      cache/cache.go:88-120) stays for Count and the CLI;
-  *   2. `segments.filter(term isin ...)` — parquet row-group pruning does the
-  *      work of the reference's filename key ranges
-  *      (/root/reference/index_file.go:1572-1594), because segments are
-  *      written sorted by term;
-  *   3. flatMap decode: each (term, shard) blob scores independently in its
-  *      own task — head-term shards parallelize a Zipf-head list instead of
-  *      serializing on it;
-  *   4. groupBy(doc_id).sum — partial (map-side) aggregation is automatic;
-  *   5. orderBy(score desc, doc_id asc).limit(k) — Spark plans
-  *      TakeOrderedAndProject: a bounded per-partition heap + global top-k
-  *      merge, exactly the north_rule bounded-min-heap requirement.
+  *   2. `segments.filter(term isin ...)` ([[segmentScan]]) — parquet
+  *      row-group pruning does the work of the reference's filename key
+  *      ranges (reference index_file.go:1572-1594), because segments
+  *      are written sorted by term;
+  *   3. map side of [[Postings.perDoc]]: each (term, shard) blob decodes in
+  *      its own task (head-term shards parallelize a Zipf-head list instead
+  *      of serializing on it) into a primitive per-doc table of summed
+  *      contributions and term bitmask, shipped as one record per reducer;
+  *   4. reduce side: the tables merge per doc; the score is the sum rounded
+  *      to 9 decimals exactly as Spark's `round(x, 9)`
+  *      ([[Postings.round9]]), so summation order (non-associative doubles)
+  *      cannot flip a tie between engine and oracle;
+  *   5. top-k by (score desc, doc_id asc): a bounded heap per reducer,
+  *      merged on the driver in the same job (the north_rule bounded
+  *      min-heap), returned as a local DataFrame.
   *
   * AND mode adds the reference's posting-intersection semantics (J1,
-  * /root/reference/search_finder.go:120-193): only docs containing *all*
-  * terms, implemented as HAVING count(distinct term) = nTerms — plus
-  * block-range skipping: the rarest term's block [first,last] doc ranges are
-  * broadcast and other terms skip decoding blocks that cannot intersect them.
-  *
-  * Scores are rounded to 9 decimals before ranking so that hash-aggregation
-  * summation order (non-associative doubles) cannot flip a tie between engine
-  * and oracle.
+  * reference search_finder.go:120-193): only docs holding *all*
+  * terms (the doc's term bitmask is full) — plus block-range skipping: the
+  * rarest term's block [first,last] doc ranges ship with the tasks and the
+  * other terms skip decoding blocks that cannot intersect them.
   */
 class Bm25Index(spark: SparkSession, dir: String,
                 mergeOnSearch: Option[IndexBuild.BuildConfig] = None,
@@ -112,53 +112,33 @@ class Bm25Index(spark: SparkSession, dir: String,
     (meta, meta.df.map { case (t, df) => t -> Bm25Index.idf(n, df) })
   }
 
-  /** Decoded per-(term,doc) score contributions for the query terms. */
-  private def contributions(terms: Seq[String], idfs: Map[String, Double],
-                            ranges: Option[Array[(Long, Long)]] = None,
-                            protect: String = ""): Dataset[(String, Long, Double)] = {
-    // a local copy: the closure must not capture `this` (which holds the
-    // SparkSession)
-    val avgdl = stats.avgdl
-    segments.filter($"term".isin(terms: _*)).flatMap { s =>
-      val idf = idfs.getOrElse(s.term, 0.0)
-      val keep = Postings.keep(s, ranges, s.term == protect)
-      val out = Array.newBuilder[(String, Long, Double)]
-      var bi = 0
-      while (bi < s.block_off.length) {
-        if (keep(bi)) {
-          val cnt = VarByte.blockCount(s.count, bi)
-          val (ids, tfs, dls) = VarByte.decodeBlock(s.postings, s.block_off(bi), cnt)
-          var i = 0
-          while (i < cnt) {
-            out += ((s.term, ids(i),
-              idf * VarByte.bm25Norm(tfs(i), dls(i), avgdl, IndexBuild.K1, IndexBuild.B)))
-            i += 1
-          }
-        }
-        bi += 1
-      }
-      out.result()
-    }
-  }
+  /** The segment scan of `terms` that this index's queries decode
+    * ([[Postings.scan]]). */
+  def segmentScan(terms: Seq[String]): DataFrame = Postings.scan(segments.toDF(), "term", terms)
 
-  private def rank(contribs: Dataset[(String, Long, Double)], k: Int,
-                   requireAll: Option[Int]): DataFrame = {
-    val grouped = contribs
-      .toDF("term", "doc_id", "contrib")
-      .groupBy($"doc_id")
-      .agg(round(sum($"contrib"), 9).as("score"), countDistinct($"term").as("nt"))
-    val filtered = requireAll.fold(grouped)(n => grouped.filter($"nt" === n))
-    filtered.select($"doc_id", $"score")
-      .orderBy($"score".desc, $"doc_id".asc)
-      .limit(k)
-  }
+  /** The per-doc BM25 sums and term sets of `terms` ([[Postings.perDoc]]);
+    * terms outside `protect` decode only the blocks overlapping `ranges`. */
+  private def perDoc(terms: Seq[String], idfs: Map[String, Double],
+                     ranges: Option[Array[(Long, Long)]] = None,
+                     protect: Set[String] = Set.empty): Postings.PerDoc =
+    Postings.perDoc(segmentScan(terms), terms,
+      Some(Postings.Bm25(terms.map(idfs.getOrElse(_, 0.0)).toArray, stats.avgdl)),
+      ranges, terms.indices.filter(i => protect(terms(i))).toSet)
+
+  /** The top k of `docs` passing `keep`, scored by their rounded sums. */
+  private def rank(docs: Postings.PerDoc, k: Int,
+                   keep: Postings.Doc => Boolean = _ => true): Array[(Long, Double)] =
+    docs.topK(k, keep, d => Postings.round9(d.sum))
+
+  private def hits(rows: Array[(Long, Double)]): DataFrame =
+    Postings.local(spark, Postings.HitSchema, rows.map { case (d, s) => Row(d, s) })
 
   /** Disjunctive (standard BM25) top-k — full scoring, no pruning. The
     * differential baseline for [[topKOr]]. */
   def topKOrNaive(query: String, k: Int): DataFrame = {
     val terms = Tokenizer.codeTokens(query).distinct
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    rank(contributions(terms, termMeta(terms)._2), k, None)
+    hits(rank(perDoc(terms, termMeta(terms)._2), k))
   }
 
   /** Disjunctive BM25 top-k with block-max MaxScore pruning — exact (rank-
@@ -184,11 +164,10 @@ class Bm25Index(spark: SparkSession, dir: String,
     * (/root/reference/search_cond.go:240-280) — which is lossy; ours is
     * exact. */
   def topKOr(query: String, k: Int): DataFrame = {
-    import spark.implicits._
     val terms = Tokenizer.codeTokens(query).distinct
     if (terms.isEmpty) return spark.emptyDataset[Hit].toDF()
     val (meta, idfs) = termMeta(terms)
-    if (terms.size == 1) return rank(contributions(terms, idfs), k, None)
+    if (terms.size == 1) return hits(rank(perDoc(terms, idfs), k))
 
     val present = terms.filter(idfs.contains)
     if (present.isEmpty) return spark.emptyDataset[Hit].toDF()
@@ -198,16 +177,15 @@ class Bm25Index(spark: SparkSession, dir: String,
     // the query already paid): under the floor, skip the phase-1 θ job and
     // score everything
     if (Postings.direct(present.map(dfs).sum, directFloor))
-      return rank(contributions(present, idfs), k, None)
+      return hits(rank(perDoc(present, idfs), k))
 
-    // phase 1: θ from the rarest term's own top-k. rank() HALF_UP-rounds to
-    // 9 dp (can exceed the true k-th score by 5e-10), so back off 1e-9 to
+    // phase 1: θ from the rarest term's own top-k. Scores are HALF_UP-rounded
+    // to 9 dp (can exceed the true k-th score by 5e-10), so back off 1e-9 to
     // keep θ a valid LOWER bound — pruning bounds must all be conservative.
     val rarest = present.minBy(dfs)
     val theta: Double = {
-      val top = rank(contributions(Seq(rarest), idfs), k, None)
-        .select($"score").as[Double].collect()
-      if (top.length < k) 0.0 else math.max(0.0, top.last - 1e-9)
+      val top = rank(perDoc(Seq(rarest), idfs), k)
+      if (top.length < k) 0.0 else math.max(0.0, top.last._2 - 1e-9)
     }
 
     // global per-term upper bounds from the block metadata already
@@ -222,61 +200,54 @@ class Bm25Index(spark: SparkSession, dir: String,
     val nonEssential = byUb.takeWhile { t => cum += maxUb(t); cum < theta }.toSet
     val essential = present.filterNot(nonEssential)
 
-    if (nonEssential.isEmpty) return rank(contributions(present, idfs), k, None)
-
-    // candidate doc ranges = essential terms' block intervals; over the
-    // range cap, fall back to exact full scoring
-    meta.ranges(essential) match {
-      case None => rank(contributions(present, idfs), k, None)
-      case ranges => rank(contributions(essential, idfs)
-        .union(contributions(nonEssential.toSeq, idfs, ranges)), k, None)
-    }
+    // candidate doc ranges = essential terms' block intervals, which the
+    // non-essential terms decode within; with every term essential, or over
+    // the range cap, exact full scoring
+    val ranges = if (nonEssential.isEmpty) None else meta.ranges(essential)
+    hits(rank(perDoc(present, idfs, ranges, essential.toSet), k))
   }
 
   /** The conjunctive step of [[topKAnd]] and [[countFirstLastAnd]] (the
-    * reference's J1 posting intersection): every query term's decoded
-    * contributions; callers keep the docs holding all terms. Above the
+    * reference's J1 posting intersection): every query term's per-doc sums
+    * and term sets, with the mask of all terms a doc must hold. Above the
     * direct gate the rarest term's block [first,last] ranges (df/128 of
     * them, bounded by [[Postings.RangeCap]], off the metadata job) drive
     * the other terms to skip blocks that cannot intersect them. None when
     * there are no terms or one is absent from the corpus (the AND is
     * empty). */
-  private def andContributions(terms: Seq[String]): Option[Dataset[(String, Long, Double)]] = {
+  private def andDocs(terms: Seq[String]): Option[(Postings.PerDoc, Array[Long])] = {
     if (terms.isEmpty) return None
     val (meta, idfs) = termMeta(terms)
     val dfs = meta.df
     if (dfs.size < terms.size) return None
-    if (Postings.direct(dfs.values.sum, directFloor)) return Some(contributions(terms, idfs))
+    val all = Postings.mask(terms.size, terms.indices)
+    if (Postings.direct(dfs.values.sum, directFloor)) return Some((perDoc(terms, idfs), all))
     val rarest = terms.minBy(dfs)
-    Some(contributions(terms, idfs, meta.ranges(Seq(rarest)), rarest))
+    Some((perDoc(terms, idfs, meta.ranges(Seq(rarest)), Set(rarest)), all))
   }
 
   /** Conjunctive (reference J1 intersection semantics) top-k with
     * block-range skipping driven by the rarest term. */
-  def topKAnd(query: String, k: Int): DataFrame = {
-    val terms = Tokenizer.codeTokens(query).distinct
-    andContributions(terms).fold(spark.emptyDataset[Hit].toDF())(
-      rank(_, k, Some(terms.size)))
-  }
+  def topKAnd(query: String, k: Int): DataFrame =
+    andDocs(Tokenizer.codeTokens(query).distinct).fold(spark.emptyDataset[Hit].toDF()) {
+      case (docs, all) => hits(rank(docs, k, _.holds(all)))
+    }
 
   /** Index-backed terminal verbs over a COMPOSED (conjunctive) condition —
     * the reference's Count/First/Last on any SearchCond
     * (/root/reference/search_finder.go:325-371): intersect the terms'
-    * posting lists (rarest-term block skipping, HAVING-all semantics) and
-    * aggregate count/min/max over the intersection in one job. The corpus
+    * posting lists (rarest-term block skipping, all-terms semantics) and
+    * take count/min/max over the intersection in one job. The corpus
     * table is never touched — only pruned segment rows are decoded. One
     * result row (n, first_id, last_id); n=0 with null ids when nothing
     * matches (single-term input degenerates to the A1/W2 metadata-only
     * path's semantics, computed the same way). */
   def countFirstLastAnd(query: String): DataFrame = {
-    val terms = Tokenizer.codeTokens(query).distinct
-    andContributions(terms).fold(
-      Seq((0L, Option.empty[Long], Option.empty[Long])).toDF("n", "first_id", "last_id"))(
-      _.toDF("term", "doc_id", "c")
-        .groupBy($"doc_id").agg(countDistinct($"term").as("nt"))
-        .filter($"nt" === terms.size)
-        .agg(count(lit(1)).as("n"), min($"doc_id").as("first_id"),
-          max($"doc_id").as("last_id")))
+    val (n, first, last) = andDocs(Tokenizer.codeTokens(query).distinct)
+      .fold((0L, Option.empty[Long], Option.empty[Long])) {
+        case (docs, all) => docs.countMinMax(_.holds(all))
+      }
+    Postings.local(spark, Postings.CountSchema, Seq(Row(n, first.orNull, last.orNull)))
   }
 }
 

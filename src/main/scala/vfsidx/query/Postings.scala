@@ -1,30 +1,42 @@
 package vfsidx.query
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.Partitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{array_max, col, lit}
-import vfsidx.build.TrigramIndex
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import vfsidx.build.{IndexBuild, TrigramIndex}
 import vfsidx.codec.VarByte
 
 /** The query mechanics the BM25 and trigram families share: the small-index
   * cost gate, the one-job segment-metadata probe (term statistics, upper
   * bounds, bounded block ranges), the block-skip predicate, the ids-only
-  * block decode, and the bounded candidate prefilter. Each exact query path
-  * picks between a direct decode and a pruned plan with these; both sides
-  * of every gate return the same rows. */
+  * block decode, the bounded candidate prefilter, and [[perDoc]], the one
+  * operator every query family aggregates decoded postings with. Each exact
+  * query path picks between a direct decode and a pruned plan with these;
+  * both sides of every gate return the same rows.
+  *
+  * A query's only Catalyst plan is its segment scan ([[scan]]: a pushed `In`
+  * filter over pinned-schema segment tables). Everything after the scan
+  * (decode, per-doc sum and key set, the all-keys test, top-k,
+  * count/min/max, candidate sets and overlaps) runs in [[perDoc]] on plain
+  * RDD operations, which generate no code: a query shape compiled once stays
+  * compiled, and each result is one Spark job, not one per adaptive stage.
+  * The reference merges posting lists in its own code the same way
+  * (search_finder.go:120-193). */
 object Postings {
   /** Block layout common to word ([[vfsidx.build.SegmentRow]]) and trigram
-    * ([[vfsidx.build.TriSegmentRow]]) segment rows: `count` postings split
-    * into blocks starting at `block_off`, each spanning the doc ids
-    * [`block_first`, `block_last`]. */
-  trait Blocks {
-    def count: Int
-    def postings: Array[Byte]
-    def block_first: Array[Long]
-    def block_last: Array[Long]
-    def block_off: Array[Int]
-  }
+    * ([[vfsidx.build.TriSegmentRow]]) segment rows, as [[perDoc]] reads it
+    * off a [[scan]] row: `count` postings split into blocks starting at
+    * `block_off`, each spanning the doc ids [`block_first`, `block_last`]. */
+  private final class Blocks(val count: Int, val postings: Array[Byte],
+                             val block_first: Array[Long], val block_last: Array[Long],
+                             val block_off: Array[Int])
 
   /** Small-index cost-gate floor: a query whose postings bound is at or
     * under this decodes outright instead of paying the pruned plan's driver
@@ -131,19 +143,16 @@ object Postings {
 
   /** Which blocks of `s` to decode: every block when `protect` or without
     * `ranges`; otherwise those whose [first, last] overlaps a range. */
-  private[vfsidx] def keep(s: Blocks, ranges: Option[Array[(Long, Long)]], protect: Boolean): Int => Boolean =
-    if (protect || ranges.isEmpty) All
+  private def keep(s: Blocks, ranges: Option[Array[(Long, Long)]], protect: Boolean): Int => Boolean =
+    if (protect || ranges.isEmpty) _ => true
     else {
       val r = ranges.get
       bi => overlaps(r, s.block_first(bi), s.block_last(bi))
     }
 
-  /** Decode every block. */
-  private[vfsidx] val All: Int => Boolean = _ => true
-
   /** Decode the doc ids of each ids-only block of `s` that `keepBlock`
     * accepts, in posting order. */
-  private[vfsidx] def decodeIds(s: Blocks, keepBlock: Int => Boolean)(emit: Long => Unit): Unit = {
+  private def decodeIds(s: Blocks, keepBlock: Int => Boolean)(emit: Long => Unit): Unit = {
     var bi = 0
     while (bi < s.block_off.length) {
       if (keepBlock(bi)) {
@@ -155,6 +164,348 @@ object Postings {
       bi += 1
     }
   }
+
+  // ---- the posting aggregator ----
+
+  /** The segment scan [[perDoc]] decodes: the rows of `segs` whose `keyCol`
+    * is among `keys`, an `In` filter pushed to parquet (segments are written
+    * key-sorted, so row groups without a key are skipped), projected to the
+    * key and block columns. It is a query's only Catalyst plan; the plan
+    * audit of `graft.Measure` reads it through the same accessor. */
+  def scan(segs: DataFrame, keyCol: String, keys: Seq[Any]): DataFrame =
+    segs.filter(col(keyCol).isin(keys: _*)).select(col(keyCol), col("count"),
+      col("postings"), col("block_first"), col("block_last"), col("block_off"))
+
+  /** BM25 posting weights for [[perDoc]]: a posting of query key `i` with
+    * term frequency `tf` in a doc of length `dl` weighs
+    * `idf(i) · bm25Norm(tf, dl, avgdl)`. */
+  private[vfsidx] final case class Bm25(idf: Array[Double], avgdl: Double)
+
+  /** Decoded postings of the query `keys`, aggregated per doc: the sum of
+    * their weights ([[Bm25]]; none for ids-only postings) and the set of
+    * query keys the doc holds. `scan` is the [[scan]] of `keys`.
+    *
+    * Block skipping: with `within` (sorted doc ids), a block decodes only
+    * when a listed doc lies in its [first, last] range and only listed docs
+    * count; otherwise every key outside `protect` (key indexes) decodes only
+    * the blocks [[keep]] accepts for `ranges`.
+    *
+    * Each map task decodes its segment rows into a primitive open-addressing
+    * table ([[DocMap]]: doc id → sum, key bitmask) and ships one record per
+    * reducer, parallel primitive arrays of its docs; never a record per
+    * posting. There are `spark.sql.shuffle.partitions` reducers, capped by
+    * the scan's partition count. Each reducer merges its records into one
+    * table: sums add, key sets union, so a (key, doc) posting present in
+    * two generations still counts one key. Nothing runs until a finisher of
+    * [[PerDoc]] does; a second finisher re-reads the shuffle output, not
+    * the scan. */
+  private[vfsidx] def perDoc(scan: DataFrame, keys: Seq[Any], bm25: Option[Bm25] = None,
+                             ranges: Option[Array[(Long, Long)]] = None,
+                             protect: Set[Int] = Set.empty,
+                             within: Option[Broadcast[Array[Long]]] = None): PerDoc = {
+    val index: Map[Any, Int] = keys.zipWithIndex.toMap
+    val words = (keys.size + 63) >>> 6
+    val weighted = bm25.isDefined
+    val keyType = scan.schema.head.dataType
+    val rows = scan.queryExecution.toRdd
+    val reducers = math.max(1, math.min(rows.getNumPartitions,
+      scan.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
+    val chunks = rows.mapPartitions { it =>
+      val acc = new DocMap(words, weighted)
+      it.foreach { r =>
+        val ki = index(r.get(0, keyType) match {
+          case u: UTF8String => u.toString
+          case k => k
+        })
+        val s = new Blocks(r.getInt(1), r.getBinary(2), r.getArray(3).toLongArray(),
+          r.getArray(4).toLongArray(), r.getArray(5).toIntArray())
+        bm25 match {
+          case Some(w) =>
+            val idf = w.idf(ki)
+            val keepBlock = keep(s, ranges, protect(ki))
+            var bi = 0
+            while (bi < s.block_off.length) {
+              if (keepBlock(bi)) {
+                val cnt = VarByte.blockCount(s.count, bi)
+                val (ids, tfs, dls) = VarByte.decodeBlock(s.postings, s.block_off(bi), cnt)
+                var i = 0
+                while (i < cnt) {
+                  acc.add(ids(i), ki,
+                    idf * VarByte.bm25Norm(tfs(i), dls(i), w.avgdl, IndexBuild.K1, IndexBuild.B))
+                  i += 1
+                }
+              }
+              bi += 1
+            }
+          case None => within.map(_.value) match {
+            case Some(docs) =>
+              decodeIds(s, bi => {
+                var p = java.util.Arrays.binarySearch(docs, s.block_first(bi))
+                if (p < 0) p = -p - 1
+                p < docs.length && docs(p) <= s.block_last(bi)
+              })(id => if (java.util.Arrays.binarySearch(docs, id) >= 0) acc.add(id, ki, 0.0))
+            case None => decodeIds(s, keep(s, ranges, protect(ki)))(acc.add(_, ki, 0.0))
+          }
+        }
+      }
+      acc.split(reducers)
+    }
+    new PerDoc(new ShuffledRDD[Int, DocChunk, DocChunk](chunks, new Reducers(reducers))
+      .mapPartitions(it => {
+        val merged = new DocMap(words, weighted)
+        it.foreach(kv => merged.merge(kv._2))
+        Iterator.single(merged)
+      }))
+  }
+
+  /** Spark's `round(x, 9)` on a double, bit for bit: HALF_UP on the
+    * shortest decimal form; NaN and infinities pass through. Scores are
+    * rounded before ranking so that summation order (doubles are not
+    * associative) cannot flip a tie between the engine and the oracle. */
+  def round9(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The key bitmask of the key indexes `keys` among `n` query keys, as
+    * [[Doc.holds]] takes it. */
+  def mask(n: Int, keys: Iterable[Int]): Array[Long] = {
+    val m = new Array[Long]((n + 63) >>> 6)
+    keys.foreach(k => m(k >>> 6) |= 1L << (k & 63))
+    m
+  }
+
+  /** One doc of a [[perDoc]] aggregate, as a finisher sees it: its id, its
+    * summed weight and the query keys it holds. The object is reused from
+    * doc to doc; read it, never keep it. */
+  final class Doc private[Postings] (words: Int) {
+    var id = 0L
+    var sum = 0.0
+    private[Postings] var masks: Array[Long] = _
+    private[Postings] var off = 0
+
+    /** How many distinct query keys the doc holds. */
+    def keys: Int = {
+      var c = 0
+      var w = 0
+      while (w < words) { c += java.lang.Long.bitCount(masks(off + w)); w += 1 }
+      c
+    }
+
+    /** Does the doc hold every key of `need` (a [[mask]])? */
+    def holds(need: Array[Long]): Boolean = {
+      var w = 0
+      while (w < words) {
+        if ((masks(off + w) & need(w)) != need(w)) return false
+        w += 1
+      }
+      true
+    }
+  }
+
+  /** The finishers of a [[perDoc]] aggregate. Each is ONE Spark job over
+    * the reducers' tables; what a task ships to the driver is bounded by
+    * the finisher (k, a cap, or three numbers), never by the postings. */
+  final class PerDoc private[Postings] (docs: RDD[DocMap]) {
+    private def over[U: scala.reflect.ClassTag](f: Iterator[DocMap] => U): Array[U] =
+      docs.sparkContext.runJob(docs, f)
+
+    /** The top `k` docs passing `keep` by (score desc, doc id asc): a bounded
+      * heap per task, merged on the driver. */
+    def topK(k: Int, keep: Doc => Boolean, score: Doc => Double): Array[(Long, Double)] =
+      if (k <= 0) Array.empty
+      else top(k, over { it =>
+        val heap = new TopK(k)
+        it.foreach(_.foreach(d => if (keep(d)) heap.offer(d.id, score(d))))
+        heap.result
+      }.flatten)
+
+    /** Count, min and max doc id of the docs passing `keep`. */
+    def countMinMax(keep: Doc => Boolean): (Long, Option[Long], Option[Long]) = {
+      val parts = over { it =>
+        var (n, lo, hi) = (0L, Long.MaxValue, Long.MinValue)
+        it.foreach(_.foreach(d => if (keep(d)) {
+          n += 1; lo = math.min(lo, d.id); hi = math.max(hi, d.id)
+        }))
+        (n, lo, hi)
+      }
+      val n = parts.map(_._1).sum
+      if (n == 0) (0L, None, None)
+      else (n, Some(parts.map(_._2).min), Some(parts.map(_._3).max))
+    }
+
+    /** (doc id, `value`) of the docs passing `keep`, or None when there are
+      * more than `cap` of them; each task ships at most `cap` + 1. */
+    def collect(keep: Doc => Boolean, cap: Int, value: Doc => Long): Option[Array[(Long, Long)]] = {
+      val got = over { it =>
+        val out = mutable.ArrayBuffer.empty[(Long, Long)]
+        it.foreach(_.foreach(d => if (out.length <= cap && keep(d)) out += ((d.id, value(d)))))
+        out.toArray
+      }.flatten
+      if (got.length > cap) None else Some(got)
+    }
+
+    /** The one-column `doc_id` candidate set of the docs passing `keep`. At
+      * or under [[IsinCap]] ids it is a local DataFrame (Catalyst can
+      * broadcast it, and [[prefilter]] reads it without a job); over the cap
+      * it is a DataFrame over this aggregate's shuffle output, so the map
+      * side does not run again. */
+    def ids(spark: SparkSession, keep: Doc => Boolean): DataFrame =
+      collect(keep, IsinCap, _ => 0L) match {
+        case Some(got) => local(spark, IdSchema, got.map(g => Row(g._1)))
+        case None => spark.createDataFrame(docs.mapPartitions { it =>
+          val out = mutable.ArrayBuffer.empty[Row]
+          it.foreach(_.foreach(d => if (keep(d)) out += Row(d.id)))
+          out.iterator
+        }, IdSchema)
+      }
+  }
+
+  /** The `k` best of `rows` by (score desc, doc id asc). */
+  private[vfsidx] def top(k: Int, rows: Array[(Long, Double)]): Array[(Long, Double)] =
+    rows.sortWith((a, b) => before(a._2, a._1, b._2, b._1)).take(k)
+
+  @inline private def before(s: Double, id: Long, s2: Double, id2: Long): Boolean =
+    s > s2 || (s == s2 && id < id2)
+
+  /** Bounded top-k: a heap whose head is the worst kept doc. */
+  private final class TopK(k: Int) {
+    private val heap = new java.util.PriorityQueue[(Long, Double)](math.min(k, 1024),
+      (a: (Long, Double), b: (Long, Double)) =>
+        if (before(b._2, b._1, a._2, a._1)) -1 else if (before(a._2, a._1, b._2, b._1)) 1 else 0)
+
+    def offer(id: Long, s: Double): Unit =
+      if (heap.size < k) heap.add((id, s))
+      else if (before(s, id, heap.peek._2, heap.peek._1)) { heap.poll(); heap.add((id, s)) }
+
+    def result: Array[(Long, Double)] = heap.asScala.toArray
+  }
+
+  /** One map task's docs for one reducer: parallel arrays of ids, summed
+    * weights (null for ids-only postings) and key bitmasks (`words` longs
+    * per doc). */
+  private[query] final class DocChunk(val ids: Array[Long], val sums: Array[Double],
+                                      val masks: Array[Long]) extends Serializable
+
+  /** Routes each chunk to the reducer its key names. */
+  private final class Reducers(n: Int) extends Partitioner {
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** Primitive open-addressing table doc id → (Σ weight, key bitmask of
+    * `words` longs), in the manner of the trigram build's `LongListMap`: a
+    * boxed map would allocate per posting. */
+  private[query] final class DocMap(words: Int, weighted: Boolean) {
+    private var cap = 256
+    private var used = new Array[Boolean](cap)
+    private var ids = new Array[Long](cap)
+    private var sums = if (weighted) new Array[Double](cap) else null
+    private var masks = new Array[Long](cap * words)
+    private var n = 0
+
+    private def hash(id: Long): Long = scala.util.hashing.byteswap64(id)
+
+    private def slot(id: Long): Int = {
+      var i = (hash(id) & (cap - 1)).toInt
+      while (used(i) && ids(i) != id) i = (i + 1) & (cap - 1)
+      if (!used(i)) {
+        if ((n + 1) * 10 > cap * 7) { grow(); return slot(id) }
+        used(i) = true; ids(i) = id; n += 1
+      }
+      i
+    }
+
+    private def grow(): Unit = {
+      val (ou, oi, os, om) = (used, ids, sums, masks)
+      cap <<= 1
+      used = new Array[Boolean](cap); ids = new Array[Long](cap)
+      sums = if (weighted) new Array[Double](cap) else null
+      masks = new Array[Long](cap * words)
+      n = 0
+      var i = 0
+      while (i < ou.length) {
+        if (ou(i)) {
+          val s = slot(oi(i))
+          if (weighted) sums(s) = os(i)
+          System.arraycopy(om, i * words, masks, s * words, words)
+        }
+        i += 1
+      }
+    }
+
+    def add(id: Long, key: Int, w: Double): Unit = {
+      val s = slot(id)
+      if (weighted) sums(s) += w
+      masks(s * words + (key >>> 6)) |= 1L << (key & 63)
+    }
+
+    def merge(c: DocChunk): Unit = {
+      var i = 0
+      while (i < c.ids.length) {
+        val s = slot(c.ids(i))
+        if (weighted) sums(s) += c.sums(i)
+        var w = 0
+        while (w < words) { masks(s * words + w) |= c.masks(i * words + w); w += 1 }
+        i += 1
+      }
+    }
+
+    /** The docs split by reducer (the high hash bits mod `r`), one chunk
+      * per non-empty reducer. */
+    def split(r: Int): Iterator[(Int, DocChunk)] = {
+      def reducer(id: Long) = ((hash(id) >>> 33) % r).toInt
+      val sizes = new Array[Int](r)
+      var i = 0
+      while (i < cap) { if (used(i)) sizes(reducer(ids(i))) += 1; i += 1 }
+      val out = Array.tabulate(r)(p => new DocChunk(new Array[Long](sizes(p)),
+        if (weighted) new Array[Double](sizes(p)) else null, new Array[Long](sizes(p) * words)))
+      val fill = new Array[Int](r)
+      i = 0
+      while (i < cap) {
+        if (used(i)) {
+          val p = reducer(ids(i))
+          val (c, j) = (out(p), fill(p))
+          c.ids(j) = ids(i)
+          if (weighted) c.sums(j) = sums(i)
+          System.arraycopy(masks, i * words, c.masks, j * words, words)
+          fill(p) = j + 1
+        }
+        i += 1
+      }
+      out.iterator.zipWithIndex.collect { case (c, p) if c.ids.nonEmpty => p -> c }
+    }
+
+    def foreach(f: Doc => Unit): Unit = {
+      val d = new Doc(words)
+      d.masks = masks
+      var i = 0
+      while (i < cap) {
+        if (used(i)) {
+          d.id = ids(i)
+          d.sum = if (weighted) sums(i) else 0.0
+          d.off = i * words
+          f(d)
+        }
+        i += 1
+      }
+    }
+  }
+
+  /** Schemas of the finished results, as the Catalyst plans they replace
+    * produced them. */
+  private[vfsidx] val IdSchema = StructType(Seq(StructField("doc_id", LongType, nullable = false)))
+  private[vfsidx] val HitSchema = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType)))
+  private[vfsidx] val OverlapSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("overlap", LongType, nullable = false)))
+  private[vfsidx] val CountSchema = StructType(Seq(StructField("n", LongType, nullable = false),
+    StructField("first_id", LongType), StructField("last_id", LongType)))
+
+  /** A driver-side result as a local DataFrame: planned as a
+    * `LocalTableScan`, collected without a job. */
+  private[vfsidx] def local(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Rows of `docs` whose `idCol` is among the one-column `doc_id`
     * candidates `cand` — the reference's by-address record fetch

@@ -1,7 +1,7 @@
 package vfsidx.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 import vfsidx.build.TrigramIndex
 
@@ -362,76 +362,49 @@ object RegexTrigram {
     * A single-literal CNF delegates to [[TrigramIndex.searchCandidates]]
     * (which adds rarest-key block skipping). Multi-literal CNFs run as ONE
     * pruned segments pass for ALL members — `In(key, …)` over the union of
-    * every member's keys — then one (doc, member) aggregation resolves
-    * member-AND, clause-OR, and CNF-AND together. At scale this reads the
-    * index once instead of once per literal; the shuffle carries only
-    * (doc_id, member) pairs from pruned postings, never the corpus.
+    * every member's keys — aggregated per doc by [[Postings.perDoc]]; each
+    * member is a mask over those keys, so member-AND, clause-OR and CNF-AND
+    * are one test of the doc's key set. At scale this reads the index once
+    * instead of once per literal; the shuffle carries one record per
+    * reducer of per-doc key sets from pruned postings, never the corpus.
     * `directFloor` is the small-index cost gate on |keys| × n_rows
     * ([[Postings.direct]]), as in [[TrigramIndex.searchCandidates]]. */
   def clauseCandidates(spark: SparkSession, dir: String, clauses: List[Set[String]],
                        directFloor: Long = Postings.DirectFloor): DataFrame = {
-    import spark.implicits._
     if (clauses.size == 1 && clauses.head.size == 1)
       return TrigramIndex.searchCandidates(spark, dir, clauses.head.head, directFloor)
 
-    // member id = (clause index << 16) | member index; bounded well under
-    // 16 bits by plan()'s ClauseCap/ExactCap
+    // (clause index, member keys); a member without a key matches nothing
     val members: Seq[(Int, Array[Long])] = for {
       (clause, ci) <- clauses.zipWithIndex
-      (m, mi) <- clause.toSeq.zipWithIndex
-    } yield ((ci << 16) | mi, vfsidx.tokenize.Tokenizer.triKeys(m).distinct.toArray)
+      m <- clause.toSeq
+      ks = vfsidx.tokenize.Tokenizer.triKeys(m).distinct.toArray
+      if ks.nonEmpty
+    } yield (ci, ks)
 
     val allKeys = members.flatMap(_._2).distinct
-    val segs = TrigramIndex.readSegments(spark, dir)
     // presence probe off segment metadata: a member with ANY key absent from
     // the corpus can never match. Under the small-index floor the probe
     // round-trip costs more than it prunes — skip it and keep every member:
-    // an absent key simply contributes no pairs, so the member never reaches
-    // nk >= req and the clause/doc aggregation below yields the identical
-    // result.
+    // an absent key is in no doc's key set, so the member never matches and
+    // the result is identical.
     val viable =
       if (Postings.direct(Postings.trigramBound(spark, dir, allKeys.size), directFloor)) members
       else {
-        val present = Postings.termMeta(segs, "key", allKeys, withRanges = false).keys
+        val present = Postings.termMeta(TrigramIndex.readSegments(spark, dir), "key", allKeys,
+          withRanges = false).keys
         members.filter(_._2.forall(present.contains))
       }
-    val liveClauses = viable.map(_._1 >> 16).distinct
-    if (liveClauses.size < clauses.size) // some clause wholly absent -> AND empty
-      return spark.emptyDataset[Long].toDF("doc_id")
+    if (viable.map(_._1).distinct.size < clauses.size) // some clause wholly absent -> AND empty
+      return Postings.local(spark, Postings.IdSchema, Nil)
 
-    val keyToMembers: Map[Long, Array[Int]] = viable
-      .flatMap { case (id, ks) => ks.map(_ -> id) }
-      .groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).toArray }
-    val reqKeys: Map[Int, Int] = viable.map { case (id, ks) => id -> ks.length }.toMap
-    val nClauses = clauses.size
-
-    val pairs = segs.as[vfsidx.build.TriSegmentRow]
-      .filter($"key".isin(keyToMembers.keys.toSeq: _*))
-      .flatMap { s =>
-        val ms = keyToMembers(s.key)
-        val out = Array.newBuilder[(Long, Int)]
-        Postings.decodeIds(s, Postings.All) { id =>
-          var j = 0
-          while (j < ms.length) { out += ((id, ms(j))); j += 1 }
-        }
-        out.result()
-      }.toDF("doc_id", "member")
-
-    // (key, doc) is unique per index under normal operation, so count ==
-    // number of the member's keys the doc holds; `>=` (not `===`) keeps a
-    // doc whose pairs were inflated by a duplicated (key, doc) posting
-    // (re-ingest / overlapping generations) — a harmless false positive
-    // the rlike recheck removes, where `===` would silently DROP a true
-    // match (the one defensive gap vs searchCandidates' countDistinct)
-    val reqDf = reqKeys.toSeq.toDF("member", "req")
-    pairs.groupBy($"doc_id", $"member").agg(count(lit(1)).as("nk"))
-      .join(broadcast(reqDf), "member")
-      .filter($"nk" >= $"req")
-      .select($"doc_id", shiftright($"member", 16).as("clause"))
-      .groupBy($"doc_id")
-      .agg(countDistinct($"clause").as("nc"))
-      .filter($"nc" === nClauses)
-      .select($"doc_id")
+    val keys = viable.flatMap(_._2).distinct
+    val index = keys.zipWithIndex.toMap
+    // per clause, the key masks of its members
+    val need: Array[Array[Array[Long]]] = viable.groupBy(_._1).values
+      .map(_.map { case (_, ks) => Postings.mask(keys.size, ks.map(index)) }.toArray).toArray
+    Postings.perDoc(TrigramIndex.segmentScan(spark, dir, keys), keys)
+      .ids(spark, d => need.forall(_.exists(d.holds)))
   }
 
   /** Rows of `docs` whose `strCol` matches `pattern` (unanchored, Java

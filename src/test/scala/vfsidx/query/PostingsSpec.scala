@@ -95,18 +95,18 @@ class PostingsSpec extends SparkTestBase {
     // schemas (no inference job); the presence probe is the pruned
     // clauseCandidates' one extra job
     val expected = Seq(
-      "topKOr pruned" -> 5,
-      "topKOr direct" -> 3,
-      "topKAnd pruned" -> 4,
-      "topKAnd direct" -> 4,
-      "countFirstLastAnd pruned" -> 5,
-      "countFirstLastAnd direct" -> 5,
-      "searchCandidates pruned" -> 4,
-      "searchCandidates direct" -> 3,
-      "nears pruned" -> 10,
-      "nears direct" -> 2,
-      "clauseCandidates pruned" -> 6,
-      "clauseCandidates direct" -> 5)
+      "topKOr pruned" -> 3,
+      "topKOr direct" -> 2,
+      "topKAnd pruned" -> 2,
+      "topKAnd direct" -> 2,
+      "countFirstLastAnd pruned" -> 2,
+      "countFirstLastAnd direct" -> 2,
+      "searchCandidates pruned" -> 2,
+      "searchCandidates direct" -> 1,
+      "nears pruned" -> 5,
+      "nears direct" -> 1,
+      "clauseCandidates pruned" -> 2,
+      "clauseCandidates direct" -> 1)
     assert(got == expected)
   }
 
