@@ -182,41 +182,34 @@ object Main {
       val (triCols, numCols) = vfsidx.corpus.Ingest.registeredCols(spark, dir)
       val segmentsExist = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/segments"))
       var any = false
+      // one generation listing per index; every table and stat it reports
+      // comes from that snapshot, read with the writer's pinned schema
       if (segmentsExist) {
         any = true
-        val gens = IndexBuild.generations(spark, dir)
-        if (gens.isEmpty)
+        val idx = new Bm25Index(spark, dir)
+        if (idx.generations.isEmpty)
           // crash window between a partial write and its _SUCCESS gates —
           // report it like the tri/num branches do, don't stack-trace
           println("word index: no committed generations")
         else {
-          // ONE generation listing; the stats/dict tables are read by
-          // explicit gen dirs rather than via readStatsRaw/readDictRaw,
-          // which would each re-run the listing + _SUCCESS probes
-          val st = spark.read.parquet(gens.map { case (l, h) =>
-              IndexBuild.statsGenDir(dir, l, h) }: _*)
-            .agg(sqlSum("n_docs"), sqlSum("tf_sum")).head()
-          val n = st.getLong(0)
-          val tf = st.getLong(1)
-          println(f"word index: $n docs, avgdl=${if (n == 0) 0.0 else tf.toDouble / n}%.1f, " +
-            s"${gens.size} generation(s) " +
-            gens.map { case (l, h) => s"gen=${l}_$h" }.mkString("[", " ", "]"))
-          spark.read.parquet(gens.map { case (l, h) =>
-              IndexBuild.dictGenDir(dir, l, h) }: _*)
-            .groupBy("term").agg(sqlSum("df").as("df"))
-            .orderBy(desc("df"), asc("term")).limit(topN).collect()
+          println(f"word index: ${idx.stats.n_docs} docs, avgdl=${idx.stats.avgdl}%.1f, " +
+            s"${idx.generations.size} generation(s) " +
+            idx.generations.map { case (l, h) => s"gen=${l}_$h" }.mkString("[", " ", "]"))
+          idx.dictionary.orderBy(desc("df"), asc("term")).limit(topN).collect()
             .foreach(r => println(s"  term=${r.getString(0)} count=${r.getLong(1)}"))
         }
       }
       triCols.foreach { c =>
         any = true
         val d = vfsidx.query.QueryParser.triDir(dir, c)
-        vfsidx.build.TrigramIndex.statsMerged(spark, d) match {
+        val snap = vfsidx.build.TrigramIndex.snapshot(spark, d)
+        snap.stats match {
           case None => println(s"tri/$c: no committed generations")
           case Some(st) =>
             println(s"tri/$c: ${st.n_rows} rows, max_doc_id=${st.max_doc_id}, " +
-              s"${vfsidx.build.TrigramIndex.generations(spark, d).size} generation(s)")
-            vfsidx.build.TrigramIndex.readDictRaw(spark, d)
+              s"${snap.gens.size} generation(s)")
+            snap.read(vfsidx.build.TrigramIndex.dictGenDir(d, _, _),
+                vfsidx.build.TrigramIndex.DictSchema)
               .groupBy("key").agg(sqlSum("df").as("df"))
               .orderBy(desc("df"), asc("key")).limit(topN).collect()
               .foreach(r => println(f"  key=0x${r.getLong(0)}%012x count=${r.getLong(1)}"))
@@ -224,11 +217,11 @@ object Main {
       }
       numCols.foreach { c =>
         any = true
-        vfsidx.build.NumericIndex.stats(spark, dir, c) match {
+        val snap = vfsidx.build.NumericIndex.snapshot(spark, dir, c)
+        snap.stats match {
           case Some(st) =>
-            val gens = vfsidx.build.NumericIndex.generations(spark, dir, c)
             println(s"num/$c: ${st.n_rows} rows, max_doc_id=${st.max_doc_id}, " +
-              s"integral=${st.integral}, ${gens.size} generation(s)")
+              s"integral=${st.integral}, ${snap.gens.size} generation(s)")
           case None => println(s"num/$c: no committed generations")
         }
       }

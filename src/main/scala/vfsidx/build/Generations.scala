@@ -18,32 +18,43 @@ import org.apache.spark.sql.types.StructType
   * commit and its vacuum.
   *
   * An index kind supplies only the facts that differ:
-  *  - `parent`: the dir whose `gen=lo_hi` children are listed;
-  *  - `tables(l, h)`: every table dir a generation must have committed;
-  *  - `slotDir(b)`: batch `b`'s slot dir, whose existence reserves the slot;
+  *  - `segments(l, h)` and `segmentSchema`: the table whose parent dir
+  *    lists the generations (`gen=lo_hi` children) — the word and trigram
+  *    segments, the numeric (value, doc_id) projection;
   *  - `statsDir(l, h)`, `statsSchema` and `statCols`: the generation's
   *    stats table, its schema, and the columns compaction reads from it,
   *    each with its reduction across rows and generations. The FIRST column
   *    is the size measure tiered compaction balances;
+  *  - `merge`: the kind's merged stats over one [[Generations.Snapshot]];
+  *  - `others(l, h)`: every other table dir a generation must have
+  *    committed (the word and trigram dictionaries);
+  *  - `slotDir(b)`: batch `b`'s slot dir, whose existence reserves the slot;
   *  - `onList`: a check run on every survivor listing (the word index's
   *    format gate).
   * The kind's seal step (its buildGeneration over a fold window, given the
   * window's reduced stats) is passed per compaction call, because it
   * carries that call's build config. */
-private[build] final class Generations(
-    spark: SparkSession,
-    parent: String,
-    tables: (Int, Int) => Seq[String],
-    slotDir: Int => String,
-    statsDir: (Int, Int) => String,
-    statsSchema: StructType,
+private[build] final class Generations[S](
+    val spark: SparkSession,
+    val segments: (Int, Int) => String,
+    val segmentSchema: StructType,
+    val statsDir: (Int, Int) => String,
+    val statsSchema: StructType,
     statCols: Seq[(String, Generations.Reduce)],
+    val merge: Generations.Snapshot[S] => S,
+    others: (Int, Int) => Seq[String],
+    slotDir: Int => String,
     onList: Seq[(Int, Int)] => Unit) {
 
   import Generations._
   import IndexBuild.TableIO
 
   private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  val parent: String = new Path(segments(0, 0)).getParent.toString
+
+  private def tables(l: Int, h: Int): Seq[String] =
+    segments(l, h) +: others(l, h) :+ statsDir(l, h)
 
   /** Has every table of generation (l, h) committed? */
   def isCommitted(l: Int, h: Int): Boolean = tables(l, h).forall(TableIO.done(spark, _))
@@ -67,23 +78,19 @@ private[build] final class Generations(
     gens
   }
 
-  /** One table read across the survivor generations (explicit leaf dirs,
-    * so no partition column is inferred); loud when none is committed. The
-    * writer's `schema` is pinned, so no read pays a footer-merging
-    * schema-inference job; it must match the writer in names, types and
-    * order (PinnedSchemaSpec checks every table against a fresh build). */
-  def read(table: (Int, Int) => String, schema: StructType): DataFrame = {
-    val gens = generations
-    require(gens.nonEmpty, s"no completed generations under $parent")
-    spark.read.schema(schema).parquet(gens.map { case (l, h) => table(l, h) }: _*)
-  }
+  /** The survivor generations, listed ONCE, as the one view every table
+    * and stat of a read comes from ([[Generations.Snapshot]]). */
+  def snapshot: Snapshot[S] = new Snapshot(this, generations)
 
   /** Delete RETIRED generation directories — the Iceberg/Delta
     * expire-snapshots pattern: compaction only COMMITS the combined
-    * generation; reclaiming happens later, after a grace period longer than
-    * any running query, so in-flight readers that planned their scans
-    * before the compaction commit keep their files. Returns the number
-    * reclaimed. */
+    * generation; reclaiming happens later, so in-flight readers that took
+    * their [[Generations.Snapshot]] before the compaction commit keep their
+    * files. The grace is not a time bound: the refresh, regist and stream
+    * policies fold with reclaim deferred and vacuum at the start of their
+    * NEXT run, so a reader is safe for one refresh, regist or stream epoch;
+    * a snapshot held across two fails loudly (a missing file). Returns the
+    * number reclaimed. */
   def vacuum: Int = {
     val all = committed
     val retired = all.filter(isRetired(all, _))
@@ -230,7 +237,50 @@ private[build] final class Generations(
   }
 }
 
-private[build] object Generations {
+private[vfsidx] object Generations {
+
+  /** One listing of an index's committed survivor generations and every
+    * read a query or index object makes from it: each table is read across
+    * exactly `gens` (explicit leaf dirs, so no partition column is
+    * inferred), memoised per table, and the kind's merged `stats` are
+    * computed once. Generation dirs never change once committed, so every
+    * read from one snapshot agrees with every other — whatever commits,
+    * folds or (within the grace, [[Generations.vacuum]]) vacuums run
+    * meanwhile. Take a new snapshot to see later commits. Reads are loud
+    * when no generation is committed. The writer's `schema` is pinned, so
+    * no read pays a footer-merging schema-inference job; it must match the
+    * writer in names, types and order (PinnedSchemaSpec checks every table
+    * against a fresh build). */
+  final class Snapshot[S] private[build] (g: Generations[S], val gens: Seq[(Int, Int)]) {
+    private val tables = scala.collection.mutable.Map.empty[Seq[String], DataFrame]
+
+    def spark: SparkSession = g.spark
+
+    private def dirs(table: (Int, Int) => String): Seq[String] = gens.map(table.tupled)
+
+    def read(table: (Int, Int) => String, schema: StructType): DataFrame = synchronized {
+      tables.getOrElseUpdate(dirs(table), {
+        require(gens.nonEmpty, s"no completed generations under ${g.parent}")
+        spark.read.schema(schema).parquet(dirs(table): _*)
+      })
+    }
+
+    /** The table the generations are listed by. */
+    def segments: DataFrame = read(g.segments, g.segmentSchema)
+
+    /** The per-generation stats rows, unmerged. */
+    def statsRows: DataFrame = read(g.statsDir, g.statsSchema)
+
+    /** `compute` (a merge of [[statsRows]]) through a stats cache, None
+      * for no generations ([[IndexBuild.StatsCache]]: its token is the
+      * listing of this snapshot's stats dirs). */
+    def cached[T](cache: IndexBuild.StatsCache[T])(compute: => T): Option[T] =
+      if (gens.isEmpty) None
+      else Some(cache.getOrCompute(spark, g.parent, dirs(g.statsDir))(compute))
+
+    /** The kind's stats merged across `gens`. */
+    lazy val stats: S = g.merge(this)
+  }
 
   /** How a stat column combines across rows and generations. */
   type Reduce = (Long, Long) => Long

@@ -158,15 +158,21 @@ object IndexBuild {
       "tf_sum BIGINT, bytes BINARY")
 
   /** The word index's generation lifecycle ([[Generations]]): generations
-    * list under `segments`, the runs batch dirs are the slots, and the
-    * stats columns n_docs / tf_sum are additive. Listing runs the format
-    * gate ([[assertSegmentFormat]]). */
-  private def lifecycle(spark: SparkSession, dir: String) = new Generations(spark,
-    s"$dir/segments",
-    (l, h) => Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
-    runsDir(dir, _), statsGenDir(dir, _, _), StatsSchema,
+    * list under `segments`, the runs batch dirs are the slots, the stats
+    * columns n_docs / tf_sum are additive, and a snapshot's stats are its
+    * per-generation rows (BM25 needs each generation's avgdl). Listing runs
+    * the format gate ([[assertSegmentFormat]]). */
+  private def lifecycle(spark: SparkSession, dir: String) = new Generations[Array[CorpusStats]](
+    spark, segmentsGenDir(dir, _, _), SegmentSchema, statsGenDir(dir, _, _), StatsSchema,
     Seq("n_docs" -> Generations.Sum, "tf_sum" -> Generations.Sum),
-    assertSegmentFormat(spark, dir, _))
+    _.statsRows.as(Encoders.product[CorpusStats]).collect(),
+    (l, h) => Seq(dictGenDir(dir, l, h)), runsDir(dir, _), assertSegmentFormat(spark, dir, _))
+
+  /** One listing of the word index's generations, every read of one
+    * [[vfsidx.query.Bm25Index]] or CLI report comes from. */
+  private[vfsidx] def snapshot(spark: SparkSession, dir: String): Snapshot =
+    lifecycle(spark, dir).snapshot
+  private[vfsidx] type Snapshot = Generations.Snapshot[Array[CorpusStats]]
 
   /** Fold seal: rebuild the derived tables from exactly the window's runs
     * (the runs are the decoded postings — reading them back is the
@@ -195,24 +201,21 @@ object IndexBuild {
   private[vfsidx] final class StatsCache[T] {
     private val cache =
       new java.util.concurrent.ConcurrentHashMap[String, (String, T)]()
-    /** Validity token over the given stats-table dirs. */
-    def token(spark: SparkSession, dirs: Seq[String]): String = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      dirs.map { d =>
+    /** The entry for `key`, valid while the listings of `dirs` are. */
+    def getOrCompute(spark: SparkSession, key: String, dirs: Seq[String])(compute: => T): T = {
+      val tok = dirs.map { d =>
         val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(conf)
-        fs.listStatus(p)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
           .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
           .sorted.mkString(d + "[", ",", "]")
       }.mkString(",")
-    }
-    def getOrCompute(key: String, tok: String)(compute: => T): T =
       Option(cache.get(key)).collect { case (t, v) if t == tok => v }
         .getOrElse {
           val v = compute
           cache.put(key, (tok, v))
           v
         }
+    }
   }
 
   /** dir → gen names whose format has been verified, per JVM: each
@@ -311,20 +314,8 @@ object IndexBuild {
   def docCount(spark: SparkSession, dir: String): Long =
     readDocStats(spark, dir).map(_.count()).getOrElse(0L)
 
-  /** All segment rows across generations (explicit leaf dirs — no partition
-    * column is inferred, so the frame stays encodable as [[SegmentRow]]). */
-  def readSegments(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _), SegmentSchema)
-
-  /** Raw per-generation dictionary rows (term, df, tf_sum) — callers sum. */
-  def readDictRaw(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(dictGenDir(dir, _, _), DictSchema)
-
-  /** Per-generation corpus stats rows (additive n_docs / tf_sum). */
-  def readStatsRaw(spark: SparkSession, dir: String): Dataset[CorpusStats] = {
-    import spark.implicits._
-    lifecycle(spark, dir).read(statsGenDir(dir, _, _), StatsSchema).as[CorpusStats]
-  }
+  /** All segment rows across one snapshot's generations. */
+  def readSegments(spark: SparkSession, dir: String): DataFrame = snapshot(spark, dir).segments
 
   /** Row count WITHOUT a Spark job when the dataset is a file-source scan
     * over parquet under nothing but projections (`drop`, `select`,

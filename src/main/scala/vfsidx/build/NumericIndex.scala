@@ -66,11 +66,17 @@ object NumericIndex {
     * no runs stage, so its data gen dirs list the generations AND serve as
     * the slots; the stats fold as Σ n_rows / all integral. */
   private def lifecycle(spark: SparkSession, root: String, column: String) =
-    new Generations(spark, s"${colDir(root, column)}/data",
-      (l, h) => Seq(dataGenDir(root, column, l, h), statsGenDir(root, column, l, h)),
-      b => dataGenDir(root, column, b, b), statsGenDir(root, column, _, _), StatsSchema,
-      Seq("n_rows" -> Generations.Sum, "integral" -> Generations.All),
-      _ => ())
+    new Generations[Option[NumStats]](spark, dataGenDir(root, column, _, _), DataSchema,
+      statsGenDir(root, column, _, _), StatsSchema,
+      Seq("n_rows" -> Generations.Sum, "integral" -> Generations.All), mergeStats,
+      (_, _) => Nil, b => dataGenDir(root, column, b, b), _ => ())
+
+  /** One listing of the column's generations: the data a lookup filters
+    * and the stats (integrality, sketch, watermark) it plans with come
+    * from the same generations. */
+  private[vfsidx] def snapshot(spark: SparkSession, root: String, column: String): Snapshot =
+    lifecycle(spark, root, column).snapshot
+  private[vfsidx] type Snapshot = Generations.Snapshot[Option[NumStats]]
 
   /** Fold seal: re-range-partition the union of the window's projections
     * into one generation (integral only if every input was). */
@@ -89,9 +95,6 @@ object NumericIndex {
   /** Reclaim retired generations ([[Generations.vacuum]]); returns the count. */
   def vacuum(spark: SparkSession, root: String, column: String): Int =
     lifecycle(spark, root, column).vacuum
-
-  def exists(spark: SparkSession, root: String, column: String): Boolean =
-    generations(spark, root, column).nonEmpty
 
   /** Highest generation slot present on disk (committed or reserved), -1
     * for none; [[reserveSlot]] mkdirs a data gen dir before it is durably
@@ -114,7 +117,7 @@ object NumericIndex {
     * [[ingestBatch]] for new rows instead. */
   def build(spark: SparkSession, df: DataFrame, idCol: String, numCol: String,
             root: String, numBuckets: Int = 32): Unit =
-    if (!exists(spark, root, numCol))
+    if (generations(spark, root, numCol).isEmpty)
       buildGeneration(spark,
         df.select(col(numCol).cast("long").as("value"), col(idCol).cast("long").as("doc_id")),
         isIntegral(df.schema(numCol).dataType), root, numCol, 0, 0, numBuckets,
@@ -200,20 +203,17 @@ object NumericIndex {
     * n_rows and max_doc_id merge additively/by max; quantile sketches merge
     * by n_rows-weighted pooling (an ESTIMATE — only the index-vs-scan gate
     * consumes it); `integral` must hold for every generation. */
-  def stats(spark: SparkSession, root: String, column: String): Option[NumStats] = {
-    import spark.implicits._
-    val gens = generations(spark, root, column)
-    if (gens.isEmpty) return None
-    val dirs = gens.map { case (l, h) => statsGenDir(root, column, l, h) }
-    val key = colDir(root, column)
-    Some(statsCache.getOrCompute(key, statsCache.token(spark, dirs)) {
-      val rows = spark.read.schema(StatsSchema).parquet(dirs: _*).as[NumStats].collect()
-      NumStats(
-        rows.map(_.n_rows).sum,
-        rows.forall(_.integral),
-        mergeQuantiles(rows.map(r => (r.n_rows, r.quantiles)).toSeq),
-        if (rows.isEmpty) -1L else rows.map(_.max_doc_id).max)
-    })
+  def stats(spark: SparkSession, root: String, column: String): Option[NumStats] =
+    snapshot(spark, root, column).stats
+
+  /** [[stats]] of one snapshot. */
+  private def mergeStats(snap: Snapshot): Option[NumStats] = snap.cached(statsCache) {
+    val rows = snap.statsRows.as(Encoders.product[NumStats]).collect()
+    NumStats(
+      rows.map(_.n_rows).sum,
+      rows.forall(_.integral),
+      mergeQuantiles(rows.map(r => (r.n_rows, r.quantiles)).toSeq),
+      if (rows.isEmpty) -1L else rows.map(_.max_doc_id).max)
   }
 
   /** n-weighted pooling of per-generation equi-probability sketches into
@@ -244,14 +244,15 @@ object NumericIndex {
     math.min(1.0, inside.toDouble / st.quantiles.length + 2.0 / st.quantiles.length)
   }
 
-  private def read(spark: SparkSession, root: String, column: String): DataFrame =
-    lifecycle(spark, root, column).read(dataGenDir(root, column, _, _), DataSchema)
-
   /** doc_ids with value == v (reference P2 as an index lookup). Exact even
     * for fractional sources: only x == v.0 truncates to v AND satisfies the
     * re-applied equality. */
   def point(spark: SparkSession, root: String, column: String, v: Long): DataFrame =
-    read(spark, root, column).filter(col("value") === v).select(col("doc_id"))
+    point(snapshot(spark, root, column), v)
+
+  /** [[point]] over one snapshot. */
+  private[vfsidx] def point(snap: Snapshot, v: Long): DataFrame =
+    snap.segments.filter(col("value") === v).select(col("doc_id"))
 
   /** CANDIDATE doc_ids with value in [lo, hi) / (lo, hi] etc. —
     * strict/inclusive per flag (reference P4; its all-inclusive bug
@@ -265,19 +266,25 @@ object NumericIndex {
     * trunc(x) >= v and x < v implies trunc(x) <= v — and callers
     * (QueryParser.queryIndexed) re-apply the exact predicate on the
     * original column, restoring row-identical results. Integral sources
-    * keep the exact strict walk. */
+    * keep the exact strict walk. Integrality comes from the same snapshot
+    * as the data it filters: a fractional generation committed meanwhile
+    * is in neither. */
   def range(spark: SparkSession, root: String, column: String,
             lo: Option[Long], hi: Option[Long],
-            loInclusive: Boolean = true, hiInclusive: Boolean = false): DataFrame = {
-    // UNKNOWN integrality (stats table absent — e.g. mid-resume) must widen:
-    // staying strict on a fractional source silently DROPS boundary rows,
-    // while widening only admits candidates the re-applied predicate filters
-    val integral = stats(spark, root, column).exists(_.integral)
-    var d = read(spark, root, column)
-    lo.foreach(v => d = d.filter(
-      if (loInclusive || !integral) col("value") >= v else col("value") > v))
-    hi.foreach(v => d = d.filter(
-      if (hiInclusive || !integral) col("value") <= v else col("value") < v))
-    d.select(col("doc_id"))
+            loInclusive: Boolean = true, hiInclusive: Boolean = false): DataFrame =
+    range(snapshot(spark, root, column), lo, hi, loInclusive, hiInclusive)
+
+  /** [[range]] over one snapshot. */
+  private[vfsidx] def range(snap: Snapshot, lo: Option[Long], hi: Option[Long],
+                            loInclusive: Boolean, hiInclusive: Boolean): DataFrame = {
+    // UNKNOWN integrality (no stats) must widen: staying strict on a
+    // fractional source silently DROPS boundary rows, while widening only
+    // admits candidates the re-applied predicate filters
+    val integral = snap.stats.exists(_.integral)
+    val withLo = lo.foldLeft(snap.segments)((d, v) =>
+      d.filter(if (loInclusive || !integral) col("value") >= v else col("value") > v))
+    hi.foldLeft(withLo)((d, v) =>
+      d.filter(if (hiInclusive || !integral) col("value") <= v else col("value") < v))
+      .select(col("doc_id"))
   }
 }

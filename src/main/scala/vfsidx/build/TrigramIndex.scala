@@ -106,12 +106,16 @@ object TrigramIndex {
   /** The trigram index's generation lifecycle ([[Generations]]):
     * generations list under `tri_segments`, the tri_runs batch dirs are
     * the slots, and the stats fold as Σ n_rows / max max_doc_id. */
-  private def lifecycle(spark: SparkSession, dir: String) = new Generations(spark,
-    s"$dir/tri_segments",
-    (l, h) => Seq(segmentsGenDir(dir, l, h), dictGenDir(dir, l, h), statsGenDir(dir, l, h)),
-    runsBatchDir(dir, _), statsGenDir(dir, _, _), StatsSchema,
-    Seq("n_rows" -> Generations.Sum, "max_doc_id" -> Generations.Max),
-    _ => ())
+  private def lifecycle(spark: SparkSession, dir: String) = new Generations[Option[TriStats]](
+    spark, segmentsGenDir(dir, _, _), SegmentSchema, statsGenDir(dir, _, _), StatsSchema,
+    Seq("n_rows" -> Generations.Sum, "max_doc_id" -> Generations.Max), mergeStats,
+    (l, h) => Seq(dictGenDir(dir, l, h)), runsBatchDir(dir, _), _ => ())
+
+  /** One listing of the trigram index's generations: every table, stat
+    * and cost-gate bound of one query comes from it. */
+  private[vfsidx] def snapshot(spark: SparkSession, dir: String): Snapshot =
+    lifecycle(spark, dir).snapshot
+  private[vfsidx] type Snapshot = Generations.Snapshot[Option[TriStats]]
 
   /** Fold seal: re-shuffle exactly the window's runs into one generation
     * carrying the window's (Σ n_rows, max max_doc_id). */
@@ -132,23 +136,16 @@ object TrigramIndex {
     * via the stats tables' file listings). */
   private val statsCache = new IndexBuild.StatsCache[TriStats]
 
-  /** Merged per-generation stats; None while no generation is committed. */
-  def statsMerged(spark: SparkSession, dir: String): Option[TriStats] = {
-    import spark.implicits._
-    val gens = generations(spark, dir)
-    if (gens.isEmpty) return None
-    val dirs = gens.map { case (l, h) => statsGenDir(dir, l, h) }
-    Some(statsCache.getOrCompute(dir, statsCache.token(spark, dirs)) {
-      val rows = spark.read.schema(StatsSchema).parquet(dirs: _*).as[TriStats].collect()
-      TriStats(rows.map(_.n_rows).sum,
-        if (rows.isEmpty) -1L else rows.map(_.max_doc_id).max)
-    })
+  /** A snapshot's merged per-generation stats; None while no generation is
+    * committed. */
+  private def mergeStats(snap: Snapshot): Option[TriStats] = snap.cached(statsCache) {
+    val rows = snap.statsRows.as(Encoders.product[TriStats]).collect()
+    TriStats(rows.map(_.n_rows).sum, if (rows.isEmpty) -1L else rows.map(_.max_doc_id).max)
   }
 
-  /** Highest doc id any committed generation has indexed — the staleness
-    * watermark ([[TriStats]]); None when the index has no generations. */
-  def coveredMaxDocId(spark: SparkSession, dir: String): Option[Long] =
-    statsMerged(spark, dir).map(_.max_doc_id)
+  /** Merged per-generation stats; None while no generation is committed. */
+  def statsMerged(spark: SparkSession, dir: String): Option[TriStats] =
+    snapshot(spark, dir).stats
 
   /** Committed, non-retired generations, sorted ([[Generations]]). */
   def generations(spark: SparkSession, dir: String): Seq[(Int, Int)] =
@@ -156,16 +153,6 @@ object TrigramIndex {
 
   /** Reclaim retired generations ([[Generations.vacuum]]); returns the count. */
   def vacuum(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).vacuum
-
-  def readSegments(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(segmentsGenDir(dir, _, _), SegmentSchema)
-
-  /** Raw per-generation dictionary rows (key, df) — df is additive. */
-  def readDictRaw(spark: SparkSession, dir: String): DataFrame =
-    lifecycle(spark, dir).read(dictGenDir(dir, _, _), DictSchema)
-
-  def exists(spark: SparkSession, dir: String): Boolean =
-    generations(spark, dir).nonEmpty
 
   /** SPIMI chunk runs for one docs slice — stage-1 unit. Tokenizes straight
     * into per-partition partial posting lists (the raw (key, doc_id) pairs
@@ -413,7 +400,7 @@ object TrigramIndex {
   /** The segment scan of `keys` that the trigram queries decode
     * ([[Postings.scan]]). */
   def segmentScan(spark: SparkSession, dir: String, keys: Seq[Long]): DataFrame =
-    Postings.scan(readSegments(spark, dir), "key", keys)
+    Postings.scan(snapshot(spark, dir).segments, "key", keys)
 
   /** Candidate doc_ids containing ALL trigram keys of `needle` — the
     * reference's AND-intersection semantics (J1). Returns a one-column
@@ -426,17 +413,23 @@ object TrigramIndex {
     * lists; under it every pruned-scan block decodes and an absent key
     * simply leaves every doc's key set short. */
   def searchCandidates(spark: SparkSession, dir: String, needle: String,
-                       directFloor: Long = SearchDirectFloor): DataFrame = {
+                       directFloor: Long = SearchDirectFloor): DataFrame =
+    searchCandidates(snapshot(spark, dir), needle, directFloor)
+
+  /** [[searchCandidates]] over one snapshot. */
+  private[vfsidx] def searchCandidates(snap: Snapshot, needle: String,
+                                       directFloor: Long): DataFrame = {
+    val spark = snap.spark
     val keys = Tokenizer.triKeys(needle).distinct
     val all = Postings.mask(keys.size, keys.indices)
     def intersect(docs: Postings.PerDoc) = docs.ids(spark, _.holds(all))
     if (keys.isEmpty) return Postings.local(spark, Postings.IdSchema, Nil)
-    val scan = segmentScan(spark, dir, keys)
-    if (Postings.direct(Postings.trigramBound(spark, dir, keys.size), directFloor))
+    val scan = Postings.scan(snap.segments, "key", keys)
+    if (Postings.direct(Postings.trigramBound(snap, keys.size), directFloor))
       return intersect(Postings.perDoc(scan, keys))
 
     // df and block ranges per key off segment metadata, in one job
-    val meta = Postings.termMeta(readSegments(spark, dir), "key", keys)
+    val meta = Postings.termMeta(snap.segments, "key", keys)
     if (meta.keys.size < keys.size)   // some trigram nowhere in the corpus -> AND empty
       return Postings.local(spark, Postings.IdSchema, Nil)
     val rarest = keys.minBy(meta.df)
@@ -527,20 +520,26 @@ object TrigramIndex {
   def nears(spark: SparkSession, dir: String, needle: String, k: Int,
             prunedFloor: Long = Postings.DirectFloor,
             candidateCap: Int = NearsCandidateCap,
-            maxIters: Int = NearsMaxIters): DataFrame = {
+            maxIters: Int = NearsMaxIters): DataFrame =
+    nears(snapshot(spark, dir), needle, k, prunedFloor, candidateCap, maxIters)
+
+  /** [[nears]] over one snapshot: every partials job reads its segments. */
+  private[vfsidx] def nears(snap: Snapshot, needle: String, k: Int, prunedFloor: Long,
+                            candidateCap: Int, maxIters: Int): DataFrame = {
+    val spark = snap.spark
     def overlaps(rows: Seq[(Long, Long)]): DataFrame = Postings.local(spark,
       Postings.OverlapSchema, rows.map { case (d, o) => Row(d, o) })
     def partials(ks: Seq[Long]): Postings.PerDoc =
-      Postings.perDoc(segmentScan(spark, dir, ks), ks)
+      Postings.perDoc(Postings.scan(snap.segments, "key", ks), ks)
     def topK(docs: Postings.PerDoc): Array[(Long, Long)] =
       docs.topK(k, _ => true, _.keys.toDouble).map { case (d, o) => (d, o.toLong) }
     val keys = Tokenizer.triKeys(needle).distinct
     if (keys.isEmpty) return overlaps(Nil)
-    if (Postings.direct(Postings.trigramBound(spark, dir, keys.size), prunedFloor))
+    if (Postings.direct(Postings.trigramBound(snap, keys.size), prunedFloor))
       return overlaps(topK(partials(keys)))
     // df per present key off segment METADATA (postings bytes never read
     // here)
-    val dfs = Postings.termMeta(readSegments(spark, dir), "key", keys, withRanges = false).df
+    val dfs = Postings.termMeta(snap.segments, "key", keys, withRanges = false).df
     val ranked = keys.filter(dfs.contains).sortBy(dfs)
     val kTotal = ranked.size
     if (kTotal == 0) return overlaps(Nil)
@@ -572,7 +571,7 @@ object TrigramIndex {
     val cRows = part.collect(_.keys >= bound, candidateCap, _.keys.toLong)
       .getOrElse(return overlaps(topK(partials(ranked))))  // fallback: full decode
     val cIds = cRows.map(_._1).sorted
-    val hits = Postings.perDoc(segmentScan(spark, dir, common), common,
+    val hits = Postings.perDoc(Postings.scan(snap.segments, "key", common), common,
       within = Some(spark.sparkContext.broadcast(cIds)))
       .collect(_ => true, cIds.length, _.keys.toLong).get.toMap
     overlaps(Postings.top(k, cRows.map { case (d, o) => (d, (o + hits.getOrElse(d, 0L)).toDouble) })

@@ -46,6 +46,13 @@ final case class Hit(doc_id: Long, score: Double)
   * terms (the doc's term bitmask is full) — plus block-range skipping: the
   * rarest term's block [first,last] doc ranges ship with the tasks and the
   * other terms skip decoding blocks that cannot intersect them.
+  *
+  * An object answers as of its FIRST use: its segments, dictionary, corpus
+  * stats and pruning bounds all come from one generation listing
+  * ([[IndexBuild.snapshot]]) taken then, so they always agree with each
+  * other whatever commits meanwhile. To see later commits, create a new
+  * object. An object outliving the vacuum grace of the generations it
+  * listed fails loudly ([[vfsidx.build.Generations.vacuum]]).
   */
 class Bm25Index(spark: SparkSession, dir: String,
                 mergeOnSearch: Option[IndexBuild.BuildConfig] = None,
@@ -60,19 +67,21 @@ class Bm25Index(spark: SparkSession, dir: String,
   // files; the next maintenance pass vacuums).
   mergeOnSearch.foreach(cfg => IndexBuild.compactTiered(spark, dir, cfg, reclaim = false))
 
-  lazy val segments: Dataset[SegmentRow] =
-    IndexBuild.readSegments(spark, dir).as[SegmentRow]
+  // the one generation listing of this object (after the fold above); its
+  // stats are the per-generation build stats rows
+  private lazy val snap = IndexBuild.snapshot(spark, dir)
 
-  /** Per-generation build stats (one tiny parquet read across all gens). */
-  private lazy val genStats: Array[CorpusStats] =
-    IndexBuild.readStatsRaw(spark, dir).collect()
+  /** The generations this object reads. */
+  def generations: Seq[(Int, Int)] = snap.gens
+
+  lazy val segments: Dataset[SegmentRow] = snap.segments.as[SegmentRow]
 
   /** Global corpus stats: n_docs and tf_sum are additive across generations
     * (a doc lives in exactly one), avgdl derives from their sums — identical
     * to a fresh single-generation build over the whole corpus. */
   lazy val stats: CorpusStats = {
-    val n = genStats.map(_.n_docs).sum
-    val tf = genStats.map(_.tf_sum).sum
+    val n = snap.stats.map(_.n_docs).sum
+    val tf = snap.stats.map(_.tf_sum).sum
     CorpusStats(n, tf, if (n == 0) 0.0 else tf.toDouble / n)
   }
 
@@ -87,7 +96,7 @@ class Bm25Index(spark: SparkSession, dir: String,
     * drift from incremental ingest. */
   private lazy val ubCorrection: Double = {
     val a1 = stats.avgdl
-    val fs = genStats.filter(_.avgdl > 0.0).map(s => math.max(1.0, a1 / s.avgdl))
+    val fs = snap.stats.filter(_.avgdl > 0.0).map(s => math.max(1.0, a1 / s.avgdl))
     if (fs.isEmpty) 1.0 else fs.max
   }
 
@@ -96,7 +105,7 @@ class Bm25Index(spark: SparkSession, dir: String,
     * idf would be stale the moment the corpus grows). */
   lazy val dictionary: DataFrame = {
     val n = stats.n_docs.toDouble
-    IndexBuild.readDictRaw(spark, dir)
+    snap.read(IndexBuild.dictGenDir(dir, _, _), IndexBuild.DictSchema)
       .groupBy($"term").agg(sum($"df").as("df"), sum($"tf_sum").as("tf_sum"))
       .select($"term", $"df", $"tf_sum",
         log((lit(n) - $"df" + 0.5) / ($"df" + 0.5) + 1.0).as("idf"))

@@ -62,10 +62,10 @@ object Postings {
   private[vfsidx] def direct(postings: Long, floor: Long): Boolean = postings <= floor
 
   /** Zero-job postings bound for `nKeys` trigram keys: |keys| × n_rows off
-    * the token-validated stats cache; Long.MaxValue (never direct) for an
-    * index without stats. */
-  private[vfsidx] def trigramBound(spark: SparkSession, dir: String, nKeys: Int): Long =
-    TrigramIndex.statsMerged(spark, dir).fold(Long.MaxValue)(nKeys.toLong * _.n_rows)
+    * the snapshot's stats (token-validated cache); Long.MaxValue (never
+    * direct) for an index without stats. */
+  private[vfsidx] def trigramBound(snap: TrigramIndex.Snapshot, nKeys: Int): Long =
+    snap.stats.fold(Long.MaxValue)(nKeys.toLong * _.n_rows)
 
   /** One key's segment metadata, reduced over its (generation, shard) rows
     * by [[termMeta]] (in each task, then across tasks on the driver):

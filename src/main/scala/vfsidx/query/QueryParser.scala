@@ -355,7 +355,8 @@ object QueryParser {
   /** Numeric-index conjuncts estimated to match more than this fraction of
     * the table are executed as scan predicates instead: a semi-join against
     * 90% of the row ids costs a full shuffle and saves nothing. The estimate
-    * comes from the index's PERSISTED quantile sketch ([[NumericIndex.stats]])
+    * comes from the index's PERSISTED quantile sketch (the column snapshot's
+    * stats, [[NumericIndex.stats]])
     * — zero query-time counting jobs. Stats commit with every generation,
     * so a consulted index always has them; a crash-windowed generation
     * missing its stats is simply not committed (not consulted at all). */
@@ -402,24 +403,29 @@ object QueryParser {
         // dirs keep the key stable across refreshes of the same table.
         val key = parents.mkString(",") + "#" + idCol + "#" +
           df.queryExecution.analyzed.semanticHash()
-        cache.getOrCompute(key, cache.token(df.sparkSession, parents))(compute())
+        cache.getOrCompute(df.sparkSession, key, parents)(compute())
       }
     }
   }
 
-  /** Per-[[queryIndexed]]-call memo. DNF distribution repeats the same
-    * conjunct in many groups (`s && (a || b)` puts `s` in both); memoizing
-    * here means each distinct candidate set is PLANNED once, each column's
-    * freshness is checked once (one round of generation-listing filesystem
-    * calls instead of one per conjunct per group — on an object store
-    * that's the difference between 2 and ~2×groups×conjuncts metadata
-    * round-trips), and the staleness warning prints once per column. */
-  private final class QueryMemo(val spark: SparkSession, val indexRoot: String,
+  /** Per-[[queryIndexed]]-call memo. It holds ONE generation snapshot per
+    * indexed column ([[TrigramIndex.snapshot]], [[NumericIndex.snapshot]]),
+    * taken on the column's first use: its freshness check, its numeric
+    * selectivity estimate and every candidate set planned on it read that
+    * snapshot's stats and tables, so one call lists each column's
+    * generations once and never mixes generation sets. DNF distribution
+    * repeats the same conjunct in many groups (`s && (a || b)` puts `s` in
+    * both); memoizing here also means each distinct candidate set is
+    * PLANNED once, each column's freshness is checked once, and the
+    * staleness warning prints once per column. A merge-on-search fold
+    * replaces its column's snapshot ([[foldTri]], [[foldNum]]) before any
+    * candidate is built. */
+  private final class QueryMemo(val spark: SparkSession, indexRoot: String,
                                 tableWatermark: () => Option[(Long, Long)]) {
     private val cand = scala.collection.mutable.Map.empty[CandKey, DataFrame]
     private val freshM = scala.collection.mutable.Map.empty[String, Boolean]
-    private val numStatsM =
-      scala.collection.mutable.Map.empty[String, Option[vfsidx.build.NumStats]]
+    private val triM = scala.collection.mutable.Map.empty[String, TrigramIndex.Snapshot]
+    private val numM = scala.collection.mutable.Map.empty[String, NumericIndex.Snapshot]
 
     /** A LAZY handle: the candidate DataFrame is built (and memoized) only
       * when the thunk is forced. Keys alone drive the hoisting decision, so
@@ -429,8 +435,22 @@ object QueryParser {
     def candidate(key: CandKey)(build: => DataFrame): (CandKey, () => DataFrame) =
       key -> (() => cand.getOrElseUpdate(key, build))
 
-    def numStats(c: String): Option[vfsidx.build.NumStats] =
-      numStatsM.getOrElseUpdate(c, NumericIndex.stats(spark, indexRoot, c))
+    def tri(c: String): TrigramIndex.Snapshot =
+      triM.getOrElseUpdate(c, TrigramIndex.snapshot(spark, triDir(indexRoot, c)))
+    def num(c: String): NumericIndex.Snapshot =
+      numM.getOrElseUpdate(c, NumericIndex.snapshot(spark, indexRoot, c))
+
+    /** Merge-on-search: one bounded tiered fold of column `c`'s index
+      * (the trigram config's policy bounds; numeric folds keep their own
+      * bucket layout, as buildIndexes does). A fold re-lists the column,
+      * so candidates built later read the post-fold generations; it keeps
+      * n_rows, the max id and integrality, so the freshness and selectivity
+      * decisions already taken on the old snapshot stay valid. */
+    def foldTri(c: String, cfg: TrigramIndex.TriConfig): Unit =
+      if (TrigramIndex.compactTiered(spark, triDir(indexRoot, c), cfg, reclaim = false)) triM -= c
+    def foldNum(c: String, cfg: TrigramIndex.TriConfig): Unit =
+      if (NumericIndex.compactTiered(spark, indexRoot, c, maxGenerations = cfg.maxGenerations,
+          tierFanout = cfg.tierFanout, reclaim = false, maxFoldDocs = cfg.maxFoldDocs)) numM -= c
 
     // STALENESS GUARD: an index that covers fewer rows than the table, or
     // whose max-doc-id watermark is below the table's max id, has rows it
@@ -462,7 +482,7 @@ object QueryParser {
     * re-applied by [[queryIndexed]]. */
   private def groupCandidates(exprs: Seq[Expr],
                               memo: QueryMemo): Option[Seq[(CandKey, () => DataFrame)]] = {
-    import memo.{spark, indexRoot}
+    import memo.spark
     // string equality shares the reference's containment semantics
     // (search_cond.go:728-791), so it consults the same trigram index;
     // the re-applied predicate keeps it exact either way
@@ -472,13 +492,12 @@ object QueryParser {
     // predicate alone keeps queryIndexed row-identical to query() (same
     // rule as TrigramIndex.searchExact's full-scan bypass)
     def freshTri(c: String): Boolean =
-      memo.fresh(s"tri/$c", TrigramIndex.statsMerged(spark, triDir(indexRoot, c))
-        .map(st => (st.n_rows, st.max_doc_id)))
+      memo.fresh(s"tri/$c", memo.tri(c).stats.map(st => (st.n_rows, st.max_doc_id)))
     def indexable(c: String, s: String): Boolean =
       Tokenizer.triKeys(s).nonEmpty && TrigramIndex.wellFormedUtf16(s) && freshTri(c)
     def candidates(c: String, s: String): (CandKey, () => DataFrame) =
       memo.candidate(CandKey("tri", c, s))(
-        TrigramIndex.searchCandidates(spark, triDir(indexRoot, c), s))
+        TrigramIndex.searchCandidates(memo.tri(c), s, TrigramIndex.SearchDirectFloor))
     val searchSets: Seq[(CandKey, () => DataFrame)] = exprs.flatMap {
       case Search(c, s) if indexable(c, s) => Some(candidates(c, s))
       case Cmp(c, "==", Right(s)) if indexable(c, s) => Some(candidates(c, s))
@@ -488,7 +507,7 @@ object QueryParser {
       case Regex(c, p) if freshTri(c) =>
         RegexTrigram.plan(p).map(clauses =>
           memo.candidate(CandKey("re", c, p))(
-            RegexTrigram.clauseCandidates(spark, triDir(indexRoot, c), clauses)))
+            RegexTrigram.clauseCandidates(memo.tri(c), clauses, Postings.DirectFloor)))
       case _ => None
     }
     // Merge ALL numeric conjuncts on one column into a single index walk —
@@ -500,8 +519,7 @@ object QueryParser {
     val numBounds = scala.collection.mutable.LinkedHashMap[String, Bounds]()
     exprs.foreach {
       case Cmp(c, op, Left(v)) if op != "!=" &&
-          memo.fresh(s"num/$c", memo.numStats(c)
-            .map(st => (st.n_rows, st.max_doc_id))) =>
+          memo.fresh(s"num/$c", memo.num(c).stats.map(st => (st.n_rows, st.max_doc_id))) =>
         val b = numBounds.getOrElse(c, Bounds(None, None, None, contradiction = false))
         val nb = op match {
           case "==" => b.eq match {
@@ -524,7 +542,7 @@ object QueryParser {
     // commit with every generation, so a consulted index always has them)
     def selective(col: String, lo: Option[Long], hi: Option[Long],
                   key: CandKey, cand: => DataFrame): Option[(CandKey, () => DataFrame)] =
-      memo.numStats(col).flatMap { st =>
+      memo.num(col).stats.flatMap { st =>
         if (NumericIndex.estimateFraction(st, lo, hi) <= MaxIndexSelectivity)
           Some(memo.candidate(key)(cand))
         else None
@@ -536,11 +554,11 @@ object QueryParser {
       else b.eq match {
         case Some(v) =>
           selective(c, Some(v), Some(v), CandKey("num", c, s"eq=$v"),
-            NumericIndex.point(spark, indexRoot, c, v))
+            NumericIndex.point(memo.num(c), v))
         case None =>
           selective(c, b.lo.map(_._1), b.hi.map(_._1),
             CandKey("num", c, s"${b.lo.mkString}..${b.hi.mkString}"),
-            NumericIndex.range(spark, indexRoot, c, b.lo.map(_._1), b.hi.map(_._1),
+            NumericIndex.range(memo.num(c), b.lo.map(_._1), b.hi.map(_._1),
               loInclusive = b.lo.forall(_._2), hiInclusive = b.hi.exists(_._2)))
       }
     }
@@ -608,21 +626,18 @@ object QueryParser {
         // ctor arg): fold exactly the columns whose candidate sets the
         // query WILL read — indexable + fresh + selective (they produced a
         // key) AND surviving the hoist — and fold BEFORE forcing the
-        // thunks, so the planned reads reference the post-fold survivor
-        // generations and stay valid across a later vacuum. `cfg` must be
-        // the config the index was built with (shard layout + fold policy,
-        // same contract as buildIndexes); numeric folds keep their own
-        // default bucket layout, as buildIndexes does. Contradiction keys
-        // read no index. Reclaim stays deferred for CONCURRENT readers
-        // (this query's own reads don't need the retirees anymore).
+        // thunks, replacing the folded column's snapshot, so the planned
+        // reads reference the post-fold survivor generations and stay valid
+        // across a later vacuum. `cfg` must be the config the index was
+        // built with (shard layout + fold policy, same contract as
+        // buildIndexes); numeric folds keep their own default bucket
+        // layout, as buildIndexes does. Contradiction keys read no index.
+        // Reclaim stays deferred for CONCURRENT readers (this query's own
+        // reads don't need the retirees anymore).
         mergeOnSearch.foreach { cfg =>
-          surviving.collect { case CandKey("tri", c, _) => c }.foreach(c =>
-            TrigramIndex.compactTiered(spark, triDir(indexRoot, c), cfg, reclaim = false))
+          surviving.collect { case CandKey("tri", c, _) => c }.foreach(memo.foldTri(_, cfg))
           surviving.collect { case CandKey("num", c, d) if d != "contradiction" => c }
-            .foreach(c =>
-              NumericIndex.compactTiered(spark, indexRoot, c,
-                maxGenerations = cfg.maxGenerations, tierFanout = cfg.tierFanout,
-                reclaim = false, maxFoldDocs = cfg.maxFoldDocs))
+            .foreach(memo.foldNum(_, cfg))
         }
         // force ONLY the surviving thunks: residuals are dropped wholesale
         // when some group's candidates are all common

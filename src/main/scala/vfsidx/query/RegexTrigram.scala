@@ -370,9 +370,14 @@ object RegexTrigram {
     * `directFloor` is the small-index cost gate on |keys| × n_rows
     * ([[Postings.direct]]), as in [[TrigramIndex.searchCandidates]]. */
   def clauseCandidates(spark: SparkSession, dir: String, clauses: List[Set[String]],
-                       directFloor: Long = Postings.DirectFloor): DataFrame = {
+                       directFloor: Long = Postings.DirectFloor): DataFrame =
+    clauseCandidates(TrigramIndex.snapshot(spark, dir), clauses, directFloor)
+
+  /** [[clauseCandidates]] over one snapshot. */
+  private[vfsidx] def clauseCandidates(snap: TrigramIndex.Snapshot, clauses: List[Set[String]],
+                                       directFloor: Long): DataFrame = {
     if (clauses.size == 1 && clauses.head.size == 1)
-      return TrigramIndex.searchCandidates(spark, dir, clauses.head.head, directFloor)
+      return TrigramIndex.searchCandidates(snap, clauses.head.head, directFloor)
 
     // (clause index, member keys); a member without a key matches nothing
     val members: Seq[(Int, Array[Long])] = for {
@@ -389,22 +394,21 @@ object RegexTrigram {
     // an absent key is in no doc's key set, so the member never matches and
     // the result is identical.
     val viable =
-      if (Postings.direct(Postings.trigramBound(spark, dir, allKeys.size), directFloor)) members
+      if (Postings.direct(Postings.trigramBound(snap, allKeys.size), directFloor)) members
       else {
-        val present = Postings.termMeta(TrigramIndex.readSegments(spark, dir), "key", allKeys,
-          withRanges = false).keys
+        val present = Postings.termMeta(snap.segments, "key", allKeys, withRanges = false).keys
         members.filter(_._2.forall(present.contains))
       }
     if (viable.map(_._1).distinct.size < clauses.size) // some clause wholly absent -> AND empty
-      return Postings.local(spark, Postings.IdSchema, Nil)
+      return Postings.local(snap.spark, Postings.IdSchema, Nil)
 
     val keys = viable.flatMap(_._2).distinct
     val index = keys.zipWithIndex.toMap
     // per clause, the key masks of its members
     val need: Array[Array[Array[Long]]] = viable.groupBy(_._1).values
       .map(_.map { case (_, ks) => Postings.mask(keys.size, ks.map(index)) }.toArray).toArray
-    Postings.perDoc(TrigramIndex.segmentScan(spark, dir, keys), keys)
-      .ids(spark, d => need.forall(_.exists(d.holds)))
+    Postings.perDoc(Postings.scan(snap.segments, "key", keys), keys)
+      .ids(snap.spark, d => need.forall(_.exists(d.holds)))
   }
 
   /** Rows of `docs` whose `strCol` matches `pattern` (unanchored, Java

@@ -49,7 +49,7 @@ class ColumnRefreshSpec extends SparkTestBase {
       Seq((0, 0), (1, 1)))
     assert(NumericIndex.generations(spark, root, "n") == Seq((0, 0), (1, 1)))
     // watermark advanced to the table's max id
-    assert(TrigramIndex.coveredMaxDocId(spark, QueryParser.triDir(root, "title"))
+    assert(TrigramIndex.statsMerged(spark, QueryParser.triDir(root, "title")).map(_.max_doc_id)
       .contains(149L))
     assert(NumericIndex.stats(spark, root, "n").get.max_doc_id == 149L)
     checkIdentical(root, t1)
@@ -65,7 +65,7 @@ class ColumnRefreshSpec extends SparkTestBase {
     QueryParser.buildIndexes(spark, t0, "doc_id", Seq("title"), Seq("n"), root,
       TrigramIndex.TriConfig(numBuckets = 4, saltThreshold = 100, shardSize = 64))
     // the index really is behind the table ...
-    assert(TrigramIndex.coveredMaxDocId(spark, QueryParser.triDir(root, "title"))
+    assert(TrigramIndex.statsMerged(spark, QueryParser.triDir(root, "title")).map(_.max_doc_id)
       .exists(_ < 149L))
     // ... and item140 lives ONLY in the unseen rows: an un-guarded indexed
     // path would return nothing for it
@@ -158,7 +158,7 @@ class ColumnRefreshSpec extends SparkTestBase {
     writeFile("b.json", Seq(("gamma body", "third doc", 7)))
     assert(Ingest.refreshJson(spark, idx, data, "content", cfg) == ((1, 1L)))
     val triD = QueryParser.triDir(idx, "title")
-    assert(TrigramIndex.coveredMaxDocId(spark, triD).contains(2L))
+    assert(TrigramIndex.statsMerged(spark, triD).map(_.max_doc_id).contains(2L))
     assert(NumericIndex.stats(spark, idx, "n").get.max_doc_id == 2L)
     // the new doc is findable through BOTH refreshed per-column indexes
     val hit = TrigramIndex.searchCandidates(spark, triD, "third")
@@ -234,7 +234,7 @@ class ColumnRefreshSpec extends SparkTestBase {
       .select($"doc_id").as[Long].collect().sorted.toSeq
     assert(ids == (0L until 2L))
     val triD = vfsidx.query.QueryParser.triDir(idx, "title")
-    assert(TrigramIndex.coveredMaxDocId(spark, triD).contains(1L))
+    assert(TrigramIndex.statsMerged(spark, triD).map(_.max_doc_id).contains(1L))
     assert(TrigramIndex.statsMerged(spark, triD).get.n_rows == 2L)
     assert(TrigramIndex.searchCandidates(spark, triD, "first")
       .as[Long].collect().toSeq == Seq(0L))
@@ -270,7 +270,7 @@ class ColumnRefreshSpec extends SparkTestBase {
     Ingest.streamJson(spark, idx, data, "content", ckpt, cfg)
 
     val triD = QueryParser.triDir(idx, "title")
-    assert(TrigramIndex.coveredMaxDocId(spark, triD).contains(1L))
+    assert(TrigramIndex.statsMerged(spark, triD).map(_.max_doc_id).contains(1L))
     assert(TrigramIndex.searchCandidates(spark, triD, "second")
       .as[Long].collect().toSeq == Seq(1L))
     assert(NumericIndex.point(spark, idx, "n", 4L).as[Long].collect().toSeq == Seq(1L))

@@ -58,6 +58,24 @@ class IncrementalSpec extends SparkTestBase {
     assert(fingerprint(dInc) == fingerprint(dFresh))
   }
 
+  test("a Bm25Index answers as of its first use; a new object sees a later ingest") {
+    val base = Synth.corpus(spark, 500, partitions = 4).cache()
+    val extra = Synth.corpus(spark, 650, partitions = 4)
+      .filter($"doc_id" >= 500).as[vfsidx.corpus.SourceFile].cache()
+    val union = Synth.corpus(spark, 650, partitions = 4).cache()
+    val d = tmpDir("inc_held")
+    IndexBuild.build(spark, base, d, cfg)
+    val held = new Bm25Index(spark, d)
+    assert(held.stats.n_docs == 500L)
+    IndexBuild.ingestBatch(spark, extra, d, batchId = cfg.numBatches, cfg)
+    val fresh = new Bm25Index(spark, d)
+    for (q <- Seq("index merge search", "the", "needle_600")) {
+      def hits(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Double)].collect().toSeq
+      assert(hits(held.topKOr(q, 10)) == hits(Oracle.topKOr(spark, base, q, 10)), s"held: $q")
+      assert(hits(fresh.topKOr(q, 10)) == hits(Oracle.topKOr(spark, union, q, 10)), s"new: $q")
+    }
+  }
+
   test("ADVERSARIAL avgdl drift: short-doc base + long-doc generation stays rank-exact under pruning") {
     // generation A's block_max_norm bounds were computed with a SMALL
     // avgdl; after ingesting much longer docs the global avgdl grows, and

@@ -82,7 +82,7 @@ class NumericIndexSpec extends SparkTestBase {
     }
     rmrf(statsPath)
     assert(NumericIndex.stats(spark, d, "x").isEmpty)
-    assert(!NumericIndex.exists(spark, d, "x"))
+    assert(NumericIndex.generations(spark, d, "x").isEmpty)
     val a = QueryParser.queryIndexed(spark, df, "doc_id", d, "x > 44")
       .select($"doc_id").as[Long].collect().sorted.toSeq
     val b = QueryParser.query(df, "x > 44")

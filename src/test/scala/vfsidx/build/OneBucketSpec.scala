@@ -38,8 +38,9 @@ class OneBucketSpec extends SparkTestBase {
     assert(seg1.filter($"shard" > 0).count() > 0, "the corpus has salted head terms")
     assert(seg1.filter($"bucket" =!= 0).isEmpty)
     assert(rows(seg1, "term") == rows(IndexBuild.readSegments(spark, w4), "term"))
-    assert(IndexBuild.readDictRaw(spark, w1).as[DictRow].collect().sortBy(_.term).toSeq ==
-      IndexBuild.readDictRaw(spark, w4).as[DictRow].collect().sortBy(_.term).toSeq)
+    def dict(d: String) = IndexBuild.snapshot(spark, d)
+      .read(IndexBuild.dictGenDir(d, _, _), IndexBuild.DictSchema).as[DictRow].collect().sortBy(_.term).toSeq
+    assert(dict(w1) == dict(w4))
     // the merge's sort order: (xxhash64(term), pre_shard, term); shards of
     // one term come out ascending
     val order = oneFile(IndexBuild.segmentsGenDir(w1, 0, 1))
@@ -51,12 +52,13 @@ class OneBucketSpec extends SparkTestBase {
     val (t1, t4) = (tmpDir("one_t1"), tmpDir("one_t4"))
     TrigramIndex.build(spark, corpus.toDF(), "doc_id", "content", t1, tri.copy(numBuckets = 1))
     TrigramIndex.build(spark, corpus.toDF(), "doc_id", "content", t4, tri.copy(numBuckets = 4))
-    val tseg1 = TrigramIndex.readSegments(spark, t1)
+    val tseg1 = TrigramIndex.snapshot(spark, t1).segments
     assert(tseg1.filter($"shard" > 0).count() > 0)
     assert(tseg1.filter($"bucket" =!= 0).isEmpty)
-    assert(rows(tseg1, "key") == rows(TrigramIndex.readSegments(spark, t4), "key"))
-    assert(TrigramIndex.readDictRaw(spark, t1).as[TriDictRow].collect().sortBy(_.key).toSeq ==
-      TrigramIndex.readDictRaw(spark, t4).as[TriDictRow].collect().sortBy(_.key).toSeq)
+    assert(rows(tseg1, "key") == rows(TrigramIndex.snapshot(spark, t4).segments, "key"))
+    def triDict(d: String) = TrigramIndex.snapshot(spark, d)
+      .read(TrigramIndex.dictGenDir(d, _, _), TrigramIndex.DictSchema).as[TriDictRow].collect().sortBy(_.key).toSeq
+    assert(triDict(t1) == triDict(t4))
     val korder = oneFile(TrigramIndex.segmentsGenDir(t1, 0, 0))
       .select($"key", $"shard", $"pos").as[(Long, Int, Long)].collect().sortBy(_._3).toSeq
     assert(korder == korder.sortBy(r => (r._1, r._2)))

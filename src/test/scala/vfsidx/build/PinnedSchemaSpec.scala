@@ -5,7 +5,7 @@ import vfsidx.SparkTestBase
 import vfsidx.corpus.Synth
 
 /** Index-table reads pin each table's schema instead of inferring it from
-  * the parquet footers ([[Generations.read]]). A pinned schema that
+  * the parquet footers ([[Generations.Snapshot.read]]). A pinned schema that
   * drifts from its writer would read a renamed or retyped column as nulls
   * without notice, so every pinned schema must equal the schema inferred
   * from a freshly built generation: names, types and order. */

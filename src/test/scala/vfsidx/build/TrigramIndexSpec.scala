@@ -102,7 +102,7 @@ class TrigramIndexSpec extends SparkTestBase {
   }
 
   test("hot trigram keys were sharded (skew handling exercised)") {
-    val segs = TrigramIndex.readSegments(spark, triDir)
+    val segs = TrigramIndex.snapshot(spark, triDir).segments
     assert(segs.groupBy("key").count().filter($"count" > 1).count() > 0,
       "expected at least one head key split into doc-range shards")
   }
@@ -264,11 +264,11 @@ class TrigramIndexSpec extends SparkTestBase {
       assert(inc == scanned(needle), s"needle '$needle'")
     }
     // idempotent re-ingest: same batch id is skipped, remerge output identical
-    val before = TrigramIndex.readSegments(spark, d)
+    val before = TrigramIndex.snapshot(spark, d).segments
       .agg(count(lit(1)), sum(length($"postings"))).collect().toSeq
     TrigramIndex.ingestBatch(spark, rest, "doc_id", "text", d, batchId = 1)
     TrigramIndex.remerge(spark, d, cfg)
-    val after = TrigramIndex.readSegments(spark, d)
+    val after = TrigramIndex.snapshot(spark, d).segments
       .agg(count(lit(1)), sum(length($"postings"))).collect().toSeq
     assert(before == after)
   }
@@ -311,7 +311,7 @@ class TrigramIndexSpec extends SparkTestBase {
     assert(TrigramIndex.generations(spark, d) == Seq((0, 3)))
     val fresh = tmpDir("trifresh")
     TrigramIndex.build(spark, df, "doc_id", "text", fresh, cfg)
-    def fingerprint(dir: String) = TrigramIndex.readSegments(spark, dir)
+    def fingerprint(dir: String) = TrigramIndex.snapshot(spark, dir).segments
       .select($"key", $"shard", $"count", md5(hex($"postings")).as("h"))
       .as[(Long, Int, Int, String)].collect().toSeq.sorted
     // same postings per (key, shard) — compaction re-derives exactly what a
@@ -327,11 +327,11 @@ class TrigramIndexSpec extends SparkTestBase {
   }
 
   test("resume: rebuilding over existing _SUCCESS dirs is a no-op (identical segments)") {
-    val before = TrigramIndex.readSegments(spark, triDir)
+    val before = TrigramIndex.snapshot(spark, triDir).segments
       .agg(count(lit(1)), sum(length($"postings"))).collect().toSeq
     TrigramIndex.build(spark, df, "doc_id", "text", triDir,
       TrigramIndex.TriConfig(numBuckets = 4, saltThreshold = 100, shardSize = 64))
-    val after = TrigramIndex.readSegments(spark, triDir)
+    val after = TrigramIndex.snapshot(spark, triDir).segments
       .agg(count(lit(1)), sum(length($"postings"))).collect().toSeq
     assert(before == after)
   }

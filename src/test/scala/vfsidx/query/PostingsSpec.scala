@@ -129,11 +129,12 @@ class PostingsSpec extends SparkTestBase {
       assert(Bm25Index.idf(idx.stats.n_docs, meta.df(t)) == idf, s"term '$t'")
     }
 
-    val triSegs = TrigramIndex.readSegments(spark, triDir)
+    val triSegs = TrigramIndex.snapshot(spark, triDir).segments
     assert(triSegs.filter($"shard" > 0).count() > 0, "no salted trigram shard")
     val triSegDf = triSegs.groupBy($"key").agg(sum($"count").cast("long"))
       .as[(Long, Long)].collect().toMap
-    val triDict = TrigramIndex.readDictRaw(spark, triDir).groupBy($"key").agg(sum($"df"))
+    val triDict = TrigramIndex.snapshot(spark, triDir)
+      .read(TrigramIndex.dictGenDir(triDir, _, _), TrigramIndex.DictSchema).groupBy($"key").agg(sum($"df"))
       .as[(Long, Long)].collect().toMap
     assert(triDict == triSegDf)
     assert(Postings.termMeta(triSegs, "key", triDict.keys.toSeq).df == triDict)
