@@ -203,8 +203,8 @@ object Measure {
       Seq("LocalTableScan", "PushedFilters", "In(key"), scan = Some(nearsScan _)),
     Audit("ft_query_lang", "query language via indexes: semi-join of candidate ids, predicates re-applied",
       Seq("PushedFilters", "Join")),
-    Audit("ft_count_term", "Count answered from the index dictionary (one pruned row; documents NEVER scanned)",
-      Seq("PushedFilters", "EqualTo(term", "dictionary"), none = Seq("documents.parquet")),
+    Audit("ft_count_term", "Count answered from the index dictionary view: the term's segment counts (a pruned metadata scan; documents NEVER scanned)",
+      Seq("PushedFilters", "EqualTo(term", "segments/gen="), none = Seq("documents.parquet")),
     Audit("ft_first_last", "First/Last from segment block metadata (postings blob not in ReadSchema; no corpus scan)",
       Seq("ReadSchema", "EqualTo(term", "block_first"),
       none = Seq("postings:binary", "documents.parquet")),

@@ -93,8 +93,8 @@ object FullText {
 
   /** The reference's dictionary/count surface (A2 CountOfKey,
     * /root/reference/search_cond.go:176-215): df per term from the index's
-    * dictionary table — a direct SQL-checkable correctness probe of the
-    * inverted index itself. */
+    * dictionary view (Σ segment `count` per term) — a direct SQL-checkable
+    * correctness probe of the inverted index itself. */
   def dictionaryTop(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     index(s, dir).dictionary
@@ -156,8 +156,10 @@ object FullText {
     * materializing rows (A1, /root/reference/search_finder.go:325-332,
     * /root/reference/index_file.go:911-916). Here it is one dictionary row:
     * df == number of docs containing the term (one posting per (term, doc)),
-    * summed across generations by the merged dictionary view. The corpus is
-    * never scanned; the oracle still brute-forces the documents table. */
+    * the term's segment `count`s summed across shards and generations by
+    * the merged dictionary view — a pruned metadata scan that never reads a
+    * postings blob. The corpus is never scanned; the oracle still
+    * brute-forces the documents table. */
   def countTerm(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     index(s, dir).dictionary

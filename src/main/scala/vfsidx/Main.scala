@@ -170,8 +170,8 @@ object Main {
       // index file (key=0x… count=…, /root/reference/cmd/vfs-index/main.go:
       // info()); ours reports every index under <dir> — the word/BM25 index
       // and regist-ed per-column trigram/numeric indexes — with generation
-      // layout, coverage stats, and the top-df dictionary rows in the
-      // reference's key=…/count=… form
+      // layout, coverage stats, on-disk bytes per table, and the top-df
+      // keys (Σ segment count) in the reference's key=…/count=… form
       import org.apache.spark.sql.functions.{asc, desc, sum => sqlSum}
       val topN = keysFlag.map(v => v.toIntOption.filter(_ > 0).getOrElse {
         System.err.println(s"--keys=$v: expected a positive integer")
@@ -179,6 +179,20 @@ object Main {
       }).getOrElse(10)
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // the bytes of each table's files under `root` (`.crc` checksum
+      // side files excluded: they check the index, they are not the index)
+      def bytes(root: String, tables: Seq[String]): Unit = println(tables.map { t =>
+        val p = new org.apache.hadoop.fs.Path(s"$root/$t")
+        var n = 0L
+        if (fs.exists(p)) {
+          val it = fs.listFiles(p, true)
+          while (it.hasNext) {
+            val f = it.next()
+            if (!f.getPath.getName.endsWith(".crc")) n += f.getLen
+          }
+        }
+        s"$t=$n"
+      }.mkString("  bytes: ", " ", ""))
       val (triCols, numCols) = vfsidx.corpus.Ingest.registeredCols(spark, dir)
       val segmentsExist = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/segments"))
       var any = false
@@ -195,6 +209,7 @@ object Main {
           println(f"word index: ${idx.stats.n_docs} docs, avgdl=${idx.stats.avgdl}%.1f, " +
             s"${idx.generations.size} generation(s) " +
             idx.generations.map { case (l, h) => s"gen=${l}_$h" }.mkString("[", " ", "]"))
+          bytes(dir, Seq("segments", "runs", "doc_stats", "stats", "lineage"))
           idx.dictionary.orderBy(desc("df"), asc("term")).limit(topN).collect()
             .foreach(r => println(s"  term=${r.getString(0)} count=${r.getLong(1)}"))
         }
@@ -208,9 +223,8 @@ object Main {
           case Some(st) =>
             println(s"tri/$c: ${st.n_rows} rows, max_doc_id=${st.max_doc_id}, " +
               s"${snap.gens.size} generation(s)")
-            snap.read(vfsidx.build.TrigramIndex.dictGenDir(d, _, _),
-                vfsidx.build.TrigramIndex.DictSchema)
-              .groupBy("key").agg(sqlSum("df").as("df"))
+            bytes(d, Seq("tri_segments", "tri_runs", "tri_stats", "tri_lineage"))
+            snap.segments.groupBy("key").agg(sqlSum("count").cast("long").as("df"))
               .orderBy(desc("df"), asc("key")).limit(topN).collect()
               .foreach(r => println(f"  key=0x${r.getLong(0)}%012x count=${r.getLong(1)}"))
         }
@@ -222,6 +236,7 @@ object Main {
           case Some(st) =>
             println(s"num/$c: ${st.n_rows} rows, max_doc_id=${st.max_doc_id}, " +
               s"integral=${st.integral}, ${snap.gens.size} generation(s)")
+            bytes(vfsidx.build.NumericIndex.colDir(dir, c), Seq("data", "stats"))
           case None => println(s"num/$c: no committed generations")
         }
       }

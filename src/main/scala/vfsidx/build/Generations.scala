@@ -11,11 +11,12 @@ import org.apache.spark.sql.types.StructType
   * reference column.go:418-604, re-expressed log-structured).
   *
   * Each derived table of an index lives under `gen=<loBatch>_<hiBatch>`
-  * directories. A generation is COMMITTED once every one of its tables
-  * carries `_SUCCESS`; a committed generation contained in a wider
-  * committed one is RETIRED (folded, not yet vacuumed) and hidden from
-  * readers, so reads stay exact through the whole window between a fold
-  * commit and its vacuum.
+  * directories. A generation is COMMITTED once its segments and its stats
+  * carry `_SUCCESS`; a committed generation contained in a wider committed
+  * one is RETIRED (folded, not yet vacuumed) and hidden from readers, so
+  * reads stay exact through the whole window between a fold commit and its
+  * vacuum. A committed generation is the only copy of its postings: the
+  * run data of the batches it covers is purged ([[purge]]).
   *
   * An index kind supplies only the facts that differ:
   *  - `segments(l, h)` and `segmentSchema`: the table whose parent dir
@@ -26,9 +27,11 @@ import org.apache.spark.sql.types.StructType
   *    each with its reduction across rows and generations. The FIRST column
   *    is the size measure tiered compaction balances;
   *  - `merge`: the kind's merged stats over one [[Generations.Snapshot]];
-  *  - `others(l, h)`: every other table dir a generation must have
-  *    committed (the word and trigram dictionaries);
-  *  - `slotDir(b)`: batch `b`'s slot dir, whose existence reserves the slot;
+  *  - `runs(b)`: batch `b`'s runs dir, whose existence reserves the slot
+  *    (None for a kind without a runs stage: its `gen=b_b` segments dir is
+  *    the slot);
+  *  - `legacy`: table dirs of an older layout that no read needs, deleted
+  *    by [[purge]] (the word and trigram dictionaries);
   *  - `onList`: a check run on every survivor listing (the word index's
   *    format gate).
   * The kind's seal step (its buildGeneration over a fold window, given the
@@ -42,8 +45,8 @@ private[build] final class Generations[S](
     val statsSchema: StructType,
     statCols: Seq[(String, Generations.Reduce)],
     val merge: Generations.Snapshot[S] => S,
-    others: (Int, Int) => Seq[String],
-    slotDir: Int => String,
+    runs: Option[Int => String],
+    legacy: Seq[String],
     onList: Seq[(Int, Int)] => Unit) {
 
   import Generations._
@@ -53,8 +56,9 @@ private[build] final class Generations[S](
 
   val parent: String = new Path(segments(0, 0)).getParent.toString
 
-  private def tables(l: Int, h: Int): Seq[String] =
-    segments(l, h) +: others(l, h) :+ statsDir(l, h)
+  private def tables(l: Int, h: Int): Seq[String] = Seq(segments(l, h), statsDir(l, h))
+
+  private def slotDir(b: Int): String = runs.fold(segments(b, b))(_(b))
 
   /** Has every table of generation (l, h) committed? */
   def isCommitted(l: Int, h: Int): Boolean = tables(l, h).forall(TableIO.done(spark, _))
@@ -82,6 +86,31 @@ private[build] final class Generations[S](
     * and stat of a read comes from ([[Generations.Snapshot]]). */
   def snapshot: Snapshot[S] = new Snapshot(this, generations)
 
+  /** Is batch `b` covered by a committed generation, survivor or retired?
+    * Its postings are then in segments, and its runs purged or due to be.
+    * Lists the generations once; the returned test is reusable. */
+  def covered: Int => Boolean = {
+    val gens = committed
+    b => gens.exists { case (l, h) => l <= b && b <= h }
+  }
+
+  /** Delete what no read needs: the run data of every batch a committed
+    * generation covers, and the `legacy` tables. A batch's runs dir stays,
+    * empty, as its slot marker ([[maxBatch]]); the runs of a batch no
+    * committed generation covers stay too, for the seal, resume or replay
+    * that still reads them. Folds and [[vacuum]] run it, so an index
+    * written before runs were purged shrinks on its next maintenance
+    * pass. One listing per slot. */
+  def purge(): Unit = runs.foreach { dirOf =>
+    val isCovered = covered
+    val p = new Path(dirOf(0)).getParent
+    if (fs(p).exists(p))
+      fs(p).listStatus(p).map(_.getPath.getName)
+        .collect { case slotRe(b) if isCovered(b.toInt) => dirOf(b.toInt) }
+        .foreach(TableIO.purge(spark, _))
+    legacy.foreach(TableIO.rmrf(spark, _))
+  }
+
   /** Delete RETIRED generation directories — the Iceberg/Delta
     * expire-snapshots pattern: compaction only COMMITS the combined
     * generation; reclaiming happens later, so in-flight readers that took
@@ -89,12 +118,13 @@ private[build] final class Generations[S](
     * files. The grace is not a time bound: the refresh, regist and stream
     * policies fold with reclaim deferred and vacuum at the start of their
     * NEXT run, so a reader is safe for one refresh, regist or stream epoch;
-    * a snapshot held across two fails loudly (a missing file). Returns the
-    * number reclaimed. */
+    * a snapshot held across two fails loudly (a missing file). Also
+    * [[purge]]s. Returns the number reclaimed. */
   def vacuum: Int = {
     val all = committed
     val retired = all.filter(isRetired(all, _))
     retired.foreach { case (l, h) => tables(l, h).foreach(TableIO.rmrf(spark, _)) }
+    purge()
     retired.size
   }
 
@@ -142,20 +172,20 @@ private[build] final class Generations[S](
     rows.reduce((a, b) => statCols.indices.map(i => statCols(i)._2(a(i), b(i))).toArray)
 
   /** Fold the CONTIGUOUS generations `win` into one covering their union
-    * via the kind's `seal`, given the window's reduced stats. The folded
-    * inputs are NOT deleted here: once the combined generation commits,
-    * [[generations]] hides them (containment rule) so new readers never
-    * see them, while readers already mid-scan keep their files;
-    * [[vacuum]] reclaims them later.
+    * via the kind's `seal`, which reads the window's segments, given the
+    * window's reduced stats. The folded inputs are NOT deleted here: once
+    * the combined generation commits, [[generations]] hides them
+    * (containment rule) so new readers never see them, while readers
+    * already mid-scan keep their files; [[vacuum]] reclaims them later.
     *
     * The window must be CONTIGUOUSLY covered: a gap in [min, max] is a
     * reserved-but-unsealed slot (a crashed streaming epoch awaiting
     * replay, Ingest.slotFor). Committing a combined range spanning it
-    * would (a) bury the epoch's later-sealed gen=slot_slot via the
-    * containment rule (vacuum would then delete it — silent data loss)
-    * and (b) make a SECOND fold of the combined generation read the
-    * foreign slot's runs. The policies below split at gaps
-    * ([[Generations.contiguousGroups]]), so this guard is the backstop. */
+    * would bury the epoch's later-sealed gen=slot_slot via the containment
+    * rule (vacuum would then delete it — silent data loss), and the
+    * replay would find its slot covered and skip. The policies below split
+    * at gaps ([[Generations.contiguousGroups]]), so this guard is the
+    * backstop. */
   private def fold(win: Seq[(Int, Int)], st: Map[(Int, Int), Array[Long]])(seal: Seal): Unit = {
     require(win.size >= 2, "fold needs at least two generations")
     win.sliding(2).foreach {
@@ -202,7 +232,7 @@ private[build] final class Generations[S](
       pickTieredWindow(contiguousGroups(gens), st(_)(0), tierFanout, maxFoldDocs) match {
         case Some(win) =>
           fold(win, st)(seal)
-          if (reclaim) vacuum
+          maintain(reclaim)
           true
         case None => false
       }
@@ -218,7 +248,7 @@ private[build] final class Generations[S](
     if (gens.size < 3) false
     else {
       val folded = foldGroups(gens.drop(1))(seal)
-      if (reclaim) vacuum
+      if (folded || reclaim) maintain(reclaim)
       folded
     }
   }
@@ -232,9 +262,13 @@ private[build] final class Generations[S](
     require(gens.nonEmpty, s"no generations under $parent")
     if (gens.size >= 2) {
       foldGroups(gens)(seal)
-      if (reclaim) vacuum
+      maintain(reclaim)
     }
   }
+
+  /** After a fold: [[vacuum]] when reclaiming, else only [[purge]] (no
+    * query reads what it deletes). */
+  private def maintain(reclaim: Boolean): Unit = if (reclaim) vacuum else purge()
 }
 
 private[vfsidx] object Generations {

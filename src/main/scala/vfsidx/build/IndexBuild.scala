@@ -29,11 +29,6 @@ final case class SegmentRow(
     block_off: Array[Int],
     block_max_norm: Array[Float])
 
-/** Per-generation dictionary row. `idf` is NOT stored: it depends on the
-  * corpus-wide doc count, which grows with every ingested generation — the
-  * query layer derives it from the merged (df, n_docs) at lookup time. */
-final case class DictRow(term: String, df: Long, tf_sum: Long)
-
 /** Per-generation corpus statistics. `n_docs` and `tf_sum` are ADDITIVE
   * across generations (each doc lives in exactly one generation), so the
   * global stats are a sum; `avgdl` is this generation's build-time average
@@ -68,12 +63,15 @@ final case class LineageRow(
   * `repartition` shuffle is the only data movement:
   *
   *   corpus --tokenize+accumulate--> chunk runs (per ingest batch, resumable)
-  *   runs[lo..hi] --groupBy(term)--> dictionary/gen=lo_hi (df, tf_sum)
   *   runs[lo..hi] --repartition(xxhash64(term), pre_shard) + sortWithinPartitions
   *        --Spimi.merge--> segments/gen=lo_hi (varbyte + block-max)
+  *                         stats/gen=lo_hi (n_docs, tf_sum, avgdl)
   *
   * The seal after the runs is shared with the trigram index
-  * ([[Spimi.seal]]); only the payload codec differs ([[WordCodec]]).
+  * ([[Spimi.seal]]); only the payload codec differs ([[WordCodec]]). Once
+  * a generation commits, its batches' run data is purged: the segments are
+  * the only copy of the postings (df and tf_sum per term are Σ segment
+  * `count` / `tf_sum`, so no dictionary table is kept either).
   *
   * GENERATIONS (the reference's merge consuming only unmerged write files,
   * /root/reference/column.go:418-604, k-way splice
@@ -83,10 +81,12 @@ final case class LineageRow(
   * immediately queryable; queries union all generations (df / n_docs /
   * tf_sum are additive because a doc belongs to exactly one generation).
   * [[compactTail]] / [[remerge]] fold contiguous generations into one by
-  * re-shuffling ONLY the folded batches' runs; readers stay correct
-  * mid-compaction because [[generations]] drops any generation whose batch
-  * range is contained in a wider completed one (the combined generation
-  * commits via `_SUCCESS` before the folded ones are deleted).
+  * decoding ONLY the folded generations' segments back into chunks and
+  * re-shuffling them (the columnar analogue of the reference's segment
+  * splice); readers stay correct mid-compaction because [[generations]]
+  * drops any generation whose batch range is contained in a wider
+  * completed one (the combined generation commits via `_SUCCESS` before
+  * the folded ones are deleted).
   *
   * Skew: terms whose df exceeds `saltThreshold` are sharded by
   * `doc_id / shardSize` *before* the shuffle, so a term appearing in
@@ -131,6 +131,16 @@ object IndexBuild {
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(path)) fs.delete(path, true)
     }
+    /** Delete a table's files but keep its (then empty) dir — `_SUCCESS`
+      * first, so a purge cut short never leaves a partial table that looks
+      * committed. */
+    def purge(spark: SparkSession, dir: String): Unit = {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(path))
+        fs.listStatus(path).map(_.getPath).sortBy(_.getName != "_SUCCESS")
+          .foreach(fs.delete(_, true))
+    }
   }
 
   def runsDir(dir: String, batch: Int) = s"$dir/runs/batch=$batch"
@@ -144,13 +154,11 @@ object IndexBuild {
   def lineageDir(dir: String) = s"$dir/lineage"
 
   def statsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/stats/gen=${lo}_$hi"
-  def dictGenDir(dir: String, lo: Int, hi: Int) = s"$dir/dictionary/gen=${lo}_$hi"
   def segmentsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/segments/gen=${lo}_$hi"
 
   /** The word index's table schemas as their writers produce them, pinned
     * on every read (no schema-inference job). */
   private[vfsidx] val SegmentSchema: StructType = Encoders.product[SegmentRow].schema
-  private[vfsidx] val DictSchema: StructType = Encoders.product[DictRow].schema
   private[vfsidx] val StatsSchema: StructType = Encoders.product[CorpusStats].schema
   /** SPIMI chunk runs ([[writeRuns]]). */
   private[vfsidx] val RunsSchema: StructType = StructType.fromDDL(
@@ -161,12 +169,14 @@ object IndexBuild {
     * list under `segments`, the runs batch dirs are the slots, the stats
     * columns n_docs / tf_sum are additive, and a snapshot's stats are its
     * per-generation rows (BM25 needs each generation's avgdl). Listing runs
-    * the format gate ([[assertSegmentFormat]]). */
+    * the format gate ([[assertSegmentFormat]]). `dictionary` is the
+    * per-generation (df, tf_sum) table indexes kept before those stats
+    * came off the segments; a purge deletes it. */
   private def lifecycle(spark: SparkSession, dir: String) = new Generations[Array[CorpusStats]](
     spark, segmentsGenDir(dir, _, _), SegmentSchema, statsGenDir(dir, _, _), StatsSchema,
     Seq("n_docs" -> Generations.Sum, "tf_sum" -> Generations.Sum),
     _.statsRows.as(Encoders.product[CorpusStats]).collect(),
-    (l, h) => Seq(dictGenDir(dir, l, h)), runsDir(dir, _), assertSegmentFormat(spark, dir, _))
+    Some(runsDir(dir, _)), Seq(s"$dir/dictionary"), assertSegmentFormat(spark, dir, _))
 
   /** One listing of the word index's generations, every read of one
     * [[vfsidx.query.Bm25Index]] or CLI report comes from. */
@@ -174,14 +184,14 @@ object IndexBuild {
     lifecycle(spark, dir).snapshot
   private[vfsidx] type Snapshot = Generations.Snapshot[Array[CorpusStats]]
 
-  /** Fold seal: rebuild the derived tables from exactly the window's runs
-    * (the runs are the decoded postings — reading them back is the
-    * columnar analogue of the reference's segment splice, without
-    * re-tokenizing the corpus). n_docs and tf_sum are additive, so the
-    * combined stats are the window's totals. */
+  /** Fold seal: rebuild the derived tables from exactly the window's
+    * segments, decoded back into chunks ([[Spimi.Fold]] — the columnar
+    * analogue of the reference's segment splice, without re-tokenizing the
+    * corpus). n_docs and tf_sum are additive, so the combined stats are the
+    * window's totals, and the block maxima are re-encoded with their avgdl. */
   private def seal(spark: SparkSession, dir: String, cfg: BuildConfig): Generations.Seal =
     (win, totals) => appendLineage(spark, lineageDir(dir), buildGeneration(spark, dir,
-      win.flatMap { case (l, h) => l to h }, totals(0), cfg, Some(totals(1))))
+      Spimi.Fold(win), totals(0), cfg, Some(totals(1))))
 
   /** Append `rows` to the lineage table at `table` (no job when empty). */
   private[build] def appendLineage(spark: SparkSession, table: String,
@@ -237,9 +247,10 @@ object IndexBuild {
     * mid-compaction, after new generations were already sealed. Refuse it up
     * front, loudly, with a rebuild instruction. (The trigram index needs no
     * generations-level check: `TriSegmentRow`'s on-disk layout is unchanged,
-    * so committed trigram generations stay readable regardless of age; only
-    * `tri_runs` changed shape, and those are gated per-batch-dir at
-    * fold/resume time by [[Spimi.seal]], like the word runs.) */
+    * so committed trigram generations stay readable and foldable regardless
+    * of age; only `tri_runs` changed shape, and those are gated
+    * per-batch-dir when a build or refresh seals them ([[Spimi.seal]]),
+    * like the word runs.) */
   private def assertSegmentFormat(spark: SparkSession, dir: String,
                                   gens: Seq[(Int, Int)]): Unit = {
     if (gens.isEmpty) return
@@ -285,6 +296,12 @@ object IndexBuild {
 
   /** Highest runs batch slot present on disk, -1 for none. */
   def maxRunsBatch(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).maxBatch
+
+  /** Does runs batch `batch` hold ingested docs: are its runs committed,
+    * or does a committed generation cover it (its runs then purged)? A
+    * slot that was only reserved does not. */
+  def batchIngested(spark: SparkSession, dir: String, batch: Int): Boolean =
+    TableIO.done(spark, runsDir(dir, batch)) || lifecycle(spark, dir).covered(batch)
 
   /** Reserve runs slot `batch` before durably recording it. */
   def reserveSlot(spark: SparkSession, dir: String, batch: Int): Unit =
@@ -393,6 +410,11 @@ object IndexBuild {
 
     val nDocs = timed("count")(fastCount(docs))
     val perBatch = math.max(1L, (nDocs + cfg.numBatches - 1) / cfg.numBatches)
+    // a batch is done when its runs committed or a committed generation
+    // covers it (its runs are then purged); a purged batch whose
+    // generation is gone is written again from `docs`
+    val covered = lifecycle(spark, dir).covered
+    val batches = 0 until cfg.numBatches
     // lineage rows for work done by THIS invocation, flushed in one append
     // at the end (one tiny job instead of one per unit; resume keys off the
     // _SUCCESS markers, lineage is the audit/metrics trail)
@@ -405,7 +427,7 @@ object IndexBuild {
     // cluster slots; the scheduler interleaves their tasks and keeps the
     // executors saturated where sequential jobs would leave slots idle
     // between stages) ----
-    val pending = (0 until cfg.numBatches).filter(b => !TableIO.done(spark, runsDir(dir, b)))
+    val pending = batches.filter(b => !covered(b) && !TableIO.done(spark, runsDir(dir, b)))
     val needDocStats = !TableIO.done(spark, docStatsBatchDir(dir, "init"))
     // per-batch Σtf_sum, observed on the runs writes: when every batch was
     // built by THIS call the generation's corpus tf_sum is just their sum,
@@ -456,39 +478,38 @@ object IndexBuild {
       } finally pool.shutdown()
     }
 
-    // resumed batches: the stats stage re-aggregates the chunks
+    // resumed batches: the stats stage re-aggregates the chunks. Nothing
+    // to seal when committed generations cover every batch.
     val knownTfSum = if (pending.size == cfg.numBatches) Some(tfSums.sum) else None
-    lineage ++= buildGeneration(spark, dir, 0 until cfg.numBatches, nDocs, cfg, knownTfSum)
+    if (!batches.forall(covered))
+      lineage ++= buildGeneration(spark, dir, Spimi.Runs(batches), nDocs, cfg, knownTfSum)
 
     if (lineage.nonEmpty) timed("lineage")(appendLineage(spark, lineageDir(dir), lineage))
   }
 
   /** The word index's side of the shared seal ([[Spimi.Kind]]): chunks
-    * shuffle on xxhash64(term) with the term as tiebreak, the dictionary
-    * holds (df, tf_sum) per term, and lineage orders terms in UTF-8 byte
-    * order. */
+    * shuffle on xxhash64(term) with the term as tiebreak, and lineage
+    * orders terms in UTF-8 byte order. */
   private[build] def kind(dir: String) = Spimi.Kind[String, SegmentRow]("",
-    runsDir(dir, _), RunsSchema, segmentsGenDir(dir, _, _), dictGenDir(dir, _, _),
-    statsGenDir(dir, _, _),
+    runsDir(dir, _), RunsSchema, segmentsGenDir(dir, _, _), statsGenDir(dir, _, _),
     "term", Some(xxhash64(col("term"))),
-    Seq(sum(col("count")).cast("long").as("df"), sum(col("tf_sum")).as("tf_sum")),
     (it, acc) => Spimi.observeBuckets(it, acc)(
       _.term, identity[String], _.count.toLong, _.postings.length.toLong)(Spimi.Utf8Order))
 
-  /** Derived tables (dictionary + stats + segments) for the given runs
-    * `batches` ([[Spimi.seal]]). Shared by [[build]] (one generation over
-    * everything), [[ingestBatch]] (one generation per new batch) and the
-    * compactions. Stats come first: avgdl feeds the merge's block-max
+  /** Derived tables (stats + segments) from `source` ([[Spimi.seal]]):
+    * the runs of [[build]] (one generation over everything) and
+    * [[ingestBatch]] (one generation per new batch), or a compaction's
+    * fold window. Stats come first: avgdl feeds the merge's block-max
     * bounds. avgdl == Σtf / N because Σdl over docs == Σtf over postings,
     * and Σtf arrives from the caller when it already observed it (runs
     * write, folded generations' stats) — only resumes with unknown
     * provenance pay a chunks agg job for it. Returns the segments' lineage
     * rows. */
-  private def buildGeneration(spark: SparkSession, dir: String, batches: Seq[Int],
+  private def buildGeneration(spark: SparkSession, dir: String, source: Spimi.Source,
                               nDocs: Long, cfg: BuildConfig,
                               knownTfSum: Option[Long]): Seq[LineageRow] = {
     import spark.implicits._
-    Spimi.seal(spark, kind(dir), batches, cfg.numBuckets, cfg.saltThreshold, cfg.shardSize,
+    Spimi.seal(spark, kind(dir), source, cfg.numBuckets, cfg.saltThreshold, cfg.shardSize,
         force = false) { runs =>
       val tfSum = knownTfSum.getOrElse(
         runs.agg(coalesce(sum($"tf_sum"), lit(0L))).as[Long].head())
@@ -504,13 +525,14 @@ object IndexBuild {
     * re-expressed columnar. The posting count and Σtf are observed on the
     * write itself (accumulator-backed, exactly-once per completed action —
     * no post-write job). Returns the batch's lineage row and its Σtf. */
-  private def writeRuns(docs: Dataset[SourceFile], dir: String, batch: Int, nDocs: Long,
+  private[build] def writeRuns(docs: Dataset[SourceFile], dir: String, batch: Int, nDocs: Long,
                         cfg: BuildConfig): (LineageRow, Long) = {
     import docs.sparkSession.implicits._
     val t0 = System.currentTimeMillis()
     val obs = new org.apache.spark.sql.Observation(s"runs:${runsDir(dir, batch)}")
     TableIO.write(
-      docs.mapPartitions(it => Spimi.chunks(it, new WordChunkAccumulator(cfg.shardSize * 1024)))
+      docs.mapPartitions(it =>
+        Spimi.chunks(it, new WordChunkAccumulator(cfg.shardSize * Spimi.PreShard)))
         .toDF(RunsSchema.fieldNames.toIndexedSeq: _*)
         .observe(obs, coalesce(sum($"count"), lit(0L)).as("np"),
           coalesce(sum($"tf_sum"), lit(0L)).as("tf")),
@@ -571,7 +593,13 @@ object IndexBuild {
     def pool(n: Int): Pool = (new Array[Long](n), new Array[Int](n), new Array[Int](n))
     def unpack(bytes: Array[Byte], n: Int, p: Pool, off: Int): Unit =
       VarByte.unpackPostings(bytes, n, p._1, p._2, p._3, off)
+    def pack(p: Pool, from: Int, until: Int): Array[Byte] =
+      VarByte.packPostings(p._1, p._2, p._3, from, until)
     def sort(p: Pool): Array[Long] = { VarByte.sortPostings(p._1, p._2, p._3); p._1 }
+    def decode(r: SegmentRow): (String, Pool, Array[Long]) = {
+      val p = VarByte.decode(r.postings, r.count)
+      (r.term, p, p._1)
+    }
     def encode(bucket: Int, term: String, shard: Int, p: Pool,
                from: Int, until: Int): SegmentRow = {
       def part[A](a: Array[A]) = if (from == 0 && until == a.length) a else a.slice(from, until)
@@ -621,8 +649,8 @@ object IndexBuild {
     gl.generations
     val rDir = runsDir(dir, batchId)
     val dsDir = docStatsBatchDir(dir, batchId.toString)
-    if (TableIO.done(spark, rDir) && TableIO.done(spark, dsDir) &&
-        gl.isCommitted(batchId, batchId)) return
+    // sealed before (its runs purged since): a replay is a no-op
+    if (TableIO.done(spark, dsDir) && gl.covered(batchId)) return
     val nNew = fastCount(newDocs)
     // the generation's tf_sum comes off the runs write (the stats stage
     // then skips its own agg)
@@ -641,7 +669,7 @@ object IndexBuild {
     // must not fan into numBuckets near-empty files — every later query
     // scan would pay per-file listing/footer overhead per generation.
     // Compaction re-spreads the folded data across the full bucket count.
-    val segs = buildGeneration(spark, dir, Seq(batchId), nNew,
+    val segs = buildGeneration(spark, dir, Spimi.Runs(Seq(batchId)), nNew,
       cfg.copy(numBuckets = ingestBuckets(nNew, cfg.numBuckets, cfg.shardSize)), runs.map(_._2))
     appendLineage(spark, lineageDir(dir), runs.map(_._1).toSeq ++ segs)
   }

@@ -69,7 +69,7 @@ object NumericIndex {
     new Generations[Option[NumStats]](spark, dataGenDir(root, column, _, _), DataSchema,
       statsGenDir(root, column, _, _), StatsSchema,
       Seq("n_rows" -> Generations.Sum, "integral" -> Generations.All), mergeStats,
-      (_, _) => Nil, b => dataGenDir(root, column, b, b), _ => ())
+      None, Nil, _ => ())
 
   /** One listing of the column's generations: the data a lookup filters
     * and the stats (integrality, sketch, watermark) it plans with come

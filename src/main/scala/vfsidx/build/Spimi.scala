@@ -12,24 +12,27 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  - map side: [[chunks]] accumulates per-partition partial posting lists
   *    in bounded memory and emits compressed chunks, split at `pre_shard`
-  *    doc ranges; they are persisted as the batch's runs;
+  *    doc ranges; they are persisted as the batch's runs until the batch's
+  *    generation commits, and then purged;
   *  - [[seal]]: the per-batch runs-format gate (one footer read on the
   *    driver, [[IndexBuild.footerHas]]), the `_SUCCESS` need-gates
-  *    (bypassed by `force`), the dictionary and stats tables as side jobs
+  *    (bypassed by `force`), the stats table as a side job
   *    ([[withSideJobs]]), the one `(key, pre_shard)` hash shuffle sorted
   *    within partitions, the reduce side, the per-bucket observation
   *    ([[observeBuckets]]) and the segments write, whose bucket stats come
-  *    back as lineage rows;
+  *    back as lineage rows. A fold seals from the window's segments instead
+  *    ([[rechunk]]), so a committed generation is the only copy of its
+  *    postings;
   *  - reduce side: [[merge]] pools each (key, pre_shard) group, sorts it by
   *    doc id, splits it above `saltThreshold` into doc-range shards and
   *    encodes each shard.
   *
-  * A kind supplies only what differs: its tables, shuffle key and
-  * dictionary aggregates ([[Kind]]), its stats row, and the payload
-  * [[Codec]] — scored (id, tf, dl) triples with block-max bounds for words,
-  * ids only for trigrams. The map-side accumulators stay per kind: word
-  * keys come from the tokenizer's `String` term map and trigram keys live
-  * in a primitive long map, which one generic map would box.
+  * A kind supplies only what differs: its tables and shuffle key
+  * ([[Kind]]), its stats row, and the payload [[Codec]] — scored (id, tf,
+  * dl) triples with block-max bounds for words, ids only for trigrams. The
+  * map-side accumulators stay per kind: word keys come from the tokenizer's
+  * `String` term map and trigram keys live in a primitive long map, which
+  * one generic map would box.
   *
   * Memory bound: [[chunks]] drains emitted chunks to its consumer BEFORE
   * pulling more input, so a task holds at most the accumulator
@@ -54,6 +57,11 @@ private[build] object Spimi {
     * ~200-300 B (entry + key + min-capacity arrays) — up to ~1 GB per task.
     * Flushing at 512k distinct keys caps that overhead term at ~130 MB. */
   val FlushKeys: Int = 1 << 19
+
+  /** Doc range of one `pre_shard`, in output shards: chunks split at
+    * `shardSize * PreShard` doc boundaries, on the map side and when a
+    * fold re-chunks segments, so both give the merge the same groups. */
+  val PreShard: Long = 1024
 
   /** Map-side state for one task: consumes inputs, accumulates per-key
     * posting lists, emits chunks into a caller-supplied buffer. */
@@ -128,18 +136,39 @@ private[build] object Spimi {
 
   /** The payload half of an index kind, run by [[merge]] on the executors:
     * pool a group's chunk payloads into parallel arrays, sort them by doc
-    * id, and encode one shard's segment row. */
+    * id, and encode one shard's segment row — and, for a fold, the way
+    * back ([[rechunk]]). */
   trait Codec[K, R] extends Serializable {
     /** Parallel arrays holding one pooled group. */
     type Pool
     def pool(n: Int): Pool
     /** Unpack one chunk's `n` postings into `p` at offset `off`. */
     def unpack(bytes: Array[Byte], n: Int, p: Pool, off: Int): Unit
+    /** Postings [from, until) of `p` as one chunk payload (the inverse of
+      * [[unpack]]). */
+    def pack(p: Pool, from: Int, until: Int): Array[Byte]
     /** Sort the pooled postings by doc id; returns the sorted ids. */
     def sort(p: Pool): Array[Long]
     /** The segment row of postings [from, until) of `p` as (key, shard). */
     def encode(bucket: Int, key: K, shard: Int, p: Pool, from: Int, until: Int): R
+    /** A segment row's key and postings, decoded into a pool of its count,
+      * with the pool's ids (the inverse of [[encode]]). */
+    def decode(row: R): (K, Pool, Array[Long])
   }
+
+  /** A fold's chunks: every segment row of the folded generations decoded
+    * back to its postings and split at `preShardDocs` doc boundaries into
+    * (key, pre_shard, count, payload) chunk rows — the rows the map side
+    * wrote as runs, so [[merge]] pools the same groups. */
+  def rechunk[K, R](rows: Iterator[R], codec: Codec[K, R],
+                    preShardDocs: Long): Iterator[(K, Long, Int, Array[Byte])] =
+    rows.flatMap { r =>
+      val (key, p, ids) = codec.decode(r)
+      val out = ArrayBuffer.empty[(K, Long, Int, Array[Byte])]
+      splitByRange(ids, ids.length, preShardDocs)((i, j, ps) =>
+        out += ((key, ps, j - i, codec.pack(p, i, j))))
+      out
+    }
 
   /** Reduce side of the SPIMI merge over (key, pre_shard, count, payload)
     * chunk rows: pool each group's chunks at their offsets and sort them
@@ -287,29 +316,48 @@ private[build] object Spimi {
   /** What an index kind supplies to [[seal]] besides its stats and codec:
     *  - `prefix` names its build stages, lineage stage and accumulator
     *    ("" for the word index, "tri_" for the trigram index);
-    *  - `runs(b)` and `segments` / `dict` / `stats(lo, hi)`: its table dirs,
-    *    and `runsSchema` the pinned schema of its runs;
-    *  - `key`: the key column of its chunks and dictionary;
+    *  - `runs(b)` and `segments` / `stats(lo, hi)`: its table dirs, and
+    *    `runsSchema` the pinned schema of its runs;
+    *  - `key`: the key column of its chunks and segments;
     *  - `keyHash`: a packed-long hash to shuffle and sort on in place of a
     *    variable-width key, which then sorts as the tiebreak (None shuffles
     *    on the key itself);
-    *  - `dictAggs`: the dictionary's per-key aggregates over the chunks;
     *  - `observe`: [[observeBuckets]] with its segment rows' key ordering. */
   final case class Kind[K, R](prefix: String, runs: Int => String, runsSchema: StructType,
-      segments: (Int, Int) => String, dict: (Int, Int) => String,
-      stats: (Int, Int) => String, key: String, keyHash: Option[Column],
-      dictAggs: Seq[Column], observe: (Iterator[R], BucketStatsAcc) => Iterator[R])
+      segments: (Int, Int) => String, stats: (Int, Int) => String, key: String,
+      keyHash: Option[Column], observe: (Iterator[R], BucketStatsAcc) => Iterator[R])
 
-  /** Seal one generation `gen=<min>_<max>` of `kind` from its runs
-    * `batches` (the range may have gaps when streaming epochs skipped
-    * slots; only the listed batches are read). Each table is
-    * `_SUCCESS`-gated for resume, or rewritten when `force`.
+  /** What a seal reads its postings from, and the `gen=<lo>_<hi>` it seals. */
+  sealed trait Source {
+    def lo: Int
+    def hi: Int
+  }
+
+  /** A build or refresh: the chunk runs of `batches` (the range may have
+    * gaps when streaming epochs skipped slots; only the listed batches are
+    * read). They are purged once the generation commits. */
+  final case class Runs(batches: Seq[Int]) extends Source {
+    def lo: Int = batches.min
+    def hi: Int = batches.max
+  }
+
+  /** A fold: the segments of the committed, contiguous generations
+    * `window`, decoded and re-chunked ([[rechunk]]). */
+  final case class Fold(window: Seq[(Int, Int)]) extends Source {
+    def lo: Int = window.head._1
+    def hi: Int = window.last._2
+  }
+
+  /** Seal one generation `gen=<lo>_<hi>` of `kind` from `source`. Each
+    * table is `_SUCCESS`-gated for resume, or rewritten when `force`; the
+    * generation is committed once its segments and stats are, and then the
+    * runs a [[Runs]] source read are purged (their dirs stay as slot
+    * markers).
     *
-    * `stats(runs)` computes the generation's stats row, called only when
-    * the stats table is missing (a resume reads the committed row back, and
-    * only if `codec` uses it). The stats and dictionary writes run
-    * concurrently with the segments write; the dictionary derives from
-    * chunk metadata, so it does not wait for the segments commit.
+    * `stats(input)` computes the generation's stats row from the runs, or
+    * a fold's segments, called only when the stats table is missing (a
+    * resume reads the committed row back, and only if `codec` uses it).
+    * The stats write runs concurrently with the segments write.
     *
     * The one data shuffle HASH-partitions chunks on (shuffle key,
     * pre_shard) — range partitioning needs a sampling pass, and
@@ -324,83 +372,96 @@ private[build] object Spimi {
     * keys outright, while common-prefix term families degenerate every
     * string-prefix comparison into a full-record compare. Hash collisions
     * are harmless — the key is the next sort column, so a colliding key is
-    * adjacent but never pooled.
+    * adjacent but never pooled. A fold's chunks are its segment rows
+    * re-chunked at the same `pre_shard` boundaries, so it pools exactly the
+    * groups a build over the same docs would.
     *
     * A ONE-bucket generation (every refresh under `shardSize` docs) skips
-    * that shuffle: its runs are coalesced into one partition and sorted
+    * that shuffle: its chunks are coalesced into one partition and sorted
     * there, which yields the rows, the order and the `bucket = 0` the
-    * one-partition exchange would, and the dictionary aggregate over the
-    * same partition plans no exchange either. Multi-bucket builds and
-    * folds keep the hash exchange.
+    * one-partition exchange would. Multi-bucket builds and folds keep the
+    * hash exchange.
     *
     * Returns the lineage rows of the segments write, one per non-empty
     * bucket (none when the segments were already committed), for the
     * caller to append to its lineage table. */
-  def seal[K, R, S](spark: SparkSession, kind: Kind[K, R], batches: Seq[Int],
+  def seal[K, R, S](spark: SparkSession, kind: Kind[K, R], source: Source,
                     numBuckets: Int, saltThreshold: Long, shardSize: Long,
                     force: Boolean)(stats: DataFrame => S)(codec: (=> S) => Codec[K, R])(
       implicit chunkEnc: Encoder[(K, Long, Int, Array[Byte])], rowEnc: Encoder[R],
       statsEnc: Encoder[S]): Seq[LineageRow] = {
     import IndexBuild.{TableIO, timed}
-    val (lo, hi) = (batches.min, batches.max)
-    val gen = s"${lo}_$hi"
+    val gen = s"${source.lo}_${source.hi}"
     val p = kind.prefix
-    val (segDir, dictDir, statsDir) = (kind.segments(lo, hi), kind.dict(lo, hi), kind.stats(lo, hi))
+    val (segDir, statsDir) = (kind.segments(source.lo, source.hi), kind.stats(source.lo, source.hi))
     def need(d: String) = force || !TableIO.done(spark, d)
-    val (needSegs, needDict, needStats) = (need(segDir), need(dictDir), need(statsDir))
-    if (!needSegs && !needDict && !needStats) return Nil
-
-    // migration gate, before the generation's first write: runs written by
-    // a pre-chunk-format build must fail with an instruction, not mid-merge.
-    // Checked PER batch dir — a merged-read schema samples one footer and
-    // would let a mixed old/new set through.
-    batches.foreach { b =>
-      require(IndexBuild.footerHas(spark, kind.runs(b), "pre_shard"),
-        s"${kind.runs(b)} was written by a pre-chunk-format build (raw posting " +
-          "rows): delete the index directory and rebuild")
-    }
-    val runs = spark.read.schema(kind.runsSchema).parquet(batches.map(kind.runs): _*)
-    lazy val st: S =
-      if (needStats) stats(runs)
-      else spark.read.schema(statsEnc.schema).parquet(statsDir).as[S].head()
-
-    // one bucket: a single partition already satisfies the merge's and the
-    // dictionary aggregate's clustering, so neither plans an exchange
-    val input = if (numBuckets == 1) runs.coalesce(1) else runs
-    def side(needed: Boolean, name: String, dir: String)(df: => DataFrame): Seq[() => Unit] =
-      if (needed) Seq(() => timed(s"$p$name:$gen")(TableIO.write(df, dir))) else Nil
-    val sideJobs =
-      side(needDict, "dict", dictDir)(
-        input.groupBy(kind.key).agg(kind.dictAggs.head, kind.dictAggs.tail: _*)) ++
-        side(needStats, "stats", statsDir)(spark.createDataset(Seq(st)).toDF())
-
+    val (needSegs, needStats) = (need(segDir), need(statsDir))
     var lineage = Seq.empty[LineageRow]
-    withSideJobs(needSegs, sideJobs) { timed(s"${p}segments:$gen") {
-      val t0 = System.currentTimeMillis()
-      val acc = new BucketStatsAcc
-      spark.sparkContext.register(acc, s"${p}segstats:$gen")
-      val (c, observe) = (codec(st), kind.observe)
-      val (keyed, order) = kind.keyHash match {
-        case Some(h) =>
-          (input.withColumn("key_hash", h), Seq(col("key_hash"), col("pre_shard"), col(kind.key)))
-        case None => (input, Seq(col(kind.key), col("pre_shard")))
+    if (needSegs || needStats) {
+      val input = source match {
+        case Runs(batches) =>
+          // migration gate, before the generation's first write: runs
+          // written by a pre-chunk-format build must fail with an
+          // instruction, not mid-merge. Checked PER batch dir — a
+          // merged-read schema samples one footer and would let a mixed
+          // old/new set through.
+          batches.foreach { b =>
+            require(IndexBuild.footerHas(spark, kind.runs(b), "pre_shard"),
+              s"${kind.runs(b)} was written by a pre-chunk-format build (raw posting " +
+                "rows): delete the index directory and rebuild")
+          }
+          spark.read.schema(kind.runsSchema).parquet(batches.map(kind.runs): _*)
+        case Fold(window) =>
+          spark.read.schema(rowEnc.schema).parquet(window.map(kind.segments.tupled): _*)
       }
-      val segs = (if (numBuckets == 1) keyed else keyed.repartition(numBuckets, order.take(2): _*))
-        .sortWithinPartitions(order :+ col("first_doc"): _*)
-        .select(kind.key, "pre_shard", "count", "bytes")
-        .as[(K, Long, Int, Array[Byte])]
-        .mapPartitions(it => observe(merge(it, c, saltThreshold, shardSize), acc))
-      TableIO.write(segs.toDF(), segDir)
-      lineage = acc.value.toSeq.sortBy(_._1).map { case (pid, s) =>
-        LineageRow(s"${p}segments", gen, pid, s.first, s.last, 0L, s.nPostings,
-          s.bytes, System.currentTimeMillis() - t0)
-      }
-    }}
+      lazy val st: S =
+        if (needStats) stats(input)
+        else spark.read.schema(statsEnc.schema).parquet(statsDir).as[S].head()
+
+      val sideJobs =
+        if (!needStats) Nil
+        else Seq(() => timed(s"${p}stats:$gen")(
+          TableIO.write(spark.createDataset(Seq(st)).toDF(), statsDir)))
+      withSideJobs(needSegs, sideJobs) { timed(s"${p}segments:$gen") {
+        val t0 = System.currentTimeMillis()
+        val acc = new BucketStatsAcc
+        spark.sparkContext.register(acc, s"${p}segstats:$gen")
+        val (c, observe) = (codec(st), kind.observe)
+        val cols = Seq(kind.key, "pre_shard", "count", "bytes")
+        val chunks = source match {
+          case Runs(_) => input.select(cols.map(col): _*)
+          case Fold(_) => input.as[R].mapPartitions(rechunk(_, c, shardSize * PreShard))
+            .toDF(cols: _*)
+        }
+        // one bucket: a single partition already satisfies the merge's
+        // clustering, so it plans no exchange
+        val one = if (numBuckets == 1) chunks.coalesce(1) else chunks
+        val (keyed, order) = kind.keyHash match {
+          case Some(h) =>
+            (one.withColumn("key_hash", h), Seq(col("key_hash"), col("pre_shard"), col(kind.key)))
+          case None => (one, Seq(col(kind.key), col("pre_shard")))
+        }
+        val segs = (if (numBuckets == 1) keyed else keyed.repartition(numBuckets, order.take(2): _*))
+          .sortWithinPartitions(order: _*)
+          .select(cols.map(col): _*)
+          .as[(K, Long, Int, Array[Byte])]
+          .mapPartitions(it => observe(merge(it, c, saltThreshold, shardSize), acc))
+        TableIO.write(segs.toDF(), segDir)
+        lineage = acc.value.toSeq.sortBy(_._1).map { case (pid, s) =>
+          LineageRow(s"${p}segments", gen, pid, s.first, s.last, 0L, s.nPostings,
+            s.bytes, System.currentTimeMillis() - t0)
+        }
+      }}
+    }
+    source match {
+      case Runs(batches) => batches.foreach(b => TableIO.purge(spark, kind.runs(b)))
+      case Fold(_) => ()
+    }
     lineage
   }
 
   /** Run `main` while `sideJobs` (small independent Spark jobs: the
-    * generation's dictionary agg and 1-row stats write) execute on a
+    * generation's 1-row stats write, a refresh's doc_stats) execute on a
     * concurrent pool, joining them afterwards — or run everything inline
     * when there is no `main` work (a resume where only side tables are
     * missing). Side-job failures surface on join. A `main` failure stops

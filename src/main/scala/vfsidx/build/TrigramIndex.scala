@@ -20,8 +20,6 @@ final case class TriSegmentRow(
     block_last: Array[Long],
     block_off: Array[Int])
 
-final case class TriDictRow(key: Long, df: Long)
-
 /** Per-generation trigram-index stats: `n_rows` is the number of source
   * rows the generation covers (additive across generations — the size
   * measure for tiered compaction), `max_doc_id` the highest id it has seen
@@ -51,10 +49,11 @@ final case class TriStats(n_rows: Long, max_doc_id: Long)
   *        (key, pre_shard, first_doc, last_doc, count, delta-varint bytes)
   *   chunks --repartition(key, pre_shard) --Spimi.merge-->
   *        tri_segments (canonical blocked varbyte)            [resumable]
-  *   tri_dict (key, df) derived from chunk metadata (Σ count per key)
   *
   * The seal after the runs is the word index's ([[Spimi.seal]]); only the
-  * payload codec differs ([[TriCodec]]: ids only).
+  * payload codec differs ([[TriCodec]]: ids only). A key's df is Σ segment
+  * `count`; once a generation commits its tri_runs data is purged, and a
+  * fold decodes the window's segments back into chunks.
   *
   * The merge shuffle therefore moves ~an order of magnitude fewer rows and
   * ~5x fewer bytes than a raw-postings shuffle, and no wide-row sort ever
@@ -82,14 +81,12 @@ object TrigramIndex {
 
   def runsBatchDir(dir: String, batch: Int) = s"$dir/tri_runs/batch=$batch"
   def lineageDir(dir: String) = s"$dir/tri_lineage"
-  def dictGenDir(dir: String, lo: Int, hi: Int) = s"$dir/tri_dict/gen=${lo}_$hi"
   def segmentsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/tri_segments/gen=${lo}_$hi"
   def statsGenDir(dir: String, lo: Int, hi: Int) = s"$dir/tri_stats/gen=${lo}_$hi"
 
   /** The trigram index's table schemas as their writers produce them,
     * pinned on every read (no schema-inference job). */
   private[vfsidx] val SegmentSchema: StructType = Encoders.product[TriSegmentRow].schema
-  private[vfsidx] val DictSchema: StructType = Encoders.product[TriDictRow].schema
   private[vfsidx] val StatsSchema: StructType = Encoders.product[TriStats].schema
   /** SPIMI chunk runs ([[writeRuns]]). */
   private[vfsidx] val RunsSchema: StructType = StructType.fromDDL(
@@ -105,11 +102,13 @@ object TrigramIndex {
 
   /** The trigram index's generation lifecycle ([[Generations]]):
     * generations list under `tri_segments`, the tri_runs batch dirs are
-    * the slots, and the stats fold as Σ n_rows / max max_doc_id. */
+    * the slots, and the stats fold as Σ n_rows / max max_doc_id. `tri_dict`
+    * is the per-generation df table of indexes written before df came off
+    * the segments; a purge deletes it. */
   private def lifecycle(spark: SparkSession, dir: String) = new Generations[Option[TriStats]](
     spark, segmentsGenDir(dir, _, _), SegmentSchema, statsGenDir(dir, _, _), StatsSchema,
     Seq("n_rows" -> Generations.Sum, "max_doc_id" -> Generations.Max), mergeStats,
-    (l, h) => Seq(dictGenDir(dir, l, h)), runsBatchDir(dir, _), _ => ())
+    Some(runsBatchDir(dir, _)), Seq(s"$dir/tri_dict"), _ => ())
 
   /** One listing of the trigram index's generations: every table, stat
     * and cost-gate bound of one query comes from it. */
@@ -117,12 +116,13 @@ object TrigramIndex {
     lifecycle(spark, dir).snapshot
   private[vfsidx] type Snapshot = Generations.Snapshot[Option[TriStats]]
 
-  /** Fold seal: re-shuffle exactly the window's runs into one generation
-    * carrying the window's (Σ n_rows, max max_doc_id). */
+  /** Fold seal: re-shuffle exactly the window's segments, decoded back
+    * into chunks ([[Spimi.Fold]]), into one generation carrying the
+    * window's (Σ n_rows, max max_doc_id). */
   private def seal(spark: SparkSession, dir: String, cfg: TriConfig): Generations.Seal =
     (win, totals) =>
-      buildGeneration(spark, dir, win.flatMap { case (l, h) => l to h }, cfg,
-        TriStats(totals(0), totals(1)), force = false)
+      buildGeneration(spark, dir, Spimi.Fold(win), cfg, TriStats(totals(0), totals(1)),
+        force = false)
 
   /** Highest tri_runs batch slot present on disk, -1 for none. */
   def maxBatch(spark: SparkSession, dir: String): Int = lifecycle(spark, dir).maxBatch
@@ -163,7 +163,7 @@ object TrigramIndex {
     * (reference record.go:46-82) re-expressed columnar. The slice's
     * stats (every source row, whatever its string, and the max id) are
     * observed on the source rows of the same write — no separate job. */
-  private def writeRuns(df: DataFrame, idCol: String, strCol: String, rDir: String,
+  private[build] def writeRuns(df: DataFrame, idCol: String, strCol: String, rDir: String,
                         cfg: TriConfig): TriStats = {
     import df.sparkSession.implicits._
     val obs = new org.apache.spark.sql.Observation(s"tri_runs:$rDir")
@@ -174,7 +174,7 @@ object TrigramIndex {
         .mapPartitions { rows =>
           chunkPartition(rows.flatMap { case (id, s) =>
             Tokenizer.distinctTriKeys(if (s == null) "" else s).map(k => (k, id))
-          }, cfg.shardSize * 1024, Spimi.FlushPostings)
+          }, cfg.shardSize * Spimi.PreShard, Spimi.FlushPostings)
         }
         .toDF(RunsSchema.fieldNames.toIndexedSeq: _*),
       rDir)
@@ -189,11 +189,13 @@ object TrigramIndex {
     * [[IndexBuild]]). */
   def build(spark: SparkSession, df: DataFrame, idCol: String, strCol: String,
             dir: String, cfg: TriConfig = TriConfig()): Unit = {
+    // built before (its runs purged since)
+    if (lifecycle(spark, dir).covered(0)) return
     val written =
       if (TableIO.done(spark, runsBatchDir(dir, 0))) None
       else Some(timed("tri_runs")(writeRuns(df, idCol, strCol, runsBatchDir(dir, 0), cfg)))
     // a resume whose runs an earlier call committed counts the source
-    buildGeneration(spark, dir, Seq(0), cfg,
+    buildGeneration(spark, dir, Spimi.Runs(Seq(0)), cfg,
       written.getOrElse(TriStats.tupled(IndexBuild.countAndMax(df, idCol))), force = false)
   }
 
@@ -209,14 +211,14 @@ object TrigramIndex {
                   strCol: String, dir: String, batchId: Int,
                   cfg: TriConfig = TriConfig(), overwrite: Boolean = false): Unit = {
     val bDir = runsBatchDir(dir, batchId)
-    if (!overwrite && TableIO.done(spark, bDir) &&
-        lifecycle(spark, dir).isCommitted(batchId, batchId)) return
+    // sealed before (its runs purged since): a replay is a no-op
+    if (!overwrite && lifecycle(spark, dir).covered(batchId)) return
     val stats =
       if (overwrite || !TableIO.done(spark, bDir)) writeRuns(newDocs, idCol, strCol, bDir, cfg)
       else TriStats.tupled(IndexBuild.countAndMax(newDocs, idCol))
     // bucket count sized to the batch: a small refresh generation must not
     // fan into numBuckets near-empty files that every query then opens
-    buildGeneration(spark, dir, Seq(batchId), cfg.copy(
+    buildGeneration(spark, dir, Spimi.Runs(Seq(batchId)), cfg.copy(
       numBuckets = IndexBuild.ingestBuckets(stats.n_rows, cfg.numBuckets, cfg.shardSize)),
       stats, force = overwrite)
   }
@@ -238,25 +240,24 @@ object TrigramIndex {
     lifecycle(spark, dir).remerge(reclaim)(seal(spark, dir, cfg))
 
   /** The trigram index's side of the shared seal ([[Spimi.Kind]]): chunks
-    * shuffle on the long key itself, the dictionary holds df per key, and
-    * lineage compares keys as raw longs (a formatted-hex comparison would
-    * be wrong above 2^48, where supplementary-plane keys format wider than
-    * 12 digits), hex-formatting only the winners — the reference's
-    * filename key-range form. */
+    * shuffle on the long key itself, and lineage compares keys as raw
+    * longs (a formatted-hex comparison would be wrong above 2^48, where
+    * supplementary-plane keys format wider than 12 digits), hex-formatting
+    * only the winners — the reference's filename key-range form. */
   private def kind(dir: String) = Spimi.Kind[Long, TriSegmentRow]("tri_",
-    runsBatchDir(dir, _), RunsSchema, segmentsGenDir(dir, _, _), dictGenDir(dir, _, _),
-    statsGenDir(dir, _, _), "key", None, Seq(sum(col("count")).cast("long").as("df")),
+    runsBatchDir(dir, _), RunsSchema, segmentsGenDir(dir, _, _), statsGenDir(dir, _, _),
+    "key", None,
     (it, acc) => Spimi.observeBuckets(it, acc)(
       _.key, (k: Long) => f"$k%012x", _.count.toLong, _.postings.length.toLong))
 
-  /** Dict + stats + segments for the given runs `batches` under
-    * `gen=<min>_<max>` ([[Spimi.seal]]); `_SUCCESS`-gated per table for
+  /** Stats + segments from `source` (runs batches or a fold window) under
+    * `gen=<lo>_<hi>` ([[Spimi.seal]]); `_SUCCESS`-gated per table for
     * resume (bypassed and rewritten when `force`). `stats` is evaluated
     * only if the stats table is written. Appends the segments' lineage. */
-  private def buildGeneration(spark: SparkSession, dir: String, batches: Seq[Int],
+  private def buildGeneration(spark: SparkSession, dir: String, source: Spimi.Source,
                               cfg: TriConfig, stats: => TriStats, force: Boolean): Unit = {
     import spark.implicits._
-    val lineage = Spimi.seal(spark, kind(dir), batches, cfg.numBuckets, cfg.saltThreshold,
+    val lineage = Spimi.seal(spark, kind(dir), source, cfg.numBuckets, cfg.saltThreshold,
       cfg.shardSize, force)(_ => stats)(_ => TriCodec)
     IndexBuild.appendLineage(spark, lineageDir(dir), lineage)
   }
@@ -305,7 +306,16 @@ object TrigramIndex {
     def pool(n: Int): Pool = new Array[Long](n)
     def unpack(bytes: Array[Byte], n: Int, p: Pool, off: Int): Unit =
       VarByte.unpackIds(bytes, n, p, off)
+    def pack(p: Pool, from: Int, until: Int): Array[Byte] = VarByte.packIds(p, from, until)
     def sort(p: Pool): Array[Long] = { java.util.Arrays.sort(p); p }
+    def decode(r: TriSegmentRow): (Long, Pool, Array[Long]) = {
+      val ids = new Array[Long](r.count)
+      r.block_off.indices.foreach { b =>
+        val block = VarByte.decodeIdsBlock(r.postings, r.block_off(b), VarByte.blockCount(r.count, b))
+        System.arraycopy(block, 0, ids, b * VarByte.BlockSize, block.length)
+      }
+      (r.key, ids, ids)
+    }
     def encode(bucket: Int, key: Long, shard: Int, p: Pool,
                from: Int, until: Int): TriSegmentRow = {
       val enc = VarByte.encodeIds(

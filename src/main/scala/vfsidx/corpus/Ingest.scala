@@ -670,11 +670,12 @@ object Ingest {
     val docBase = IndexBuild.docCount(spark, indexDir)
     // Guard against a catalog/index mismatch: an empty catalog (and no
     // intent - recovery ran above) means THIS is the initial build, which
-    // will occupy runs/batch=0 - if that batch already exists (a prior
-    // `build`/pre-catalog `indexjson` run), silently skipping it via
-    // _SUCCESS would record the new files as indexed without ever
-    // tokenizing them, with wrong doc_id bases for every later refresh.
-    if (catEmpty && IndexBuild.TableIO.done(spark, IndexBuild.runsDir(indexDir, 0)))
+    // will occupy runs/batch=0 - if that batch already holds docs (a prior
+    // `build`/pre-catalog `indexjson` run: its runs committed, or purged
+    // under a committed generation), silently skipping it would record the
+    // new files as indexed without ever tokenizing them, with wrong doc_id
+    // bases for every later refresh.
+    if (catEmpty && IndexBuild.batchIngested(spark, indexDir, 0))
       throw new IllegalStateException(
         s"$indexDir already contains runs/batch=0 but has no ingest catalog: " +
           "it was built outside the refresh flow. Refresh into a fresh index " +

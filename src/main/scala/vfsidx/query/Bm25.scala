@@ -21,10 +21,11 @@ final case class Hit(doc_id: Long, score: Double)
   *   1. one segment-metadata job for the query terms ([[Postings.termMeta]]:
   *      df, block-norm maxima and block ranges off the pruned metadata
   *      columns, reduced on the driver; idf derived there) — the planner's
-  *      only round-trip before scoring, in place of the dictionary shuffle,
+  *      only round-trip before scoring, in place of a dictionary shuffle,
   *      the upper-bound shuffle and the range collect. The merged
-  *      [[dictionary]] table (the reference's count-cache,
-  *      cache/cache.go:88-120) stays for Count and the CLI;
+  *      [[dictionary]] view (the reference's count-cache,
+  *      cache/cache.go:88-120), which Count and the CLI read, is the same
+  *      segment metadata grouped by term;
   *   2. `segments.filter(term isin ...)` ([[segmentScan]]) — parquet
   *      row-group pruning does the work of the reference's filename key
   *      ranges (reference index_file.go:1572-1594), because segments
@@ -100,13 +101,15 @@ class Bm25Index(spark: SparkSession, dir: String,
     if (fs.isEmpty) 1.0 else fs.max
   }
 
-  /** Merged dictionary view: df/tf_sum summed across generations, idf
-    * derived from the merged df and the global doc count (per-generation
-    * idf would be stale the moment the corpus grows). */
+  /** Merged dictionary view off the segment metadata: df = Σ `count` and
+    * tf_sum = Σ `tf_sum` over a term's segment rows (every shard of every
+    * generation; the postings blob is never read), idf derived from the
+    * merged df and the global doc count (per-generation idf would be stale
+    * the moment the corpus grows). */
   lazy val dictionary: DataFrame = {
     val n = stats.n_docs.toDouble
-    snap.read(IndexBuild.dictGenDir(dir, _, _), IndexBuild.DictSchema)
-      .groupBy($"term").agg(sum($"df").as("df"), sum($"tf_sum").as("tf_sum"))
+    segments.toDF()
+      .groupBy($"term").agg(sum($"count").cast("long").as("df"), sum($"tf_sum").as("tf_sum"))
       .select($"term", $"df", $"tf_sum",
         log((lit(n) - $"df" + 0.5) / ($"df" + 0.5) + 1.0).as("idf"))
   }

@@ -43,10 +43,10 @@ object Postings {
     * round-trips (the BM25 θ job; the trigram segment-metadata probe; the
     * nears metadata probe, partials and candidate jobs; the regex presence
     * probe). Term statistics, upper bounds and block ranges all come off
-    * one [[termMeta]] job, so the pruned plans cost 1-2 jobs more than the
-    * direct ones; decoding ≤4M postings across the cluster is cheaper than
-    * that. At production scale the bound dwarfs the floor and the pruned
-    * paths engage. */
+    * one [[termMeta]] job, so the pruned plans cost 0-1 jobs more than the
+    * direct ones, and nears 4 more (`PostingsSpec` pins both); decoding ≤4M
+    * postings across the cluster is cheaper than that. At production scale
+    * the bound dwarfs the floor and the pruned paths engage. */
   val DirectFloor: Long = 4L << 20
 
   /** Driver-side cap on the block ranges [[termMeta]] keeps for a key set

@@ -70,6 +70,12 @@ class EntrySpec extends SparkTestBase {
     assert(rootInfo.contains("tri/body: 40 rows"), rootInfo)
     assert(rootInfo.contains("key=0x"), rootInfo)
     assert(rootInfo.contains("num/v: 40 rows"), rootInfo)
+    // on-disk bytes per table; a committed generation's runs are purged
+    def hasBytes(out: String, line: String) =
+      assert(line.replace("N", "[1-9][0-9]*").r.findFirstIn(out).nonEmpty, out)
+    hasBytes(wordInfo, "  bytes: segments=N runs=0 doc_stats=N stats=N lineage=N\n")
+    hasBytes(rootInfo, "  bytes: tri_segments=N tri_runs=0 tri_stats=N tri_lineage=N\n")
+    hasBytes(rootInfo, "  bytes: data=N stats=N\n")
     assert(captured(Array("info", s"$t/empty")).contains("no index found"))
     // seal a second generation, fold with deferred reclaim -> retirees exist
     val extra = (40L until 60L).map(i =>

@@ -74,16 +74,17 @@ class BuildJobsSpec extends SparkTestBase {
     assert(NumericIndex.generations(spark, cols, "size") == Seq((0, 0), (1, 2)))
     // format gates and counts read footers on the driver; the numeric count
     // and max id come off the data write; a one-bucket generation plans no
-    // exchange
+    // exchange; no dictionary is written (a multi-bucket generation's
+    // dictionary aggregate was two jobs, a one-bucket one's one)
     val expected = Seq(
-      "word build" -> 9,
-      "word refresh 1" -> 6,
-      "word refresh 2" -> 6,
-      "word fold" -> 7,
-      "trigram build" -> 7,
-      "trigram refresh 1" -> 5,
-      "trigram refresh 2" -> 5,
-      "trigram fold" -> 7,
+      "word build" -> 7,
+      "word refresh 1" -> 5,
+      "word refresh 2" -> 5,
+      "word fold" -> 5,
+      "trigram build" -> 5,
+      "trigram refresh 1" -> 4,
+      "trigram refresh 2" -> 4,
+      "trigram fold" -> 5,
       "numeric build" -> 6,
       "numeric refresh 1" -> 4,
       "numeric refresh 2" -> 4,

@@ -21,8 +21,8 @@ class FormatGateSpec extends SparkTestBase {
       .toDF("bucket", "term", "shard", "count", "postings",
         "block_first", "block_last", "block_off", "block_max_norm")
       .write.mode(SaveMode.Overwrite).parquet(IndexBuild.segmentsGenDir(dir, 0, 0))
-    Seq(DictRow("the", 2L, 2L)).toDF()
-      .write.mode(SaveMode.Overwrite).parquet(IndexBuild.dictGenDir(dir, 0, 0))
+    Seq(("the", 2L, 2L)).toDF("term", "df", "tf_sum")
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/dictionary/gen=0_0")
     Seq(CorpusStats(2L, 2L, 1.0)).toDF()
       .write.mode(SaveMode.Overwrite).parquet(IndexBuild.statsGenDir(dir, 0, 0))
   }

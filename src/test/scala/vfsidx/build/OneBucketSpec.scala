@@ -1,7 +1,7 @@
 package vfsidx.build
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, hex, md5, monotonically_increasing_id, xxhash64}
+import org.apache.spark.sql.functions.{col, hex, md5, monotonically_increasing_id, sum, xxhash64}
 import vfsidx.SparkTestBase
 import vfsidx.corpus.Synth
 
@@ -38,8 +38,8 @@ class OneBucketSpec extends SparkTestBase {
     assert(seg1.filter($"shard" > 0).count() > 0, "the corpus has salted head terms")
     assert(seg1.filter($"bucket" =!= 0).isEmpty)
     assert(rows(seg1, "term") == rows(IndexBuild.readSegments(spark, w4), "term"))
-    def dict(d: String) = IndexBuild.snapshot(spark, d)
-      .read(IndexBuild.dictGenDir(d, _, _), IndexBuild.DictSchema).as[DictRow].collect().sortBy(_.term).toSeq
+    def dict(d: String) = new vfsidx.query.Bm25Index(spark, d).dictionary
+      .select($"term", $"df", $"tf_sum").as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(dict(w1) == dict(w4))
     // the merge's sort order: (xxhash64(term), pre_shard, term); shards of
     // one term come out ascending
@@ -56,8 +56,8 @@ class OneBucketSpec extends SparkTestBase {
     assert(tseg1.filter($"shard" > 0).count() > 0)
     assert(tseg1.filter($"bucket" =!= 0).isEmpty)
     assert(rows(tseg1, "key") == rows(TrigramIndex.snapshot(spark, t4).segments, "key"))
-    def triDict(d: String) = TrigramIndex.snapshot(spark, d)
-      .read(TrigramIndex.dictGenDir(d, _, _), TrigramIndex.DictSchema).as[TriDictRow].collect().sortBy(_.key).toSeq
+    def triDict(d: String) = TrigramIndex.snapshot(spark, d).segments
+      .groupBy($"key").agg(sum($"count").cast("long")).as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(triDict(t1) == triDict(t4))
     val korder = oneFile(TrigramIndex.segmentsGenDir(t1, 0, 0))
       .select($"key", $"shard", $"pos").as[(Long, Int, Long)].collect().sortBy(_._3).toSeq

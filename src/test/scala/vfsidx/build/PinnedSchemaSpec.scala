@@ -29,15 +29,17 @@ class PinnedSchemaSpec extends SparkTestBase {
       TrigramIndex.TriConfig(numBuckets = 2, saltThreshold = 100, shardSize = 64))
     NumericIndex.build(spark, docs.select($"doc_id", $"doc_id" % 17 as "n"), "doc_id", "n", num,
       numBuckets = 2)
+    // a committed generation's runs are purged: write one more batch of each
+    IndexBuild.writeRuns(docs, word, 1, 300L, IndexBuild.BuildConfig())
+    TrigramIndex.writeRuns(docs.toDF(), "doc_id", "content", TrigramIndex.runsBatchDir(tri, 1),
+      TrigramIndex.TriConfig())
 
     Seq(
-      ("runs", IndexBuild.runsDir(word, 0), IndexBuild.RunsSchema),
+      ("runs", IndexBuild.runsDir(word, 1), IndexBuild.RunsSchema),
       ("segments", IndexBuild.segmentsGenDir(word, 0, 0), IndexBuild.SegmentSchema),
-      ("dictionary", IndexBuild.dictGenDir(word, 0, 0), IndexBuild.DictSchema),
       ("stats", IndexBuild.statsGenDir(word, 0, 0), IndexBuild.StatsSchema),
-      ("tri_runs", TrigramIndex.runsBatchDir(tri, 0), TrigramIndex.RunsSchema),
+      ("tri_runs", TrigramIndex.runsBatchDir(tri, 1), TrigramIndex.RunsSchema),
       ("tri_segments", TrigramIndex.segmentsGenDir(tri, 0, 0), TrigramIndex.SegmentSchema),
-      ("tri_dict", TrigramIndex.dictGenDir(tri, 0, 0), TrigramIndex.DictSchema),
       ("tri_stats", TrigramIndex.statsGenDir(tri, 0, 0), TrigramIndex.StatsSchema),
       ("num data", NumericIndex.dataGenDir(num, "n", 0, 0), NumericIndex.DataSchema),
       ("num stats", NumericIndex.statsGenDir(num, "n", 0, 0), NumericIndex.StatsSchema)

@@ -133,8 +133,8 @@ class PostingsSpec extends SparkTestBase {
     assert(triSegs.filter($"shard" > 0).count() > 0, "no salted trigram shard")
     val triSegDf = triSegs.groupBy($"key").agg(sum($"count").cast("long"))
       .as[(Long, Long)].collect().toMap
-    val triDict = TrigramIndex.snapshot(spark, triDir)
-      .read(TrigramIndex.dictGenDir(triDir, _, _), TrigramIndex.DictSchema).groupBy($"key").agg(sum($"df"))
+    val triDict = TrigramIndex.snapshot(spark, triDir).segments
+      .groupBy($"key").agg(sum($"count").cast("long"))
       .as[(Long, Long)].collect().toMap
     assert(triDict == triSegDf)
     assert(Postings.termMeta(triSegs, "key", triDict.keys.toSeq).df == triDict)
