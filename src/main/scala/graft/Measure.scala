@@ -208,13 +208,13 @@ object Measure {
     Audit("ft_first_last", "First/Last from segment block metadata (postings blob not in ReadSchema; no corpus scan)",
       Seq("ReadSchema", "EqualTo(term", "block_first"),
       none = Seq("postings:binary", "documents.parquet")),
-    Audit("ft_query_or", "|| groups: union of candidate sets, one semi-join, OR re-applied",
-      Seq("Union", "LeftSemi")),
+    Audit("ft_query_or", "|| groups: one Postings.perDoc pass over every group's conjuncts yields one local candidate set (no per-group sets, no union), one semi-join, OR re-applied",
+      Seq("LeftSemi", "LocalTableScan"), none = Seq("Union")),
     Audit("ft_count_and", "Count/First/Last over a composed AND: Postings.perDoc intersects and aggregates the pruned segment rows (In(term) pushed to parquet) into a local relation — the documents table is ABSENT from both plans",
       Seq("LocalTableScan", "PushedFilters", "In(term"), none = Seq("documents.parquet"),
       scan = Some(countAndScan _)),
-    Audit("ft_query_paren", "parenthesized groups normalize to DNF; conjuncts common to EVERY group hoist above the union (here the repeated search alone bounds the rows, so the union term drops: ONE candidate subtree, not one per branch), one semi-join, predicate re-applied",
-      Seq("LeftSemi", "BroadcastHashJoin")),
+    Audit("ft_query_paren", "parenthesized groups normalize to DNF; the search both groups repeat is one conjunct of the one Postings.perDoc pass (its keys read once), whose local candidate set is broadcast into one semi-join, no union; predicate re-applied",
+      Seq("LeftSemi", "BroadcastHashJoin", "LocalTableScan"), none = Seq("Union")),
     Audit("ft_regex_search", "regex compiled to trigram CNF clauses: the clause candidates inline as In(doc_id, ...) pushed to the documents scan, RLIKE only on those rows (no full-corpus regex scan)",
       Seq("PushedFilters", "In(doc_id", "RLIKE(text")),
     Audit("ft_query_not", "negated conjunct rides the re-applied predicate (NOT Contains) while the positive search's candidates bound the rows: one semi-join, no complement scan",

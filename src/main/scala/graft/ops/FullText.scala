@@ -194,10 +194,10 @@ object FullText {
     index(s, dir).countFirstLastAnd(CountAndQuery)
 
   /** Parenthesized groups in the query language (round-4 grammar
-    * extension): the expression normalizes to DNF, each conjunct group
-    * resolves candidates through the indexes, groups union, predicates
-    * re-apply (divergence: the reference grammar has neither `\|\|` nor
-    * parens, /root/reference/expr/expr.peg:8-32). */
+    * extension): the expression normalizes to DNF, every group's conjuncts
+    * resolve in one pass over the indexes, predicates re-apply
+    * (divergence: the reference grammar has neither `\|\|` nor parens,
+    * /root/reference/expr/expr.peg:8-32). */
   val QueryParenExpr = """text.search("merge") && (n_chars < 250 || n_chars >= 900)"""
   def queryParen(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -207,9 +207,9 @@ object FullText {
       .orderBy($"doc_id")
   }
 
-  /** Query-language `||` extension: union of conjunct-group candidate sets
-    * from the indexes, every predicate re-applied (divergence: the reference
-    * grammar has no OR, /root/reference/expr/expr.peg:8-32). */
+  /** Query-language `||` extension: one pass over the indexes gives one
+    * candidate set for all conjunct groups, every predicate re-applied (divergence: the reference grammar has no OR,
+    * /root/reference/expr/expr.peg:8-32). */
   val QueryOrExpr = """text.search("the batch") && n_chars < 400 || text.search("data merge")"""
   def queryOr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

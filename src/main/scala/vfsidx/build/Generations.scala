@@ -94,22 +94,31 @@ private[build] final class Generations[S](
     b => gens.exists { case (l, h) => l <= b && b <= h }
   }
 
-  /** Delete what no read needs: the run data of every batch a committed
-    * generation covers, and the `legacy` tables. A batch's runs dir stays,
-    * empty, as its slot marker ([[maxBatch]]); the runs of a batch no
-    * committed generation covers stay too, for the seal, resume or replay
-    * that still reads them. Folds and [[vacuum]] run it, so an index
-    * written before runs were purged shrinks on its next maintenance
-    * pass. One listing per slot. */
-  def purge(): Unit = runs.foreach { dirOf =>
-    val isCovered = covered
-    val p = new Path(dirOf(0)).getParent
-    if (fs(p).exists(p))
-      fs(p).listStatus(p).map(_.getPath.getName)
-        .collect { case slotRe(b) if isCovered(b.toInt) => dirOf(b.toInt) }
-        .foreach(TableIO.purge(spark, _))
-    legacy.foreach(TableIO.rmrf(spark, _))
+  /** Delete what an older layout left behind: while a `legacy` table
+    * exists, the run data of every batch a committed generation covers
+    * (written before runs were purged), then the legacy tables. A batch's
+    * runs dir stays, empty, as its slot marker ([[maxBatch]]); the runs of
+    * a batch no committed generation covers stay too, for the seal, resume
+    * or replay that still reads them. Folds and [[vacuum]] run it. In the
+    * steady state it lists nothing: a seal purges the runs it read
+    * ([[Spimi.seal]]), and a replay of a covered batch purges its own slot
+    * ([[purgeSlot]]). */
+  def purge(): Unit = {
+    val old = legacy.filter { d => val p = new Path(d); fs(p).exists(p) }
+    if (old.nonEmpty) runs.foreach { dirOf =>
+      val isCovered = covered
+      val p = new Path(dirOf(0)).getParent
+      if (fs(p).exists(p))
+        fs(p).listStatus(p).map(_.getPath.getName)
+          .collect { case slotRe(b) if isCovered(b.toInt) => dirOf(b.toInt) }
+          .foreach(TableIO.purge(spark, _))
+    }
+    old.foreach(TableIO.rmrf(spark, _))
   }
+
+  /** Purge covered batch `b`'s run data: a seal cut short between its
+    * commit and its purge left it behind. */
+  def purgeSlot(b: Int): Unit = runs.foreach(dirOf => TableIO.purge(spark, dirOf(b)))
 
   /** Delete RETIRED generation directories — the Iceberg/Delta
     * expire-snapshots pattern: compaction only COMMITS the combined

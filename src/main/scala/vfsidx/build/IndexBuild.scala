@@ -162,8 +162,7 @@ object IndexBuild {
   private[vfsidx] val StatsSchema: StructType = Encoders.product[CorpusStats].schema
   /** SPIMI chunk runs ([[writeRuns]]). */
   private[vfsidx] val RunsSchema: StructType = StructType.fromDDL(
-    "term STRING, pre_shard BIGINT, first_doc BIGINT, last_doc BIGINT, count INT, " +
-      "tf_sum BIGINT, bytes BINARY")
+    "term STRING, pre_shard BIGINT, count INT, tf_sum BIGINT, bytes BINARY")
 
   /** The word index's generation lifecycle ([[Generations]]): generations
     * list under `segments`, the runs batch dirs are the slots, the stats
@@ -240,9 +239,9 @@ object IndexBuild {
     new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
 
   /** MIGRATION gate (round 4): the word index's on-disk format changed —
-    * `runs` hold SPIMI chunk rows (term, pre_shard, first_doc, last_doc,
-    * count, tf_sum, bytes) instead of raw [[Posting]] rows, and `segments`
-    * gained a `tf_sum` column. An index persisted by an earlier build would
+    * `runs` hold SPIMI chunk rows (term, pre_shard, count, tf_sum, bytes)
+    * instead of raw [[Posting]] rows, and `segments` gained a `tf_sum`
+    * column. An index persisted by an earlier build would
     * otherwise fail deep inside a query (`SegmentRow` encoder) or — worse —
     * mid-compaction, after new generations were already sealed. Refuse it up
     * front, loudly, with a rebuild instruction. (The trigram index needs no
@@ -479,10 +478,12 @@ object IndexBuild {
     }
 
     // resumed batches: the stats stage re-aggregates the chunks. Nothing
-    // to seal when committed generations cover every batch.
+    // to seal when committed generations cover every batch, only their
+    // slots to purge.
     val knownTfSum = if (pending.size == cfg.numBatches) Some(tfSums.sum) else None
     if (!batches.forall(covered))
       lineage ++= buildGeneration(spark, dir, Spimi.Runs(batches), nDocs, cfg, knownTfSum)
+    else batches.foreach(lifecycle(spark, dir).purgeSlot)
 
     if (lineage.nonEmpty) timed("lineage")(appendLineage(spark, lineageDir(dir), lineage))
   }
@@ -546,19 +547,18 @@ object IndexBuild {
     * into per-term [[PostingsBuf]]s; payload = flat (gap, tf, dl) varint
     * triples ([[VarByte.packPostings]]) plus the chunk's tf_sum. */
   private final class WordChunkAccumulator(preShardDocs: Long)
-      extends Spimi.Accumulator[SourceFile, (String, Long, Long, Long, Int, Long, Array[Byte])] {
+      extends Spimi.Accumulator[SourceFile, (String, Long, Int, Long, Array[Byte])] {
     private val map = new java.util.HashMap[String, PostingsBuf]()
     private def emitKey(term: String, b: PostingsBuf,
-        out: scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long, Int, Long, Array[Byte])]): Unit =
+        out: scala.collection.mutable.ArrayBuffer[(String, Long, Int, Long, Array[Byte])]): Unit =
       Spimi.splitByRange(b.ids, b.len, preShardDocs) { (i, j, ps) =>
         var ts = 0L
         var k = i
         while (k < j) { ts += b.tfs(k); k += 1 }
-        out += ((term, ps, b.ids(i), b.ids(j - 1), j - i, ts,
-          VarByte.packPostings(b.ids, b.tfs, b.dls, i, j)))
+        out += ((term, ps, j - i, ts, VarByte.packPostings(b.ids, b.tfs, b.dls, i, j)))
       }
     def add(d: SourceFile,
-        out: scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long, Int, Long, Array[Byte])]): Int = {
+        out: scala.collection.mutable.ArrayBuffer[(String, Long, Int, Long, Array[Byte])]): Int = {
       val (tfm, dl) = Tokenizer.termFreqs(d.content)
       var net = 0
       val eit = tfm.entrySet().iterator()
@@ -578,7 +578,7 @@ object IndexBuild {
       net
     }
     def flushAll(
-        out: scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long, Int, Long, Array[Byte])]): Unit = {
+        out: scala.collection.mutable.ArrayBuffer[(String, Long, Int, Long, Array[Byte])]): Unit = {
       map.forEach((t, b) => emitKey(t, b, out))
       map.clear()
     }
@@ -649,8 +649,8 @@ object IndexBuild {
     gl.generations
     val rDir = runsDir(dir, batchId)
     val dsDir = docStatsBatchDir(dir, batchId.toString)
-    // sealed before (its runs purged since): a replay is a no-op
-    if (TableIO.done(spark, dsDir) && gl.covered(batchId)) return
+    // sealed before (its runs purged since): a replay only purges its slot
+    if (TableIO.done(spark, dsDir) && gl.covered(batchId)) return gl.purgeSlot(batchId)
     val nNew = fastCount(newDocs)
     // the generation's tf_sum comes off the runs write (the stats stage
     // then skips its own agg)

@@ -46,7 +46,7 @@ final case class TriStats(n_rows: Long, max_doc_id: Long)
   * a stage boundary (raw (key, doc_id) pairs never materialize as rows):
   *
   *   docs --tokenize+accumulate--> tri_runs CHUNKS
-  *        (key, pre_shard, first_doc, last_doc, count, delta-varint bytes)
+  *        (key, pre_shard, count, delta-varint bytes)
   *   chunks --repartition(key, pre_shard) --Spimi.merge-->
   *        tri_segments (canonical blocked varbyte)            [resumable]
   *
@@ -90,7 +90,7 @@ object TrigramIndex {
   private[vfsidx] val StatsSchema: StructType = Encoders.product[TriStats].schema
   /** SPIMI chunk runs ([[writeRuns]]). */
   private[vfsidx] val RunsSchema: StructType = StructType.fromDDL(
-    "key BIGINT, pre_shard BIGINT, first_doc BIGINT, last_doc BIGINT, count INT, bytes BINARY")
+    "key BIGINT, pre_shard BIGINT, count INT, bytes BINARY")
 
   final case class TriConfig(
       numBuckets: Int = 32,
@@ -190,7 +190,8 @@ object TrigramIndex {
   def build(spark: SparkSession, df: DataFrame, idCol: String, strCol: String,
             dir: String, cfg: TriConfig = TriConfig()): Unit = {
     // built before (its runs purged since)
-    if (lifecycle(spark, dir).covered(0)) return
+    val gl = lifecycle(spark, dir)
+    if (gl.covered(0)) return gl.purgeSlot(0)
     val written =
       if (TableIO.done(spark, runsBatchDir(dir, 0))) None
       else Some(timed("tri_runs")(writeRuns(df, idCol, strCol, runsBatchDir(dir, 0), cfg)))
@@ -211,8 +212,9 @@ object TrigramIndex {
                   strCol: String, dir: String, batchId: Int,
                   cfg: TriConfig = TriConfig(), overwrite: Boolean = false): Unit = {
     val bDir = runsBatchDir(dir, batchId)
-    // sealed before (its runs purged since): a replay is a no-op
-    if (!overwrite && lifecycle(spark, dir).covered(batchId)) return
+    // sealed before (its runs purged since): a replay only purges its slot
+    val gl = lifecycle(spark, dir)
+    if (!overwrite && gl.covered(batchId)) return gl.purgeSlot(batchId)
     val stats =
       if (overwrite || !TableIO.done(spark, bDir)) writeRuns(newDocs, idCol, strCol, bDir, cfg)
       else TriStats.tupled(IndexBuild.countAndMax(newDocs, idCol))
@@ -265,33 +267,33 @@ object TrigramIndex {
   /** One map partition -> SPIMI chunks: accumulate per-key ascending id
     * lists (ids arrive doc-ordered within a partition), flush at
     * [[Spimi.FlushPostings]], split at `preShardDocs` doc boundaries so no chunk
-    * spans reducer groups. Emits (key, pre_shard, first_doc, last_doc,
-    * count, packed delta-varint bytes) LAZILY — task memory is bounded by
+    * spans reducer groups. Emits (key, pre_shard, count, packed
+    * delta-varint bytes) LAZILY — task memory is bounded by
     * the accumulator plus one flush's chunks ([[Spimi.chunks]]), not the
     * partition's whole output. */
   private[build] def chunkPartition(it: Iterator[(Long, Long)], preShardDocs: Long,
-      flushPostings: Int): Iterator[(Long, Long, Long, Long, Int, Array[Byte])] =
+      flushPostings: Int): Iterator[(Long, Long, Int, Array[Byte])] =
     Spimi.chunks(it, new TriChunkAccumulator(preShardDocs), flushPostings)
 
   /** [[Spimi.Accumulator]] over [[LongListMap]] for ids-only trigram
     * postings: payload = flat delta-varint id runs ([[VarByte.packIds]]). */
   private final class TriChunkAccumulator(preShardDocs: Long)
-      extends Spimi.Accumulator[(Long, Long), (Long, Long, Long, Long, Int, Array[Byte])] {
+      extends Spimi.Accumulator[(Long, Long), (Long, Long, Int, Array[Byte])] {
     private val map = new LongListMap()
     // `cur` points at the driver's drain buffer for the duration of one
     // add/flushAll call, so the order-break callback allocates nothing per
     // posting in the hot loop
-    private var cur: scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Int, Array[Byte])] = _
+    private var cur: scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Array[Byte])] = _
     private val emitKey: (Long, Array[Long], Int) => Unit = (key, ids, len) =>
       Spimi.splitByRange(ids, len, preShardDocs) { (i, j, ps) =>
-        cur += ((key, ps, ids(i), ids(j - 1), j - i, VarByte.packIds(ids, i, j)))
+        cur += ((key, ps, j - i, VarByte.packIds(ids, i, j)))
       }
     def add(kv: (Long, Long),
-            out: scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Int, Array[Byte])]): Int = {
+            out: scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Array[Byte])]): Int = {
       cur = out
       1 - map.append(kv._1, kv._2, emitKey)
     }
-    def flushAll(out: scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Int, Array[Byte])]): Unit = {
+    def flushAll(out: scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Array[Byte])]): Unit = {
       cur = out
       map.foreach(emitKey)
       map.clear()
@@ -342,8 +344,7 @@ object TrigramIndex {
       * order — when the new id breaks the list's monotonicity (a file
       * boundary), the accumulated run is handed to `onOrderBreak` as its
       * own chunk first (runs from different files cover disjoint doc
-      * ranges, so the reduce-side first_doc ordering still merges them
-      * without a posting sort). Returns how many postings were emitted. */
+      * ranges, and the reduce side sorts each group's pooled ids). Returns how many postings were emitted. */
     def append(k: Long, id: Long,
                onOrderBreak: (Long, Array[Long], Int) => Unit): Int = {
       var i = (scala.util.hashing.byteswap64(k) & mask).toInt

@@ -7,6 +7,7 @@ import org.apache.spark.Partitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{array_max, col, lit}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -183,74 +184,105 @@ object Postings {
 
   /** Decoded postings of the query `keys`, aggregated per doc: the sum of
     * their weights ([[Bm25]]; none for ids-only postings) and the set of
-    * query keys the doc holds. `scan` is the [[scan]] of `keys`.
+    * query keys the doc holds. `scan` is the [[scan]] of `keys`: the one
+    * [[segments]] source of an [[aggregate]]. */
+  private[vfsidx] def perDoc(scan: DataFrame, keys: Seq[Any], bm25: Option[Bm25] = None,
+                             ranges: Option[Array[(Long, Long)]] = None,
+                             protect: Set[Int] = Set.empty,
+                             within: Option[Broadcast[Array[Long]]] = None): PerDoc =
+    aggregate(scan.sparkSession, Seq(segments(scan, keys, 0, bm25, ranges, protect, within)),
+      keys.size, bm25.isDefined)
+
+  /** The map side of one [[aggregate]] input: the rows of a Catalyst plan,
+    * each folded into its map task's [[DocMap]]. */
+  private[query] final class Source(val rows: RDD[InternalRow],
+                                    val fold: (InternalRow, DocMap) => Unit)
+
+  /** The rows of `scan` (a [[scan]] of `keys`) as a source: a posting of
+    * key `keys(i)` sets bit `offset + i` of its doc and adds its weight.
     *
     * Block skipping: with `within` (sorted doc ids), a block decodes only
     * when a listed doc lies in its [first, last] range and only listed docs
     * count; otherwise every key outside `protect` (key indexes) decodes only
-    * the blocks [[keep]] accepts for `ranges`.
+    * the blocks [[keep]] accepts for `ranges`. */
+  private[query] def segments(scan: DataFrame, keys: Seq[Any], offset: Int,
+                              bm25: Option[Bm25] = None,
+                              ranges: Option[Array[(Long, Long)]] = None,
+                              protect: Set[Int] = Set.empty,
+                              within: Option[Broadcast[Array[Long]]] = None): Source = {
+    val index: Map[Any, Int] = keys.zipWithIndex.toMap
+    val keyType = scan.schema.head.dataType
+    new Source(scan.queryExecution.toRdd, (r, acc) => {
+      val ki = index(r.get(0, keyType) match {
+        case u: UTF8String => u.toString
+        case k => k
+      })
+      val bit = offset + ki
+      val s = new Blocks(r.getInt(1), r.getBinary(2), r.getArray(3).toLongArray(),
+        r.getArray(4).toLongArray(), r.getArray(5).toIntArray())
+      bm25 match {
+        case Some(w) =>
+          val idf = w.idf(ki)
+          val keepBlock = keep(s, ranges, protect(ki))
+          var bi = 0
+          while (bi < s.block_off.length) {
+            if (keepBlock(bi)) {
+              val cnt = VarByte.blockCount(s.count, bi)
+              val (ids, tfs, dls) = VarByte.decodeBlock(s.postings, s.block_off(bi), cnt)
+              var i = 0
+              while (i < cnt) {
+                acc.add(ids(i), bit,
+                  idf * VarByte.bm25Norm(tfs(i), dls(i), w.avgdl, IndexBuild.K1, IndexBuild.B))
+                i += 1
+              }
+            }
+            bi += 1
+          }
+        case None => within.map(_.value) match {
+          case Some(docs) =>
+            decodeIds(s, bi => {
+              var p = java.util.Arrays.binarySearch(docs, s.block_first(bi))
+              if (p < 0) p = -p - 1
+              p < docs.length && docs(p) <= s.block_last(bi)
+            })(id => if (java.util.Arrays.binarySearch(docs, id) >= 0) acc.add(id, bit, 0.0))
+          case None => decodeIds(s, keep(s, ranges, protect(ki)))(acc.add(_, bit, 0.0))
+        }
+      }
+    })
+  }
+
+  /** The one-column `doc_id` rows of `ids` as a source: each sets `bit` of
+    * its doc. */
+  private[query] def docs(ids: DataFrame, bit: Int): Source =
+    new Source(ids.queryExecution.toRdd, (r, acc) => acc.add(r.getLong(0), bit, 0.0))
+
+  /** The per-doc aggregate of `sources` over `bits` key bits: one shuffle
+    * and merge shared by every source.
     *
-    * Each map task decodes its segment rows into a primitive open-addressing
-    * table ([[DocMap]]: doc id → sum, key bitmask) and ships one record per
+    * Each map task folds its rows into a primitive open-addressing table
+    * ([[DocMap]]: doc id → sum, key bitmask) and ships one record per
     * reducer, parallel primitive arrays of its docs; never a record per
     * posting. There are `spark.sql.shuffle.partitions` reducers, capped by
-    * the scan's partition count. Each reducer merges its records into one
+    * the sources' partition count. Each reducer merges its records into one
     * table: sums add, key sets union, so a (key, doc) posting present in
     * two generations still counts one key. Nothing runs until a finisher of
     * [[PerDoc]] does; a second finisher re-reads the shuffle output, not
-    * the scan. */
-  private[vfsidx] def perDoc(scan: DataFrame, keys: Seq[Any], bm25: Option[Bm25] = None,
-                             ranges: Option[Array[(Long, Long)]] = None,
-                             protect: Set[Int] = Set.empty,
-                             within: Option[Broadcast[Array[Long]]] = None): PerDoc = {
-    val index: Map[Any, Int] = keys.zipWithIndex.toMap
-    val words = (keys.size + 63) >>> 6
-    val weighted = bm25.isDefined
-    val keyType = scan.schema.head.dataType
-    val rows = scan.queryExecution.toRdd
-    val reducers = math.max(1, math.min(rows.getNumPartitions,
-      scan.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
-    val chunks = rows.mapPartitions { it =>
-      val acc = new DocMap(words, weighted)
-      it.foreach { r =>
-        val ki = index(r.get(0, keyType) match {
-          case u: UTF8String => u.toString
-          case k => k
-        })
-        val s = new Blocks(r.getInt(1), r.getBinary(2), r.getArray(3).toLongArray(),
-          r.getArray(4).toLongArray(), r.getArray(5).toIntArray())
-        bm25 match {
-          case Some(w) =>
-            val idf = w.idf(ki)
-            val keepBlock = keep(s, ranges, protect(ki))
-            var bi = 0
-            while (bi < s.block_off.length) {
-              if (keepBlock(bi)) {
-                val cnt = VarByte.blockCount(s.count, bi)
-                val (ids, tfs, dls) = VarByte.decodeBlock(s.postings, s.block_off(bi), cnt)
-                var i = 0
-                while (i < cnt) {
-                  acc.add(ids(i), ki,
-                    idf * VarByte.bm25Norm(tfs(i), dls(i), w.avgdl, IndexBuild.K1, IndexBuild.B))
-                  i += 1
-                }
-              }
-              bi += 1
-            }
-          case None => within.map(_.value) match {
-            case Some(docs) =>
-              decodeIds(s, bi => {
-                var p = java.util.Arrays.binarySearch(docs, s.block_first(bi))
-                if (p < 0) p = -p - 1
-                p < docs.length && docs(p) <= s.block_last(bi)
-              })(id => if (java.util.Arrays.binarySearch(docs, id) >= 0) acc.add(id, ki, 0.0))
-            case None => decodeIds(s, keep(s, ranges, protect(ki)))(acc.add(_, ki, 0.0))
-          }
-        }
+    * the sources. */
+  private[query] def aggregate(spark: SparkSession, sources: Seq[Source], bits: Int,
+                               weighted: Boolean): PerDoc = {
+    val words = (bits + 63) >>> 6
+    val reducers = math.max(1, math.min(sources.map(_.rows.getNumPartitions).sum,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val chunks = sources.map { src =>
+      val fold = src.fold
+      src.rows.mapPartitions { it =>
+        val acc = new DocMap(words, weighted)
+        it.foreach(fold(_, acc))
+        acc.split(reducers)
       }
-      acc.split(reducers)
     }
-    new PerDoc(new ShuffledRDD[Int, DocChunk, DocChunk](chunks, new Reducers(reducers))
+    val mapped = if (chunks.size == 1) chunks.head else spark.sparkContext.union(chunks)
+    new PerDoc(new ShuffledRDD[Int, DocChunk, DocChunk](mapped, new Reducers(reducers))
       .mapPartitions(it => {
         val merged = new DocMap(words, weighted)
         it.foreach(kv => merged.merge(kv._2))

@@ -362,9 +362,19 @@ object QueryParser {
     * missing its stats is simply not committed (not consulted at all). */
   val MaxIndexSelectivity = 0.25
 
-  /** Stable identity of one candidate set — the memo key AND the unit of
-    * common-conjunct hoisting across DNF groups. */
-  private final case class CandKey(kind: String, col: String, detail: String)
+  /** One indexed conjunct of a DNF group, as [[queryIndexed]]'s one
+    * [[Postings.perDoc]] pass tests it: a CNF of literal OR-clauses over a
+    * string column's trigram keys ([[Tri]]: a search or string `==` is one
+    * clause of one literal, a regex its [[RegexTrigram.plan]]), a merged
+    * numeric range ([[Num]]: each bound with its inclusiveness; a point is
+    * [v, v]), or a contradiction that no doc satisfies ([[Never]]). Equal
+    * conjuncts are one: a conjunct that DNF distribution repeats across
+    * groups reads its keys and sets its bit once. */
+  private sealed trait Conjunct
+  private final case class Tri(col: String, clauses: List[Set[String]]) extends Conjunct
+  private final case class Num(col: String, lo: Option[(Long, Boolean)],
+                               hi: Option[(Long, Boolean)]) extends Conjunct
+  private case object Never extends Conjunct
 
   /** Table-watermark cache for the staleness guard. The guard needs the
     * table's (row count, max id); an O(table) agg per indexed query would be
@@ -411,29 +421,18 @@ object QueryParser {
   /** Per-[[queryIndexed]]-call memo. It holds ONE generation snapshot per
     * indexed column ([[TrigramIndex.snapshot]], [[NumericIndex.snapshot]]),
     * taken on the column's first use: its freshness check, its numeric
-    * selectivity estimate and every candidate set planned on it read that
-    * snapshot's stats and tables, so one call lists each column's
-    * generations once and never mixes generation sets. DNF distribution
-    * repeats the same conjunct in many groups (`s && (a || b)` puts `s` in
-    * both); memoizing here also means each distinct candidate set is
-    * PLANNED once, each column's freshness is checked once, and the
-    * staleness warning prints once per column. A merge-on-search fold
-    * replaces its column's snapshot ([[foldTri]], [[foldNum]]) before any
-    * candidate is built. */
+    * selectivity estimate and the pass's reads of it come from that
+    * snapshot, so one call lists each column's generations once and never
+    * mixes generation sets. DNF distribution repeats the same conjunct in
+    * many groups (`s && (a || b)` puts `s` in both); each column's
+    * freshness is checked once, and the staleness warning prints once per
+    * column. A merge-on-search fold replaces its column's snapshot
+    * ([[foldTri]], [[foldNum]]) before the pass is planned. */
   private final class QueryMemo(val spark: SparkSession, indexRoot: String,
                                 tableWatermark: () => Option[(Long, Long)]) {
-    private val cand = scala.collection.mutable.Map.empty[CandKey, DataFrame]
     private val freshM = scala.collection.mutable.Map.empty[String, Boolean]
     private val triM = scala.collection.mutable.Map.empty[String, TrigramIndex.Snapshot]
     private val numM = scala.collection.mutable.Map.empty[String, NumericIndex.Snapshot]
-
-    /** A LAZY handle: the candidate DataFrame is built (and memoized) only
-      * when the thunk is forced. Keys alone drive the hoisting decision, so
-      * sets the hoist discards — a residual dropped by a residual-empty
-      * group, or everything when some group is unindexable — never pay
-      * their planning cost (searchCandidates runs eager driver collects). */
-    def candidate(key: CandKey)(build: => DataFrame): (CandKey, () => DataFrame) =
-      key -> (() => cand.getOrElseUpdate(key, build))
 
     def tri(c: String): TrigramIndex.Snapshot =
       triM.getOrElseUpdate(c, TrigramIndex.snapshot(spark, triDir(indexRoot, c)))
@@ -443,9 +442,9 @@ object QueryParser {
     /** Merge-on-search: one bounded tiered fold of column `c`'s index
       * (the trigram config's policy bounds; numeric folds keep their own
       * bucket layout, as buildIndexes does). A fold re-lists the column,
-      * so candidates built later read the post-fold generations; it keeps
-      * n_rows, the max id and integrality, so the freshness and selectivity
-      * decisions already taken on the old snapshot stay valid. */
+      * so the pass reads the post-fold generations; it keeps n_rows, the
+      * max id and integrality, so the freshness and selectivity decisions
+      * already taken on the old snapshot stay valid. */
     def foldTri(c: String, cfg: TrigramIndex.TriConfig): Unit =
       if (TrigramIndex.compactTiered(spark, triDir(indexRoot, c), cfg, reclaim = false)) triM -= c
     def foldNum(c: String, cfg: TrigramIndex.TriConfig): Unit =
@@ -474,15 +473,11 @@ object QueryParser {
       })
   }
 
-  /** Candidate doc_ids for ONE conjunct group, one (key, lazy set) pair per
-    * indexed conjunct — intersected by the caller, which first hoists keys
-    * common to every group and forces only the surviving thunks; None when
-    * no conjunct is indexable (the group needs a scan anyway). Exactness is
-    * never at stake: candidates are a superset and every predicate is
+  /** The indexed conjuncts of ONE conjunct group; empty when none is
+    * indexable (the group needs a scan anyway). Exactness is never at
+    * stake: a conjunct only bounds the candidates, and every predicate is
     * re-applied by [[queryIndexed]]. */
-  private def groupCandidates(exprs: Seq[Expr],
-                              memo: QueryMemo): Option[Seq[(CandKey, () => DataFrame)]] = {
-    import memo.spark
+  private def indexed(exprs: Seq[Expr], memo: QueryMemo): Seq[Conjunct] = {
     // string equality shares the reference's containment semantics
     // (search_cond.go:728-791), so it consults the same trigram index;
     // the re-applied predicate keeps it exact either way
@@ -493,166 +488,139 @@ object QueryParser {
     // rule as TrigramIndex.searchExact's full-scan bypass)
     def freshTri(c: String): Boolean =
       memo.fresh(s"tri/$c", memo.tri(c).stats.map(st => (st.n_rows, st.max_doc_id)))
-    def indexable(c: String, s: String): Boolean =
-      Tokenizer.triKeys(s).nonEmpty && TrigramIndex.wellFormedUtf16(s) && freshTri(c)
-    def candidates(c: String, s: String): (CandKey, () => DataFrame) =
-      memo.candidate(CandKey("tri", c, s))(
-        TrigramIndex.searchCandidates(memo.tri(c), s, TrigramIndex.SearchDirectFloor))
-    val searchSets: Seq[(CandKey, () => DataFrame)] = exprs.flatMap {
-      case Search(c, s) if indexable(c, s) => Some(candidates(c, s))
-      case Cmp(c, "==", Right(s)) if indexable(c, s) => Some(candidates(c, s))
+    def literal(c: String, s: String): Option[Conjunct] =
+      if (Tokenizer.triKeys(s).nonEmpty && TrigramIndex.wellFormedUtf16(s) && freshTri(c))
+        Some(Tri(c, List(Set(s))))
+      else None
+    val tri: Seq[Conjunct] = exprs.flatMap {
+      case Search(c, s) => literal(c, s)
+      case Cmp(c, "==", Right(s)) => literal(c, s)
       // regex consults the same trigram index through its CNF literal plan
-      // (RegexTrigram soundness: candidates are a superset; the re-applied
-      // rlike predicate keeps the rows exact). plan()=None -> scan predicate.
-      case Regex(c, p) if freshTri(c) =>
-        RegexTrigram.plan(p).map(clauses =>
-          memo.candidate(CandKey("re", c, p))(
-            RegexTrigram.clauseCandidates(memo.tri(c), clauses, Postings.DirectFloor)))
+      // (RegexTrigram soundness: its clauses are necessary conditions; the
+      // re-applied rlike predicate keeps the rows exact). plan()=None ->
+      // scan predicate.
+      case Regex(c, p) if freshTri(c) => RegexTrigram.plan(p).map(Tri(c, _))
       case _ => None
     }
-    // Merge ALL numeric conjuncts on one column into a single index walk —
-    // `x >= 300 && x < 600` is one pruned range scan, not two intersected
-    // candidate sets (the reference's range lookup is likewise one
-    // [first,last] walk, /root/reference/index_file.go:1208-1422).
-    final case class Bounds(lo: Option[(Long, Boolean)], hi: Option[(Long, Boolean)],
-                            eq: Option[Long], contradiction: Boolean)
-    val numBounds = scala.collection.mutable.LinkedHashMap[String, Bounds]()
+    // Merge ALL numeric conjuncts on one column into one range, each bound
+    // (value, inclusive) the tightest given (`==` bounds both sides) —
+    // `x >= 300 && x < 600` is one pruned range scan, not two bits (the
+    // reference's range lookup is likewise one [first,last] walk,
+    // /root/reference/index_file.go:1208-1422).
+    type Bound = Option[(Long, Boolean)]
+    def tighter(b: Bound, v: Long, inc: Boolean, beyond: (Long, Long) => Boolean): Bound =
+      if (b.forall { case (bv, bInc) => beyond(v, bv) || (v == bv && !inc && bInc) }) Some((v, inc))
+      else b
+    val bounds = scala.collection.mutable.LinkedHashMap[String, (Bound, Bound)]()
     exprs.foreach {
       case Cmp(c, op, Left(v)) if op != "!=" &&
           memo.fresh(s"num/$c", memo.num(c).stats.map(st => (st.n_rows, st.max_doc_id))) =>
-        val b = numBounds.getOrElse(c, Bounds(None, None, None, contradiction = false))
-        val nb = op match {
-          case "==" => b.eq match {
-            case Some(e) if e != v => b.copy(contradiction = true)
-            case _ => b.copy(eq = Some(v))
-          }
-          case ">" | ">=" =>
-            val cand = (v, op == ">=")
-            val tighter = b.lo.forall { case (lv, lInc) => v > lv || (v == lv && !cand._2 && lInc) }
-            if (tighter) b.copy(lo = Some(cand)) else b
-          case "<" | "<=" =>
-            val cand = (v, op == "<=")
-            val tighter = b.hi.forall { case (hv, hInc) => v < hv || (v == hv && !cand._2 && hInc) }
-            if (tighter) b.copy(hi = Some(cand)) else b
+        val (lo, hi) = bounds.getOrElse(c, (None, None))
+        val (lo2, hi2) = (tighter(lo, v, op != ">", _ > _), tighter(hi, v, op != "<", _ < _))
+        bounds(c) = op match {
+          case "==" => (lo2, hi2)
+          case ">" | ">=" => (lo2, hi)
+          case _ => (lo, hi2)
         }
-        numBounds(c) = nb
       case _ => ()
     }
     // index-vs-scan gate from persisted stats — no query-time jobs (stats
-    // commit with every generation, so a consulted index always has them)
-    def selective(col: String, lo: Option[Long], hi: Option[Long],
-                  key: CandKey, cand: => DataFrame): Option[(CandKey, () => DataFrame)] =
-      memo.num(col).stats.flatMap { st =>
-        if (NumericIndex.estimateFraction(st, lo, hi) <= MaxIndexSelectivity)
-          Some(memo.candidate(key)(cand))
-        else None
-      }
-    val numSets: Seq[(CandKey, () => DataFrame)] = numBounds.toSeq.flatMap { case (c, b) =>
-      if (b.contradiction)
-        Some(memo.candidate(CandKey("num", c, "contradiction"))(
-          spark.range(0).toDF("doc_id")))
-      else b.eq match {
-        case Some(v) =>
-          selective(c, Some(v), Some(v), CandKey("num", c, s"eq=$v"),
-            NumericIndex.point(memo.num(c), v))
-        case None =>
-          selective(c, b.lo.map(_._1), b.hi.map(_._1),
-            CandKey("num", c, s"${b.lo.mkString}..${b.hi.mkString}"),
-            NumericIndex.range(memo.num(c), b.lo.map(_._1), b.hi.map(_._1),
-              loInclusive = b.lo.forall(_._2), hiInclusive = b.hi.exists(_._2)))
-      }
+    // commit with every generation, so a consulted index always has them);
+    // an empty range is a contradiction and reads no index
+    val num: Seq[Conjunct] = bounds.toSeq.flatMap {
+      case (_, (Some((l, li)), Some((h, hi)))) if l > h || (l == h && !(li && hi)) => Some(Never)
+      case (c, (lo, hi)) =>
+        memo.num(c).stats.filter(st => NumericIndex.estimateFraction(st,
+          lo.map(_._1), hi.map(_._1)) <= MaxIndexSelectivity).map(_ => Num(c, lo, hi))
     }
-    val candSets = searchSets ++ numSets
-    if (candSets.isEmpty) None else Some(candSets)
+    tri ++ num
   }
 
   /** Indexed execution of the reference query language — the dispatch the
     * reference performs in SearchCond.Query (/root/reference/search_cond.go:626-651
-    * -> index_file.go:801-935): `col.search("s")` consults the column's
-    * trigram index, numeric `==`/range predicates consult the numeric
-    * secondary index, and anything un-indexed stays a scan predicate.
-    * `||`-groups union their candidate sets (the semi-join dedups).
+    * -> index_file.go:801-935): `col.search("s")`, string `==` and
+    * `col.regex(p)` consult the column's trigram index, numeric `==`/range
+    * predicates consult the numeric secondary index, and anything
+    * un-indexed stays a scan predicate.
     *
-    * Exactness by construction: the indexes only produce CANDIDATE doc_ids
-    * (intersected within a group, unioned across groups, then semi-joined to
-    * the table); the full parsed predicate — including the containment
+    * The whole DNF is ONE [[Postings.perDoc]] pass. Its map side is one
+    * source per trigram column (a direct decode of the union of the keys
+    * its conjuncts name) and one per selective numeric conjunct (its pushed
+    * range scan, setting that conjunct's bit), all feeding one shuffle.
+    * A trigram conjunct is a CNF of key masks over its column's keys; a
+    * doc is a candidate when some group holds every conjunct. The one
+    * candidate set is semi-joined to the table.
+    *
+    * Exactness by construction: the candidates are a superset of the
+    * matches, and the full parsed predicate — including the containment
     * recheck — is re-applied on the candidate rows, so the result is
     * row-identical to the brute-force [[query]] path (differential-tested in
-    * QueryParserSpec/TrigramIndexSpec). With any group lacking an indexable
-    * conjunct this degrades to [[query]] (candidates could not bound that
-    * group's rows).
+    * QueryParserSpec/TrigramIndexSpec/QueryDifferentialSpec). With any group
+    * lacking an indexable conjunct this degrades to [[query]] (candidates
+    * could not bound that group's rows).
     *
-    * Candidate sets COMMON to every `||`-group are HOISTED above the union:
-    * intersection distributes over union, so
-    * `∪_g (common ∩ residual_g) = common ∩ ∪_g residual_g` — the shared
-    * subtree (often the expensive segment scan of a repeated search) appears
-    * ONCE in the final plan instead of once per union branch. A group whose
-    * candidates are ALL common contributes no residual restriction, so the
-    * union term drops entirely and `common` alone bounds the rows.
+    * Each column decodes directly, never through the rarest-key plan:
+    * [[Postings.DirectFloor]] is the gate elsewhere, and |keys| × n_rows at
+    * the benchmark's sizes sits far below it.
     */
   def queryIndexed(spark: SparkSession, df: DataFrame, idCol: String,
                    indexRoot: String, q: String,
                    mergeOnSearch: Option[TrigramIndex.TriConfig] = None): DataFrame = {
     val groups = parseQuery(q)
+    val matched = groups.map(groupPredicate).reduce(_ || _)
     // the table's (row count, max id) watermark for the staleness guard —
-    // evaluated lazily (only when a candidate index is consulted), shared
-    // across all conjunct groups, and CACHED per table ([[TableWatermark]]):
-    // an unchanged file-backed table answers from the token-validated cache
+    // evaluated lazily (only when an index is consulted), shared across all
+    // conjunct groups, and CACHED per table ([[TableWatermark]]): an
+    // unchanged file-backed table answers from the token-validated cache
     // with zero jobs, so the guard costs O(file metadata) per query in the
     // steady state, never an O(table) agg. The per-conjunct cost gate
     // likewise stays job-free (persisted sketches).
     lazy val tableWatermark: Option[(Long, Long)] = TableWatermark.of(df, idCol)
     val memo = new QueryMemo(spark, indexRoot, () => tableWatermark)
-    val sets = groups.map(g => groupCandidates(g, memo))
-    def intersect(dfs: Seq[DataFrame]): DataFrame =
-      dfs.reduce((a, b) => a.join(b, "doc_id"))
-    val base =
-      if (sets.exists(_.isEmpty)) df   // scan fallback: no candidate is read,
-                                       // so merge-on-search folds nothing
-      else {
-        val perGroup: Seq[Seq[(CandKey, () => DataFrame)]] = sets.flatten
-        val common = perGroup.map(_.map(_._1).toSet).reduce(_ intersect _)
-        val residuals = perGroup.map(_.filterNot(kv => common(kv._1)))
-        val dropResiduals = common.nonEmpty && residuals.exists(_.isEmpty)
-        // keys that SURVIVE the hoist — decidable from keys alone, before
-        // any thunk is forced
-        val surviving: Set[CandKey] =
-          if (common.isEmpty) perGroup.flatten.map(_._1).toSet
-          else if (dropResiduals) common
-          else common ++ residuals.flatten.map(_._1)
-        // MERGE-ON-SEARCH (the reference's MergeOnSearch option: a bounded
-        // merge kicked from the search path, /root/reference/search_cond.go:
-        // 828-837, config.go:62-66; the Bm25Index twin is its `mergeOnSearch`
-        // ctor arg): fold exactly the columns whose candidate sets the
-        // query WILL read — indexable + fresh + selective (they produced a
-        // key) AND surviving the hoist — and fold BEFORE forcing the
-        // thunks, replacing the folded column's snapshot, so the planned
-        // reads reference the post-fold survivor generations and stay valid
-        // across a later vacuum. `cfg` must be the config the index was
-        // built with (shard layout + fold policy, same contract as
-        // buildIndexes); numeric folds keep their own default bucket
-        // layout, as buildIndexes does. Contradiction keys read no index.
-        // Reclaim stays deferred for CONCURRENT readers (this query's own
-        // reads don't need the retirees anymore).
-        mergeOnSearch.foreach { cfg =>
-          surviving.collect { case CandKey("tri", c, _) => c }.foreach(memo.foldTri(_, cfg))
-          surviving.collect { case CandKey("num", c, d) if d != "contradiction" => c }
-            .foreach(memo.foldNum(_, cfg))
-        }
-        // force ONLY the surviving thunks: residuals are dropped wholesale
-        // when some group's candidates are all common
-        val ids =
-          if (common.isEmpty)
-            perGroup.map(g => intersect(g.map(_._2()))).reduce(_ unionByName _)
-          else {
-            val commonIds = intersect(
-              perGroup.head.filter(kv => common(kv._1)).distinctBy(_._1).map(_._2()))
-            if (dropResiduals) commonIds
-            else commonIds.join(
-              residuals.map(g => intersect(g.map(_._2()))).reduce(_ unionByName _), "doc_id")
-          }
-        df.join(ids.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_semi")
-      }
-    base.filter(groups.map(groupPredicate).reduce(_ || _))
+    val conj = groups.map(indexed(_, memo))
+    // scan fallback: no index is read, so merge-on-search folds nothing
+    if (conj.exists(_.isEmpty)) return df.filter(matched)
+    val distinct = conj.flatten.distinct
+    val triCols = distinct.collect { case Tri(c, _) => c }.distinct
+    val nums = distinct.collect { case n: Num => n }
+    // MERGE-ON-SEARCH (the reference's MergeOnSearch option: a bounded
+    // merge kicked from the search path, /root/reference/search_cond.go:
+    // 828-837, config.go:62-66; the Bm25Index twin is its `mergeOnSearch`
+    // ctor arg): fold every column the pass reads BEFORE planning it,
+    // replacing the folded column's snapshot, so the planned reads
+    // reference the post-fold survivor generations and stay valid across a
+    // later vacuum. `cfg` must be the config the index was built with
+    // (shard layout + fold policy, same contract as buildIndexes).
+    // Reclaim stays deferred for CONCURRENT readers.
+    mergeOnSearch.foreach { cfg =>
+      triCols.foreach(memo.foldTri(_, cfg))
+      nums.map(_.col).distinct.foreach(memo.foldNum(_, cfg))
+    }
+    // the pass's bits: each trigram column's keys, then one bit per
+    // numeric conjunct; a contradiction has none
+    val bit = scala.collection.mutable.Map.empty[Any, Int]
+    val sources = triCols.map { c =>
+      val keys = distinct.collect { case Tri(`c`, cl) => cl.flatten }.flatten
+        .flatMap(Tokenizer.triKeys).distinct
+      val offset = bit.size
+      keys.foreach(k => bit((c, k)) = bit.size)
+      Postings.segments(Postings.scan(memo.tri(c).segments, "key", keys), keys, offset)
+    } ++ nums.map { n =>
+      bit(n) = bit.size
+      Postings.docs(NumericIndex.range(memo.num(n.col), n.lo.map(_._1), n.hi.map(_._1),
+        loInclusive = n.lo.forall(_._2), hiInclusive = n.hi.exists(_._2)), bit(n))
+    }
+    // per group, the CNF its conjuncts make together: a doc satisfies a
+    // clause when it holds every bit of one of the clause's masks
+    def mask(bits: Iterable[Int]) = Postings.mask(bit.size, bits)
+    val need: Array[Array[Array[Array[Long]]]] = conj.map(_.flatMap {
+      case Tri(c, clauses) => clauses.map(_.toArray.map(m =>
+        mask(Tokenizer.triKeys(m).map(k => bit((c, k))))))
+      case n: Num => Seq(Array(mask(Seq(bit(n)))))
+      case Never => Seq(Array.empty[Array[Long]])
+    }.toArray).toArray
+    val ids = Postings.aggregate(spark, sources, bit.size, weighted = false)
+      .ids(spark, d => need.exists(_.forall(_.exists(d.holds))))
+    df.join(ids.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_semi").filter(matched)
   }
 }

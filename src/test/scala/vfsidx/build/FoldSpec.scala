@@ -242,4 +242,35 @@ class FoldSpec extends SparkTestBase {
     assert(TrigramIndex.generations(spark, tri) == Seq((0, 1)))
     assert(answers() == before)
   }
+
+  test("steady-state purge lists no runs slot: vacuum listings stay flat over 8 ingest rounds") {
+    vfsidx.ListingCounter.register(spark)
+    val (word, tri) = (tmpDir("purge_word"), tmpDir("purge_tri"))
+    val (wordC, triC) = (vfsidx.ListingCounter.counted(word), vfsidx.ListingCounter.counted(tri))
+    val triCfg = TrigramIndex.TriConfig(numBuckets = 2)
+    IndexBuild.build(spark, docs(0, 40), wordC, cfg)
+    TrigramIndex.build(spark, docs(0, 40).toDF(), "doc_id", "content", triC, triCfg)
+    // listings of each index's runs parent, its slots and its generations
+    // while it vacuums, after each ingest+vacuum round
+    val perRound = (1 to 8).map { k =>
+      val slice = docs(40 + 20 * (k - 1), 40 + 20 * k)
+      IndexBuild.ingestBatch(spark, slice, wordC, cfg.numBatches + k, cfg)
+      TrigramIndex.ingestBatch(spark, slice.toDF(), "doc_id", "content", triC, k, triCfg)
+      val dirs = Seq(s"$word/runs", s"$word/segments", s"$tri/tri_runs", s"$tri/tri_segments") ++
+        (0 to cfg.numBatches + k).map(IndexBuild.runsDir(word, _)) ++
+        (0 to k).map(TrigramIndex.runsBatchDir(tri, _))
+      vfsidx.ListingCounter.of(dirs: _*) {
+        IndexBuild.vacuum(spark, wordC)
+        TrigramIndex.vacuum(spark, triC)
+      }.sum
+    }
+    assert(perRound.distinct.size == 1, s"listings per round: $perRound")
+    // a replay of a covered batch purges the run data a cut-short seal
+    // left in its slot
+    TrigramIndex.writeRuns(docs(40, 60).toDF(), "doc_id", "content",
+      TrigramIndex.runsBatchDir(tri, 1), triCfg)
+    assert(!isEmptyDir(TrigramIndex.runsBatchDir(tri, 1)))
+    TrigramIndex.ingestBatch(spark, docs(40, 60).toDF(), "doc_id", "content", triC, 1, triCfg)
+    assert(isEmptyDir(TrigramIndex.runsBatchDir(tri, 1)))
+  }
 }

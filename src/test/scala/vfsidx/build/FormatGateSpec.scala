@@ -85,4 +85,25 @@ class FormatGateSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(TrigramIndex.statsGenDir(dir, 0, 0))))
   }
+
+  test("tri_runs carrying the retired first_doc/last_doc columns seal through the pinned schema") {
+    import spark.implicits._
+    val df = Seq((1L, "abcdef"), (2L, "bcdefg"), (3L, "xbcdy")).toDF("doc_id", "text")
+    val (old, fresh) = (tmpDir("fmt_oldruns"), tmpDir("fmt_newruns"))
+    // committed runs in the layout that still wrote each chunk's first and
+    // last doc id
+    TrigramIndex.chunkPartition(df.as[(Long, String)].collect().iterator.flatMap { case (id, s) =>
+      vfsidx.tokenize.Tokenizer.distinctTriKeys(s).map(k => (k, id))
+    }, 1L << 20, Spimi.FlushPostings).toSeq.map { case (k, ps, n, bytes) =>
+      val ids = new Array[Long](n)
+      vfsidx.codec.VarByte.unpackIds(bytes, n, ids, 0)
+      (k, ps, ids.head, ids.last, n, bytes)
+    }.toDF("key", "pre_shard", "first_doc", "last_doc", "count", "bytes")
+      .write.mode(SaveMode.Overwrite).parquet(TrigramIndex.runsBatchDir(old, 0))
+    val cfg = TrigramIndex.TriConfig(numBuckets = 2)
+    Seq(old, fresh).foreach(TrigramIndex.build(spark, df, "doc_id", "text", _, cfg))
+    def cands(d: String) =
+      TrigramIndex.searchCandidates(spark, d, "bcd").as[Long].collect().sorted.toSeq
+    assert(cands(old) == Seq(1L, 2L, 3L) && cands(fresh) == cands(old))
+  }
 }

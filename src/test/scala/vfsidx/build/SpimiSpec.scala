@@ -11,12 +11,18 @@ import vfsidx.codec.VarByte
   * integration spec reaches), and the range-split / group-pool helpers. */
 class SpimiSpec extends AnyFunSuite {
 
+  /** A chunk's doc ids, decoded. */
+  private def idsOf(cnt: Int, bytes: Array[Byte]): Array[Long] = {
+    val ids = new Array[Long](cnt)
+    VarByte.unpackIds(bytes, cnt, ids, 0)
+    ids
+  }
+
   /** Decode every chunk back to (key, id) pairs. */
-  private def decodeAll(chunks: Seq[(Long, Long, Long, Long, Int, Array[Byte])]): Seq[(Long, Long)] =
-    chunks.flatMap { case (key, _, first, last, cnt, bytes) =>
-      val ids = new Array[Long](cnt)
-      VarByte.unpackIds(bytes, cnt, ids, 0)
-      assert(ids.head == first && ids.last == last, s"chunk metadata mismatch for key $key")
+  private def decodeAll(chunks: Seq[(Long, Long, Int, Array[Byte])]): Seq[(Long, Long)] =
+    chunks.flatMap { case (key, _, cnt, bytes) =>
+      val ids = idsOf(cnt, bytes)
+      assert(ids.nonEmpty, s"empty chunk for key $key")
       var i = 1
       while (i < cnt) { assert(ids(i - 1) < ids(i), "chunk ids not strictly ascending"); i += 1 }
       ids.map(key -> _).toSeq
@@ -50,8 +56,9 @@ class SpimiSpec extends AnyFunSuite {
     val preShard = 1000L
     val chunks = TrigramIndex.chunkPartition(input.iterator, preShard,
       flushPostings = 500).toSeq // tiny flush bound -> many partial lists
-    chunks.foreach { case (_, ps, first, last, _, _) =>
-      assert(first / preShard == ps && last / preShard == ps,
+    chunks.foreach { case (_, ps, cnt, bytes) =>
+      val ids = idsOf(cnt, bytes)
+      assert(ids.head / preShard == ps && ids.last / preShard == ps,
         "chunk spans a pre_shard boundary")
     }
     assert(decodeAll(chunks).sorted == input.sorted)

@@ -193,7 +193,8 @@ class TrigramIndexSpec extends SparkTestBase {
       """num == 44 && num == 45""",               // contradictory equalities
       """num == 44 && num >= 30 && text.search("the batch")""",
       """text.search("ab")""",   // <3 runes -> empty on BOTH paths
-      // || groups: candidate sets union, semi-join dedups, OR re-applied
+      // || groups: a doc is a candidate when some group holds all its
+      // conjuncts; one semi-join, OR re-applied
       """text.search("the batch") || num == 44""",
       """text.search("the batch") && num < 50 || text.search("data merge") && num >= 90""",
       """num == 44 || num == 45 || num == 46""",
@@ -205,14 +206,13 @@ class TrigramIndexSpec extends SparkTestBase {
       // trigram index like .search()
       """text == "the batch" && num < 50""",
       """text == "鬼滅の刃"""",
-      // common-conjunct hoisting: the repeated search is common to every
-      // DNF group and must be planned once above the union
+      // a search repeated in every DNF group is one conjunct of the pass
       """text.search("the batch") && (num == 44 || num >= 90)""",
-      // one group's candidates are ALL common -> residual-empty path
+      // one group's conjuncts are all shared with another group
       """text.search("the batch") && (num == 44 || num == 45) || text.search("the batch")""",
       // common numeric conjunct across groups
       """num == 44 && text.search("the batch") || num == 44 && text.search("merge")""",
-      // partially-overlapping (NOT common to all three) stays per-group
+      // a conjunct shared by two of three groups
       """text.search("the batch") && num == 44 || text.search("merge") && num == 44 || num == 45""",
       // regex atoms: indexed via RegexTrigram CNF clauses when possible,
       // scan predicate otherwise — rows identical either way

@@ -110,6 +110,34 @@ class PostingsSpec extends SparkTestBase {
     assert(got == expected)
   }
 
+  test("query language job count: the benchmark's lang shape is one perDoc pass") {
+    import org.apache.spark.sql.functions.length
+    val dir = tmpDir("lang_jobs")
+    Synth.corpus(spark, 600, partitions = 4).toDF().withColumn("size", length($"content"))
+      .write.parquet(s"$dir/table")
+    val table = spark.read.parquet(s"$dir/table")
+    val root = s"$dir/columns"
+    QueryParser.buildIndexes(spark, table, "doc_id", Seq("content"), Seq("size"), root)
+    // both numeric conjuncts pass the selectivity gate, so the pass reads
+    // one trigram column and two numeric scans
+    val sizes = table.select("size").as[Int].collect().sorted
+    val lo = sizes(sizes.length * 9 / 10).toLong
+    val st = vfsidx.build.NumericIndex.stats(spark, root, "size").get
+    assert(vfsidx.build.NumericIndex.estimateFraction(st, Some(lo), None) <=
+      QueryParser.MaxIndexSelectivity)
+    val q = s"""content.search("merge the") && size >= $lo || """ +
+      s"""content.regex("(index|query) [a-z]+") && size >= $lo && size < ${lo + 60} && """ +
+      """!content.search("flush")"""
+    def run() = QueryParser.queryIndexed(spark, table, "doc_id", root, q)
+      .select("doc_id").as[Long].collect().sorted
+    val want = QueryParser.query(table, q).select("doc_id").as[Long].collect().sorted
+    assert(want.nonEmpty && run().sameElements(want))  // also warms the watermark cache
+    val jobs = JobCounter.around(spark)(_.of(run()))
+    info(s"lang: $jobs jobs")
+    // the candidate ids off the one aggregate, then the semi-joined rows
+    assert(jobs <= 3)
+  }
+
   test("2-generation salted index: dictionary df == Σ segment count, idf bit-equal") {
     import org.apache.spark.sql.functions.sum
     val (word, triDir) = twoGen
